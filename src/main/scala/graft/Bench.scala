@@ -11,6 +11,15 @@ import org.apache.spark.sql.SparkSession
   * numbers measure the queries, not the JVM.
   */
 object Bench {
+  /** Run one untimed warmup step. A failure does not stop the bench
+    * (the step's own query is timed, and its error reported, below),
+    * but it is logged: the step, then the exception class. */
+  private def warm(step: String)(body: => Any): Unit =
+    try body catch { case e: Throwable =>
+      System.err.println(
+        s"[bench] warmup $step FAILED: ${e.getClass.getName}: ${e.getMessage}")
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -29,47 +38,46 @@ object Bench {
     // min hash-agg, band self-join) whose generated-code compile + JIT
     // otherwise lands on the first timed dedup query — measured 3×
     // first-run inflation on q31 (9.7s cold vs 3.0s warm at sf0.1).
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    warm("entry")(SparkEntry.entry(spark).count())
     val warmDir = "/root/testdata/sf0.001"
-    try graft.queries.Pipeline.q31MinhashLsh(spark, warmDir)
-      .count() catch { case _: Throwable => }
+    warm("q31MinhashLsh")(graft.queries.Pipeline.q31MinhashLsh(spark, warmDir).count())
     // Streaming queries pay micro-batch-engine + state-store codegen on
     // first use (measured: q64 8.3s cold vs 3.7s warm, q56 4.8 vs 2.5 at
     // sf0.1); the five streaming shapes (windowed agg, mapGroupsWithState,
     // dedup-within-watermark, stream-stream join, stream-static enrich)
     // compile distinct plans, so warm each once on the tiny sf.
     // Likewise the k-means/argmax-cell vector shapes (q75/q52).
-    Seq[(SparkSession, String) => org.apache.spark.sql.DataFrame](
-      graft.streaming.EventStreams.hourlyRollupBatchDriven _,
-      graft.streaming.EventStreams.statefulUserCounts _,
-      graft.streaming.EventStreams.streamingDedup _,
-      graft.streaming.EventStreams.clickPurchaseAttribution _,
-      graft.streaming.EventStreams.enrichedSegmentRollup _,
-      graft.streaming.EventStreams.streamingUpsert _,
-      graft.streaming.EventStreams.sessionRollupBatchDriven _,
+    Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)](
+      "hourlyRollupBatchDriven" -> graft.streaming.EventStreams.hourlyRollupBatchDriven _,
+      "statefulUserCounts" -> graft.streaming.EventStreams.statefulUserCounts _,
+      "streamingDedup" -> graft.streaming.EventStreams.streamingDedup _,
+      "clickPurchaseAttribution" -> graft.streaming.EventStreams.clickPurchaseAttribution _,
+      "enrichedSegmentRollup" -> graft.streaming.EventStreams.enrichedSegmentRollup _,
+      "streamingUpsert" -> graft.streaming.EventStreams.streamingUpsert _,
+      "sessionRollupBatchDriven" -> graft.streaming.EventStreams.sessionRollupBatchDriven _,
       // flatMapGroupsWithState + EventTimeTimeout compiles its own
       // state-store plan (distinct from mapGroupsWithState's)
-      graft.streaming.EventStreams.streamingAsofEnrich _,
+      "streamingAsofEnrich" -> graft.streaming.EventStreams.streamingAsofEnrich _,
       // t-digest-in-state-store compiles its own agg + eviction shape
-      graft.streaming.EventStreams.streamingQuantilesBatchDriven _,
-      graft.queries.Pipeline.q75SemanticDedup _,
-      graft.queries.Curation.q83BloomDecontaminate _,
+      "streamingQuantilesBatchDriven" -> graft.streaming.EventStreams.streamingQuantilesBatchDriven _,
+      "q75SemanticDedup" -> graft.queries.Pipeline.q75SemanticDedup _,
+      "q83BloomDecontaminate" -> graft.queries.Curation.q83BloomDecontaminate _,
       // the composed dedup pipeline compiles the alternating-CC and
       // 64-band signature shapes, which its bench slot (first dedup
       // query in sort order) would otherwise pay cold
-      graft.queries.Pipeline.q117DedupPipeline _,
+      "q117DedupPipeline" -> graft.queries.Pipeline.q117DedupPipeline _,
       // bucketed saveAsTable (write commit protocol + bucket-sorted
       // file write) and the co-located SMJ compile their own shapes
-      graft.queries.Scalars.q109BucketedJoin _,
+      "q109BucketedJoin" -> graft.queries.Scalars.q109BucketedJoin _,
       // triangle counting compiles ~8 distinct shapes (orientation,
       // persist, wedge join, closing broadcast) — 12 s cold vs 3 s
       // warm at sf0.1; streaming outer join adds the eviction path
-      graft.queries.Pipeline.q127Triangles _,
-      graft.queries.Pipeline.q133StreamLeftOuter _,
+      "q127Triangles" -> graft.queries.Pipeline.q127Triangles _,
+      "q133StreamLeftOuter" -> graft.queries.Pipeline.q133StreamLeftOuter _,
       // full-outer stream-stream join compiles its own eviction shape
-      graft.queries.Pipeline.q151StreamFullOuter _,
+      "q151StreamFullOuter" -> graft.queries.Pipeline.q151StreamFullOuter _,
       // PQ compiles the augmented-argmax encode + element_at ADC chain
-      graft.queries.Pipeline.q163PqAnn _,
+      "q163PqAnn" -> graft.queries.Pipeline.q163PqAnn _,
       // r12 verdict #2: the erratic-JIT first-execution spikes that
       // inflate single-shot driver artifacts concentrate in the
       // iterative CHAIN families (the driver's r12 run read q315 6.4×,
@@ -80,14 +88,14 @@ object Bench {
       // chains (q235/q282/q263 share them via the memoized *97Of
       // chains — warmDir keys don't collide with the timed sfDir),
       // the interpolated-LM fold, the CCF/Gini daily folds.
-      graft.queries.Curation.q224BpeHeldout _,
-      graft.queries.Curation.q281WordpieceHeldout _,
-      graft.queries.Curation.q262UnigramRounds _,
-      graft.queries.Curation.q315LmInterpHeldout _,
-      graft.queries.Stats.q316CcfDaily _,
-      graft.queries.Curation.q291GiniStump _,
-      graft.queries.Analytics.q318UserGini _
-    ).foreach { f => try f(spark, warmDir).count() catch { case _: Throwable => } }
+      "q224BpeHeldout" -> graft.queries.Curation.q224BpeHeldout _,
+      "q281WordpieceHeldout" -> graft.queries.Curation.q281WordpieceHeldout _,
+      "q262UnigramRounds" -> graft.queries.Curation.q262UnigramRounds _,
+      "q315LmInterpHeldout" -> graft.queries.Curation.q315LmInterpHeldout _,
+      "q316CcfDaily" -> graft.queries.Stats.q316CcfDaily _,
+      "q291GiniStump" -> graft.queries.Curation.q291GiniStump _,
+      "q318UserGini" -> graft.queries.Analytics.q318UserGini _
+    ).foreach { case (step, f) => warm(step)(f(spark, warmDir).count()) }
 
     // The reference memoizes columns across queries in its Pool
     // (reference: src/pool.rs:37-95); the Spark analog is caching the
@@ -101,10 +109,10 @@ object Bench {
     if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "0") == "1") {
       Seq("lineitem", "orders", "customer", "part", "supplier",
         "nation", "region", "documents", "embeddings").foreach { t =>
-        try {
+        warm(s"cache $t") {
           val df = spark.read.parquet(s"$sfDir/$t.parquet")
           df.cache(); df.count()
-        } catch { case _: Throwable => }
+        }
       }
     }
 

@@ -24,7 +24,9 @@ import java.util.concurrent.Executors
   *  - Float NaN crosses the wire as JSON null.
   *
   * Built on the JDK's HttpServer (zero added dependencies). One shared
-  * SparkSession; requests build lazy plans and only Actions execute.
+  * SparkSession; requests build lazy plans and only Actions execute —
+  * a Read or Op launches no Spark job once its parquet paths have been
+  * opened in this session (see [[graft.sources.Sources.parquet]]).
   */
 object GraftServer {
 
@@ -53,17 +55,17 @@ object GraftServer {
       tag match {
         case "Read" | "Op" =>
           // plan-building: validate eagerly (the facade throws on bad
-          // schema/alias/keys like the reference), execute nothing
+          // schema/alias/keys like the reference), execute nothing. The
+          // prior lineage is replayed once: rebuilding it re-validates
+          // every entry (a bad token is a 400 here, as for an Action),
+          // and the same frame is what an Op builds on. A Read ignores it.
           val entry = if (tag == "Read") fn else fn.get("Op")
+          val noPrior = state == null || state.isNull
+          val prior = if (tag == "Read" && noPrior) null else Wire.replay(spark, state)
           val priorOps =
-            if (state == null || state.isNull) Wire.arr()
-            else {
-              Wire.replay(spark, state) // re-validate the prior lineage
-              state.get("ops").deepCopy[com.fasterxml.jackson.databind.node.ArrayNode]()
-            }
-          val frame =
-            if (tag == "Read") Wire.applyOp(spark, null, entry)
-            else Wire.applyOp(spark, Wire.replay(spark, state), entry)
+            if (noPrior) Wire.arr()
+            else state.get("ops").deepCopy[com.fasterxml.jackson.databind.node.ArrayNode]()
+          val frame = Wire.applyOp(spark, prior, entry)
           frame.df.schema // force analysis so plan errors surface now
           val newState = Wire.obj()
           newState.set[JsonNode]("ops", priorOps.add(entry.deepCopy[JsonNode]()))

@@ -36,12 +36,19 @@ import scala.jdk.CollectionConverters._
   * The reference's `dataframe` state is its operation lineage; ours is
   * the same idea in the same encoding — `{"ops": [<fn-inner>…]}`, the
   * ordered list of operations already applied. Clients treat it as an
-  * opaque token and round-trip it (client.py:196-208), so the server
-  * stays STATELESS: every call replays the lineage into a lazy Spark
-  * plan (plan construction is Catalyst's cheap path; nothing executes
-  * until an Action). Stateless replay is also the 100 TB shape — any
-  * server replica can serve any request, and the reference's Pool
-  * memoization job is done by Spark's shuffle/exchange reuse.
+  * opaque token and round-trip it (client.py:196-208), so the protocol
+  * stays STATELESS: any server replica can serve any request, which is
+  * also the 100 TB shape. Each request replays its lineage ONCE into a
+  * lazy Spark plan; an Op validates the prior lineage and builds on the
+  * same replayed frame, and nothing executes until an Action.
+  *
+  * The only Spark job a replay would run is a parquet Read's schema
+  * inference. `Sources.parquet` keeps the inferred schema per (session,
+  * path), checked against a fingerprint of the data files, so a
+  * replayed Read opens without a job until the files change — the
+  * reference's Pool rule (never recompute an entry whose deterministic
+  * key was seen) applied to the one input a replay cannot derive from
+  * the token. Frames themselves are never cached by lineage.
   */
 object Wire {
   private val mapper = new ObjectMapper()
@@ -266,15 +273,31 @@ object Wire {
   // ---- result blocks (reference AnyBlock, src/block.rs:109-119) ----
 
   private def blockTag(t: DataType): String = t match {
+    case ArrayType(elem, _) => scalarTag(elem) + "List"
+    case _                  => scalarTag(t)
+  }
+
+  private def scalarTag(t: DataType): String = t match {
     case BooleanType              => "Bool"
     case ByteType | ShortType | IntegerType | LongType => "Int"
     case FloatType | DoubleType   => "Float"
-    case StringType               => "String"
-    case ArrayType(BooleanType, _) => "BoolList"
-    case ArrayType(ByteType | ShortType | IntegerType | LongType, _) => "IntList"
-    case ArrayType(FloatType | DoubleType, _) => "FloatList"
-    case ArrayType(StringType, _) => "StringList"
+    // dates and timestamps travel as ISO-8601 text, as the reference
+    // client types dates (client.py:300-302)
+    case StringType | DateType | TimestampType | TimestampNTZType => "String"
     case other => throw new GraftException(s"blocks: unsupported column type $other")
+  }
+
+  /** ISO-8601 text of a date or timestamp in either of Spark's external
+    * forms (java.sql, or java.time under spark.sql.datetime.java8API).
+    * TimestampType is an instant, written in UTC with a `Z`;
+    * TimestampNTZType is a local date-time, written without a zone. */
+  private def isoText(v: Any): String = v match {
+    case d: java.sql.Date           => d.toLocalDate.toString
+    case d: java.time.LocalDate     => d.toString
+    case t: java.sql.Timestamp      => t.toInstant.toString
+    case t: java.time.Instant       => t.toString
+    case t: java.time.LocalDateTime =>
+      t.format(java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME)
   }
 
   private def writeScalar(a: ArrayNode, t: DataType, v: Any): Unit =
@@ -288,6 +311,7 @@ object Wire {
       case FloatType   => a.add(v.asInstanceOf[Float].toDouble)
       case DoubleType  => a.add(v.asInstanceOf[Double])
       case StringType  => a.add(v.asInstanceOf[String])
+      case DateType | TimestampType | TimestampNTZType => a.add(isoText(v))
       case other => throw new GraftException(s"blocks: unsupported scalar $other")
     }
 

@@ -1,8 +1,15 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+import java.util.HexFormat
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 import graft.api.GraftFrame
+import graft.util.SessionMemo
 
 /** Data sources for the engine.
   *
@@ -36,9 +43,52 @@ object Sources {
         .option("mode", "PERMISSIVE")
         .csv(path))
 
-  /** Parquet scan — primary path for the driver testdata. */
-  def parquet(spark: SparkSession, path: String): GraftFrame =
-    GraftFrame(spark.read.parquet(path))
+  /** Parquet scan — primary path for the parquet testdata (and the
+    * server's parquet `Read`, reopened on every request that replays it).
+    *
+    * Spark infers a parquet schema with a footer-reading job on every
+    * open. The inferred schema is kept per (session, path) together
+    * with a fingerprint of the data files Spark listed for it; the next
+    * open passes the schema back (`spark.read.schema(s).parquet`), which
+    * lists the files again but runs no inference job, and keeps the
+    * frame only if the new listing has the same fingerprint. A rewritten
+    * file or directory is therefore inferred again, and its entry
+    * replaced. Only the schema is kept — never a DataFrame, whose plan
+    * instance must not be shared across the server's request threads
+    * (rule 16).
+    */
+  def parquet(spark: SparkSession, path: String): GraftFrame = {
+    val known = Option(parquetSchemas.get((spark, path))).flatMap {
+      case (fingerprint, schema) =>
+        Some(spark.read.schema(schema).parquet(path))
+          .filter(df => fingerprintOf(df) == fingerprint)
+    }
+    GraftFrame(known.getOrElse {
+      val df = spark.read.parquet(path)
+      SessionMemo.put(parquetSchemas, spark, path, (fingerprintOf(df), df.schema))
+      df
+    })
+  }
+
+  private val parquetSchemas =
+    new ConcurrentHashMap[(SparkSession, String), (String, StructType)]()
+
+  /** SHA-256 over (path, length, mtime) of every data file in the
+    * frame's scan, as listed by Spark's own file index: hidden `_`/`.`
+    * files are skipped, partition subdirectories and glob matches are
+    * included. */
+  private def fingerprintOf(df: DataFrame): String = {
+    val index = df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
+    }.getOrElse(throw new IllegalStateException(
+      s"parquet read planned no file relation: ${df.queryExecution.analyzed}"))
+    val md = MessageDigest.getInstance("SHA-256")
+    index.listFiles(Nil, Nil).flatMap(_.files)
+      .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
+      .sorted
+      .foreach(line => md.update(line.getBytes(StandardCharsets.UTF_8)))
+    HexFormat.of().formatHex(md.digest())
+  }
 
   /** Load one named testdata table from a scale-factor directory. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =

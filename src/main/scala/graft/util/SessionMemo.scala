@@ -32,14 +32,32 @@ object SessionMemo {
   def cached[V](cache: ConcurrentHashMap[(SparkSession, String), V],
                 spark: SparkSession, key: String)(build: => V): V =
     cache.computeIfAbsent((spark, key), _ => {
-      if (hooked.add((cache, spark)))
-        spark.sparkContext.addSparkListener(new SparkListener {
-          override def onApplicationEnd(
-              end: SparkListenerApplicationEnd): Unit = {
-            cache.keySet.removeIf(k => k._1 eq spark)
-            hooked.removeIf(t => t._2 eq spark)
-          }
-        })
+      evictOnStop(cache, spark)
       build
     })
+
+  /** Store or REPLACE the entry for (session, key). For entries that
+    * are valid only while their input is unchanged: the caller checks
+    * the held entry against the input's current fingerprint and puts a
+    * fresh one on a mismatch, so the cache holds at most one entry per
+    * (session, key) however often the input is rewritten. Nothing is
+    * built under a lock, so only values that are safe to build twice
+    * belong here (a schema, never a DataFrame).
+    */
+  def put[V](cache: ConcurrentHashMap[(SparkSession, String), V],
+             spark: SparkSession, key: String, value: V): Unit = {
+    evictOnStop(cache, spark)
+    cache.put((spark, key), value)
+  }
+
+  private def evictOnStop(cache: ConcurrentHashMap[(SparkSession, String), _],
+                          spark: SparkSession): Unit =
+    if (hooked.add((cache, spark)))
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(
+            end: SparkListenerApplicationEnd): Unit = {
+          cache.keySet.removeIf(k => k._1 eq spark)
+          hooked.removeIf(t => t._2 eq spark)
+        }
+      })
 }

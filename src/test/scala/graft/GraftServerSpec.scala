@@ -1,6 +1,8 @@
 package graft
 
 import graft.server.{GraftServer, Wire}
+import graft.sources.Sources
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -292,5 +294,148 @@ class GraftServerSpec extends SparkSpec {
         {"Action": {"Take": 2}}}""")
       assert(ts === 201, tb)
     } finally capped.stop(0)
+  }
+
+  test("wire: Take on an unprojected parquet frame encodes timestamps as ISO-8601 strings") {
+    val li = s"$sf/lineitem.parquet"
+    val s1 = readParquet(li)
+    val (status, body) = post(s"""{"dataframe": $s1, "function": {"Action": {"Take": 20}}}""")
+    assert(status === 201, body)
+    val ship = Wire.parse(body).get("blocks").get("l_shipdate").get("String")
+    assert(ship.size() === 20)
+    val want = spark.read.parquet(li).limit(20).collect()
+      .map(_.getAs[java.time.LocalDateTime]("l_shipdate"))
+    (0 until 20).foreach { i =>
+      val text = ship.get(i).asText()
+      assert(text.matches("""\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(\.\d+)?"""), text)
+      assert(java.time.LocalDateTime.parse(text) === want(i))
+    }
+    // GroupBy nests the timestamps into string lists
+    val g = callOk(s1, """{"Op": {"GroupBy": ["l_returnflag"]}}""")._1
+    val lists = Wire.parse(callOk(g, """{"Action": "Collect"}""")._2)
+      .get("l_shipdate").get("StringList")
+    assert(lists.size() === 3 && lists.get(0).size() > 0)
+    java.time.LocalDateTime.parse(lists.get(0).get(0).asText())
+  }
+
+  // ---- parquet schema memo: plan-building requests run no Spark job ----
+
+  private val jobStarts = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+  private lazy val jobListener = spark.sparkContext.addSparkListener(new SparkListener {
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobStarts.add((e.jobId,
+        Option(e.properties).map(_.getProperty("spark.job.description")).orNull))
+  })
+
+  /** Spark jobs started while `body` runs: the job ids strictly between
+    * two marker jobs, counted once the listener has seen the second
+    * marker (listener events arrive asynchronously, but in order). */
+  private def jobsDuring(body: => Unit): Int = {
+    jobListener
+    def marker(): Int = {
+      val tag = s"graft-spec-marker-${java.util.UUID.randomUUID()}"
+      val sc = spark.sparkContext
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      def seen = jobStarts.toArray(Array.empty[(Int, String)]).find(_._2 == tag)
+      while (seen.isEmpty) {
+        assert(System.nanoTime() < deadline, s"listener never saw $tag")
+        Thread.sleep(10)
+      }
+      seen.get._1
+    }
+    val before = marker()
+    body
+    val after = marker()
+    jobStarts.toArray(Array.empty[(Int, String)]).count { case (id, _) => id > before && id < after }
+  }
+
+  private def tempDir(tag: String): String =
+    Files.createTempDirectory(s"graft_$tag").resolve("t.parquet").toString
+
+  private def readParquet(path: String): String =
+    callOk("null", s"""{"Read": ["parquet", "$path", {"columns": []}]}""")._1
+
+  test("memo: after the first Read, Read → Filter → Select → Join → Aggregation runs no Spark job") {
+    val facts = tempDir("facts")
+    spark.range(0, 100).selectExpr("id", "id % 5 AS k", "CAST(id AS DOUBLE) * 1.5 AS v")
+      .write.parquet(facts)
+    val dims = tempDir("dims")
+    spark.range(0, 5).selectExpr("id AS k2", "concat('n', CAST(id AS STRING)) AS name")
+      .write.parquet(dims)
+    readParquet(facts)
+    val dimState = readParquet(dims)
+    var last = ""
+    val n = jobsDuring {
+      val s1 = readParquet(facts)
+      val s2 = callOk(s1, """{"Op": {"Filter": ["k",
+        |  {"comparator": "GreaterThan", "value": {"Int": 0}}]}}""".stripMargin)._1
+      val s3 = callOk(s2, """{"Op": {"Select": [{"Source": "k"}, {"Source": "v"}]}}""")._1
+      val s4 = callOk(s3, s"""{"Op": {"Join": [$dimState, "k", "k2"]}}""")._1
+      last = callOk(s4, """{"Op": {"Aggregation":
+        |  {"k": "Count", "v": "Sum", "k2": "Max", "name": "First"}}}""".stripMargin)._1
+    }
+    assert(n === 0, s"$n Spark job(s) while building plans")
+    // the memoized schemas still give the right answer
+    val b = Wire.parse(callOk(last, """{"Action": "Collect"}""")._2)
+    assert(b.get("k").get("Int").get(0).asLong() === 80L)
+    val wantSum = (0 until 100).filter(_ % 5 > 0).map(_ * 1.5).sum
+    assert(b.get("v").get("Float").get(0).asDouble() === wantSum)
+  }
+
+  test("memo: overwriting the parquet directory with an added column is seen by the next Read") {
+    val p = tempDir("rewrite")
+    spark.range(0, 10).selectExpr("id").write.parquet(p)
+    val first = readParquet(p)
+    assert(post(s"""{"dataframe": $first, "function":
+      {"Op": {"Select": [{"Source": "extra"}]}}}""")._1 === 400)
+    spark.range(0, 10).selectExpr("id", "id * 2 AS extra").write.mode("overwrite").parquet(p)
+    val s2 = callOk(readParquet(p), """{"Op": {"Select": [{"Source": "extra"}]}}""")._1
+    val (_, blocks) = callOk(s2, """{"Action": "Count"}""")
+    assert(Wire.parse(blocks).get("count").get("Int").get(0).asLong() === 10L)
+  }
+
+  test("memo: a new SparkSession infers the schema again") {
+    val p = tempDir("session")
+    spark.range(0, 10).selectExpr("id").write.parquet(p)
+    val read = Wire.parse(s"""{"dataframe": null, "function":
+      {"Read": ["parquet", "$p", {"columns": []}]}}""")
+    assert(GraftServer.handle(spark, read)._1 === 201)
+    assert(jobsDuring(assert(GraftServer.handle(spark, read)._1 === 201)) === 0)
+    val other = spark.newSession()
+    assert(jobsDuring(assert(GraftServer.handle(other, read)._1 === 201)) > 0)
+    assert(jobsDuring(assert(GraftServer.handle(other, read)._1 === 201)) === 0)
+  }
+
+  test("memo: a missing parquet path is a 400, before and after it was read") {
+    val (st, body) = post(s"""{"dataframe": null, "function":
+      {"Read": ["parquet", "/nonexistent/graft/none.parquet", {"columns": []}]}}""")
+    assert(st === 400, body)
+    val p = tempDir("gone")
+    spark.range(0, 3).selectExpr("id").write.parquet(p)
+    val s1 = readParquet(p)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
+    val (st2, body2) = post(s"""{"dataframe": null, "function":
+      {"Read": ["parquet", "$p", {"columns": []}]}}""")
+    assert(st2 === 400, body2)
+    assert(post(s"""{"dataframe": $s1, "function": {"Action": "Count"}}""")._1 === 400)
+  }
+
+  test("memo: hive-partitioned and glob paths give plain spark.read.parquet's schema and rows") {
+    val part = tempDir("hive")
+    spark.range(0, 40).selectExpr("id", "CAST(id % 3 AS INT) AS bucket", "id * 0.5 AS x")
+      .write.partitionBy("bucket").parquet(part)
+    val flat = tempDir("glob")
+    spark.range(0, 40).selectExpr("id", "id * 0.5 AS x").repartition(3).write.parquet(flat)
+    Seq(part, s"$part/bucket=1", s"$flat/part-*.parquet").foreach { path =>
+      val want = spark.read.parquet(path)
+      Sources.parquet(spark, path)
+      var hit: org.apache.spark.sql.DataFrame = null
+      assert(jobsDuring { hit = Sources.parquet(spark, path).df } === 0, path)
+      assert(hit.schema === want.schema, path)
+      val rows = (df: org.apache.spark.sql.DataFrame) => df.collect().map(_.toString).sorted.toSeq
+      assert(rows(hit) === rows(want), path)
+    }
   }
 }

@@ -14,6 +14,10 @@ sbt -batch compile
 echo "== [2/5] sbt test =="
 sbt -batch test
 
+echo "== [2b/5] HTTP client e2e + benchmark harness tests =="
+python3 tools/client_e2e.py
+python3 -m unittest discover -s benchmark -p 'test_*.py'
+
 echo "== [3/5] Verify + DuckDB check @ sf0.01 =="
 SPARK_GRAFT_CPUS=8 tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/gate_sf001
 python3 tools/check.py /root/testdata/sf0.01 /tmp/gate_sf001 | tail -2
