@@ -56,7 +56,10 @@ object Verify {
           Seq(s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}")
             .toDF("__graft_query_crashed")
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case _: Throwable => () }
+        } catch { case m: Throwable =>
+          System.err.println(s"[verify] $name crash marker write FAILED: " +
+            s"${m.getClass.getName}: ${m.getMessage}")
+        }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

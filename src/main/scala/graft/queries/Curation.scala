@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{Curation => C, TextAnalysis => TA}
+import graft.util.SessionMemo
 
 /** Dataset-curation queries (q57-q63): the train-time data-management
   * layer a 100 TB pipeline needs on top of the analysis/dedup surface —
@@ -1264,13 +1265,10 @@ object Curation {
   // window + md5-keyed selection chain from scratch; the frame is
   // sub-corpus-sized (density 2/(w+1) — 81.6k rows at sf0.1) and every
   // consumer's fold is cheap next to the build (R14Q233Probe: build
-  // 4.6 s of q233's 7.2 s fused fresh at sf0.1). Eager localCheckpoint
-  // inside the synchronized computeIfAbsent (rule 16); evicts with the
-  // session (SessionMemo).
-  private val winnowFps = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  // 4.6 s of q233's 7.2 s fused fresh at sf0.1).
+  private val winnowFpsMemo = SessionMemo.family[DataFrame]("winnowFpsOf")
   private def winnowFpsOf(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(winnowFps, spark, dir) {
+    winnowFpsMemo(spark, dir) {
       C.winnowFingerprints(docs(spark, dir), "doc_id", "text",
         k = 4, w = 5).localCheckpoint(eager = true)
     }
@@ -1490,14 +1488,12 @@ object Curation {
     * final symbol frame — previously two bit-identical 3-round train
     * chains back to back (r13; the `trainedMerges97Of` discipline at
     * the full-corpus rung). The symbol frame is eagerly checkpointed
-    * inside the computeIfAbsent (rule 16); entries evict with the
-    * session (SessionMemo). */
-  private val bpeFullTrain = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (Seq[(Long, String, String, Long, Long, Long, Long)], DataFrame)]()
+    * (rule 16). */
+  private val bpeFullTrainMemo = SessionMemo.family[
+    (Seq[(Long, String, String, Long, Long, Long, Long)], DataFrame)]("bpeFullTrainOf")
   private def bpeFullTrainOf(spark: SparkSession, dir: String)
       : (Seq[(Long, String, String, Long, Long, Long, Long)], DataFrame) =
-    graft.util.SessionMemo.cached(bpeFullTrain, spark, dir) {
+    bpeFullTrainMemo(spark, dir) {
       val (stats, syms) = C.bpeTrainFull(docs(spark, dir), "text", rounds = 3)
       val cut = syms.localCheckpoint(true)
       syms.unpersist()
@@ -1625,26 +1621,24 @@ object Curation {
   // argmax, so a drifted likelihood pick changes the eval vocabulary
   // and fails the hash.
   // -------------------------------------------------------------------
-  /** Process-level memo of the FROZEN train-split WordPiece merge
-    * list — the `trainedMerges97Of` pattern at the WordPiece rung,
-    * shared by q281 (held-out usage) and q282 (fertility). Keyed by
-    * (dir, rounds); deterministic in the key, so the memo only ever
-    * skips a bit-identical recompute. */
-  private val wpTrainedMerges97 =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(String, String)]]()
+  /** The FROZEN train-split WordPiece merge list — the
+    * `trainedMerges97Of` pattern at the WordPiece rung, shared by q281
+    * (held-out usage) and q282 (fertility). */
+  private val wpTrainedMerges97Memo =
+    SessionMemo.family[Seq[(String, String)]]("wpTrainedMerges97Of")
   private def wpTrainedMerges97Of(spark: SparkSession, dir: String,
       rounds: Int): Seq[(String, String)] =
-    wpTrainedMerges97.computeIfAbsent((dir, rounds), _ =>
+    wpTrainedMerges97Memo(spark, s"$dir#rounds=$rounds") {
       C.wordpieceTrainedMerges(
-        docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds))
+        docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds)
+    }
 
   /** The held-out split under the frozen WordPiece list — the
     * [[bpeHeldoutSegs97Of]] pattern at the WordPiece rung, shared by
     * q281 (vocabulary) and q282 (fertility). */
-  private val wpSegs97 = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val wpSegs97Memo = SessionMemo.family[DataFrame]("wpHeldoutSegs97Of")
   private def wpHeldoutSegs97Of(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(wpSegs97, spark, dir) {
+    wpSegs97Memo(spark, dir) {
       val merges = wpTrainedMerges97Of(spark, dir, rounds = 3)
       val segs = C.bpeSegment(
         docs(spark, dir).filter(col("doc_id") % 97 === 0), "text", merges)
@@ -1816,18 +1810,16 @@ object Curation {
   // a recursive-CTE chase. A drifted trained vocab, a leaked eval
   // token, or a wrong greedy match all shift the usage table → FAIL.
   // -------------------------------------------------------------------
-  /** The frozen train-split unigram vocabulary, memoized per
-    * (dir, rounds) — the `trainedMerges97Of` pattern at the unigram
-    * rung, shared by q263 (held-out usage) and q265 (fertility):
-    * deterministic in the key, so the memo only ever skips a
-    * bit-identical retrain. */
-  private val unigramVocab97 =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[String]]()
+  /** The frozen train-split unigram vocabulary — the
+    * `trainedMerges97Of` pattern at the unigram rung, shared by q263
+    * (held-out usage) and q265 (fertility). */
+  private val unigramVocab97Memo = SessionMemo.family[Seq[String]]("unigramVocab97Of")
   private def unigramVocab97Of(spark: SparkSession, dir: String,
       rounds: Int): Seq[String] =
-    unigramVocab97.computeIfAbsent((dir, rounds), _ =>
+    unigramVocab97Memo(spark, s"$dir#rounds=$rounds") {
       C.unigramTrainedVocab(
-        docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds))
+        docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds)
+    }
 
   /** The held-out greedy-longest-match VALID-START frame under the
     * frozen unigram vocab ([[C.unigramStarts]]), memoized per
@@ -1835,12 +1827,11 @@ object Curation {
     * dominant cost of every unigram apply query, and q263 (usage),
     * q265 (fertility) and q267 (agreement boundaries) each rebuilt it
     * from scratch — their folds are cheap aggregates over this one
-    * frame. Orbit output is already eagerly checkpointed inside the
-    * computeIfAbsent (unigramOrbit localCheckpoint(true)s its fold). */
-  private val uniStarts97 = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    * frame. Orbit output is already eagerly checkpointed
+    * (unigramOrbit localCheckpoint(true)s its fold). */
+  private val uniStarts97Memo = SessionMemo.family[DataFrame]("unigramStarts97Of")
   private def unigramStarts97Of(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(uniStarts97, spark, dir) {
+    uniStarts97Memo(spark, dir) {
       val vocab = unigramVocab97Of(spark, dir, rounds = 2)
       C.unigramStarts(
         docs(spark, dir).filter(col("doc_id") % 97 === 0), "text", vocab)
@@ -2061,26 +2052,27 @@ object Curation {
   // best$i — a drifted trained merge, or an apply round that
   // re-argmaxes, both change the eval vocabulary and fail the hash.
   // -------------------------------------------------------------------
-  /** Process-level memo of the FROZEN train-split BPE merge list —
-    * the model (≤ rounds pairs), shared by every held-out consumer
+  /** The FROZEN train-split BPE merge list — the model
+    * (≤ rounds pairs), shared by every held-out consumer
     * (q224 apply, q235 fertility), exactly as a production pipeline
     * trains a tokenizer ONCE and ships the frozen artifact to every
     * downstream job rather than retraining per consumer (the
     * round-9 verdict's suggested trim; isolated Q235Probe decomposed
     * q235 as 4.0 s train + 4.4 s apply at sf0.1 — the memo removes
     * the train half from the second consumer onward in any shared
-    * JVM: Verify, Bench, the driver). Keyed by (dir, rounds); the
-    * train-side input is deterministic in the key (documents at
-    * `dir`, the fixed doc_id % 97 != 0 split), and bpeTrainedMerges
-    * itself is deterministic, so the memo can never change a result —
-    * only skip a bit-identical recompute. */
-  private val trainedMerges97 =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(String, String)]]()
+    * session: Verify, Bench, the driver). The train-side input is
+    * deterministic in (dir, rounds) (documents at `dir`, the fixed
+    * doc_id % 97 != 0 split), and bpeTrainedMerges itself is
+    * deterministic, so the memo can never change a result — only skip
+    * a bit-identical recompute. */
+  private val trainedMerges97Memo =
+    SessionMemo.family[Seq[(String, String)]]("trainedMerges97Of")
   private def trainedMerges97Of(spark: SparkSession, dir: String,
       rounds: Int): Seq[(String, String)] =
-    trainedMerges97.computeIfAbsent((dir, rounds), _ =>
+    trainedMerges97Memo(spark, s"$dir#rounds=$rounds") {
       C.bpeTrainedMerges(
-        docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds))
+        docs(spark, dir).filter(col("doc_id") % 97 =!= 0), "text", rounds)
+    }
 
   /** The held-out split SEGMENTED under the frozen train-split BPE
     * merges, memoized per (session, dir) — the apply half of the
@@ -2088,11 +2080,10 @@ object Curation {
     * vocabulary, q235 fertility, q267 agreement each replayed the 3
     * apply rounds; Q235Probe pinned the apply at ~4.4 s of the ~8.4 s
     * composite). The frame is word-TYPE-sized (w, wc, p, s), eagerly
-    * checkpointed inside the computeIfAbsent (rule 16). */
-  private val bpeSegs97 = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    * checkpointed (rule 16). */
+  private val bpeSegs97Memo = SessionMemo.family[DataFrame]("bpeHeldoutSegs97Of")
   private def bpeHeldoutSegs97Of(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(bpeSegs97, spark, dir) {
+    bpeSegs97Memo(spark, dir) {
       val merges = trainedMerges97Of(spark, dir, rounds = 3)
       val segs = C.bpeSegment(
         docs(spark, dir).filter(col("doc_id") % 97 === 0), "text", merges)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Graph, Multimodal, Similarity, TextAnalysis => TA}
+import graft.util.SessionMemo
 
 /** Training-data pipeline queries: text analysis, dedup, similarity
   * search, multimodal, streaming — the beyond-reference surface over
@@ -24,19 +25,15 @@ object Pipeline {
   // (session, dir) and persisted, so the two gates time the CC
   // algorithms rather than each re-running the posting self-join.
   // Narrow (two longs per pair, bounded block), so the wide-cache
-  // anti-rule (PERF.md lesson 4) does not apply. Evicts on session
-  // stop like every (session, dir)-keyed cache (round-12 hardening —
-  // entries must not pin persisted blocks past their session).
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  // anti-rule (PERF.md lesson 4) does not apply.
+  private val exactPairsMemo = SessionMemo.family[DataFrame]("boundedExactPairs")
   private def boundedExactPairs(spark: SparkSession, dir: String): DataFrame =
-    pairCache.computeIfAbsent((spark, dir), _ => {
-      evictOnStop(pairCache, spark)
+    exactPairsMemo(spark, dir) {
       Dedup.ngramJaccardPairs(docs(spark, dir), "doc_id", "text",
           k = 3, threshold = 0.05, maxId = 300L)
         .select(col("id_a"), col("id_b"))
         .persist()
-    })
+    }
 
   // -------------------------------------------------------------------
   // q25: per-document token/char statistics
@@ -2666,38 +2663,6 @@ object Pipeline {
   // default (8) is the 100 TB setting; re-measure before changing
   // params, rule 9/14.
   // -------------------------------------------------------------------
-  // The kNN graph is built ONCE per (session, dir) and shared by q234
-  // (edge gate), q323 (hubness audit) and q326 (rounds operating
-  // curve) — the tokenizer-chain memoization pattern
-  // (trainedMerges97Of), and the production shape: a pipeline builds
-  // its neighbor structure once and derives audits from it. Round-12
-  // hardening (ADVICE r11): entries evict when their session stops
-  // (the map no longer pins checkpoint blocks of dead sessions for the
-  // process lifetime), and the per-round frames are MATERIALIZED
-  // inside the synchronized computeIfAbsent before any consumer sees
-  // them, so two driver threads can never race the first
-  // materialization of a shared lazy checkpoint (rule 16's hazard
-  // class).
-  // One listener per (cache, session), not per cache ENTRY (ADVICE
-  // r12: the old unconditional addSparkListener inside every
-  // computeIfAbsent miss accumulated a duplicate listener per dir a
-  // long-lived session scanned — idempotent but unbounded). The guard
-  // set itself drops the session's tickets on stop, so the maps hold
-  // nothing for dead sessions.
-  private val evictHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(AnyRef, SparkSession)]()
-  private def evictOnStop[V](
-      cache: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V],
-      spark: SparkSession): Unit =
-    if (evictHooked.add((cache, spark)))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            cache.keySet.removeIf(k => k._1 eq spark)
-            evictHooked.removeIf(t => t._2 eq spark)
-          }
-        })
   // memoized perceptual-hash frame (r14): q210 (grid replay), q211
   // (near-dup pairs), q217 (incremental v1 side), q261 (canonical
   // keep-list) and q329 (cross-modal canonical) each re-ran the
@@ -2705,12 +2670,10 @@ object Pipeline {
   // attempt over every medium (R14Q261Probe: 4.3 s of q261's 6.1 s
   // fused fresh at sf0.1 is phase 1). The frame is media-sized
   // (media_id, decoded, grid[64], dhash); consumers project what they
-  // need. Eager localCheckpoint inside the synchronized
-  // computeIfAbsent (rule 16); evicts with the session.
-  private val phashCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  // need.
+  private val phashMemo = SessionMemo.family[DataFrame]("phashOf")
   private def phashOf(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(phashCache, spark, dir) {
+    phashMemo(spark, dir) {
       Multimodal.phashTable(Multimodal.mediaTable(spark, dir)).toDF()
         .localCheckpoint(eager = true)
     }
@@ -2725,49 +2688,45 @@ object Pipeline {
   // the full operator 4× — 9 trainings, 9 pair joins, 4 distincts.
   // Params are the shared q322/q324 gate values; the pair frames do
   // not depend on minPts, which each consumer applies downstream.
-  private val dbscanPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Seq[DataFrame]]()
+  private val dbscanPairsMemo = SessionMemo.family[Seq[DataFrame]]("dbscanPairsOf")
   private def dbscanPairsOf(spark: SparkSession, dir: String): Seq[DataFrame] =
-    dbscanPairsCache.computeIfAbsent((spark, dir), _ => {
-      evictOnStop(dbscanPairsCache, spark)
-      // eager per-grid localCheckpoints: materialized inside the
-      // synchronized computeIfAbsent (rule 16)
+    dbscanPairsMemo(spark, dir) {
+      // eager per-grid localCheckpoints (rule 16)
       Similarity.dbscanGridPairs(emb(spark, dir), "vec_id", "embedding",
         thetaFx = 250000000000L, grids = 3, dim = 64)
-    })
-  // memoized per-round curve: element r = the graph after r descent
-  // rounds (r = 0 is the scored init). q234/q323 read .last; q326
-  // publishes the whole curve. ONE build serves all three.
-  private val knnCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Seq[DataFrame]]()
+    }
+  // The kNN graph is built ONCE per (session, dir) and shared by q234
+  // (edge gate), q323 (hubness audit) and q326 (rounds operating
+  // curve) — the tokenizer-chain memoization pattern
+  // (trainedMerges97Of), and the production shape: a pipeline builds
+  // its neighbor structure once and derives audits from it.
+  // Element r of the curve = the graph after r descent rounds (r = 0
+  // is the scored init). q234/q323 read .last; q326 publishes the
+  // whole curve.
+  private val knnCurveMemo = SessionMemo.family[Seq[DataFrame]]("knnCurveOf")
   private def knnCurveOf(spark: SparkSession, dir: String): Seq[DataFrame] =
-    knnCache.computeIfAbsent((spark, dir), _ => {
-      evictOnStop(knnCache, spark)
+    knnCurveMemo(spark, dir) {
       val curve = Similarity.knnGraphDescentCurve(emb(spark, dir),
         "vec_id", "embedding", k = 10, numCells = 16, dim = 64,
         grids = 4, rounds = 2, initWidth = 96)
       curve.foreach(_.count()) // materialize before sharing (rule 16)
       curve
-    })
+    }
   private def knnGraphOf(spark: SparkSession, dir: String): DataFrame =
     knnCurveOf(spark, dir).last
   // q327's width-8/32 INIT-ONLY graphs, memoized per (session, dir,
   // width) — r12 verdict #3: they are deterministic in (dir, width)
   // yet were rebuilt on every invocation while width 96 read the
-  // memoized main curve. Key encodes the width (the eviction sweep
-  // only matches on the session half of the key); the frame is
-  // materialized inside the synchronized computeIfAbsent (rule 16).
-  private val knnInitCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  // memoized main curve.
+  private val knnInitMemo = SessionMemo.family[DataFrame]("knnInitGraphOf")
   private def knnInitGraphOf(spark: SparkSession, dir: String, w: Int): DataFrame =
-    knnInitCache.computeIfAbsent((spark, s"$dir#initWidth=$w"), _ => {
-      evictOnStop(knnInitCache, spark)
+    knnInitMemo(spark, s"$dir#initWidth=$w") {
       val g = Similarity.knnGraphDescentCurve(emb(spark, dir),
         "vec_id", "embedding", k = 10, numCells = 16, dim = 64,
         grids = 4, rounds = 0, initWidth = w).head
-      g.count()
+      g.count() // materialize before sharing (rule 16)
       g
-    })
+    }
 
   // -------------------------------------------------------------------
   // Conformal IVF scoring chain, built ONCE per (session, dir) and
@@ -2777,7 +2736,7 @@ object Pipeline {
   // frames twice — double k-means driver traffic and a drift hazard
   // the next time IVF params change under rule 9). Returns the
   // (calibration, test) NN-score frames, both EAGER localCheckpoints
-  // materialized inside the synchronized computeIfAbsent (rule 16).
+  // (rule 16).
   //
   // mCal = 4·max(1, n/2000) — ALWAYS divisible by 4, which makes the
   // three splits provably disjoint at EVERY corpus size: the
@@ -2792,13 +2751,12 @@ object Pipeline {
   // gate and ×100 outputs are bit-identical; disjointness over ALL n
   // is asserted in OperatorsSpec.
   // -------------------------------------------------------------------
-  private val conformalCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
+  private val conformalMemo =
+    SessionMemo.family[(DataFrame, DataFrame)]("conformalScoresOf")
   private[graft] def conformalCalModulus(nTot: Long): Long =
     4L * math.max(1L, nTot / 2000L)
   private def conformalScoresOf(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    conformalCache.computeIfAbsent((spark, dir), _ => {
-      evictOnStop(conformalCache, spark)
+    conformalMemo(spark, dir) {
       import graft.functions.VectorFunctions.{vec_dot, vec_mat_argmax, vec_mat_dots}
       import org.apache.spark.sql.expressions.Window
       val e = emb(spark, dir)
@@ -2839,7 +2797,7 @@ object Pipeline {
       val test = nnIvf(e.filter(pmod(col("vec_id"), lit(4)) === 3))
         .localCheckpoint(eager = true)
       (cal, test)
-    })
+    }
 
   def q234KnnGraph(spark: SparkSession, dir: String): DataFrame =
     knnGraphOf(spark, dir)
@@ -4101,10 +4059,9 @@ object Pipeline {
   // (R14Q208Probe: the rel build is ~5.6 s of q208's ~5 s fused fresh
   // at sf0.1), and groupBy(src, dst) emits exactly the distinct pair
   // set the unweighted consumers read, so ONE shuffle serves both.
-  private val tradeFwdCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val tradeRelWMemo = SessionMemo.family[DataFrame]("tradeRelWOf")
   private def tradeRelWOf(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(tradeFwdCache, spark, dir) {
+    tradeRelWMemo(spark, dir) {
       import org.apache.spark.sql.types.DecimalType
       val o = spark.read.parquet(s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"))
@@ -4144,21 +4101,16 @@ object Pipeline {
   // < 2³² before mix32's bounded multipliers — no int64 overflow for
   // DuckDB to error on through id ~1e9.
   // -------------------------------------------------------------------
-  /** The materialized walk corpus, memoized per (applicationId, dir) —
-    * the trainedMerges97Of pattern for a DISTRIBUTED artifact: the
-    * frame stays a localCheckpointed Dataset (the corpus is
-    * sample-sized here but data-sized at 100 TB — a driver collect
-    * would not scale, a shared checkpoint does), so q269 (the corpus
-    * itself) and q273 (the SPPMI matrix over it) pay the 6-step
-    * generation once per JVM. Deterministic in (dir), so the memo can
-    * only skip a bit-identical regeneration; keyed by applicationId
-    * so a frame from a stopped SparkContext is never reused. */
-  private val walkCorpus =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** The materialized walk corpus, memoized per (session, dir) — the
+    * trainedMerges97Of pattern for a DISTRIBUTED artifact: the frame
+    * stays a localCheckpointed Dataset (the corpus is sample-sized
+    * here but data-sized at 100 TB — a driver collect would not
+    * scale, a shared checkpoint does), so q269 (the corpus itself) and
+    * q273 (the SPPMI matrix over it) pay the 6-step generation once per
+    * session. */
+  private val walkCorpusMemo = SessionMemo.family[DataFrame]("walkCorpusOf")
   private def walkCorpusOf(spark: SparkSession, dir: String): DataFrame =
-    walkCorpus.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => buildWalkCorpus(spark, dir))
+    walkCorpusMemo(spark, dir)(buildWalkCorpus(spark, dir))
 
   def q269RandwalkCorpus(spark: SparkSession, dir: String): DataFrame =
     walkCorpusOf(spark, dir).orderBy(asc("walk_id"), asc("step"))
@@ -4320,10 +4272,9 @@ object Pipeline {
     * scores its modularity: both previously ran the identical 2-round
     * vote chain (the oracle side already shares the CTE prefix —
     * lpaPrefixSql — for exactly this reason). Node-sized. */
-  private val lpaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val lpaLabelsMemo = SessionMemo.family[DataFrame]("lpaLabelsOf")
   private def lpaLabelsOf(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionMemo.cached(lpaCache, spark, dir) {
+    lpaLabelsMemo(spark, dir) {
       Graph.labelPropagation(tradeEdges(spark, dir), "src", "dst", rounds = 2)
         .localCheckpoint(true)
     }

@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import java.util.HexFormat
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -58,20 +57,19 @@ object Sources {
     * (rule 16).
     */
   def parquet(spark: SparkSession, path: String): GraftFrame = {
-    val known = Option(parquetSchemas.get((spark, path))).flatMap {
+    val known = parquetSchemas.get(spark, path).flatMap {
       case (fingerprint, schema) =>
         Some(spark.read.schema(schema).parquet(path))
           .filter(df => fingerprintOf(df) == fingerprint)
     }
     GraftFrame(known.getOrElse {
       val df = spark.read.parquet(path)
-      SessionMemo.put(parquetSchemas, spark, path, (fingerprintOf(df), df.schema))
+      parquetSchemas.put(spark, path, (fingerprintOf(df), df.schema))
       df
     })
   }
 
-  private val parquetSchemas =
-    new ConcurrentHashMap[(SparkSession, String), (String, StructType)]()
+  private val parquetSchemas = SessionMemo.family[(String, StructType)]("parquetSchemas")
 
   /** SHA-256 over (path, length, mtime) of every data file in the
     * frame's scan, as listed by Spark's own file index: hidden `_`/`.`

@@ -8,6 +8,18 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+echo "== [0/5] one memo mechanism: no hand-rolled memo maps in queries/ or sources/ =="
+# every memo goes through graft.util.SessionMemo (one registry, evicted
+# with its session); grep exits 1 when nothing matches
+rc=0
+grep -rnE 'ConcurrentHashMap|computeIfAbsent' \
+  src/main/scala/graft/queries src/main/scala/graft/sources || rc=$?
+case $rc in
+  0) echo "hand-rolled memo map above: use graft.util.SessionMemo"; exit 1 ;;
+  1) echo "no hand-rolled memo maps" ;;
+  *) exit "$rc" ;;
+esac
+
 echo "== [1/5] sbt compile =="
 sbt -batch compile
 
