@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for training-data pipelines — the full
   * ladder from exact to semantic near-dup. The reference engine has no
@@ -326,6 +329,43 @@ object Dedup {
     labels
   }
 
+  /** Connected components of a SMALL pair list on the driver: the
+    * pairs are collected through `limit(cap + 1)` (the
+    * [[DomainFrame.materialize]] discipline — more than `cap` pairs
+    * fail loudly with the count and the cap, never a silent fallback)
+    * and folded by union-find whose root is always the smaller id, so
+    * every root is its component's minimum id: the same fixpoint as
+    * [[connectedComponents]]' min-label propagation, in one collect
+    * job instead of one Spark job per propagation round. Output: a
+    * LocalRelation (id, cluster) for every id present in `pairs`,
+    * cluster = min id of the component. Ids must be non-null. */
+  def localConnectedComponents(pairs: DataFrame, aCol: String, bCol: String,
+                               cap: Int): DataFrame = {
+    val spark = pairs.sparkSession
+    val rows = pairs.select(col(aCol).cast("long"), col(bCol).cast("long"))
+      .limit(cap + 1).collect()
+    require(rows.length <= cap,
+      s"driver CC guard: ${rows.length} pairs exceed the cap of $cap — " +
+        "the graph is no longer driver-sized; use connectedComponents")
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var root = parent.getOrElseUpdate(x, x)
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val next = parent(y); parent(y) = root; y = next }
+      root
+    }
+    rows.foreach { r =>
+      val a = find(r.getLong(0))
+      val b = find(r.getLong(1))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val labels = parent.keys.toSeq.sorted.map(id => Row(id, find(id)))
+    spark.createDataFrame(labels.asJava, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("cluster", LongType, nullable = false))))
+  }
+
   /** Per-round lineage truncation for the iterative CC algorithms:
     * eager `localCheckpoint` by default (single-JVM / tests), eager
     * reliable `checkpoint` under `dir` when given (cluster mode —
@@ -504,14 +544,17 @@ object Dedup {
     */
   def signaturePairs(signatures: DataFrame, idCol: String,
                      maxHamming: Int = 3, maxBucket: Int = 2000): DataFrame = {
-    // The signature frame is persisted: 16 bytes/row (id, sig — narrow,
-    // PERF.md lesson 4 is about wide columnar caches) and consumed by
-    // four branches (chunk explode feeding the bucket guard and both
-    // self-join sides, plus both verification joins). Without the
-    // cache every branch re-scans the corpus and re-runs the kernel —
+    // The signature frame is materialized once: 16 bytes/row (id, sig —
+    // narrow, PERF.md lesson 4 is about wide columnar caches) and
+    // consumed by four branches (chunk explode feeding the bucket guard
+    // and both self-join sides, plus both verification joins). Without
+    // it every branch re-scans the corpus and re-runs the kernel —
     // per-branch pushed filters (inferred isnotnull on join keys)
-    // defeat exchange reuse, observed as 6 parquet scans per query.
-    val sigs = signatures.persist()
+    // defeat exchange reuse, observed as 6 parquet scans per query. An
+    // eager localCheckpoint, not persist(): the session's CacheManager
+    // held a persisted frame until the session ended, while checkpoint
+    // blocks are freed by the ContextCleaner once the result is gone.
+    val sigs = signatures.localCheckpoint(eager = true)
     val chunked = sigs.select(col(idCol),
       posexplode(array((0 until 4).map(c =>
         shiftright(col("sig"), c * 16).bitwiseAND(lit(0xFFFFL))): _*)))

@@ -494,9 +494,9 @@ object Similarity {
     * overfull cell is DROPPED — further undercounting, never an O(m²)
     * reducer — the census discipline of PERF lessons 21/22); scoring
     * runs IN-STREAM inside each grid's join stage so only the ≥θ
-    * survivor pairs (two longs each) shuffle for the cross-grid
-    * distinct, and counts/roles are two hash aggregates plus one
-    * semi-join. Dots run codegen'd
+    * survivor pairs (two longs each) are materialized, and counts and
+    * roles are the last prefix of [[dbscanPrefixRoles]]: one count
+    * aggregate, one border join and one max-aggregate. Dots run codegen'd
     * ([[dot]]) over floored 1e6 fixed-point normalized vectors —
     * integer-exact (the q119/q314 convention) — against `thetaFx` in
     * the 1e12 cos scale.
@@ -514,8 +514,10 @@ object Similarity {
                         (g, cells, rows) => if (cells > 0L)
                           println(s"[dbscan-census] grid=$g dropped_cells=$cells dropped_rows=$rows")): DataFrame = {
     val pairs = dbscanGridPairs(data, idCol, vecCol, thetaFx, numCells,
-      iters, dim, grids, maxCell, onCensus).reduce(_ unionAll _)
-    dbscanRolesFromPairs(data, idCol, pairs, minPts)
+      iters, dim, grids, maxCell, onCensus)
+    dbscanPrefixRoles(data, idCol, pairs, minPts)
+      .select(col("id"), col(s"n_nb_$grids").as("n_nb"),
+        col(s"role_$grids").as("role"))
   }
 
   /** Per-grid DISJOINT canonical survivor-pair frames for
@@ -528,7 +530,8 @@ object Similarity {
     *  - the cross-grid `distinct()` that used to shuffle and
     *    hash-aggregate every survivor pair — the operator's DOMINANT
     *    stage even after the r13 canonical-orientation halving
-    *    (DbscanPhaseProbe: distinct+checkpoint 229.9 s of a ~310 s
+    *    (historical r13 attribution by the since-retired
+    *    DbscanPhaseProbe: distinct+checkpoint 229.9 s of a ~310 s
     *    ×100 piecewise total; r14 removes it per guide §2.4, remove
     *    shuffles outright) — costs ZERO shuffle: the earlier-grid test
     *    is a per-row cell-equality filter evaluated in-stream inside
@@ -617,10 +620,9 @@ object Similarity {
         .join(rb.filter(col(s"cb$g").isNotNull),
           col(s"ca$g") === col(s"cb$g"))
         // CANONICAL orientation (r13): ia < ib halves the survivor
-        // emission and the checkpoint; the symmetric closure is
-        // restored after the checkpoint by a map-only mirror union
-        // ([[dbscanRolesFromPairs]]), so every consumer sees the
-        // identical bidirectional pair multiset.
+        // emission and the checkpoint; [[dbscanPrefixRoles]] reads
+        // both ends of each pair, so every consumer sees the
+        // identical bidirectional neighbor relation.
         .filter(col("ia") < col("ib"))
         .filter(firstFinder)
         .filter(dotD(col("fa"), col("fb")) >= lit(thetaFx.toDouble))
@@ -629,30 +631,54 @@ object Similarity {
     }
   }
 
-  /** Count + role fold over a canonical (ia < ib) duplicate-free
-    * survivor-pair frame — the consumer half of [[dbscanCellRoles]],
-    * public so query-level memoization can share one
-    * [[dbscanGridPairs]] build across parameter sweeps (q322/q324). */
-  def dbscanRolesFromPairs(data: DataFrame, idCol: String,
-                           nbPairs: DataFrame, minPts: Long): DataFrame = {
-    // bidirectional view: map-only mirror of the checkpointed canonical
-    // pairs (no shuffle; the aggregates below partial-aggregate anyway)
-    val sym = nbPairs.unionAll(
-      nbPairs.select(col("ib").as("ia"), col("ia").as("ib")))
-    val nb = sym.groupBy(col("ia")).agg(count(lit(1)).as("n_nb"))
+  /** DBSCAN counts and roles for EVERY grid prefix in one fold over
+    * [[dbscanGridPairs]]' per-grid disjoint canonical (ia < ib) pair
+    * frames. Output: one row per `data` id with `n_nb_g` and `role_g`
+    * for each prefix g = 1 … gridPairs.length, where prefix g is the
+    * union of the first g grids' pairs — exactly what a grids = g run
+    * finds, since the seeds are a prefix chain and first-finder-wins
+    * makes the frames disjoint.
+    *
+    *  - counts: both ends of every pair are generated map-only from
+    *    the grid-tagged pairs (no mirror union); ONE aggregate sums
+    *    the ends per id, conditionally per prefix — disjointness makes
+    *    the prefix-g count the sum of the counts of grids ≤ g;
+    *  - border: ONE join of the ends with the per-prefix core flags
+    *    and ONE max-aggregate — a point is a border at prefix g iff a
+    *    pair from a grid ≤ g joins it to a point that is core at g.
+    *
+    * One pass serves q322 (last prefix) and every row of the q324
+    * curve. */
+  def dbscanPrefixRoles(data: DataFrame, idCol: String,
+                        gridPairs: Seq[DataFrame], minPts: Long): DataFrame = {
+    require(gridPairs.nonEmpty, "dbscanPrefixRoles needs at least one grid")
+    val prefixes = 1 to gridPairs.length
+    val ends = gridPairs.zipWithIndex
+      .map { case (p, g) => p.select(col("ia"), col("ib"), lit(g + 1).as("grid")) }
+      .reduce(_ unionAll _)
+      .select(col("grid"), explode(array(
+        struct(col("ia").as("id"), col("ib").as("nbr")),
+        struct(col("ib").as("id"), col("ia").as("nbr")))).as("e"))
+      .select(col("e.id").as("id"), col("e.nbr").as("nbr"), col("grid"))
+    val counts = prefixes.map(g =>
+      sum(when(col("grid") <= g, 1L).otherwise(0L)).as(s"c$g"))
+    val nb = ends.groupBy(col("id")).agg(counts.head, counts.tail: _*)
     val pts = data.select(col(idCol).as("id"))
-      .join(nb, col("id") === nb("ia"), "left_outer")
-      .select(col("id"), coalesce(col("n_nb"), lit(0L)).as("n_nb"))
-      .withColumn("is_core", col("n_nb") >= lit(minPts))
-    val coreIds = pts.filter(col("is_core")).select(col("id").as("ib"))
-    val nearCore = sym.join(coreIds, Seq("ib"), "left_semi")
-      .select(col("ia").as("id")).distinct()
-      .withColumn("near_core", lit(true))
-    pts.join(nearCore, Seq("id"), "left_outer")
-      .select(col("id"), col("n_nb"),
-        when(col("is_core"), "core")
-          .when(coalesce(col("near_core"), lit(false)), "border")
-          .otherwise("noise").as("role"))
+      .join(nb, Seq("id"), "left_outer")
+      .select(col("id") +: prefixes.map(g =>
+        coalesce(col(s"c$g"), lit(0L)).as(s"n_nb_$g")): _*)
+    def core(g: Int): Column = col(s"n_nb_$g") >= lit(minPts)
+    val cores = pts.filter(prefixes.map(core).reduce(_ || _))
+      .select(col("id").as("nbr") +: prefixes.map(g => core(g).as(s"core$g")): _*)
+    val nears = prefixes.map(g =>
+      max(col("grid") <= g && col(s"core$g")).as(s"near$g"))
+    val near = ends.join(cores, Seq("nbr")).groupBy(col("id"))
+      .agg(nears.head, nears.tail: _*)
+    pts.join(near, Seq("id"), "left_outer")
+      .select(col("id") +: prefixes.flatMap(g => Seq(col(s"n_nb_$g"),
+        when(core(g), "core")
+          .when(coalesce(col(s"near$g"), lit(false)), "border")
+          .otherwise("noise").as(s"role_$g"))): _*)
   }
 
   /** Embedding-space near-duplicate pairs: all pairs above a cosine

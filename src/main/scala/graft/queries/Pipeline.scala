@@ -1843,15 +1843,13 @@ object Pipeline {
   // the floor still catches a collapsed-core regression).
   // -------------------------------------------------------------------
   def q322DbscanCells(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
-    val minPts = math.max(3L, e.count() / 80L)
-    // r14: read the memoized 3-grid disjoint pair build (shared with
-    // q324's operating curve); the union over all three grids is
-    // bit-identical to the old full-operator run (first-finder-wins
-    // partition of the same distinct survivor set).
-    Similarity.dbscanRolesFromPairs(e, "vec_id",
-        dbscanPairsOf(spark, dir).reduce(_ unionAll _), minPts)
-      .select(col("id").as("vec_id"), col("n_nb"), col("role"))
+    val minPts = math.max(3L, emb(spark, dir).count() / 80L)
+    // the last (grids = 3) prefix of the memoized all-prefix role fold
+    // over the memoized 3-grid disjoint pair build, both shared with
+    // q324's operating curve
+    dbscanRolesOf(spark, dir, minPts)
+      .select(col("id").as("vec_id"), col("n_nb_3").as("n_nb"),
+        col("role_3").as("role"))
       .orderBy(asc("vec_id"))
   }
   val q322Sql: String =
@@ -2163,24 +2161,24 @@ object Pipeline {
   // not enough, which is the point of publishing it.
   // -------------------------------------------------------------------
   def q324BlockingCurve(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
-    val minPts = math.max(3L, e.count() / 80L)
-    // r14: the grids=g row reads the PREFIX union of the memoized
-    // per-grid disjoint pair frames (seeds are already a prefix chain,
-    // and first-finder-wins emission makes prefix unions exactly the
-    // old per-invocation distinct survivor sets) — the curve costs
-    // three count/role folds over checkpointed long pairs instead of
-    // 6 quantizer trainings + 6 pair joins + 3 distincts.
-    val pairs = dbscanPairsOf(spark, dir)
-    Seq(1, 2, 3).map { g =>
-      Similarity.dbscanRolesFromPairs(e, "vec_id",
-          pairs.take(g).reduce(_ unionAll _), minPts)
-        .agg(sum(col("n_nb")).as("pair_mass"),
-          sum(when(col("role") === "core", 1L).otherwise(0L)).as("n_core"),
-          sum(when(col("role") === "noise", 1L).otherwise(0L)).as("n_noise"))
-        .select(lit(g.toLong).as("grids"), col("pair_mass"),
-          col("n_core"), col("n_noise"))
-    }.reduce(_.unionAll(_)).orderBy(asc("grids"))
+    val minPts = math.max(3L, emb(spark, dir).count() / 80L)
+    // the grids = g row aggregates prefix g of the memoized all-prefix
+    // role fold (q322 pays for it): seeds are a prefix chain and
+    // first-finder-wins emission makes the prefix-g pair union exactly
+    // a grids = g run's survivor set, so the whole curve is one global
+    // aggregate over the checkpointed fold
+    val rows = Seq(1, 2, 3).map { g =>
+      struct(lit(g.toLong).as("grids"),
+        sum(col(s"n_nb_$g")).as("pair_mass"),
+        sum(when(col(s"role_$g") === "core", 1L).otherwise(0L)).as("n_core"),
+        sum(when(col(s"role_$g") === "noise", 1L).otherwise(0L)).as("n_noise"))
+    }
+    dbscanRolesOf(spark, dir, minPts)
+      .agg(array(rows: _*).as("curve"))
+      .select(explode(col("curve")).as("r"))
+      .select(col("r.grids"), col("r.pair_mass"), col("r.n_core"),
+        col("r.n_noise"))
+      .orderBy(asc("grids"))
   }
   val q324Sql: String =
     """WITH nv AS (
@@ -2687,13 +2685,25 @@ object Pipeline {
   // rows of q324's grids-1/2/3 operating curve, which previously ran
   // the full operator 4× — 9 trainings, 9 pair joins, 4 distincts.
   // Params are the shared q322/q324 gate values; the pair frames do
-  // not depend on minPts, which each consumer applies downstream.
+  // not depend on minPts, which dbscanRolesOf applies downstream.
   private val dbscanPairsMemo = SessionMemo.family[Seq[DataFrame]]("dbscanPairsOf")
   private def dbscanPairsOf(spark: SparkSession, dir: String): Seq[DataFrame] =
     dbscanPairsMemo(spark, dir) {
       // eager per-grid localCheckpoints (rule 16)
       Similarity.dbscanGridPairs(emb(spark, dir), "vec_id", "embedding",
         thetaFx = 250000000000L, grids = 3, dim = 64)
+    }
+  // memoized all-prefix dbscan counts and roles over dbscanPairsOf
+  // (Similarity.dbscanPrefixRoles: n_nb_g, role_g for grids g = 1…3),
+  // checkpointed once: q322 projects prefix 3 and q324 aggregates
+  // every prefix, so the count/role fold runs once per (dir, minPts).
+  private val dbscanRolesMemo = SessionMemo.family[DataFrame]("dbscanRolesOf")
+  private def dbscanRolesOf(spark: SparkSession, dir: String,
+                            minPts: Long): DataFrame =
+    dbscanRolesMemo(spark, s"$dir#minPts=$minPts") {
+      Similarity.dbscanPrefixRoles(emb(spark, dir), "vec_id",
+          dbscanPairsOf(spark, dir), minPts)
+        .localCheckpoint(eager = true)
     }
   // The kNN graph is built ONCE per (session, dir) and shared by q234
   // (edge gate), q323 (hubness audit) and q326 (rounds operating
@@ -3178,9 +3188,12 @@ object Pipeline {
   // hashes = 140 @sf0.01 / 717 @sf0.1 — Dedup.signatureOverfullBuckets
   // is the sizing instrument; a corpus that overflows 4096 collapses
   // further or re-sizes, it does not silently drop) → CC on the
-  // REP-pair frame → hash→cluster joined back (AQE broadcasts it at
-  // gate scale; at 100 TB it is a hash-key equi-join, never a driver
-  // collect) → one per-cluster window (fan-in = cluster size, q194's
+  // REP-pair frame, on the driver behind Q261MaxRepPairs (a collect
+  // over the cap fails loudly with the count; on a graph this small
+  // the distributed CC's one Spark job per round dominates) →
+  // hash→cluster joined back (the CC result is a
+  // LocalRelation; the media-sized hash frame is never collected) →
+  // one per-cluster window (fan-in = cluster size, q194's
   // discipline). Oracle: the q117 pattern — recursive-CTE components
   // over the emitted hashes' true Hamming-≤3 pairs (all-pairs
   // affordable at oracle scale; exactly what the blocking avoids at
@@ -3190,6 +3203,13 @@ object Pipeline {
   // the count guard pins 1:1 coverage. Hash provenance is q210's grid
   // replay (same deterministic phashTable over the same media).
   // -------------------------------------------------------------------
+  // Driver-CC cap for q261's representative pairs (id_a < id_b).
+  // sf0.1's representative graph is 152k directed edges, i.e. 76,290
+  // pairs; the cap leaves ~6.5× headroom while the collected rows stay
+  // in the tens of MB on the driver. A corpus past it fails loudly,
+  // naming the count and the cap: then q261 needs the distributed
+  // Dedup.connectedComponents.
+  private val Q261MaxRepPairs: Int = 500000
   def q261PhashCanonical(spark: SparkSession, dir: String): DataFrame = {
     // map-only projection of the memoized checkpointed phash frame —
     // the former persist() is net-negative now that the source is
@@ -3203,7 +3223,8 @@ object Pipeline {
         reps.select(col("rep").as("media_id"), col("dhash").as("sig")),
         "media_id", maxHamming = 3, maxBucket = 4096)
       .select(col("id_a"), col("id_b"))
-    val cc = Dedup.connectedComponents(pairs, "id_a", "id_b")
+    val cc = Dedup.localConnectedComponents(pairs, "id_a", "id_b",
+      Q261MaxRepPairs)
     // hash → cluster map (singleton hash groups label as their rep =
     // their min media_id, identical to the pre-collapse Hamming-0 edge)
     val hashCluster = reps.join(cc, reps("rep") === cc("id"), "left_outer")

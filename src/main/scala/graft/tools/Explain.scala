@@ -29,7 +29,7 @@ object Explain {
       "q60_pack_sequences" -> "packing = one window per hash bucket (parallel) + partial-aggregated groupBy; no global sort",
       "q65_tfidf" -> "(doc,term) and (term) hash-aggregates + one-row N broadcast; per-doc top-k window — every stage partial-aggregates",
       "q67_centroids" -> "posexplode to (label,dim) with map-side partial aggregation — 640 groups regardless of corpus size",
-      "q32_simhash" -> "native simhash64 kernel computed ONCE into a persisted 16-byte/row frame (per-branch pushed filters defeat exchange reuse: 6 corpus scans without it); window-count bucket cap, ids-only candidate pairs",
+      "q32_simhash" -> "native simhash64 kernel computed ONCE into an eager localCheckpoint of 16 bytes/row (a LogicalRDD scan here; per-branch pushed filters defeat exchange reuse: 6 corpus scans without it; the checkpoint dies with the result, where a persisted frame stayed in the session's cache); window-count bucket cap, ids-only candidate pairs",
       "q69_stratified_sample" -> "per-stratum rate CASE + one hash compare, pushed into the scan — membership is map-only, zero shuffle",
       "q70_group_cap" -> "two-phase salted top-n: window per (group, salt) then window per group over <= salts*n survivors — identical to the single-window rank, no hot-group reducer",
       "q71_bigram_lm" -> "bigram/unigram counts partial-aggregate before their shuffles; scoring is two hash joins + a 1-row vocab broadcast; fixed-point integer sums end-to-end",
@@ -138,7 +138,7 @@ object Explain {
       "q258_dedup_impact" -> "q30's 16-byte fingerprint min-aggregate + one ids-only left join back to the corpus; the per-source fold partial-aggregates — dedup impact costs one fingerprint pass regardless of text size",
       "q259_quantile_normalize" -> "per-doc scores partial-aggregate to the DISTINCT (source, score) frame; both CDFs are value-bounded windows; the quantile lookup is the as-of union trick — corpus rows at integer cum positions, source rows at integer ceil-ranks, ONE forward first(ignoreNulls) window; no range join, no BNLJ anywhere",
       "q260_split_balance" -> "the token head is a TakeOrdered LIMIT 64; the (token × split) grid completes via a LITERAL 3-row crossJoin (LocalTableScan — PlanLint-bounded) left-joined to the partial-agged cell counts; χ² terms floor to int64 in the project and the final fold is a 64-row aggregate",
-      "q261_phash_canonical" -> "exact-hash collapse FIRST (groupBy(dhash).min(media_id) — the round-10 fix): the 16-bit-chunk equi self-join and CC run over the DISTINCT-hash representative frame (never media-level on a self-similar corpus; 41.2→6.8 s at sf0.1), hash→cluster joins back (AQE broadcast at gate scale, plain equi-join at 100 TB); canonical pick is ONE per-cluster window over (id, n_bytes) — q194's discipline at the media rung; payload bytes never leave the scan",
+      "q261_phash_canonical" -> "exact-hash collapse FIRST (groupBy(dhash).min(media_id) — the round-10 fix): the 16-bit-chunk equi self-join runs over the DISTINCT-hash representative frame (never media-level on a self-similar corpus; 41.2→6.8 s at sf0.1); CC runs on the driver over the collected rep pairs (union-find, min id as root, capped by Q261MaxRepPairs — over the cap fails loudly) and enters the plan as a LocalTableScan of (id, cluster), so no CC round appears as a Spark job; hash→cluster joins back, and the canonical pick is ONE per-cluster window over (id, n_bytes) — q194's discipline at the media rung; payload bytes never leave the scan",
       "q329_cross_modal_canonical" -> "the joint-cluster decision table is pure equi-join algebra: text clusters re-read the PERSISTED q55/q82 pair frame (pairCache — no rebuild) through CC, media groups are one groupBy(dhash).min partial aggregate joined back, and the canonical pick is one window whose fan-in is the joint-cluster size; blobs never shuffle (phashTable ships id + hash; payload length is computed in the media scan)",
       "q262_unigram_rounds" -> "the corpus collapses to the word-type frame once (the only corpus-sized shuffle); candidate substrings equi-join the BROADCAST model vocab; the greedy orbit materializes via ⌈log2 maxWordLen⌉ pointer-doubling self-joins over (w, pos) pairs — no driver loop over positions, no interpreted HOF; only the model-sized usage table is collected per EM round",
       "q264_stream_phash_nd" -> "dHash computed MAP-SIDE on the stream (mapPartitions in the scan stage — blobs never shuffle); only 24-byte (chunk, chunk_val, ts, id) rows reach the state store; batch tail = distinct candidates → two 8-byte hash joins + bit_count verify → per-media partial-agged counts → 1:1 left join back; the grid re-encode rides the already-persisted narrow phash frame",
@@ -165,9 +165,9 @@ object Explain {
       "q297_conformal_ood" -> "the brute-force conformal BASELINE, every split a COUNT-DERIVED fixed-size sample (ref % mRef = 0 with mRef = 2·max(1, n/2000) under a never-binding GlobalLimit(4001) — structural for PlanLint since round 12 — cal/test residues 1/3 of mCal = 2·mRef, provably disjoint at every n; formerly ref = HALF the corpus broadcast into a BNLJ): pair joins are sample × sample, the rank window runs over the ~500-row calibration frame, q̂ broadcasts as a GlobalLimit(1)-bounded 1-row frame; the corpus-scale path is the q321 IVF twin",
       "q314_dbscan_core" -> "brute-force density BASELINE over the COUNT-DERIVED % max(4, n/500) subset (round-11 bounding — formerly a quarter of the corpus; a never-binding GlobalLimit(2001) makes the bound structural for PlanLint since round 12): the pair BNLJ is sample × sample with codegen'd VecDot on floored normalized vectors, neighbor counts and roles fold in two partial-agged aggregates plus one semi-join, minPts derives from the subset count broadcast as a 1-row frame; the corpus-scale path is the q322 cell-blocked twin",
       "q321_conformal_ivf" -> "the production conformal shape: NOTHING corpus-sized is broadcast — the reference corpus is cell-assigned by the trained IVF quantizer (map-only vec_mat_argmax) and localCheckpointed once inside the memoized conformalScoresOf chain SHARED with q325 (trains once per session+dir), each query explodes to its top-4 probe cells (probe-bounded window) and EQUI-JOINS the reference on the cell id, in-cell rescoring is codegen'd VecDot with a per-query partial-agged max; only the ~500-row calibration frame sees the rank window and q̂ broadcasts as a GlobalLimit(1) 1-row frame — the test stream's path is scan → probe → hash join → aggregate, linear at any corpus size",
-      "q322_dbscan_cells" -> "full-corpus density roles with the semanticDedup blocking discipline: quantizer cells follow the corpus (max(16, n/500) — pair volume ~500·n, corpus-linear), training is model-only driver traffic, assignment map-only, the pair stage an equi-join on the cell id with the maxCell census guard (a hash-AGGREGATE census over the checkpointed assignment — sort-free, one argmax pass — whose drops are REPORTED through the onCensus hook and applied as a map-only isin filter, never an O(m²) reducer), counts/roles two partial-agged aggregates + one semi-join over a localCheckpointed pair frame; every count is a certified lower bound — the one-sided role guarantees the oracle replays",
+      "q322_dbscan_cells" -> "full-corpus density roles with the semanticDedup blocking discipline: quantizer cells follow the corpus (max(16, n/500) — pair volume ~500·n, corpus-linear), training is model-only driver traffic, assignment map-only, the pair stage an equi-join on the cell id with the maxCell census guard (drops REPORTED through the onCensus hook, never an O(m²) reducer); the plan shown is a projection of prefix 3 over the memoized all-prefix role fold (a LogicalRDD scan — the fold's count aggregate, border join and max-aggregate ran once at its build) and the final sort; every count is a certified lower bound — the one-sided role guarantees the oracle replays",
       "q323_hubness_graph" -> "hubness audit at graph cost: in-degrees come from the NN-descent kNN graph (q234's operator — ring-paired init, k-capped reverse edges, candidate-bounded descent, all corpus-linear), so the audit is ONE partial-agged groupBy(dst) + a TakeOrdered(20) on top of an already-needed structure; no all-pairs term exists in the plan",
-      "q324_blocking_curve" -> "three dbscanCellRoles passes with NESTED seed-prefix grids (the q248 operating-curve discipline applied to blocking): each pass is the q322 shape — model-only training per grid, map-only assignment, dots scored IN-STREAM inside the cell equi-join so only ≥θ survivor pairs shuffle for the cross-grid distinct, two partial-agged folds — and the curve rows are three 1-row global aggregates unioned; monotonicity is a theorem of the nested candidate sets, asserted zero-slack by the oracle",
+      "q324_blocking_curve" -> "the grids-1/2/3 operating curve as ONE global aggregate over the memoized all-prefix role fold q322 also reads (a LogicalRDD scan): per prefix g a sum of n_nb_g and conditional core/noise counts, exploded to three rows — no per-row fold, no pair join, no cross-grid distinct (the grids are disjoint, first finder wins); monotonicity is a theorem of the nested candidate sets, asserted zero-slack by the oracle",
       "q325_conformal_curve" -> "ONE pair of score frames — the SAME checkpointed frames q321 reads, via the memoized conformalScoresOf chain (the α sweep is pure threshold algebra and the score function is shared by construction): per α the q̂ pick is a rank window over the ~500-row calibration frame fenced by GlobalLimit(1), and the three flag branches re-read the checkpointed test scores against broadcast 1-row q̂ frames; q̂/flag monotonicity across α is a shared-scores theorem the oracle asserts zero-slack",
       "q326_knn_rounds_curve" -> "the whole rounds-vs-recall curve costs ONE NN-descent build: the memoized knnCurveOf chain (shared with q234/q323) lazily checkpoints each round's graph as a natural byproduct of the descent loop, and the query is three projections over those checkpoints unioned — no extra join, no extra shuffle; per-round hit monotonicity is a nested-candidate-set theorem the oracle asserts zero-slack",
       "q327_knn_width_curve" -> "the init-volume dial published: widths 8/32 are INIT-ONLY builds (ring pairs + hash init → one topK window — no descent join anywhere in their plans, candidate pairs ≈ n·(2·grids·w + 8) linear in both n and w) and width 96 reuses the memoized knnCurveOf element 0 (q234's build — zero extra cost); nested ring-offset prefixes make per-width hits a zero-slack monotone theorem, and the published w=8 recall drop at sf0.1 (0.066 vs 0.221) is the scale lesson the table exists to show",

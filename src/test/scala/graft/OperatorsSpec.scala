@@ -804,6 +804,28 @@ class OperatorsSpec extends SparkSpec {
     graft.util.TempDirs.deleteRecursively(new java.io.File(dir))
   }
 
+  test("driver CC: cap + 1 pairs fail loudly, naming the count and the cap") {
+    val g = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 10L)).toDF("a", "b")
+    val err = intercept[IllegalArgumentException](
+      Dedup.localConnectedComponents(g, "a", "b", cap = 3))
+    assert(err.getMessage.contains("4 pairs exceed the cap of 3"), err.getMessage)
+    // at the cap exactly it runs and labels by the component min
+    val ok = Dedup.localConnectedComponents(g, "a", "b", cap = 4)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(ok === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 1L, 11L -> 1L))
+  }
+
+  test("signaturePairs leaves no cached frame in the session's CacheManager") {
+    val sigs = Seq((1L, 0L), (2L, 1L), (3L, 0xFFFFL << 48)).toDF("media_id", "sig")
+    val pairs = Dedup.signaturePairs(sigs, "media_id", maxHamming = 3)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs === Set((1L, 2L)))
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cache.lookupCachedData(
+      sigs.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty)
+  }
+
   // q75's rows-only gate is backed here: planted near-identical
   // vectors must land in one cluster with the lowest id kept;
   // well-separated vectors must all survive as their own cluster.

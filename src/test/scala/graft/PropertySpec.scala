@@ -381,6 +381,87 @@ class PropertySpec extends Properties("graft") {
           role != "core" || exactNb(id) >= minPts }
     }
 
+  // random DISJOINT per-grid canonical pair sets over ≤ 40 ids (the
+  // first grid to draw a pair keeps it — dbscanGridPairs' first-finder
+  // contract), 1-3 grids, and a random minPts
+  private val gridPairsGen: Gen[(Int, Int, Long, Seq[Seq[(Long, Long)]])] =
+    for {
+      n <- Gen.chooseNum(2, 40)
+      grids <- Gen.chooseNum(1, 3)
+      minPts <- Gen.chooseNum(1L, 6L)
+      drawn <- Gen.listOf(Gen.zip(Gen.chooseNum(0, n - 1),
+        Gen.chooseNum(0, n - 1), Gen.chooseNum(0, grids - 1)))
+    } yield {
+      val canon = drawn.filter { case (a, b, _) => a != b }
+        .map { case (a, b, g) => (math.min(a, b).toLong, math.max(a, b).toLong, g) }
+        .distinctBy { case (a, b, _) => (a, b) }
+      (n, grids, minPts, (0 until grids).map(g =>
+        canon.collect { case (a, b, `g`) => (a, b) }))
+    }
+
+  // the all-prefix fold against a brute-force DBSCAN over the union of
+  // the first g grids' pairs, for every prefix g
+  property("dbscanPrefixRoles: every prefix equals brute force on its pair union") =
+    Prop.forAllNoShrink(gridPairsGen) { case (n, grids, minPts, perGrid) =>
+      val data = (0L until n.toLong).toDF("vec_id")
+      val got = graft.operators.Similarity.dbscanPrefixRoles(data, "vec_id",
+          perGrid.map(_.toDF("ia", "ib")), minPts)
+        .collect().map(r => r.getLong(0) -> r).toMap
+      got.size == n && (1 to grids).forall { g =>
+        val union = perGrid.take(g).flatten
+        val nbrs = (0L until n.toLong).map(i => i -> union.collect {
+          case (`i`, b) => b
+          case (a, `i`) => a
+        }).toMap
+        def isCore(i: Long) = nbrs(i).size >= minPts
+        (0L until n.toLong).forall { i =>
+          val role =
+            if (isCore(i)) "core"
+            else if (nbrs(i).exists(isCore)) "border"
+            else "noise"
+          got(i).getAs[Long](s"n_nb_$g") == nbrs(i).size &&
+            got(i).getAs[String](s"role_$g") == role
+        }
+      }
+    }
+
+  // chain, star and clique components under shuffled ids: the driver
+  // CC and the distributed min-label CC label every id identically
+  private val shapedGraphGen: Gen[List[(Long, Long)]] = {
+    val component = for {
+      shape <- Gen.oneOf("chain", "star", "clique")
+      size <- Gen.chooseNum(2, 8)
+    } yield (shape, size)
+    for {
+      comps <- Gen.nonEmptyListOf(component).map(_.take(4))
+      ids <- Gen.pick(comps.map(_._2).sum, 0L until 100L)
+      keys <- Gen.listOfN(ids.size, Gen.chooseNum(0, Int.MaxValue))
+      order <- Gen.oneOf(true, false)
+    } yield {
+      val shuffled = ids.toList.zip(keys).sortBy(_._2).map(_._1)
+      val starts = comps.map(_._2).scanLeft(0)(_ + _)
+      comps.zip(starts).flatMap { case ((shape, size), s) =>
+        val v = shuffled.slice(s, s + size)
+        val edges = shape match {
+          case "chain" => v.zip(v.tail)
+          case "star"  => v.tail.map(v.head -> _)
+          case _       => v.combinations(2).map(p => p(0) -> p(1)).toList
+        }
+        if (order) edges else edges.map(_.swap)
+      }
+    }
+  }
+
+  property("driver CC equals the distributed CC on chains, stars and cliques") =
+    Prop.forAllNoShrink(shapedGraphGen) { edges =>
+      val pairs = edges.toDF("id_a", "id_b")
+      def lab(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      lab(graft.operators.Dedup.localConnectedComponents(pairs, "id_a", "id_b",
+          cap = edges.size)) ==
+        lab(graft.operators.Dedup.connectedComponents(pairs, "id_a", "id_b"))
+    }
+
   // q326's zero-slack theorem as a property: under ANY geometry, the
   // per-round graphs' true-edge hits are non-decreasing in rounds
   // (round r+1's candidates contain round r's selections; a true

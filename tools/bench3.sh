@@ -21,7 +21,7 @@ OUT="${2:-BENCH3.json}"
 for i in 1 2 3; do
   echo "== bench3 run $i/3 ==" >&2
   SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}" \
     tools/run.sh graft.Bench > "/tmp/bench3_run$i.out" 2>"/tmp/bench3_run$i.err" \
     || { echo "bench run $i failed:" >&2; tail -5 "/tmp/bench3_run$i.err" >&2; exit 1; }
 done

@@ -7,6 +7,9 @@
 #                            # (BENCH3.json) instead of a single bench
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# every Spark step runs at this host's core count (the tier-1 test
+# command's rule), never a fixed count sized for another machine
+CPUS="$(env -u OMP_NUM_THREADS nproc)"
 
 echo "== [0/5] one memo mechanism: no hand-rolled memo maps in queries/ or sources/ =="
 # every memo goes through graft.util.SessionMemo (one registry, evicted
@@ -31,7 +34,7 @@ python3 tools/client_e2e.py
 python3 -m unittest discover -s benchmark -p 'test_*.py'
 
 echo "== [3/5] Verify + DuckDB check @ sf0.01 =="
-SPARK_GRAFT_CPUS=8 tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/gate_sf001
+SPARK_GRAFT_CPUS=$CPUS tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/gate_sf001
 python3 tools/check.py /root/testdata/sf0.01 /tmp/gate_sf001 | tail -2
 
 echo "== [3b/5] plan lint (scale-shape audit over every query plan) =="
@@ -57,7 +60,7 @@ EOF
 
 if [[ "${1:-}" == "--sweep" ]]; then
   echo "== [4/5] cross-scale Verify + check @ sf0.1 =="
-  SPARK_GRAFT_CPUS=16 tools/run.sh graft.Verify /root/testdata/sf0.1 /tmp/gate_sf01
+  SPARK_GRAFT_CPUS=$CPUS tools/run.sh graft.Verify /root/testdata/sf0.1 /tmp/gate_sf01
   python3 tools/check.py /root/testdata/sf0.1 /tmp/gate_sf01 | tail -2
 else
   echo "== [4/5] (skipped sf0.1 sweep — pass --sweep) =="
@@ -71,7 +74,7 @@ if [[ "${1:-}" == "--bench3" || "${2:-}" == "--bench3" ]]; then
 fi
 
 echo "== [5/5] bench @ sf0.1 (watch the q01 canary: ~0.5s quiet) =="
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 tools/run.sh graft.Bench \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=$CPUS tools/run.sh graft.Bench \
   | python3 -c '
 import json, sys
 # the FULL line (with per-query map); Bench also emits a trailing
