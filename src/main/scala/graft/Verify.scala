@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.util.SessionMemo
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,7 +12,8 @@ object Verify {
     // checks only; the driver always passes exactly 2 args)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -85,6 +87,12 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v.replace("__GRAFT_OUT__", outAbs))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // what the run's memos did, per family: the counts PERF.md's memo
+    // map is read from
+    SessionMemo.stats(spark).toSeq.sortBy(_._1).foreach { case (family, s) =>
+      System.err.println(
+        f"[verify] memo $family builds=${s.builds} hits=${s.hits} build_ms=${s.buildMs}%.0f")
+    }
     spark.stop()
   }
 }

@@ -1484,11 +1484,14 @@ object Stats {
     val daily = graft.sources.Events.ev(spark, dir)
       .select(expr("unix_micros(ts) div 86400000000").as("day"))
       .groupBy(col("day")).agg(count(lit(1)).as("n_true"))
-    val u = S.mix32(C.portableHash(col("day"), dpSeed))
+    // u is its own column, computed once: inlined into all 33
+    // branches, its hash made the stage's generated method exceed the
+    // JVM's 64 KB limit, and Spark ran the stage interpreted
     val noise = dpThs.zip(dpOuts).foldRight(lit(17L)) {
-      case ((th, out), acc) => when(u < lit(th), lit(out)).otherwise(acc)
+      case ((th, out), acc) => when(col("u") < lit(th), lit(out)).otherwise(acc)
     }
-    daily.withColumn("noise", noise)
+    daily.withColumn("u", S.mix32(C.portableHash(col("day"), dpSeed)))
+      .withColumn("noise", noise)
       .select(col("day"), col("noise"),
         (col("n_true") + col("noise")).as("n_noisy"))
       .orderBy(asc("day"))

@@ -1,12 +1,18 @@
 package graft.server
 
 import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.util.RawValue
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 import graft.api.GraftException
+import graft.sources.Sources
+import graft.util.SessionMemo
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+import java.util.HexFormat
 import java.util.concurrent.Executors
 
 /** The reference engine's remote usage mode: an HTTP JSON API serving
@@ -27,8 +33,50 @@ import java.util.concurrent.Executors
   * SparkSession; requests build lazy plans and only Actions execute —
   * a Read or Op launches no Spark job once its parquet paths have been
   * opened in this session (see [[graft.sources.Sources.parquet]]).
+  *
+  * An Action's reply is pooled, as the reference's Pool keeps every
+  * materialized column under its lineage hash: an Action asked again
+  * over the same token, on a server with the same row cap, over input
+  * files with the same fingerprint, is answered from the pool without
+  * a Spark job.
+  *  - Only the rendered `blocks` of a reply are pooled, never a frame
+  *    or a plan. Every request still replays its lineage, which
+  *    re-validates the token and lists the input files afresh, so a
+  *    rewritten file gives a new key.
+  *  - A reply is kept only if the files list the same after it was
+  *    computed, and only if every leaf of the frame is a file relation
+  *    (a verb whose replay checkpoints is computed every time).
+  *  - An Action that fails (a 400, an over-cap Collect) keeps nothing.
+  *    Concurrent identical Actions compute once.
+  *  - A Take or CollectPage without an OrderBy keeps the first valid
+  *    answer it computed.
+  *  - The pool is the `SessionMemo` family `serverReplies`: it dies with
+  *    its session, and holds at most [[PoolBudgetBytes]], oldest first.
   */
 object GraftServer {
+
+  /** Most bytes of replies the pool holds, all sessions together; the
+    * oldest replies leave first. */
+  val PoolBudgetBytes: Long = 32L << 20
+
+  /** A reply heavier than this is served but not pooled. */
+  val PoolEntryCapBytes: Long = 1L << 20
+
+  /** Rendered `blocks` JSON of answered Actions, weighed in UTF-8 bytes. */
+  private val replies = SessionMemo.bounded[String]("serverReplies",
+    PoolBudgetBytes, PoolEntryCapBytes)(_.getBytes(StandardCharsets.UTF_8).length.toLong)
+
+  /** The pool key of an Action: SHA-256 over the rendered token, the
+    * rendered Action, the server's row cap and the input fingerprint of
+    * the replayed frame ([[Sources.fingerprintOf]]). */
+  private def replyKey(state: JsonNode, action: JsonNode,
+                       maxCollectRows: Option[Long], inputs: String): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    Seq(Wire.render(state), Wire.render(action),
+      maxCollectRows.fold("uncapped")(_.toString), inputs)
+      .foreach(part => md.update((part + "\u0000").getBytes(StandardCharsets.UTF_8)))
+    HexFormat.of().formatHex(md.digest())
+  }
 
   /** Handle one parsed request body → (status, response JSON/text). */
   def handle(spark: SparkSession, body: JsonNode): (Int, String) =
@@ -76,7 +124,7 @@ object GraftServer {
         case "Action" =>
           val frame = Wire.replay(spark, state)
           val action = fn.get("Action")
-          val blocks =
+          def blocks: ObjectNode =
             if (action.isTextual && action.asText() == "Collect") {
               maxCollectRows match {
                 case Some(cap) =>
@@ -124,9 +172,17 @@ object GraftServer {
               val limited = frame.take(action.get("Take").asInt())
               Wire.blocksOf(limited.df.collect(), limited.df.schema)
             } else throw new GraftException(s"unknown action: $action")
+          val json = Sources.fingerprintOf(frame.df) match {
+            case Some(inputs) =>
+              replies(spark, replyKey(state, action, maxCollectRows, inputs)) {
+                val reply = Wire.render(blocks)
+                (reply, Sources.fingerprintOf(frame.df, relist = true).contains(inputs))
+              }
+            case None => Wire.render(blocks)
+          }
           val resp = Wire.obj()
           resp.set[JsonNode]("dataframe", state.deepCopy[JsonNode]())
-          resp.set[JsonNode]("blocks", blocks)
+          resp.putRawValue("blocks", new RawValue(json))
           (201, Wire.render(resp))
         case other =>
           throw new GraftException(s"unknown function tag: $other")
@@ -172,7 +228,8 @@ object GraftServer {
 
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(3000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -45,10 +45,18 @@ import scala.jdk.CollectionConverters._
   * The only Spark job a replay would run is a parquet Read's schema
   * inference. `Sources.parquet` keeps the inferred schema per (session,
   * path), checked against a fingerprint of the data files, so a
-  * replayed Read opens without a job until the files change — the
-  * reference's Pool rule (never recompute an entry whose deterministic
-  * key was seen) applied to the one input a replay cannot derive from
-  * the token. Frames themselves are never cached by lineage.
+  * replayed Read opens without a job until the files change.
+  *
+  * An Action's reply is pooled (`GraftServer`): the rendered `blocks`
+  * are kept under a hash of the token, the Action, the server's row cap
+  * and the input fingerprint of the replayed frame (path, length and
+  * mtime of every data file it reads), so the same Action over the same
+  * files is answered without a Spark job — the reference's Pool rule
+  * (never recompute an entry whose deterministic key was seen) applied
+  * one level up. Frames and plans are never cached by lineage, only
+  * replies; every request still replays its token, and the protocol
+  * stays stateless: a replica that never saw the token computes the
+  * same reply.
   */
 object Wire {
   private val mapper = new ObjectMapper()

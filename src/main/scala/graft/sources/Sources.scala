@@ -5,6 +5,7 @@ import java.security.MessageDigest
 import java.util.HexFormat
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 import graft.api.GraftFrame
@@ -47,45 +48,61 @@ object Sources {
     *
     * Spark infers a parquet schema with a footer-reading job on every
     * open. The inferred schema is kept per (session, path) together
-    * with a fingerprint of the data files Spark listed for it; the next
-    * open passes the schema back (`spark.read.schema(s).parquet`), which
-    * lists the files again but runs no inference job, and keeps the
-    * frame only if the new listing has the same fingerprint. A rewritten
-    * file or directory is therefore inferred again, and its entry
-    * replaced. Only the schema is kept — never a DataFrame, whose plan
-    * instance must not be shared across the server's request threads
-    * (rule 16).
+    * with the [[fingerprintOf]] of the files Spark listed for it; the
+    * next open passes the schema back (`spark.read.schema(s).parquet`),
+    * which lists the files again but runs no inference job, and keeps
+    * the frame only if the new listing has the same fingerprint. A
+    * rewritten file or directory is therefore inferred again, and its
+    * entry replaced. Only the schema is kept — never a DataFrame, whose
+    * plan instance must not be shared across the server's request
+    * threads (rule 16).
     */
   def parquet(spark: SparkSession, path: String): GraftFrame = {
-    val known = parquetSchemas.get(spark, path).flatMap {
-      case (fingerprint, schema) =>
-        Some(spark.read.schema(schema).parquet(path))
-          .filter(df => fingerprintOf(df) == fingerprint)
+    var opened: DataFrame = null
+    parquetSchemas.fresh(spark, path) { case (fingerprint, schema) =>
+      opened = spark.read.schema(schema).parquet(path)
+      fingerprintOf(opened).contains(fingerprint)
+    } {
+      opened = spark.read.parquet(path)
+      (fingerprintOf(opened).getOrElse(throw new IllegalStateException(
+        s"parquet read planned no file relation: ${opened.queryExecution.analyzed}")),
+        opened.schema)
     }
-    GraftFrame(known.getOrElse {
-      val df = spark.read.parquet(path)
-      parquetSchemas.put(spark, path, (fingerprintOf(df), df.schema))
-      df
-    })
+    GraftFrame(opened)
   }
 
   private val parquetSchemas = SessionMemo.family[(String, StructType)]("parquetSchemas")
 
-  /** SHA-256 over (path, length, mtime) of every data file in the
-    * frame's scan, as listed by Spark's own file index: hidden `_`/`.`
-    * files are skipped, partition subdirectories and glob matches are
-    * included. */
-  private def fingerprintOf(df: DataFrame): String = {
-    val index = df.queryExecution.analyzed.collectFirst {
+  /** The input fingerprint of a frame: SHA-256 over (path, length,
+    * mtime) of every data file of every file-relation leaf of its
+    * analyzed plan (parquet and CSV alike, both sides of a join), as
+    * listed by Spark's own file index: hidden `_`/`.` files are skipped,
+    * partition subdirectories and glob matches are included. None when
+    * any leaf is not a file relation (a checkpoint, an in-memory
+    * relation): such a frame has no fingerprint.
+    *
+    * Each `spark.read` opens a new file index, listed when it is
+    * opened; `relist` lists every index again first, so a caller that
+    * fingerprinted a frame before running it can check afterwards that
+    * no input changed meanwhile. A file rewritten with the same length
+    * within the same millisecond is not seen. */
+  def fingerprintOf(df: DataFrame, relist: Boolean = false): Option[String] = {
+    val leaves = df.queryExecution.analyzed.collectWithSubqueries {
+      case l: LeafNode => l
+    }
+    val indexes = leaves.collect {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
-    }.getOrElse(throw new IllegalStateException(
-      s"parquet read planned no file relation: ${df.queryExecution.analyzed}"))
-    val md = MessageDigest.getInstance("SHA-256")
-    index.listFiles(Nil, Nil).flatMap(_.files)
-      .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
-      .sorted
-      .foreach(line => md.update(line.getBytes(StandardCharsets.UTF_8)))
-    HexFormat.of().formatHex(md.digest())
+    }
+    if (indexes.isEmpty || indexes.size != leaves.size) None
+    else {
+      if (relist) indexes.foreach(_.refresh())
+      val md = MessageDigest.getInstance("SHA-256")
+      indexes.flatMap(_.listFiles(Nil, Nil)).flatMap(_.files)
+        .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
+        .sorted
+        .foreach(line => md.update(line.getBytes(StandardCharsets.UTF_8)))
+      Some(HexFormat.of().formatHex(md.digest()))
+    }
   }
 
   /** Load one named testdata table from a scale-factor directory. */

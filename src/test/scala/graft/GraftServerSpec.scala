@@ -2,7 +2,9 @@ package graft
 
 import graft.server.{GraftServer, Wire}
 import graft.sources.Sources
+import graft.util.SessionMemo
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -437,5 +439,119 @@ class GraftServerSpec extends SparkSpec {
       val rows = (df: org.apache.spark.sql.DataFrame) => df.collect().map(_.toString).sorted.toSeq
       assert(rows(hit) === rows(want), path)
     }
+  }
+
+  // ---- reply pool: an Action asked again over unchanged inputs ----
+
+  private def handleJson(session: SparkSession, body: String,
+                         cap: Option[Long] = None): (Int, String) =
+    GraftServer.handle(session, Wire.parse(body), cap)
+
+  private def poolStats(session: SparkSession) =
+    SessionMemo.stats(session).getOrElse("serverReplies", SessionMemo.Stats(0, 0, 0.0))
+
+  private def action(state: String, act: String): String =
+    s"""{"dataframe": $state, "function": {"Action": $act}}"""
+
+  private def tempCsv(tag: String, rows: String): java.nio.file.Path = {
+    val p = Files.createTempFile(s"graft_$tag", ".csv")
+    Files.write(p, rows.getBytes(StandardCharsets.UTF_8))
+    p
+  }
+
+  private def readCsv(path: java.nio.file.Path): String =
+    callOk("null", s"""{"Read": ["csv", "${path.toAbsolutePath}", $schemaJson]}""")._1
+
+  test("pool: a repeated Action runs no Spark job and returns a byte-identical reply") {
+    val facts = tempDir("pool_repeat")
+    spark.range(0, 100).selectExpr("id", "id % 5 AS k", "CAST(id AS DOUBLE) * 1.5 AS v")
+      .write.parquet(facts)
+    val s1 = readParquet(facts)
+    val s2 = callOk(s1, """{"Op": {"GroupBy": ["k"]}}""")._1
+    val s3 = callOk(s2, """{"Op": {"Aggregation": {"v": "Sum", "id": "Count"}}}""")._1
+    val s4 = callOk(s3, """{"Op": {"OrderBy": ["k"]}}""")._1
+    val first = post(action(s4, "\"Collect\""))
+    assert(first._1 === 201, first._2)
+    val before = poolStats(spark)
+    var again: (Int, String) = null
+    assert(jobsDuring { again = post(action(s4, "\"Collect\"")) } === 0)
+    assert(again === first)
+    val after = poolStats(spark)
+    assert(after.hits === before.hits + 1 && after.builds === before.builds, after)
+    val b = Wire.parse(first._2).get("blocks")
+    assert(b.get("k").get("Int").toString === "[0,1,2,3,4]")
+  }
+
+  test("pool: a rewritten parquet directory and a rewritten CSV file each give the new answer") {
+    val p = tempDir("pool_rewrite")
+    spark.range(0, 10).selectExpr("id").write.parquet(p)
+    val sp = readParquet(p)
+    def count(state: String) = {
+      val (st, body) = post(action(state, "\"Count\""))
+      assert(st === 201, body)
+      Wire.parse(body).get("blocks").get("count").get("Int").get(0).asLong()
+    }
+    assert(count(sp) === 10L && count(sp) === 10L)
+    spark.range(0, 25).selectExpr("id").write.mode("overwrite").parquet(p)
+    assert(count(sp) === 25L)
+
+    val csv = tempCsv("pool_rewrite", "1|a|true\n2|b|false\n")
+    val sc = callOk(readCsv(csv), """{"Op": {"OrderBy": ["int"]}}""")._1
+    def ints(state: String) =
+      Wire.parse(post(action(state, "\"Collect\""))._2).get("blocks").get("int").toString
+    assert(ints(sc) === """{"Int":[1,2]}""" && ints(sc) === """{"Int":[1,2]}""")
+    Files.write(csv, "1|a|true\n2|b|false\n3|c|true\n".getBytes(StandardCharsets.UTF_8))
+    assert(ints(sc) === """{"Int":[1,2,3]}""")
+  }
+
+  test("pool: a new SparkSession misses") {
+    val csv = tempCsv("pool_session", "5|e|true\n6|f|false\n")
+    val req = action(readCsv(csv), "\"Count\"")
+    assert(handleJson(spark, req)._1 === 201)
+    assert(jobsDuring(assert(handleJson(spark, req)._1 === 201)) === 0)
+    val other = spark.newSession()
+    assert(jobsDuring(assert(handleJson(other, req) === handleJson(spark, req))) > 0)
+    assert(poolStats(other).builds === 1 && poolStats(other).hits === 0)
+  }
+
+  test("pool: 8 concurrent identical Actions compute once") {
+    val csv = tempCsv("pool_concurrent", (1 to 50).map(i => s"$i|s$i|true").mkString("", "\n", "\n"))
+    val req = action(callOk(readCsv(csv), """{"Op": {"Aggregation":
+      |  {"int": "Sum", "string": "Max", "bool": "Count"}}}""".stripMargin)._1, "\"Collect\"")
+    val before = poolStats(spark)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val got = try {
+      val calls = (1 to 8).map(_ => pool.submit(new java.util.concurrent.Callable[(Int, String)] {
+        def call(): (Int, String) = { start.await(); post(req) }
+      }))
+      start.countDown()
+      calls.map(_.get(2, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdown()
+    assert(got.forall(_ === got.head) && got.head._1 === 201, got.head)
+    val after = poolStats(spark)
+    assert(after.builds - before.builds === 1, after)
+    assert(after.hits - before.hits === 7, after)
+  }
+
+  test("pool: an over-cap Collect stays a 400, and capped and uncapped servers share no entry") {
+    val csv = tempCsv("pool_cap", "1|a|true\n2|b|false\n3|c|true\n")
+    val st = readCsv(csv)
+    val collect = action(st, "\"Collect\"")
+    val page = action(st, """{"CollectPage": {"offset": 0, "limit": 2}}""")
+    val before = poolStats(spark)
+    (1 to 2).foreach { _ =>
+      val (code, body) = handleJson(spark, collect, Some(2L))
+      assert(code === 400 && body.contains("row cap (2)"), body)
+    }
+    assert(handleJson(spark, collect)._1 === 201)
+    assert(poolStats(spark).builds === before.builds + 3 && poolStats(spark).hits === before.hits)
+    // the same page under each cap: one build each, then one hit each
+    val capped = handleJson(spark, page, Some(2L))
+    val uncapped = handleJson(spark, page)
+    assert(capped._1 === 201 && capped === uncapped)
+    assert(poolStats(spark).builds === before.builds + 5)
+    assert(handleJson(spark, page, Some(2L)) === capped && handleJson(spark, page) === uncapped)
+    assert(poolStats(spark).builds === before.builds + 5 && poolStats(spark).hits === before.hits + 2)
   }
 }

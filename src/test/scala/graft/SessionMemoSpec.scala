@@ -11,7 +11,8 @@ import graft.util.SessionMemo
 import org.apache.spark.sql.SparkSession
 
 /** The memo registry itself: nested builds, concurrent callers, failed
-  * builds, and eviction when the session stops. */
+  * builds, per-family counts, bounded families, and eviction when the
+  * session stops. */
 class SessionMemoSpec extends SparkSpec {
 
   private def onThreads[T](n: Int)(body: ExecutionContext => T): T = {
@@ -73,6 +74,58 @@ class SessionMemoSpec extends SparkSpec {
     assert(builds.get === 2)
   }
 
+  test("counts: 8 concurrent callers on one key count exactly 1 build and 7 hits") {
+    val memo = SessionMemo.family[AnyRef]("spec.counts")
+    val start = new CountDownLatch(1)
+    onThreads(8) { implicit ec =>
+      val all = Future.sequence((1 to 8).map(_ => Future {
+        start.await()
+        memo(spark, "one") { Thread.sleep(200); new Object }
+      }))
+      start.countDown()
+      Await.result(all, 1.minute)
+    }
+    val st = SessionMemo.stats(spark)("spec.counts")
+    assert(st.builds === 1 && st.hits === 7, st)
+    assert(st.buildMs >= 200.0, st)
+    memo(spark, "one")(fail("a held value must not build"))
+    assert(SessionMemo.stats(spark)("spec.counts").hits === 8)
+    // a session that never read the family has no counts for it
+    assert(!SessionMemo.stats(spark.newSession()).contains("spec.counts"))
+  }
+
+  test("bounded: the byte budget drops the oldest entries first, and an over-cap value is served but not held") {
+    val memo = SessionMemo.bounded[String]("spec.bounded", budgetBytes = 10, entryCapBytes = 4)(
+      _.length.toLong)
+    val builds = new AtomicInteger
+    def read(key: String, value: String, keep: Boolean = true) =
+      memo(spark, key) { builds.incrementAndGet(); (value, keep) }
+    Seq("a" -> "aaaa", "b" -> "bbbb").foreach { case (k, v) => assert(read(k, v) === v) }
+    assert(memo.get(spark, "a") === Some("aaaa"))
+    assert(read("c", "ccc") === "ccc") // 11 bytes > 10: "a" leaves
+    assert(memo.get(spark, "a") === None)
+    assert(memo.get(spark, "b") === Some("bbbb") && memo.get(spark, "c") === Some("ccc"))
+    assert(builds.get === 3)
+    read("b", "never built"); read("c", "never built")
+    assert(builds.get === 3)
+    // 5 bytes > the 4-byte entry cap: returned each time, never held
+    assert(read("big", "eeeee") === "eeeee")
+    assert(read("big", "eeeee") === "eeeee")
+    assert(builds.get === 5 && memo.get(spark, "big") === None)
+    // a value its build declines is returned but not held
+    assert(read("declined", "d", keep = false) === "d")
+    assert(memo.get(spark, "declined") === None && builds.get === 6)
+    // a build that throws leaves nothing, and the next call builds
+    intercept[IllegalStateException](memo(spark, "thrown")(throw new IllegalStateException("no")))
+    assert(read("thrown", "t") === "t" && memo.get(spark, "thrown") === Some("t"))
+    val st = SessionMemo.stats(spark)("spec.bounded")
+    assert(st.builds === 8 && st.hits === 2, st)
+    // b, c and t fit (8 bytes); a new 3-byte value drops the oldest, b
+    assert(read("d", "ddd") === "ddd")
+    assert(memo.get(spark, "b") === None)
+    assert(Seq("c", "thrown", "d").map(memo.get(spark, _)) === Seq(Some("ccc"), Some("t"), Some("ddd")))
+  }
+
   test("session stop: entries leave with their session, and a new session builds again") {
     // stopping the suites' shared session would break the suites after
     // this one, so the check runs in a JVM of its own
@@ -85,6 +138,7 @@ class SessionMemoSpec extends SparkSpec {
     val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
     assert(proc.waitFor() === 0, out.takeRight(40).mkString("\n"))
     assert(out.find(_.startsWith("builds=")) === Some("builds=2 left=0"))
+    assert(out.find(_.startsWith("stats=")) === Some("stats=0"))
   }
 }
 
@@ -103,9 +157,11 @@ object SessionMemoStopCheck {
     read(first); read(first)
     first.stop()
     val left = memo.get(first, "dir").size
+    val statsLeft = SessionMemo.stats(first).size
     val second = session()
     read(second)
     second.stop()
     println(s"builds=${builds.get} left=$left")
+    println(s"stats=$statsLeft")
   }
 }

@@ -9,7 +9,8 @@ Run from /root/repo after `sbt compile`:
 Covers the reference client's canonical flows (client.py:248-331):
 example_small (filter/select/aggregate/collect), arithmetic select
 with alias + float constant, group_by nesting, join, order_by,
-count/take, the parquet read, and the 400 error surface.
+count/take, the parquet read, the 400 error surface, and the reply
+pool (a repeated Collect, then one after its CSV is rewritten).
 """
 
 import os
@@ -244,6 +245,18 @@ def run_checks():
                  .select([c('int')]) \
                  .aggregate({'int': Aggregator.SUM}).collect()
     assert again == {'int': {'Int': [4]}}, again
+
+    # --- reply pool: a repeated Collect gets the same reply; a
+    # rewritten input file gets the new rows ---
+    sorted_small = small.order_by(['int'])
+    first = sorted_small.collect()
+    assert sorted_small.collect() == first, first
+    assert first['int'] == {'Int': [1, 2, 3, 4]}, first
+    with open(csv_path, 'a') as f:
+        f.write('5|five|true\n')
+    rewritten = sorted_small.collect()
+    assert rewritten['int'] == {'Int': [1, 2, 3, 4, 5]}, rewritten
+    assert rewritten['string']['String'][-1] == 'five', rewritten
 
     os.unlink(csv_path)
 

@@ -11,12 +11,14 @@ cd "$(dirname "$0")/.."
 # command's rule), never a fixed count sized for another machine
 CPUS="$(env -u OMP_NUM_THREADS nproc)"
 
-echo "== [0/5] one memo mechanism: no hand-rolled memo maps in queries/ or sources/ =="
+echo "== [0/5] one memo mechanism: no hand-rolled memo maps in queries/, sources/, server/ or api/ =="
 # every memo goes through graft.util.SessionMemo (one registry, evicted
-# with its session); grep exits 1 when nothing matches
+# with its session; the server's reply pool is one of its families);
+# grep exits 1 when nothing matches
 rc=0
 grep -rnE 'ConcurrentHashMap|computeIfAbsent' \
-  src/main/scala/graft/queries src/main/scala/graft/sources || rc=$?
+  src/main/scala/graft/queries src/main/scala/graft/sources \
+  src/main/scala/graft/server src/main/scala/graft/api || rc=$?
 case $rc in
   0) echo "hand-rolled memo map above: use graft.util.SessionMemo"; exit 1 ;;
   1) echo "no hand-rolled memo maps" ;;
