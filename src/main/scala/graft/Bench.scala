@@ -1,10 +1,15 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
+import graft.util.QueryTrace
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+  * Each query is timed by [[graft.util.QueryTrace]], whose record of it
+  * is one line of `BENCH_TRACE_c<cpus>.jsonl`.
   *
   * Queries run in sorted name order (deterministic), after one untimed
   * warmup action that absorbs session/codegen/JIT startup so per-query
@@ -22,16 +27,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
 
     // warmup (untimed): exercise codegen paths once. entry() covers the
     // relational scan/filter/agg shapes; the sf0.001 minhash pass covers
@@ -98,16 +94,20 @@ object Bench {
       "q318UserGini" -> graft.queries.Analytics.q318UserGini _
     ).foreach { case (step, f) => warm(step)(f(spark, warmDir).count()) }
 
+    // one trace line per query, flushed as it finishes: a long run shows
+    // progress, and a crash keeps the record of every finished query
+    val trace = new QueryTrace.Jsonl(Paths.get(s"BENCH_TRACE_c${SparkEntry.cpus}.jsonl"))
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       System.gc() // untimed: isolate queries from predecessors' garbage
-      val t0 = System.nanoTime()
-      val err = try { fn(spark, sfDir).count(); None } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          Some(e.getClass.getSimpleName)
+      val (out, rec) = QueryTrace.traced(spark, name)(fn(spark, sfDir).count())
+      trace.write(rec)
+      val err = out.left.toOption.map { e =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        e.getClass.getSimpleName
       }
-      (name, (System.nanoTime() - t0) / 1e9, err)
+      (name, rec.wallMs / 1e3, err)
     }
+    trace.close()
     // compact per-query values (0.1 ms precision): the 329-query line
     // must stay as small as possible for harnesses that bound captured
     // output (round-13 verdict item 2 — both r12/r13 driver artifacts
@@ -127,8 +127,7 @@ object Bench {
     // also written to BENCH_LAST.json in the working directory, so the
     // per-query record survives even when stdout capture keeps only
     // the last N chars (round-13 verdict item 2)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_LAST.json"), line + "\n")
+    try Files.writeString(Paths.get("BENCH_LAST.json"), line + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_LAST.json write failed: ${e.getMessage}") }
     // emit a tiny trailing summary line so a bounded tail ALWAYS

@@ -10,6 +10,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     + union/distinct/limit/topk)
   */
 object SparkEntry {
+  /** Cores of a local run: `SPARK_GRAFT_CPUS`, or every core the JVM
+    * sees when it is unset. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The session every main runs in: `local[cores]` with as many
+    * shuffle partitions, UTC session time, no UI. */
+  def localSession(cores: Int = cpus, logLevel: String = "WARN"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** Flagship query (the reference's own TPC-H Q1 adaptation,
     * client.py:259-331) on sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

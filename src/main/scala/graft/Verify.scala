@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import graft.util.SessionMemo
+import graft.util.{QueryTrace, SessionMemo}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and one
+  * [[graft.util.QueryTrace]] record per query in trace.jsonl. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -12,20 +12,15 @@ object Verify {
     // checks only; the driver always passes exactly 2 args)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
+    // one trace line per query, flushed as it finishes; the oracle
+    // compare reads only the directories next to it
+    val trace = new QueryTrace.Jsonl(Paths.get(s"$outDir/trace.jsonl"))
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try {
+      val (out, rec) = QueryTrace.traced(spark, name) {
         val df = fn(spark, sfDir)
         // The driver's pandas comparator only hashes SCALAR cells: an
         // array/struct/map/binary output column dies in sort_values →
@@ -46,7 +41,8 @@ object Verify {
             "— the driver comparator only hashes scalar cells")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      catch { case e: Throwable =>
+      trace.write(rec)
+      out.left.foreach { e =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a crashed query must show up as a FAILING correctness row,
         // not silently vanish from the report (round-4: 10 crashed
@@ -64,6 +60,7 @@ object Verify {
         }
       }
     }
+    trace.close()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -172,8 +172,8 @@ case class VecNormalize(child: Expression)
   * concurrency hazard (PERF.md lesson 17): `zip_with` lambdas carry a
   * mutable `NamedLambdaVariable`, so concurrent driver-thread
   * evaluation of one shared plan produced silently nondeterministic
-  * results (`graft.tools.DetProbe` is the reproducer, now the
-  * regression test). A native expression holds no evaluation state —
+  * results (the regression test is OperatorsSpec's IVF-PQ residual
+  * spec). A native expression holds no evaluation state —
   * concurrent evaluation is safe by construction.
   *
   * Arithmetic matches the HOF form bit-for-bit on equal-length

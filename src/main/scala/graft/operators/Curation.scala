@@ -941,7 +941,8 @@ object Curation {
       // sf0.1 (levels = 4) the whole q262 train chain was
       // plan-overhead-bound: 13.1 -> 6.1 s fused fresh (q263
       // 10.7 -> 5.0) with per-level truncation, output hashes
-      // identical (R14UnigramProbe). The LAST level's doubled n is
+      // identical (historical: a deleted one-off probe). The LAST
+      // level's doubled n is
       // never read — skip it (one job per orbit).
       if (lvl < c.levels - 1)
         n = n.as("a").join(n.as("b"),

@@ -142,21 +142,6 @@ object Dedup {
       explode(graft.functions.TextHashFunctions
         .shingle_hash_set(col(textCol), k)).as("sh"))
 
-  /** MinHash signature matrix: H independent min-hashes over k-word
-    * shingles. One row per doc, signature as array<bigint>. Seeds are
-    * mixed in via xxhash64(shingle_hash, seed) — deterministic.
-    *
-    * Map-only: the native [[graft.functions.TextHash.minhashSig]]
-    * kernel computes all H mins in one pass per document — no token
-    * explode, no window, no hash-aggregate. Signature generation at
-    * 100 TB is pure scan parallelism.
-    */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int, numHashes: Int): DataFrame =
-    docs.select(col(idCol),
-      graft.functions.TextHashFunctions
-        .minhash_sig(col(textCol), k, numHashes).as("sig"))
-
   /** LSH banding: split the H-wide signature into B bands of R rows;
     * band signature = hash of the band slice. Docs sharing ANY band
     * signature become candidate pairs (standard MinHash-LSH S-curve:

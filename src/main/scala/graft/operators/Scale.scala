@@ -100,7 +100,8 @@ object Scale {
     // HashPartitioning is the same murmur3-pmod bucketBy uses), so the
     // write is one sorted sequential file per bucket instead of every
     // input task sorting/writing slices of every bucket — measured
-    // 2.5× on the sf0.1 lineitem write (Q109Probe). At cluster scale
+    // 2.5× on the sf0.1 lineitem write (historical: a deleted one-off
+    // probe). At cluster scale
     // bucket count >> cores, so this also caps file count at |buckets|.
     val w = df.repartition(buckets, col(key)).write.mode("overwrite")
       .bucketBy(buckets, key)

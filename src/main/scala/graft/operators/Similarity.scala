@@ -287,7 +287,8 @@ object Similarity {
       // order (a double sum could flip boundary vectors' cells between
       // runs and wobble the q52/q75 recall/keep sets). The former
       // posexplode + decimal(30,15)-sum formulation was ~30× slower at
-      // ×100 scale for TWO stacked reasons (KMeansProbe isolates both):
+      // ×100 scale for TWO stacked reasons (historical: a deleted
+      // one-off probe isolated both):
       // the optimizer pulls the argmax projection above the Generate
       // and re-evaluates it per exploded ELEMENT (64×, PERF.md lesson
       // 6), and the decimal cast allocates a BigDecimal per component.
@@ -1156,7 +1157,8 @@ object Similarity {
         // subspace trainings. The encode is now the native codegen'd
         // VecSub (no interpreted lambda ⇒ the PERF-lesson-17
         // shared-NamedLambdaVariable nondeterminism class is retired
-        // by construction; DetProbe regression-tests it), so the
+        // by construction; OperatorsSpec's IVF-PQ residual spec pins
+        // vec_sub to the zip_with arithmetic), so the
         // checkpoint is purely an efficiency choice: it stops the
         // m × iters training jobs each re-scanning candidates and
         // re-deriving argmax cells + residuals from the raw vectors.

@@ -20,7 +20,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   *
   * Why a custom exec over the composition (which is itself already
   * the right *declarative* shape — union + window, one shuffle), with
-  * the claims MEASURED, not assumed (TemporalJoinsSpec + AsofProbe):
+  * the claims MEASURED, not assumed (TemporalJoinsSpec; the timings
+  * below are historical, from a one-off probe since deleted):
   *  - single-side layout reuse: if only the big side is already
   *    key-partitioned (fact table probed against a small update
   *    stream), the union's mixed-layout children collapse to unknown
@@ -35,7 +36,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   *  - the merge holds O(1) state (one payload row) vs a window frame
   *    buffer per key group.
   *  Honest cost: at sf0.1 the interpreted merge measures ~0.4 s vs
-  *  ~0.3 s for the fully codegen'd window composition (AsofProbe) —
+  *  ~0.3 s for the fully codegen'd window composition (historical) —
   *  the exec wins on layout/width structure, not on per-row compute;
   *  q40 (composed) and q168 (native) both stay registered, oracled
   *  against the same DuckDB ASOF truth.

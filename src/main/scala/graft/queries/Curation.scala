@@ -1264,7 +1264,7 @@ object Curation {
   // and q233 (pair alignment) each rebuilt the identical tokenize +
   // window + md5-keyed selection chain from scratch; the frame is
   // sub-corpus-sized (density 2/(w+1) — 81.6k rows at sf0.1) and every
-  // consumer's fold is cheap next to the build (R14Q233Probe: build
+  // consumer's fold is cheap next to the build (historical probe: build
   // 4.6 s of q233's 7.2 s fused fresh at sf0.1).
   private val winnowFpsMemo = SessionMemo.family[DataFrame]("winnowFpsOf")
   private def winnowFpsOf(spark: SparkSession, dir: String): DataFrame =
@@ -2057,7 +2057,8 @@ object Curation {
     * (q224 apply, q235 fertility), exactly as a production pipeline
     * trains a tokenizer ONCE and ships the frozen artifact to every
     * downstream job rather than retraining per consumer (the
-    * round-9 verdict's suggested trim; isolated Q235Probe decomposed
+    * round-9 verdict's suggested trim; an isolated, since deleted,
+    * probe decomposed
     * q235 as 4.0 s train + 4.4 s apply at sf0.1 — the memo removes
     * the train half from the second consumer onward in any shared
     * session: Verify, Bench, the driver). The train-side input is
@@ -2078,7 +2079,8 @@ object Curation {
     * merges, memoized per (session, dir) — the apply half of the
     * chain, previously recomputed by EVERY held-out consumer (q224
     * vocabulary, q235 fertility, q267 agreement each replayed the 3
-    * apply rounds; Q235Probe pinned the apply at ~4.4 s of the ~8.4 s
+    * apply rounds; a since-deleted probe pinned the apply at ~4.4 s
+    * of the ~8.4 s
     * composite). The frame is word-TYPE-sized (w, wc, p, s), eagerly
     * checkpointed (rule 16). */
   private val bpeSegs97Memo = SessionMemo.family[DataFrame]("bpeHeldoutSegs97Of")

@@ -1068,7 +1068,8 @@ object Pipeline {
     // the base quantizer never saw, which is what makes drift
     // detection non-degenerate: cells aligned with the ingest
     // direction exceed the threshold, opposite cells sit near zero
-    // (IvfDriftProbe measured per-cell delta fractions 0.00-0.355 at
+    // (historical: a deleted one-off probe measured per-cell delta
+    // fractions 0.00-0.355 at
     // sf0.01 / 0.10-0.29 at sf0.1; a label-keyed delta read a flat
     // ~0.20 everywhere — labels don't cluster at 16-cell granularity)
     val isNew = Similarity.normalized(col("embedding")).getItem(0) > lit(0.10)
@@ -1195,7 +1196,8 @@ object Pipeline {
   // (0.67/0.55) — on weakly-clustered unit vectors x·c ≈ 0.3, so
   // ‖x − c‖² ≈ 1.4 > 1 = ‖x‖²: residuals are BIGGER than the raw
   // vectors and the code budget buys less. RE-MEASURED round 7 after
-  // the native VecSub encode (tools/ResidualProbe): raw 0.69/0.6575,
+  // the native VecSub encode (historical: a deleted one-off probe):
+  // raw 0.69/0.6575,
   // residual 0.67/0.5525 at sf0.01/sf0.1 — bit-reproduces the r6
   // record, the physics holds. The gate keeps raw-vector codes;
   // residual=true is gated by ITS OWN oracle row (q191, floored for
@@ -1225,7 +1227,7 @@ object Pipeline {
   // Codes quantize x − centroid(cell) via the native codegen'd VecSub
   // (round 7 — no interpreted HOF, no shared-lambda hazard), and the
   // ADC score re-uses the probe's q·c_cell term. On THIS corpus
-  // residual measures BELOW raw (ResidualProbe: 0.67/0.5525 vs
+  // residual measures BELOW raw (historical probe: 0.67/0.5525 vs
   // 0.69/0.6575 at sf0.01/sf0.1 — weak clusters make residuals
   // bigger than the vectors, PERF lesson 18); the floor 0.45 is set
   // for the residual regime (≈0.8× the binding sf0.1 figure), per
@@ -2656,7 +2658,8 @@ object Pipeline {
   // cellmates + k-capped reverse edges — full within-cell pairing
   // measured THRASHING at ×100; see the operator header). Recall on
   // this weakly-clustered corpus is init-volume-driven (width sweep:
-  // 8→0.22, 32→0.42, 64→0.58, 96→0.635 at sf0.1; tools/KnnProbe), so
+  // 8→0.22, 32→0.42, 64→0.58, 96→0.635 at sf0.1; historical, from a
+  // deleted probe), so
   // the gate buys quality with width at ITS scale while the operator
   // default (8) is the 100 TB setting; re-measure before changing
   // params, rule 9/14.
@@ -2665,7 +2668,7 @@ object Pipeline {
   // (near-dup pairs), q217 (incremental v1 side), q261 (canonical
   // keep-list) and q329 (cross-modal canonical) each re-ran the
   // mapPartitions decode chain — a per-row javax.imageio decode
-  // attempt over every medium (R14Q261Probe: 4.3 s of q261's 6.1 s
+  // attempt over every medium (historical probe: 4.3 s of q261's 6.1 s
   // fused fresh at sf0.1 is phase 1). The frame is media-sized
   // (media_id, decoded, grid[64], dhash); consumers project what they
   // need.
@@ -4077,7 +4080,7 @@ object Pipeline {
   // r14: the build now also carries the exact int64 trade VALUE per
   // pair (sum of l_extendedprice in cents) — q208's Bellman-Ford
   // needed the identical orders⋈lineitem aggregate keyed the same way
-  // (R14Q208Probe: the rel build is ~5.6 s of q208's ~5 s fused fresh
+  // (historical probe: the rel build is ~5.6 s of q208's ~5 s fused fresh
   // at sf0.1), and groupBy(src, dst) emits exactly the distinct pair
   // set the unweighted consumers read, so ONE shuffle serves both.
   private val tradeRelWMemo = SessionMemo.family[DataFrame]("tradeRelWOf")

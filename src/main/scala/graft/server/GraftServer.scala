@@ -221,23 +221,20 @@ object GraftServer {
         try os.write(bytes) finally os.close()
       }
     })
-    server.setExecutor(Executors.newFixedThreadPool(8))
+    // 8 daemon workers: an idle pool never holds the JVM open once the
+    // server has stopped (the server does not shut its executor down)
+    server.setExecutor(Executors.newFixedThreadPool(8, { (r: Runnable) =>
+      val t = new Thread(r, "graft-server-worker")
+      t.setDaemon(true)
+      t
+    }))
     server.start()
     server
   }
 
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(3000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-server")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     val cap = sys.env.get("GRAFT_MAX_COLLECT_ROWS").map(_.toLong)
     start(spark, port, cap)
     println(s"[graft-server] listening on http://127.0.0.1:$port/call" +

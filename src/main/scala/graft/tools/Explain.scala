@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `explain("formatted")` for selected queries to EXPLAINS.md —
@@ -241,10 +240,8 @@ object Explain {
       "pin set out of sync with the registry — unclaimed: " +
         (registry -- pinnedNames -- excluded).mkString(",") +
         "; stale: " + ((pinnedNames ++ excluded) -- registry).mkString(","))
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // a fixed 4 cores on every host, so the plans stay comparable
+    val spark = graft.SparkEntry.localSession(4, "ERROR")
 
     val interesting = pinned
 

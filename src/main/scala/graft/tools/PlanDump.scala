@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `explain("formatted")` for SELECTED queries to individual
@@ -16,10 +15,8 @@ object PlanDump {
     require(args.length == 3, "usage: PlanDump <outDir> <tag> <q1,q2,...>")
     val (outDir, tag, names) = (args(0), args(1), args(2).split(",").toSeq)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // a fixed 4 cores on every host, so the plans stay comparable
+    val spark = graft.SparkEntry.localSession(4, "ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, dir)

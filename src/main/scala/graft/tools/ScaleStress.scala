@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up stress: replicates the documents table N× (with distinct
@@ -11,11 +11,7 @@ import org.apache.spark.sql.functions._
 object ScaleStress {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
 
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     val n = base.count()
@@ -49,8 +45,8 @@ object ScaleStress {
     // force the signature computation: a bare count() would let the
     // optimizer prune the sig column and time only the scan
     timed("minhash signatures")(
-      graft.operators.Dedup.minhashSignatures(docs, "doc_id", "text", 3, 32)
-        .select(element_at(col("sig"), 1).as("s1"))
+      docs.select(element_at(graft.functions.TextHashFunctions
+          .minhash_sig(col("text"), 3, 32), 1).as("s1"))
         .agg(count(lit(1)).as("n"), expr("bit_xor(s1)"))
         .collect()(0).getLong(0))
     // the raw (no exact-dedup-first) LSH line exists to MEASURE the

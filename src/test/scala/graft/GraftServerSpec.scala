@@ -2,14 +2,14 @@ package graft
 
 import graft.server.{GraftServer, Wire}
 import graft.sources.Sources
-import graft.util.SessionMemo
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.util.{QueryTrace, SessionMemo}
 import org.apache.spark.sql.SparkSession
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** End-to-end spec for the HTTP wire protocol: starts the real server
   * (ephemeral port) and drives it with the exact JSON the reference's
@@ -37,8 +37,9 @@ class GraftServerSpec extends SparkSpec {
   }
 
   /** POST, assert 201, return the response `dataframe` state JSON. */
-  private def callOk(df: String, function: String): (String, String) = {
-    val (status, body) = post(s"""{"dataframe": $df, "function": $function}""")
+  private def callOk(df: String, function: String,
+                     send: String => (Int, String) = post): (String, String) = {
+    val (status, body) = send(s"""{"dataframe": $df, "function": $function}""")
     assert(status === 201, s"expected 201, got $status: $body")
     val node = Wire.parse(body)
     (Wire.render(node.get("dataframe")), Wire.render(node.get("blocks")))
@@ -322,42 +323,25 @@ class GraftServerSpec extends SparkSpec {
 
   // ---- parquet schema memo: plan-building requests run no Spark job ----
 
-  private val jobStarts = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
-  private lazy val jobListener = spark.sparkContext.addSparkListener(new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      jobStarts.add((e.jobId,
-        Option(e.properties).map(_.getProperty("spark.job.description")).orNull))
-  })
-
-  /** Spark jobs started while `body` runs: the job ids strictly between
-    * two marker jobs, counted once the listener has seen the second
-    * marker (listener events arrive asynchronously, but in order). */
-  private def jobsDuring(body: => Unit): Int = {
-    jobListener
-    def marker(): Int = {
-      val tag = s"graft-spec-marker-${java.util.UUID.randomUUID()}"
-      val sc = spark.sparkContext
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      def seen = jobStarts.toArray(Array.empty[(Int, String)]).find(_._2 == tag)
-      while (seen.isEmpty) {
-        assert(System.nanoTime() < deadline, s"listener never saw $tag")
-        Thread.sleep(10)
-      }
-      seen.get._1
+  /** Spark jobs started while `body` runs, counted by `QueryTrace`. The
+    * trace charges jobs by thread, and the HTTP server's request threads
+    * were not started by `body`, so a body whose jobs must be counted
+    * answers its requests on the calling thread (`handled`), as the
+    * server's handler does. */
+  private def jobsDuring(body: => Unit): Int =
+    QueryTrace.traced(spark, "spec")(body) match {
+      case (Right(_), rec) => rec.jobs.toInt
+      case (Left(e), _) => throw e
     }
-    val before = marker()
-    body
-    val after = marker()
-    jobStarts.toArray(Array.empty[(Int, String)]).count { case (id, _) => id > before && id < after }
-  }
+
+  /** One request answered on the calling thread. */
+  private def handled(body: String): (Int, String) = handleJson(spark, body)
 
   private def tempDir(tag: String): String =
     Files.createTempDirectory(s"graft_$tag").resolve("t.parquet").toString
 
-  private def readParquet(path: String): String =
-    callOk("null", s"""{"Read": ["parquet", "$path", {"columns": []}]}""")._1
+  private def readParquet(path: String, send: String => (Int, String) = post): String =
+    callOk("null", s"""{"Read": ["parquet", "$path", {"columns": []}]}""", send)._1
 
   test("memo: after the first Read, Read → Filter → Select → Join → Aggregation runs no Spark job") {
     val facts = tempDir("facts")
@@ -370,13 +354,13 @@ class GraftServerSpec extends SparkSpec {
     val dimState = readParquet(dims)
     var last = ""
     val n = jobsDuring {
-      val s1 = readParquet(facts)
+      val s1 = readParquet(facts, handled)
       val s2 = callOk(s1, """{"Op": {"Filter": ["k",
-        |  {"comparator": "GreaterThan", "value": {"Int": 0}}]}}""".stripMargin)._1
-      val s3 = callOk(s2, """{"Op": {"Select": [{"Source": "k"}, {"Source": "v"}]}}""")._1
-      val s4 = callOk(s3, s"""{"Op": {"Join": [$dimState, "k", "k2"]}}""")._1
+        |  {"comparator": "GreaterThan", "value": {"Int": 0}}]}}""".stripMargin, handled)._1
+      val s3 = callOk(s2, """{"Op": {"Select": [{"Source": "k"}, {"Source": "v"}]}}""", handled)._1
+      val s4 = callOk(s3, s"""{"Op": {"Join": [$dimState, "k", "k2"]}}""", handled)._1
       last = callOk(s4, """{"Op": {"Aggregation":
-        |  {"k": "Count", "v": "Sum", "k2": "Max", "name": "First"}}}""".stripMargin)._1
+        |  {"k": "Count", "v": "Sum", "k2": "Max", "name": "First"}}}""".stripMargin, handled)._1
     }
     assert(n === 0, s"$n Spark job(s) while building plans")
     // the memoized schemas still give the right answer
@@ -474,7 +458,7 @@ class GraftServerSpec extends SparkSpec {
     assert(first._1 === 201, first._2)
     val before = poolStats(spark)
     var again: (Int, String) = null
-    assert(jobsDuring { again = post(action(s4, "\"Collect\"")) } === 0)
+    assert(jobsDuring { again = handled(action(s4, "\"Collect\"")) } === 0)
     assert(again === first)
     val after = poolStats(spark)
     assert(after.hits === before.hits + 1 && after.builds === before.builds, after)
@@ -512,6 +496,25 @@ class GraftServerSpec extends SparkSpec {
     val other = spark.newSession()
     assert(jobsDuring(assert(handleJson(other, req) === handleJson(spark, req))) > 0)
     assert(poolStats(other).builds === 1 && poolStats(other).hits === 0)
+  }
+
+  test("lifecycle: a JVM that serves a request, then stops the server and its session, exits") {
+    // the server's idle request threads must not hold the JVM open; the
+    // check runs in a JVM of its own, which must exit within the deadline
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(a => a.startsWith("-Xmx") || a.startsWith("-agentlib"))
+    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-Xmx1g", "-cp",
+      System.getProperty("java.class.path"), "graft.ServerExitCheck")
+    val log = Files.createTempFile("graft_exit", ".log")
+    val proc = new ProcessBuilder(cmd.asJava).redirectErrorStream(true)
+      .redirectOutput(log.toFile).start()
+    val exited = proc.waitFor(120, java.util.concurrent.TimeUnit.SECONDS)
+    if (!exited) proc.destroyForcibly().waitFor()
+    val out = Files.readAllLines(log).asScala
+    assert(out.contains("served=201"), out.takeRight(40).mkString("\n"))
+    assert(exited, "the JVM did not exit within 120 s of starting")
+    assert(proc.exitValue === 0, out.takeRight(40).mkString("\n"))
   }
 
   test("pool: 8 concurrent identical Actions compute once") {
@@ -553,5 +556,27 @@ class GraftServerSpec extends SparkSpec {
     assert(poolStats(spark).builds === before.builds + 5)
     assert(handleJson(spark, page, Some(2L)) === capped && handleJson(spark, page) === uncapped)
     assert(poolStats(spark).builds === before.builds + 5 && poolStats(spark).hits === before.hits + 2)
+  }
+}
+
+/** Starts the server, serves one request, stops the server and the
+  * session, and returns from `main`: the JVM must then exit by itself. */
+object ServerExitCheck {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder().master("local[1]")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val server = GraftServer.start(spark, 0)
+    val csv = Files.createTempFile("graft_exit", ".csv")
+    Files.write(csv, "1\n2\n".getBytes(StandardCharsets.UTF_8))
+    val body = s"""{"dataframe": null, "function": {"Read": ["csv", "$csv",
+      |  {"columns": [{"name": "int", "type_": "Int"}]}]}}""".stripMargin
+    val req = HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${server.getAddress.getPort}/call"))
+      .POST(HttpRequest.BodyPublishers.ofString(body, StandardCharsets.UTF_8)).build()
+    val res = HttpClient.newHttpClient().send(req, HttpResponse.BodyHandlers.ofString())
+    println(s"served=${res.statusCode()}")
+    server.stop(0)
+    spark.stop()
   }
 }

@@ -733,6 +733,17 @@ class OperatorsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(x => (x._1, x._3))
     val r1 = run()
     assert(r1 === run()) // deterministic incl. residual codebook training
+    // rule 16: the residual is the native vec_sub, never an interpreted
+    // zip_with lambda (shared mutable state under concurrent training);
+    // vec_sub must match the zip_with arithmetic bit-for-bit on every row
+    import graft.functions.VectorFunctions.{vec_mat_argmax, vec_sub}
+    val cents = Similarity.trainCentroids(df, "embedding", 4, 2, 64)
+    val centsLit = array(cents.toIndexedSeq.map(c => array(c.toIndexedSeq.map(lit(_)): _*)): _*)
+    val cell = element_at(centsLit, vec_mat_argmax(col("cv"), cents) + 1)
+    val residuals = df.select(Similarity.normalized(col("embedding")).as("cv"))
+      .select(vec_sub(col("cv"), cell).as("a"), zip_with(col("cv"), cell, (x, y) => x - y).as("b"))
+    assert(residuals.count() === 800)
+    assert(residuals.filter(not(col("a") <=> col("b"))).count() === 0)
     val exact = Similarity.bruteForceTopK(q, df, "vec_id", "vec_id",
         "embedding", "embedding", 5)
       .select("query_id", "cand_id").collect()

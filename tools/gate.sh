@@ -39,6 +39,23 @@ echo "== [3/5] Verify + DuckDB check @ sf0.01 =="
 SPARK_GRAFT_CPUS=$CPUS tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/gate_sf001
 python3 tools/check.py /root/testdata/sf0.01 /tmp/gate_sf001 | tail -2
 
+echo "== [3a/5] Verify trace: one QueryTrace line per query =="
+# a half-traced run must not pass: exactly one trace.jsonl line per
+# oracled query (every registered query is oracled), each with a job count
+python3 - /tmp/gate_sf001 <<'EOF'
+import json, sys
+out = sys.argv[1]
+names = set(json.load(open(f"{out}/oracle_sql.json")))
+lines = [json.loads(l) for l in open(f"{out}/trace.jsonl")]
+traced = [r["name"] for r in lines]
+bad = [r["name"] for r in lines if not (isinstance(r.get("jobs"), int) and r["jobs"] >= 0)]
+if len(lines) != len(names) or set(traced) != names or bad:
+    print(f"TRACE INCOMPLETE: {len(lines)} lines for {len(names)} queries; "
+          f"missing {sorted(names - set(traced))[:8]}; no job count {bad[:8]}")
+    sys.exit(1)
+print(f"trace complete: {len(lines)} lines, {sum(r['jobs'] for r in lines)} jobs")
+EOF
+
 echo "== [3b/5] plan lint (scale-shape audit over every query plan) =="
 tools/run.sh graft.tools.PlanLint | grep planlint
 
