@@ -19,22 +19,6 @@ object GType {
   def List(t: DataType): DataType = ArrayType(t)
 }
 
-/** Column expression language of the reference
-  * (`ColumnExpr`, reference: src/dataframe.rs:105-111): source column,
-  * constant, alias, and binary arithmetic `+ - * /`
-  * (reference: src/block.rs:81-107, int/int divide → float at
-  * src/block.rs:496-501 — Spark's `/` already yields double).
-  * Expressed directly as Spark `Column` algebra; these helpers exist so
-  * a reference user's `col!`-macro-style code ports 1:1.
-  */
-object Expr {
-  def src(name: String): Column = col(name)
-  def const(v: Any): Column = lit(v)
-  implicit class RichCol(val c: Column) extends AnyVal {
-    def as_(name: String): Column = c.alias(name)
-  }
-}
-
 /** Comparators of the reference predicate language
   * (reference: src/value.rs:214-233): Equal, GreaterThan,
   * GreaterThanOrEq, LessThan, LessThanOrEq. A predicate tests ONE named

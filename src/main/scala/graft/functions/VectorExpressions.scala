@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.functions.{sqrt => fsqrt}
 
 /** Native Catalyst expressions for vector math over `array<float>` /
   * `array<double>` columns.
@@ -785,9 +784,6 @@ object VectorFunctions {
 
   def vec_dot(a: Column, b: Column): Column =
     column(VecDot(expression(a), expression(b)))
-  def vec_norm(a: Column): Column = fsqrt(vec_dot(a, a))
-  def vec_cosine(a: Column, b: Column): Column =
-    vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
   def vec_normalize(a: Column): Column =
     column(VecNormalize(expression(a)))
   /** Elementwise a − b → array<double> (codegen'd zip_with replacement). */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{TextAnalysis => TA}
@@ -389,28 +389,172 @@ object Curation {
   def bpeMergeRounds(df: DataFrame, textCol: String, rounds: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (stats, syms) = bpeTrain(df, textCol, rounds)
-    syms.unpersist()
-    stats.toDF("round", "lhs", "rhs", "pair_count",
-      "n_type_merges", "n_merges_wt", "n_symbols_after")
+    mergeTrain(df, textCol, rounds, countPick, keepFinal = false)._1
+      .map(bpeStats)
+      .toDF("round", "lhs", "rhs", "pair_count",
+        "n_type_merges", "n_merges_wt", "n_symbols_after")
   }
 
-  /** The corpus SEGMENTED by the trained merges: the final (w, wc, p,
-    * s) symbol frame after `rounds` BPE rounds — the tokenizer-apply
-    * artifact (each word type's subword sequence, corpus-weighted).
-    * Left persisted; vocab-bounded. */
-  def bpeFinalSymbols(df: DataFrame, textCol: String, rounds: Int): DataFrame =
-    bpeTrain(df, textCol, rounds)._2
-
   /** One training run, BOTH artifacts: the per-round stats tuples
-    * ([[bpeMergeRounds]]'s rows) and the final persisted symbol frame
-    * ([[bpeFinalSymbols]]) — so a caller serving both consumers (the
-    * merge-round table AND the final vocabulary) trains ONCE instead
-    * of twice (r13: q213+q216 ran the identical full-corpus chain
-    * back to back). */
+    * ([[bpeMergeRounds]]'s rows) and the corpus SEGMENTED by the
+    * trained merges — the final (w, wc, p, s) symbol frame, each word
+    * type's subword sequence, left persisted and materialized — so a
+    * caller serving both consumers (the merge-round table AND the
+    * final vocabulary) trains ONCE instead of twice (r13: q213+q216
+    * ran the identical full-corpus chain back to back). */
   def bpeTrainFull(df: DataFrame, textCol: String, rounds: Int)
-      : (Seq[(Long, String, String, Long, Long, Long, Long)], DataFrame) =
-    bpeTrain(df, textCol, rounds)
+      : (Seq[(Long, String, String, Long, Long, Long, Long)], DataFrame) = {
+    val (stats, syms) = mergeTrain(df, textCol, rounds, countPick, keepFinal = true)
+    (stats.map(bpeStats), syms.get)
+  }
+
+  /** The trained merge list alone — the (lhs, rhs) pairs in round
+    * order, i.e. the tokenizer MODEL (what ships to the apply side). */
+  def bpeTrainedMerges(df: DataFrame, textCol: String,
+                       rounds: Int): Seq[(String, String)] =
+    mergeTrain(df, textCol, rounds, countPick, keepFinal = false)._1
+      .map(r => (r.lhs, r.rhs))
+
+  private def bpeStats(r: MergeRound): (Long, String, String, Long, Long, Long, Long) =
+    (r.round, r.lhs, r.rhs, r.cnt, r.nTypeMerges, r.nMergesWt, r.symbolsAfter)
+
+  /** WordPiece merge trainer (Schuster & Nakajima 2012; the
+    * likelihood-gain criterion BERT's tokenizer ships with) — the
+    * THIRD tokenizer family next to BPE (count argmax) and unigram-LM
+    * (EM prune): the same merge trainer as [[bpeMergeRounds]], but
+    * the per-round pair pick ([[gainPick]]) maximizes
+    * score(a,b) = cnt(ab) / (cnt(a)·cnt(b)) — the unigram-LM
+    * likelihood gain of fusing the pair — instead of raw cnt(ab), so
+    * a rare-but-exclusive bigram beats a frequent pair of
+    * individually-frequent symbols.
+    *
+    * Output per round: (round, lhs, rhs, pair_count, ca, cb,
+    * score_fx = floor(ln(cnt/(ca·cb))·1e6), n_symbols_after).
+    */
+  def wordpieceMergeRounds(df: DataFrame, textCol: String,
+                           rounds: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    mergeTrain(df, textCol, rounds, gainPick, keepFinal = false)._1
+      .map { r =>
+        val (ca, cb) = (r.pick.getLong(3), r.pick.getLong(4))
+        // same libm ln the oracle's LN applies to the identical
+        // exact-int ratio — the floor(ln·1e6) fixed-point convention
+        val scoreFx = math.floor(
+          math.log(r.cnt.toDouble / (ca.toDouble * cb.toDouble)) * 1e6).toLong
+        (r.round, r.lhs, r.rhs, r.cnt, ca, cb, scoreFx, r.symbolsAfter)
+      }
+      .toDF("round", "lhs", "rhs", "pair_count", "ca", "cb",
+        "score_fx", "n_symbols_after")
+  }
+
+  /** The trained WordPiece merge list alone — (lhs, rhs) in round
+    * order, the frozen MODEL a held-out apply consumes. Segmentation
+    * under a trained list is criterion-independent (the same greedy
+    * island-parity replay as BPE), so [[bpeSegment]] applies it:
+    * only the training pair pick distinguishes the families. */
+  def wordpieceTrainedMerges(df: DataFrame, textCol: String,
+                             rounds: Int): Seq[(String, String)] =
+    mergeTrain(df, textCol, rounds, gainPick, keepFinal = false)._1
+      .map(r => (r.lhs, r.rhs))
+
+  /** One executed merge round: the pick's row (lhs, rhs, pair_count,
+    * then any columns of the pick's own), the type-level and
+    * corpus-weighted merge counts, and Σwc of the rebuilt frame. */
+  private final case class MergeRound(round: Long, pick: Row, nTypeMerges: Long,
+                                      nMergesWt: Long, symbolsAfter: Long) {
+    def lhs: String = pick.getString(0)
+    def rhs: String = pick.getString(1)
+    def cnt: Long = pick.getLong(2)
+  }
+
+  /** A merge trainer's per-round pair pick: from the symbol frame and
+    * its corpus-weighted adjacent-pair counts (s, s2, cnt), the 1-row
+    * winning pair (s, s2, cnt, …) — all that BPE and WordPiece
+    * training differ in. */
+  private type PairPick = (DataFrame, DataFrame) => DataFrame
+
+  /** BPE: the max pair count, ties broken lexically on (a, b). */
+  private def countPick(syms: DataFrame, pairs: DataFrame): DataFrame =
+    pairs.orderBy(desc("cnt"), asc("s"), asc("s2")).limit(1)
+
+  /** WordPiece: the max likelihood gain cnt(ab) / (cnt(a)·cnt(b)),
+    * ties broken lexically on (a, b); the row carries ca and cb. The
+    * score comparison is one correctly-rounded IEEE division of exact
+    * int64 counts (cnt ≤ 2^53, ca·cb ≤ 2^53 ⇒ both operands exact ⇒
+    * both engines produce the identical double). */
+  private def gainPick(syms: DataFrame, pairs: DataFrame): DataFrame = {
+    val uni = syms.groupBy(col("s")).agg(sum(col("wc")).as("cu"))
+    pairs
+      .join(uni.select(col("s"), col("cu").as("ca")), "s")
+      .join(uni.select(col("s").as("s2"), col("cu").as("cb")), "s2")
+      .orderBy((col("cnt").cast("double") / (col("ca") * col("cb"))).desc,
+        asc("s"), asc("s2"))
+      .limit(1)
+      .select(col("s"), col("s2"), col("cnt"), col("ca"), col("cb"))
+  }
+
+  /** The one merge trainer behind BPE and WordPiece: up to `rounds`
+    * rounds of (pick a pair, merge it greedily) over the word-type
+    * symbol frame, stopping early once no adjacent pair is left. Per
+    * round the driver collects the 1-row pick and the merge counts.
+    * Returns the executed rounds and, with `keepFinal`, the final
+    * symbol frame, persisted and materialized; without it every frame
+    * is released and the last one is never computed. */
+  private def mergeTrain(df: DataFrame, textCol: String, rounds: Int,
+      pick: PairPick, keepFinal: Boolean): (Seq[MergeRound], Option[DataFrame]) = {
+    var syms = bpeSym0(df, textCol)
+    val wWin = Window.partitionBy(col("w")).orderBy(asc("p"))
+    val out = scala.collection.mutable.ArrayBuffer.empty[MergeRound]
+    // running Σwc over the symbol frame: each executed merge start
+    // removes exactly ONE (consumed) row of weight wc, so
+    // Σwc(after) = Σwc(before) − n_merges_wt — exact int64 identity
+    // (pinned by the planted CurationSpec fixtures). Replaces a full
+    // aggregate JOB per round (r13, guide §1.2: don't compute what's
+    // derivable). The unpersist of a round's input is DEFERRED until
+    // the next round's pick job has materialized its output (the
+    // removed aggregate used to provide exactly that ordering —
+    // unpersisting earlier would silently re-derive the whole prefix
+    // chain per round, the pre-r13 bpeSegment pathology).
+    var total = -1L
+    var prev: DataFrame = null
+    var r = 1
+    var done = false
+    while (r <= rounds && !done) {
+      val pairs = syms.withColumn("s2", lead(col("s"), 1).over(wWin))
+        .filter(col("s2").isNotNull)
+        .groupBy(col("s"), col("s2")).agg(sum(col("wc")).as("cnt"))
+      val best = pick(syms, pairs).collect()
+      // the pick job materialized `syms` — its parent is now free
+      if (prev != null) { prev.unpersist(); prev = null }
+      if (best.isEmpty) done = true
+      else {
+        if (total < 0L)
+          total = syms.agg(sum(col("wc"))).collect()(0).getLong(0)
+        val (rebuilt, nTypeMerges, nMergesWt) =
+          bpeMergePair(syms, best(0).getString(0), best(0).getString(1))
+        total -= nMergesWt
+        out += MergeRound(r.toLong, best(0), nTypeMerges, nMergesWt, total)
+        prev = syms
+        syms = rebuilt
+        r += 1
+      }
+    }
+    if (keepFinal) {
+      // materialize the final frame before releasing its parent, from
+      // the parent's cache (the consumer — q216's vocabulary, through
+      // the checkpointing memo — reads a materialized frame either way)
+      if (prev != null) { syms.count(); prev.unpersist() }
+      (out.toSeq, Some(syms))
+    } else {
+      // only the merge list is kept: nothing ever materializes the
+      // last rebuilt frame, so both tail frames just release their
+      // cache registrations
+      if (prev != null) prev.unpersist()
+      syms.unpersist()
+      (out.toSeq, None)
+    }
+  }
 
   /** The initial character-level (w, wc, p, s) symbol frame of a
     * corpus' word-type table — BPE round 0. Split BETWEEN characters
@@ -471,166 +615,11 @@ object Curation {
     else (rebuilt, -1L, -1L)
   }
 
-  private def bpeTrain(df: DataFrame, textCol: String, rounds: Int)
-      : (Seq[(Long, String, String, Long, Long, Long, Long)], DataFrame) = {
-    var syms = bpeSym0(df, textCol)
-    val wWin = Window.partitionBy(col("w")).orderBy(asc("p"))
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, Long, Long, Long, Long)]
-    // running Σwc over the symbol frame: each executed merge start
-    // removes exactly ONE (consumed) row of weight wc, so
-    // Σwc(after) = Σwc(before) − n_merges_wt — exact int64 identity
-    // (pinned by the planted CurationSpec fixtures). Replaces a full
-    // aggregate JOB per round (r13, guide §1.2: don't compute what's
-    // derivable). The unpersist of a round's input is DEFERRED until
-    // the next round's argmax job has materialized its output (the
-    // removed aggregate used to provide exactly that ordering —
-    // unpersisting earlier would silently re-derive the whole prefix
-    // chain per round, the pre-r13 bpeSegment pathology).
-    var total = -1L
-    var prev: DataFrame = null
-    var r = 1
-    var done = false
-    while (r <= rounds && !done) {
-      val best = syms.withColumn("s2", lead(col("s"), 1).over(wWin))
-        .filter(col("s2").isNotNull)
-        .groupBy(col("s"), col("s2")).agg(sum(col("wc")).as("cnt"))
-        .orderBy(desc("cnt"), asc("s"), asc("s2")).limit(1)
-        .collect()
-      // the argmax job materialized `syms` — its parent is now free
-      if (prev != null) { prev.unpersist(); prev = null }
-      if (best.isEmpty) done = true
-      else {
-        if (total < 0L)
-          total = syms.agg(sum(col("wc"))).collect()(0).getLong(0)
-        val (a, b, cnt) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        val (rebuilt, nTypeMerges, nMergesWt) = bpeMergePair(syms, a, b)
-        total -= nMergesWt
-        out += ((r.toLong, a, b, cnt, nTypeMerges, nMergesWt, total))
-        prev = syms
-        syms = rebuilt
-        r += 1
-      }
-    }
-    // materialize the final frame before releasing its parent: ONE
-    // cache-hit-fed job (consumers — q216's vocabulary aggregate, the
-    // checkpointing memo — read a materialized frame either way)
-    if (prev != null) {
-      syms.count()
-      prev.unpersist()
-    }
-    (out.toSeq, syms)
-  }
-
-  /** WordPiece merge trainer (Schuster & Nakajima 2012; the
-    * likelihood-gain criterion BERT's tokenizer ships with) — the
-    * THIRD tokenizer family next to BPE (count argmax) and unigram-LM
-    * (EM prune): identical greedy island-parity merge mechanics to
-    * [[bpeMergeRounds]], but the per-round pair pick maximizes
-    * score(a,b) = cnt(ab) / (cnt(a)·cnt(b)) — the unigram-LM
-    * likelihood gain of fusing the pair — instead of raw cnt(ab), so
-    * a rare-but-exclusive bigram beats a frequent pair of
-    * individually-frequent symbols. The score comparison is one
-    * correctly-rounded IEEE division of exact int64 counts
-    * (cnt ≤ 2^53, ca·cb ≤ 2^53 ⇒ both operands exact ⇒ both engines
-    * produce the identical double), ties broken lexically on (a, b).
-    *
-    * Output per round: (round, lhs, rhs, pair_count, ca, cb,
-    * score_fx = floor(ln(cnt/(ca·cb))·1e6), n_symbols_after).
-    * Scale shapes are [[bpeMergeRounds]]'s: the corpus collapses to
-    * word types once; per round two type-keyed windows, one unigram
-    * + one pair partial-agged aggregate, and a 1-row argmax collect
-    * (the model, not the data).
-    */
-  def wordpieceMergeRounds(df: DataFrame, textCol: String,
-                           rounds: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    wordpieceTrain(df, textCol, rounds)
-      .toDF("round", "lhs", "rhs", "pair_count", "ca", "cb",
-        "score_fx", "n_symbols_after")
-  }
-
-  /** The trained WordPiece merge list alone — (lhs, rhs) in round
-    * order, the frozen MODEL a held-out apply consumes. Segmentation
-    * under a trained list is criterion-independent (the same greedy
-    * island-parity replay as BPE), so [[bpeSegment]] applies it:
-    * only the training argmax distinguishes the families. */
-  def wordpieceTrainedMerges(df: DataFrame, textCol: String,
-                             rounds: Int): Seq[(String, String)] =
-    wordpieceTrain(df, textCol, rounds).map(t => (t._2, t._3))
-
-  private def wordpieceTrain(df: DataFrame, textCol: String, rounds: Int)
-      : Seq[(Long, String, String, Long, Long, Long, Long, Long)] = {
-    var syms = bpeSym0(df, textCol)
-    val wWin = Window.partitionBy(col("w")).orderBy(asc("p"))
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, Long, Long, Long, Long, Long)]
-    // same exact-int64 running total as bpeTrain — one aggregate job
-    // per round replaced by Σwc(after) = Σwc(before) − n_merges_wt —
-    // and the same DEFERRED unpersist (a round's input frees only
-    // after the next argmax job materializes its output)
-    var total = -1L
-    var prev: DataFrame = null
-    var r = 1
-    var done = false
-    while (r <= rounds && !done) {
-      val uni = syms.groupBy(col("s")).agg(sum(col("wc")).as("cu"))
-      val best = syms.withColumn("s2", lead(col("s"), 1).over(wWin))
-        .filter(col("s2").isNotNull)
-        .groupBy(col("s"), col("s2")).agg(sum(col("wc")).as("cnt"))
-        .join(uni.select(col("s"), col("cu").as("ca")), "s")
-        .join(uni.select(col("s").as("s2"), col("cu").as("cb")), "s2")
-        .orderBy((col("cnt").cast("double") / (col("ca") * col("cb"))).desc,
-          asc("s"), asc("s2"))
-        .limit(1)
-        .select(col("s"), col("s2"), col("cnt"), col("ca"), col("cb"))
-        .collect()
-      // the argmax job materialized `syms` — its parent is now free
-      if (prev != null) { prev.unpersist(); prev = null }
-      if (best.isEmpty) done = true
-      else {
-        val row = best(0)
-        val (a, b, cnt, ca, cb) = (row.getString(0), row.getString(1),
-          row.getLong(2), row.getLong(3), row.getLong(4))
-        if (total < 0L)
-          total = syms.agg(sum(col("wc"))).collect()(0).getLong(0)
-        val (rebuilt, _, nMergesWt) = bpeMergePair(syms, a, b)
-        total -= nMergesWt
-        val symsAfter = total
-        // same libm ln the oracle's LN applies to the identical
-        // exact-int ratio — the floor(ln·1e6) fixed-point convention
-        val scoreFx = math.floor(
-          math.log(cnt.toDouble / (ca.toDouble * cb.toDouble)) * 1e6).toLong
-        out += ((r.toLong, a, b, cnt, ca, cb, scoreFx, symsAfter))
-        prev = syms
-        syms = rebuilt
-        r += 1
-      }
-    }
-    // the trainer discards the final frame (only the merge list is
-    // the model): nothing ever materializes the last rebuilt, so both
-    // tail frames just release their cache registrations
-    if (prev != null) prev.unpersist()
-    syms.unpersist()
-    out.toSeq
-  }
-
-  /** The trained merge list alone — the (lhs, rhs) pairs in round
-    * order, i.e. the tokenizer MODEL (what ships to the apply side). */
-  def bpeTrainedMerges(df: DataFrame, textCol: String,
-                       rounds: Int): Seq[(String, String)] = {
-    val (stats, syms) = bpeTrain(df, textCol, rounds)
-    syms.unpersist()
-    stats.map(t => (t._2, t._3))
-  }
-
   /** TOKENIZER APPLY — segment a (possibly different) corpus with an
     * ALREADY-TRAINED merge list: the real tokenizer workflow (train
     * on the training split, apply everywhere) and the piece
-    * [[bpeFinalSymbols]] — which retrains on its own input — does not
-    * give you. Each trained pair replays the same deterministic
+    * [[bpeTrainFull]]'s final frame — which retrains on its own input —
+    * does not give you. Each trained pair replays the same deterministic
     * island-parity greedy merge; pairs absent from this corpus are
     * no-ops. The merge list is the MODEL (a few driver-side strings);
     * the corpus collapses to word types once, so each round is two
@@ -732,23 +721,6 @@ object Curation {
         vocab
     }
 
-  /** Greedy longest-match segmentation usage of a corpus under a
-    * FROZEN vocabulary — the held-out APPLY step (the `bpeSegment`
-    * analog): no argmax, no re-estimation, the model never sees this
-    * split. Returns the model-sized (piece, use_wt) usage table in
-    * (use_wt desc, piece asc) order — ≤ vocab + alphabet rows, the
-    * only thing collected (the corpus itself stays distributed
-    * through the same pointer-doubling orbit as training). */
-  def unigramApplyUsage(df: DataFrame, textCol: String,
-      vocab: Seq[String], maxPieceLen: Int = 4): Seq[(String, Long)] =
-    unigramCorpus(df, textCol) match {
-      case None => Seq.empty
-      case Some(c) =>
-        val usage = unigramUsage(c, vocab, maxPieceLen)
-        c.release()
-        usage
-    }
-
   /** Word-type corpus shared by the unigram train/apply paths: the
     * (w, wc) type frame (the only corpus-sized shuffle), the
     * per-character-position frame, and the pointer-doubling fence.
@@ -808,41 +780,16 @@ object Curation {
     (perRound, vocab)
   }
 
-  /** Per-word-TYPE piece counts under a FROZEN vocabulary — the
-    * unigram fertility input (the `bpeSegment`-then-count analog):
-    * greedy longest-match segments every type, the orbit length IS
-    * the piece count. Returns the DISTRIBUTED (w, n_pieces) frame
-    * (type-sized — per-language consumers join occurrence counts on
-    * it), eagerly truncated so the internal per-position cache can
-    * be released before returning. */
-  def unigramTypePieceCounts(df: DataFrame, textCol: String,
-      vocab: Seq[String], maxPieceLen: Int = 4): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    unigramCorpus(df, textCol) match {
-      case None =>
-        Seq.empty[(String, Long)].toDF("w", "n_pieces")
-      case Some(c) =>
-        // the orbit frame carries each word's TERMINAL position
-        // (len+1, the last piece's `next`) — the ml join drops it,
-        // exactly as the usage fold does: pieces = valid starts only
-        val counts = unigramOrbit(c, vocab, maxPieceLen) { (r, ml) =>
-          r.join(ml, Seq("w", "pos"))
-            .groupBy(col("w")).agg(count(lit(1)).as("n_pieces"))
-        }
-        c.release()
-        counts
-    }
-  }
-
   /** The greedy-longest-match VALID-START frame under a frozen
     * unigram vocabulary: one (w, wc, pos, mlen) row per piece start
-    * of every word type's segmentation — the shared kernel behind
-    * [[unigramApplyUsage]] (fold: substring piece → Σwc),
-    * [[unigramTypePieceCounts]] (fold: count per w) and
-    * [[unigramTypeBoundaries]] (fold: pos > 1 → b = pos − 1), exposed
-    * so the three held-out consumers can run their folds off ONE
-    * materialized orbit instead of three (r13: the orbit — hit join +
+    * of every word type's segmentation — the held-out APPLY step
+    * (the `bpeSegment` analog: no seed, no argmax, no prune; the model
+    * never sees this split). Each held-out consumer is one cheap fold
+    * of it: usage (substring(w, pos, mlen) → Σwc, model-sized),
+    * per-type piece counts (count per w — the terminal position
+    * len+1 has no start row) and internal boundaries (pos > 1 →
+    * b = pos − 1), so the three run off ONE materialized orbit
+    * instead of three (r13: the orbit — hit join +
     * pointer doubling — is the dominant cost of every apply-side
     * query; the folds are cheap aggregates). Eagerly checkpointed by
     * [[unigramOrbit]]; empty-corpus → empty frame with the same
@@ -861,33 +808,6 @@ object Curation {
         }
         c.release()
         starts
-    }
-  }
-
-  /** Per-word-TYPE internal split points under a FROZEN unigram
-    * vocabulary — the boundary-set view of the greedy segmentation
-    * (the [[unigramTypePieceCounts]] sibling a tokenizer-agreement
-    * audit consumes): one (w, b) row per internal piece boundary,
-    * b ∈ [1, len−1] counting characters BEFORE the split. Piece
-    * starts are the orbit positions; every start except pos=1 puts
-    * its boundary at pos−1, and the terminal position len+1 never
-    * enters the orbit frame (no match-length row to chase to), so no
-    * end-of-word pseudo-boundary leaks in. Type-frame-sized. */
-  def unigramTypeBoundaries(df: DataFrame, textCol: String,
-      vocab: Seq[String], maxPieceLen: Int = 4): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    unigramCorpus(df, textCol) match {
-      case None =>
-        Seq.empty[(String, Long)].toDF("w", "b")
-      case Some(c) =>
-        val bounds = unigramOrbit(c, vocab, maxPieceLen) { (r, ml) =>
-          r.join(ml, Seq("w", "pos"))
-            .filter(col("pos") > 1)
-            .select(col("w"), (col("pos") - 1).cast("long").as("b"))
-        }
-        c.release()
-        bounds
     }
   }
 

@@ -28,10 +28,6 @@ object Sampling {
   def sampleAt(id: Column, seed: Long, rate: Double): Column =
     C.portableHash(id, seed) < lit(math.floor(rate * 4294967296.0).toLong)
 
-  /** SQL text of [[sampleAt]] for oracle parity. */
-  def sampleAtSql(idExpr: String, seed: Long, rate: Double): String =
-    s"${C.portableHashSql(idExpr, seed)} < ${math.floor(rate * 4294967296.0).toLong}"
-
   /** Stratified / mixing sample: per-stratum keep rates (e.g. mix
     * sources at different proportions, downsample a dominant
     * language). Strata absent from `rates` fall back to

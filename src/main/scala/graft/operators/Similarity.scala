@@ -1009,20 +1009,29 @@ object Similarity {
     // q163's ~5 s at sf0.1). Submitting them concurrently lets the
     // scheduler overlap them — results are bit-identical (each
     // training is deterministic and touches only its own slice).
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     // `preNormalized` = the caller already produced the vector space to
     // quantize (e.g. IVFADC residuals, which must NOT be re-normalized
     // — a residual's norm IS its information)
     val vexpr = if (preNormalized) col(vecCol).cast("array<double>")
                 else normalized(col(vecCol))
-    val trained = (0 until m).map { j =>
-      Future(euclideanCentroids(
-        data.select(slice(vexpr, j * subDim + 1, subDim).as("v")),
-        "v", ksub, iters, subDim))
-    }
-    trained.map(Await.result(_, Duration.Inf)).toArray
+    // a pool made per call: its threads are created by this thread, so
+    // they inherit its Spark local properties (job tags, description,
+    // trace id) and every training job is charged to the calling
+    // query — a shared pool's long-lived threads keep the properties
+    // of whichever query first created them
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(m, Runtime.getRuntime.availableProcessors()))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val trained = (0 until m).map { j =>
+        Future(euclideanCentroids(
+          data.select(slice(vexpr, j * subDim + 1, subDim).as("v")),
+          "v", ksub, iters, subDim))
+      }
+      trained.map(Await.result(_, Duration.Inf)).toArray
+    } finally pool.shutdown()
   }
 
   /** Product-quantization approximate top-k with asymmetric distance

@@ -33,12 +33,6 @@ object TextAnalysis {
 
   def charCount(text: Column): Column = length(text).cast("long")
 
-  /** Ratio of punctuation characters (explicit class — portable across
-    * regex engines). */
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[.,!?;:'\"()\\[\\]{}-]", "")))
-      .cast("double") / length(text)
-
   /** Mean token length (chars excluding whitespace / token count). */
   def avgTokenLen(text: Column): Column =
     length(regexp_replace(text, "\\s+", "")).cast("double") / tokenCount(text)

@@ -2075,9 +2075,8 @@ object Pipeline {
   // binding figure) and 0.35 (w=96, q326's rounds-0 floor) per
   // rule 9; re-measure before changing grids/k. The MONOTONICITY
   // theorem is the real gate — the floors only catch collapse.
-  // r13: the 8/32 init builds are memoized per (session, dir, width)
-  // (knnInitGraphOf) — deterministic, so the memo can only skip a
-  // bit-identical rebuild.
+  // The 8/32 init builds run inline: no other query reads them, so a
+  // memo would only hold them.
   // Per-row exactness, rank chains, and per-width full coverage are
   // q234's oracle discipline.
   // -------------------------------------------------------------------
@@ -2086,7 +2085,10 @@ object Pipeline {
       g.select(lit(w).as("width"), col("src"), col("dst"), col("rank"),
         round(col("cosine"), 6).as("cosine_r"))
     val small = Seq(8, 32).map { w =>
-      pub(knnInitGraphOf(spark, dir, w), w.toLong) // memoized init-only builds
+      val init = Similarity.knnGraphDescentCurve(emb(spark, dir),
+        "vec_id", "embedding", k = 10, numCells = 16, dim = 64,
+        grids = 4, rounds = 0, initWidth = w).head
+      pub(init, w.toLong)
     }
     val w96 = pub(knnCurveOf(spark, dir).head, 96L) // memoized — q234's build
     (small :+ w96).reduce(_.unionAll(_))
@@ -2679,39 +2681,33 @@ object Pipeline {
         .localCheckpoint(eager = true)
     }
 
-  // memoized per-grid DISJOINT dbscan survivor-pair frames (r14):
-  // element g = the canonical (ia < ib, dot ≥ θ) pairs grid g found
-  // FIRST (Similarity.dbscanGridPairs — first-finder-wins, so any
-  // seed-prefix union is exactly that prefix's distinct survivor
-  // set). ONE build (3 trainings, 3 in-stream pair joins, zero
-  // cross-grid dedup shuffles) serves q322 (grids=3) and all three
-  // rows of q324's grids-1/2/3 operating curve, which previously ran
-  // the full operator 4× — 9 trainings, 9 pair joins, 4 distincts.
-  // Params are the shared q322/q324 gate values; the pair frames do
-  // not depend on minPts, which dbscanRolesOf applies downstream.
-  private val dbscanPairsMemo = SessionMemo.family[Seq[DataFrame]]("dbscanPairsOf")
-  private def dbscanPairsOf(spark: SparkSession, dir: String): Seq[DataFrame] =
-    dbscanPairsMemo(spark, dir) {
-      // eager per-grid localCheckpoints (rule 16)
-      Similarity.dbscanGridPairs(emb(spark, dir), "vec_id", "embedding",
-        thetaFx = 250000000000L, grids = 3, dim = 64)
-    }
-  // memoized all-prefix dbscan counts and roles over dbscanPairsOf
+  // memoized all-prefix dbscan counts and roles
   // (Similarity.dbscanPrefixRoles: n_nb_g, role_g for grids g = 1…3),
   // checkpointed once: q322 projects prefix 3 and q324 aggregates
   // every prefix, so the count/role fold runs once per (dir, minPts).
+  // Its input, built inline, is the per-grid DISJOINT survivor-pair
+  // frames (r14): element g = the canonical (ia < ib, dot ≥ θ) pairs
+  // grid g found FIRST (Similarity.dbscanGridPairs — first-finder-wins,
+  // so any seed-prefix union is exactly that prefix's distinct
+  // survivor set). ONE build (3 trainings, 3 in-stream pair joins,
+  // zero cross-grid dedup shuffles) serves q322 (grids=3) and all
+  // three rows of q324's grids-1/2/3 operating curve, which previously
+  // ran the full operator 4× — 9 trainings, 9 pair joins, 4 distincts.
+  // Params are the shared q322/q324 gate values.
   private val dbscanRolesMemo = SessionMemo.family[DataFrame]("dbscanRolesOf")
   private def dbscanRolesOf(spark: SparkSession, dir: String,
                             minPts: Long): DataFrame =
     dbscanRolesMemo(spark, s"$dir#minPts=$minPts") {
-      Similarity.dbscanPrefixRoles(emb(spark, dir), "vec_id",
-          dbscanPairsOf(spark, dir), minPts)
+      // eager per-grid localCheckpoints (rule 16)
+      val pairs = Similarity.dbscanGridPairs(emb(spark, dir), "vec_id",
+        "embedding", thetaFx = 250000000000L, grids = 3, dim = 64)
+      Similarity.dbscanPrefixRoles(emb(spark, dir), "vec_id", pairs, minPts)
         .localCheckpoint(eager = true)
     }
   // The kNN graph is built ONCE per (session, dir) and shared by q234
   // (edge gate), q323 (hubness audit) and q326 (rounds operating
   // curve) — the tokenizer-chain memoization pattern
-  // (trainedMerges97Of), and the production shape: a pipeline builds
+  // (bpeHeldoutSegs97Of), and the production shape: a pipeline builds
   // its neighbor structure once and derives audits from it.
   // Element r of the curve = the graph after r descent rounds (r = 0
   // is the scored init). q234/q323 read .last; q326 publishes the
@@ -2727,19 +2723,6 @@ object Pipeline {
     }
   private def knnGraphOf(spark: SparkSession, dir: String): DataFrame =
     knnCurveOf(spark, dir).last
-  // q327's width-8/32 INIT-ONLY graphs, memoized per (session, dir,
-  // width) — r12 verdict #3: they are deterministic in (dir, width)
-  // yet were rebuilt on every invocation while width 96 read the
-  // memoized main curve.
-  private val knnInitMemo = SessionMemo.family[DataFrame]("knnInitGraphOf")
-  private def knnInitGraphOf(spark: SparkSession, dir: String, w: Int): DataFrame =
-    knnInitMemo(spark, s"$dir#initWidth=$w") {
-      val g = Similarity.knnGraphDescentCurve(emb(spark, dir),
-        "vec_id", "embedding", k = 10, numCells = 16, dim = 64,
-        grids = 4, rounds = 0, initWidth = w).head
-      g.count() // materialize before sharing (rule 16)
-      g
-    }
 
   // -------------------------------------------------------------------
   // Conformal IVF scoring chain, built ONCE per (session, dir) and
@@ -4125,11 +4108,11 @@ object Pipeline {
   // < 2³² before mix32's bounded multipliers — no int64 overflow for
   // DuckDB to error on through id ~1e9.
   // -------------------------------------------------------------------
-  /** The materialized walk corpus, memoized per (session, dir) — the
-    * trainedMerges97Of pattern for a DISTRIBUTED artifact: the frame
-    * stays a localCheckpointed Dataset (the corpus is sample-sized
-    * here but data-sized at 100 TB — a driver collect would not
-    * scale, a shared checkpoint does), so q269 (the corpus itself) and
+  /** The materialized walk corpus, memoized per (session, dir) — a
+    * DISTRIBUTED shared artifact: the frame stays a localCheckpointed
+    * Dataset (the corpus is sample-sized here but data-sized at
+    * 100 TB — a driver collect would not scale, a shared checkpoint
+    * does), so q269 (the corpus itself) and
     * q273 (the SPPMI matrix over it) pay the 6-step generation once per
     * session. */
   private val walkCorpusMemo = SessionMemo.family[DataFrame]("walkCorpusOf")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Curation
 
@@ -9,6 +10,21 @@ import graft.operators.Curation
   */
 class CurationSpec extends SparkSpec {
   import spark.implicits._
+
+  // the held-out folds of a unigramStarts frame, as q263 (usage), q265
+  // (per-type piece counts) and q267 (internal boundaries) run them
+  private def usageFold(starts: DataFrame): Seq[(String, Long)] =
+    starts.select(expr("substring(w, pos, mlen)").as("piece"), col("wc"))
+      .groupBy(col("piece")).agg(sum(col("wc")).as("use_wt"))
+      .orderBy(desc("use_wt"), asc("piece"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+  private def pieceCountFold(starts: DataFrame): Map[String, Long] =
+    starts.groupBy(col("w")).agg(count(lit(1)).as("n_pieces"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  private def boundaryFold(starts: DataFrame): Set[(String, Long)] =
+    starts.filter(col("pos") > 1)
+      .select(col("w"), (col("pos") - 1).cast("long").as("b"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
 
   test("splitAssign is deterministic and roughly proportional") {
     val ids = (0L until 10000L).toDF("id")
@@ -172,16 +188,6 @@ class CurationSpec extends SparkSpec {
       (5L, 2L, 2L, 0L, md5hex("a b"))))
   }
 
-  test("bpeFinalSymbols: planted corpus segments to the expected subword vocabulary") {
-    val docs = Seq((1L, "aa aa ab"), (2L, "aa b")).toDF("doc_id", "text")
-    val vocab = Curation.bpeFinalSymbols(docs, "text", rounds = 3)
-      .groupBy(col("s"))
-      .agg(sum(col("wc")).as("n_occ"), countDistinct(col("w")).as("n_types"))
-      .orderBy(desc("n_occ"), asc("s"))
-      .as[(String, Long, Long)].collect().toSeq
-    assert(vocab === Seq(("aa", 3L, 1L), ("ab", 1L, 1L), ("b", 1L, 1L)))
-  }
-
   test("bpeMergeRounds: planted corpus replays known merges; runs merge greedily; early stop") {
     // types: aa×3, ab×1, b×1 → round 1 merges (a,a) [cnt 3], round 2
     // merges (a,b) [cnt 1], round 3 finds no pairs and stops early
@@ -204,9 +210,10 @@ class CurationSpec extends SparkSpec {
       (2L, "aa", "a", 2L, 1L, 2L, 2L)))
   }
 
-  test("bpeTrainFull: one training run yields bpeMergeRounds' stats AND bpeFinalSymbols' frame") {
-    // r13: q213+q216 share one memoized full-corpus chain — both
-    // halves of the pair must equal the dedicated functions' outputs
+  test("bpeTrainFull: one training run yields bpeMergeRounds' stats AND the segmented final frame") {
+    // r13: q213+q216 share one memoized full-corpus chain — the stats
+    // are bpeMergeRounds' planted rows, and the final symbol frame
+    // segments the planted corpus to the expected subword vocabulary
     val docs = Seq((1L, "aa aa ab"), (2L, "aa b")).toDF("doc_id", "text")
     val (stats, syms) = Curation.bpeTrainFull(docs, "text", rounds = 3)
     assert(stats === Seq(
@@ -764,17 +771,16 @@ class CurationSpec extends SparkSpec {
     // apply on an UNSEEN corpus under the frozen vocab: ababab ->
     // [abab, ab] (longest-first, then continue), cd -> [c, d]
     val eval = Seq("ababab cd").toDF("text")
-    val usage = Curation.unigramApplyUsage(eval, "text", vocab, maxPieceLen = 4)
+    val usage = usageFold(Curation.unigramStarts(eval, "text", vocab, maxPieceLen = 4))
     assert(usage === Seq(("ab", 1L), ("abab", 1L), ("c", 1L), ("d", 1L)))
   }
 
-  test("unigramTypePieceCounts: orbit length per type, terminal position dropped") {
+  test("unigramStarts piece-count fold: orbit length per type, terminal position dropped") {
     // frozen vocab [abab, ab]: ababab -> [abab, ab] (2), cd -> [c, d]
     // (2), ab -> [ab] (1); the orbit's terminal (len+1) row must NOT
     // count as a piece
     val eval = Seq("ababab cd ab").toDF("text")
-    val got = Curation.unigramTypePieceCounts(eval, "text", Seq("abab", "ab"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = pieceCountFold(Curation.unigramStarts(eval, "text", Seq("abab", "ab")))
     assert(got === Map("ababab" -> 2L, "cd" -> 2L, "ab" -> 1L))
   }
 
@@ -782,12 +788,11 @@ class CurationSpec extends SparkSpec {
   // orbit (pos−1 for every non-initial piece start, terminal len+1
   // never leaks), and the BPE-vs-unigram comparison on a word where
   // the families agree on one split and diverge on another.
-  test("unigramTypeBoundaries: internal split offsets, no terminal pseudo-boundary") {
+  test("unigramStarts boundary fold: internal split offsets, no terminal pseudo-boundary") {
     // vocab [abab, ab]: ababa -> [abab, a] (boundary 4); abc -> [ab, c]
     // (boundary 2); ab -> [ab] (no internal boundary -> no row)
     val eval = Seq("ababa abc ab").toDF("text")
-    val got = Curation.unigramTypeBoundaries(eval, "text", Seq("abab", "ab"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val got = boundaryFold(Curation.unigramStarts(eval, "text", Seq("abab", "ab")))
     assert(got === Set(("ababa", 4L), ("abc", 2L)))
     // agreement view vs a frozen BPE merge (a,b): abc -> [ab, c] also
     // boundary 2 (families agree); ababa BPE -> [ab, ab, a]
@@ -805,41 +810,31 @@ class CurationSpec extends SparkSpec {
 
   test("unigramStarts: the shared valid-start frame reproduces all three apply folds") {
     // r13: q263/q265/q267 fold ONE memoized starts frame instead of
-    // three orbits — each fold must be bit-identical to the original
-    // dedicated function on the same corpus + frozen vocab
+    // three orbits. Vocab [abab, ab], all wc 1: ababab -> [abab, ab],
+    // cd -> [c, d], ab -> [ab], ababa -> [abab, a], abc -> [ab, c]
     val eval = Seq("ababab cd ab ababa abc").toDF("text")
     val vocab = Seq("abab", "ab")
     val starts = Curation.unigramStarts(eval, "text", vocab)
     // fold 1: usage (piece, Σwc) in (use_wt desc, piece asc) order
-    val usage = starts
-      .select(expr("substring(w, pos, mlen)").as("piece"), col("wc"))
-      .groupBy(col("piece")).agg(sum(col("wc")).as("use_wt"))
-      .orderBy(desc("use_wt"), asc("piece"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(usage === Curation.unigramApplyUsage(eval, "text", vocab))
+    assert(usageFold(starts) ===
+      Seq(("ab", 3L), ("abab", 2L), ("c", 2L), ("a", 1L), ("d", 1L)))
     // fold 2: per-type piece counts
-    val counts = starts.groupBy(col("w")).agg(count(lit(1)).as("n_pieces"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val want = Curation.unigramTypePieceCounts(eval, "text", vocab)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(counts === want)
+    assert(pieceCountFold(starts) === Map("ababab" -> 2L, "cd" -> 2L,
+      "ab" -> 1L, "ababa" -> 2L, "abc" -> 2L))
     // fold 3: internal boundaries (pos > 1 → b = pos − 1)
-    val bounds = starts.filter(col("pos") > 1)
-      .select(col("w"), (col("pos") - 1).cast("long").as("b"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val wantB = Curation.unigramTypeBoundaries(eval, "text", vocab)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(bounds === wantB)
+    assert(boundaryFold(starts) ===
+      Set(("ababab", 4L), ("cd", 1L), ("ababa", 4L), ("abc", 2L)))
     // empty corpus → empty frame, right schema
     val empty = Seq.empty[String].toDF("text")
-    assert(Curation.unigramStarts(empty, "text", vocab).count() === 0L)
+    val none = Curation.unigramStarts(empty, "text", vocab)
+    assert(none.count() === 0L)
+    assert(none.columns.toSeq === Seq("w", "wc", "pos", "mlen"))
   }
 
   test("unigram ops: empty / all-empty-token corpus short-circuits, no NPE") {
     val empty = Seq.empty[String].toDF("text")
     assert(Curation.unigramRounds(empty, "text", rounds = 2).count() === 0L)
     assert(Curation.unigramTrainedVocab(empty, "text", rounds = 2) === Seq.empty)
-    assert(Curation.unigramApplyUsage(empty, "text", Seq("ab")) === Seq.empty)
     val blank = Seq("   ", "").toDF("text")
     assert(Curation.unigramRounds(blank, "text", rounds = 1).count() === 0L)
   }

@@ -47,6 +47,24 @@ class QueryTraceSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  test("PQ codebook trainings are charged to the query that runs them, every time") {
+    // the m subspace trainings run on pool threads: each traced call
+    // must count its own training jobs, not leave them to the query
+    // whose trace created the threads
+    import org.apache.spark.sql.functions.{array, col}
+    val data = spark.range(0, 64, 1, 2).select(array((1 to 4).map(j =>
+      ((col("id") * j) % 7 + 1).cast("float")): _*).as("v"))
+    val recs = (1 to 2).map { i =>
+      QueryTrace.traced(spark, s"pq-$i") {
+        graft.operators.Similarity.pqTrainCodebooks(data, "v", m = 2, ksub = 2,
+          dim = 4, iters = 2)
+      }._2
+    }
+    assert(recs.forall(_.ok), recs)
+    assert(recs(0).jobs > 0, recs)
+    assert(recs(1).jobs === recs(0).jobs, recs)
+  }
+
   test("a body that reads one memo family twice records one build and one hit") {
     val memo = SessionMemo.family[Long]("spec.trace")
     val (_, first) = QueryTrace.traced(spark, "memo-1") {

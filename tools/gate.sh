@@ -39,7 +39,7 @@ echo "== [3/5] Verify + DuckDB check @ sf0.01 =="
 SPARK_GRAFT_CPUS=$CPUS tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/gate_sf001
 python3 tools/check.py /root/testdata/sf0.01 /tmp/gate_sf001 | tail -2
 
-echo "== [3a/5] Verify trace: one QueryTrace line per query =="
+echo "== [3a/5] Verify trace: one QueryTrace line per query, every memo family hit =="
 # a half-traced run must not pass: exactly one trace.jsonl line per
 # oracled query (every registered query is oracled), each with a job count
 python3 - /tmp/gate_sf001 <<'EOF'
@@ -54,6 +54,19 @@ if len(lines) != len(names) or set(traced) != names or bad:
           f"missing {sorted(names - set(traced))[:8]}; no job count {bad[:8]}")
     sys.exit(1)
 print(f"trace complete: {len(lines)} lines, {sum(r['jobs'] for r in lines)} jobs")
+# a memo family that is built but never read warm only holds its frames:
+# every family must record a hit somewhere in the run
+builds, hits = {}, {}
+for r in lines:
+    for fam, m in r.get("memo", {}).items():
+        builds[fam] = builds.get(fam, 0) + m["builds"]
+        hits[fam] = hits.get(fam, 0) + m["hits"]
+cold = sorted(f for f in builds if builds[f] > 0 and hits[f] == 0)
+if cold:
+    for f in cold:
+        print(f"MEMO NEVER HIT: {f} builds={builds[f]} hits=0")
+    sys.exit(1)
+print(f"memo families: {len(builds)}, each hit at least once")
 EOF
 
 echo "== [3b/5] plan lint (scale-shape audit over every query plan) =="
