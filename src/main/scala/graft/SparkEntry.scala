@@ -33,26 +33,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Relational.q01TpchQ1(spark, "/root/testdata/sf0.001")
 
+  /** Every query module's registry (name → build function + oracle SQL); a
+    * name belongs to exactly one module. */
+  def registries: Seq[Map[String, graft.queries.Query]] = Seq(
+    graft.queries.Relational.registry,
+    graft.queries.Analytics.registry,
+    graft.queries.Pipeline.registry,
+    graft.queries.Temporal.registry,
+    graft.queries.Stats.registry,
+    graft.queries.Scalars.registry,
+    graft.queries.Curation.registry,
+    graft.queries.Sampling.registry)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.Analytics.queries ++
-      graft.queries.Pipeline.queries ++
-      graft.queries.Temporal.queries ++
-      graft.queries.Stats.queries ++
-      graft.queries.Scalars.queries ++
-      graft.queries.Curation.queries ++
-      graft.queries.Sampling.queries
+    graft.queries.Query.builds(registries.reduce(_ ++ _))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a weaker rows-only check. */
+    * the same parquet tables. Every registered query carries one, so
+    * the key sets are equal. */
   def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracle ++
-      graft.queries.Analytics.oracle ++
-      graft.queries.Pipeline.oracle ++
-      graft.queries.Temporal.oracle ++
-      graft.queries.Stats.oracle ++
-      graft.queries.Scalars.oracle ++
-      graft.queries.Curation.oracle ++
-      graft.queries.Sampling.oracle
+    registries.reduce(_ ++ _).map { case (name, q) => name -> q.oracle }
 }

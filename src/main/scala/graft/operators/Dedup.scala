@@ -155,7 +155,7 @@ object Dedup {
     */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       k: Int = 3, numHashes: Int = 32, bands: Int = 8,
-                      threshold: Double = 0.5, maxBucket: Int = 2000): DataFrame = {
+                      threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be a multiple of bands ($bands): " +
         "truncated trailing hashes would silently flatten the S-curve")
@@ -176,7 +176,7 @@ object Dedup {
       .withColumnRenamed("col", "band_sig")
       .persist()
     // Degenerate-bucket guard (same cap as simhashPairs): a band
-    // signature shared by > maxBucket docs would put an O(m²) pair
+    // signature shared by > MinhashMaxBucket docs would put an O(m²) pair
     // explosion on one reducer — at 100 TB a single boilerplate-heavy
     // signature is enough. Such buckets are near-identical clusters
     // better handled by exact dedup first (see exactRepresentatives);
@@ -187,7 +187,7 @@ object Dedup {
       .withColumn("bucket_n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("band"), col("band_sig"))))
-      .filter(col("bucket_n") <= lit(maxBucket))
+      .filter(col("bucket_n") <= lit(MinhashMaxBucket))
     // (2) candidate id pairs, deduped across bands BEFORE verification
     val l = bounded.select(col(idCol).as("id_a"), col("band"), col("band_sig"))
     val r = bounded.select(col(idCol).as("id_b"), col("band"), col("band_sig"))
@@ -215,16 +215,20 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
+  /** Band-bucket cap of [[minhashLshPairs]] and of both sides of
+    * [[minhashIndexProbe]]: a bucket of more docs is dropped from
+    * candidate generation ([[minhashOverfullBuckets]] counts them). */
+  private val MinhashMaxBucket = 2000
+
   /** Count of band buckets excluded by [[minhashLshPairs]]' cap —
     * and the sizing instrument for BOTH of [[minhashIndexProbe]]'s
     * caps: run it on the standing index AND on each probe batch (a
     * capped bucket silently loses guaranteed candidacy, exact twins
-    * included), and size `maxBucket` above the census's largest
-    * bucket before trusting recall. Same banding kernel as the join
-    * paths. */
+    * included); a non-zero count means recall is not guaranteed.
+    * Same banding kernel as the join paths. */
   def minhashOverfullBuckets(docs: DataFrame, idCol: String, textCol: String,
                              k: Int = 3, numHashes: Int = 32, bands: Int = 8,
-                             maxBucket: Int = 2000): Long =
+                             maxBucket: Int = MinhashMaxBucket): Long =
     docs
       .select(col(idCol),
         posexplode(graft.functions.TextHashFunctions
@@ -251,30 +255,27 @@ object Dedup {
     * to pure min-label propagation. Alternative for adversarial
     * shapes: [[connectedComponentsAlternating]].
     *
+    * Termination: the loop runs until no label changes, with no round
+    * cap. Labels are node ids and never increase; after r rounds each
+    * node's label is at most the minimum id within r hops (the jump
+    * only lowers it further, never below the component min), so after
+    * diameter ≤ |V| − 1 rounds every label is its component min and
+    * the next round changes nothing — the loop ends within |V| rounds
+    * and always returns the fixpoint.
+    *
     * Scale shape: per round one shuffle of (8-byte id, 8-byte label)
     * edges + one hash aggregate + one node-frame self-join; lineage
-    * truncated per round so plans stay flat; only the per-round
-    * change COUNT reaches the driver.
-    * Truncation is `localCheckpoint` (executor memory) by default —
-    * pass `checkpointDir` on a real cluster to write round snapshots
-    * to reliable storage instead (survives executor loss; the
-    * localCheckpoint variant recomputes-from-nothing if an executor
-    * holding a block dies mid-algorithm). Output: (id, cluster) for
-    * every id present in `pairs`, cluster = min id of the component.
+    * truncated per round (`localCheckpoint`) so plans stay flat; only
+    * the per-round change COUNT is collected. Output: (id, cluster)
+    * for every id present in `pairs`, cluster = min id of the
+    * component.
     */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIters: Int = 20,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    // LAZY local checkpoint in single-JVM mode: the round's change
-    // count is then the job that materializes the snapshot — one job
-    // per round instead of two (eager materialize + count), which
-    // halves the per-round scheduling floor on small graphs. Reliable
-    // checkpoints (cluster mode) stay eager: durability of the round
-    // snapshot matters more than driver latency there.
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(_) => truncator(pairs, checkpointDir)
-      case None    => df => df.localCheckpoint(false)
-    }
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
+    // LAZY local checkpoint: the round's change count is then the job
+    // that materializes the snapshot — one job per round instead of two
+    // (eager materialize + count), which halves the per-round
+    // scheduling floor on small graphs
+    val cut: DataFrame => DataFrame = _.localCheckpoint(false)
     val edges = cut(pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .union(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
@@ -285,9 +286,8 @@ object Dedup {
     // because the edge set is symmetrized above)
     var labels = cut(edges.groupBy(col("src")).agg(min(col("dst")).as("nd"))
       .select(col("src").as("id"), least(col("src"), col("nd")).as("cluster")))
-    var iter = 0
     var changed = 1L
-    while (changed > 0 && iter < maxIters) {
+    while (changed > 0) {
       val nbrMin = edges
         .join(labels.select(col("id").as("dst"), col("cluster").as("nbr")), Seq("dst"))
         .groupBy(col("src")).agg(min(col("nbr")).as("nbr_min"))
@@ -309,7 +309,6 @@ object Dedup {
           (col("ch") || (col("pc") < col("cluster"))).as("ch")))
       changed = next.filter(col("ch")).count()
       labels = next.select(col("id"), col("cluster"))
-      iter += 1
     }
     labels
   }
@@ -351,23 +350,6 @@ object Dedup {
       StructField("cluster", LongType, nullable = false))))
   }
 
-  /** Per-round lineage truncation for the iterative CC algorithms:
-    * eager `localCheckpoint` by default (single-JVM / tests), eager
-    * reliable `checkpoint` under `dir` when given (cluster mode —
-    * snapshots live in HDFS/S3, so a lost executor costs one re-read,
-    * not a full recompute of all prior rounds). The checkpoint dir is
-    * set once per call; each truncated frame lands in its own rdd-N
-    * subdirectory. */
-  private def truncator(sample: DataFrame,
-                        dir: Option[String]): DataFrame => DataFrame =
-    dir match {
-      case Some(d) =>
-        sample.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None =>
-        df => df.localCheckpoint(true)
-    }
-
   /** INCREMENTAL connected components — fold a DELTA edge batch into a
     * standing labeling without rescanning the standing EDGE set (the
     * q95/q257/q226 incremental discipline at the graph rung): map the
@@ -383,14 +365,11 @@ object Dedup {
     * Scale: history contributes ONLY its label table (id, long) — two
     * hash joins against the delta and one relabel join; the iterative
     * part touches the delta-connected components alone. The standing
-    * labeling is recomputed here from `standing` so the gate is
-    * self-contained; production passes the PERSISTED labels instead
-    * (`baseLabels`).
+    * labeling is computed here from `standing`.
     */
   def incrementalConnectedComponents(standing: DataFrame, delta: DataFrame,
-      aCol: String, bCol: String,
-      baseLabels: Option[DataFrame] = None): DataFrame = {
-    val base = baseLabels.getOrElse(connectedComponents(standing, aCol, bCol))
+      aCol: String, bCol: String): DataFrame = {
+    val base = connectedComponents(standing, aCol, bCol)
       .localCheckpoint(true) // two consumers below; also truncates CC lineage
     val d = delta.select(col(aCol).cast("long").as("a"),
       col(bCol).cast("long").as("b"))
@@ -414,9 +393,10 @@ object Dedup {
   /** Connected components via alternating large-star / small-star
     * rounds (the MapReduce CC algorithm of Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC'14) — converges in
-    * O(log n) rounds on ANY graph shape, where [[connectedComponents]]'
-    * min-label propagation needs diameter rounds (fine for clique/star
-    * near-dup clusters, hopeless for path-shaped chains).
+    * O(log² n) rounds on ANY graph shape (their bound; ~log n in
+    * practice), where [[connectedComponents]]' min-label propagation
+    * needs diameter rounds (fine for clique/star near-dup clusters,
+    * hopeless for path-shaped chains).
     *
     *  - large-star: every node links its strictly-greater neighbors to
     *    the minimum of its neighborhood (incl. itself).
@@ -427,11 +407,17 @@ object Dedup {
     * aggregate — same per-round cost shape as min-label propagation;
     * the win is the round COUNT. Converged when the edge set is a
     * fixpoint (every edge then points child → component root).
+    *
+    * Termination: the loop runs until that fixpoint, with no round
+    * cap. Kiveris et al. prove the alternating rounds reach it on
+    * every graph, and the set-equality test below is exact (both
+    * sides are distinct, so equal counts plus containment is
+    * equality), so the loop stops exactly there and always returns
+    * converged labels.
     */
   def connectedComponentsAlternating(pairs: DataFrame, aCol: String,
-                                     bCol: String, maxIters: Int = 30,
-                                     checkpointDir: Option[String] = None): DataFrame = {
-    val cut = truncator(pairs, checkpointDir)
+                                     bCol: String): DataFrame = {
+    val cut: DataFrame => DataFrame = _.localCheckpoint(true)
     def canon(e: DataFrame): DataFrame = e
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"),
@@ -444,9 +430,8 @@ object Dedup {
     var edges = cut(canon(pairs.select(col(aCol).cast("long").as("u"),
         col(bCol).cast("long").as("v"))))
     var edgeCount = edges.count()
-    var iter = 0
     var done = false
-    while (!done && iter < maxIters) {
+    while (!done) {
       // large-star: centers see ALL neighbors; greater neighbors → min
       val bidir = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
         .toDF("c", "n")
@@ -475,7 +460,6 @@ object Dedup {
         ss.join(edges, Seq("u", "v"), "left_anti").isEmpty
       edges = ss
       edgeCount = ssCount
-      iter += 1
     }
     // converged: every edge is (root, child); label children by root,
     // roots (and any node only ever seen as a root) by themselves
@@ -611,25 +595,26 @@ object Dedup {
     * degenerate-bucket cap: the index side bounds unbounded history,
     * and the probe side bounds a boilerplate-heavy crawl batch (an
     * uncapped probe bucket would still join every surviving index
-    * bucket at full width — probe_n × maxBucket pairs per band).
+    * bucket at full width — probe_n × [[MinhashMaxBucket]] pairs per
+    * band).
     * Candidates dedupe across bands, then the exact shingle-set
     * Jaccard verifies (same final stage as the self-join variant).
     * Returns (probe_id, index_id, jaccard) for pairs ≥ `threshold`.
     *
     * Cap/completeness interaction (the q257 gate reads this): if ANY
-    * bucket exceeds `maxBucket`, its members lose guaranteed
+    * bucket exceeds [[MinhashMaxBucket]], its members lose guaranteed
     * candidacy in that band — including exact-duplicate twins, whose
     * bands ALL collide. q257's all-or-nothing completeness oracle
     * would then fail loudly (by design: a silent recall cliff is the
     * worse outcome). At gate scale no bucket approaches the cap; a
-    * production run on a self-similar corpus sizes `maxBucket` from
-    * [[minhashOverfullBuckets]] run on BOTH frames first (index and
-    * probe batch), exactly as [[minhashLshPairs]] documents.
+    * production run on a self-similar corpus runs
+    * [[minhashOverfullBuckets]] on BOTH frames first (index and probe
+    * batch) before trusting recall.
     */
   def minhashIndexProbe(index: DataFrame, probes: DataFrame,
       idCol: String, textCol: String,
       k: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5, maxBucket: Int = 2000): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be a multiple of bands ($bands)")
     def banded(df: DataFrame, idAs: String) = df
@@ -642,13 +627,13 @@ object Dedup {
       .withColumn("bucket_n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("band"), col("band_sig"))))
-      .filter(col("bucket_n") <= lit(maxBucket))
+      .filter(col("bucket_n") <= lit(MinhashMaxBucket))
       .select(col("index_id"), col("band"), col("band_sig"))
     val pr = banded(probes, "probe_id")
       .withColumn("bucket_n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("band"), col("band_sig"))))
-      .filter(col("bucket_n") <= lit(maxBucket))
+      .filter(col("bucket_n") <= lit(MinhashMaxBucket))
       .select(col("probe_id"), col("band"), col("band_sig"))
     val cand = pr.join(ix, Seq("band", "band_sig"))
       .select(col("probe_id"), col("index_id")).distinct()

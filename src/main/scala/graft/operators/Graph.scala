@@ -10,6 +10,19 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** Fixed-point scale of the PageRank family's ranks (1e9). */
+  private val RankScale = 1000000000L
+
+  /** Fixed-point scale of the HITS scores (1e6). */
+  private val HitsScale = 1000000L
+
+  /** Rounds between lineage cuts in the fixed-round loops that take no
+    * mid-loop action (the GraphX/Pregel convention). */
+  private val CheckpointInterval = 5
+
+  /** Eager lineage cut shared by every loop here. */
+  private def cut(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
   /** Fixed-iteration PageRank in EXACT fixed-point integer arithmetic.
     *
     * Ranks are maintained as `BIGINT` fixed-point (scale = 1e9):
@@ -34,24 +47,14 @@ object Graph {
     * ACTION (the convergence count) and therefore must truncate every
     * round — this loop runs a fixed number of rounds with no
     * mid-loop action, so ranks are truncated only every
-    * `checkpointInterval` rounds (the GraphX/Pregel convention): short
-    * chains evaluate as ONE fused DAG (measured 5.5 → ~2 s for 3
-    * rounds at sf0.1), long chains stay bounded in plan depth.
-    * Truncation is `localCheckpoint`, or reliable `checkpoint(dir)`
-    * under `checkpointDir` on a cluster — same contract as
-    * [[Dedup.connectedComponents]]. Only N (a count) reaches the
-    * driver. Returns (id, rank_fx) for every node.
+    * [[CheckpointInterval]] rounds (the GraphX/Pregel convention):
+    * short chains evaluate as ONE fused DAG (measured 5.5 → ~2 s for 3
+    * rounds at sf0.1), long chains stay bounded in plan depth. Only N
+    * (a count) is collected. Returns (id, rank_fx) for every node.
     */
   def pageRankFixed(edges: DataFrame, srcCol: String, dstCol: String,
-                    iters: Int = 3, scale: Long = 1000000000L,
-                    checkpointDir: Option[String] = None,
-                    checkpointInterval: Int = 5): DataFrame = {
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
+                    iters: Int = 3): DataFrame = {
+    val scale = RankScale
     val e = cut(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct())
@@ -72,9 +75,52 @@ object Graph {
         .join(contrib, Seq("id"), "left_outer")
         .select(col("id"),
           (lit(base) + expr(s"(85 * coalesce(cs, 0L)) div 100")).as("r"))
-      ranks = if (k % checkpointInterval == 0 && k < iters) cut(next) else next
+      ranks = if (k % CheckpointInterval == 0 && k < iters) cut(next) else next
     }
     ranks.select(col("id"), col("r").as("rank_fx"))
+  }
+
+  /** KATZ centrality (Katz 1953) — attenuated walk-count centrality,
+    * the degree-UNnormalized sibling of [[pageRankFixed]]: a node is
+    * central if many short walks end at it, each walk damped by α per
+    * hop. Exact fixed-point replay contract (q123's):
+    *   x_0(v)    = scale                       (β = scale)
+    *   x_k+1(v)  = scale + (Σ_{(u,v)∈E} x_k(u)) div alphaDen
+    * — every step integral on longs, so a fixed round count unrolls
+    * bit-identically in a SQL oracle. α = 1/alphaDen must sit below
+    * 1/λ_max (≤ 1/d_max suffices) for the series to be bounded; the
+    * int64 envelope is x ≤ scale·Σ_{j≤iters}(d_max/alphaDen)^j and the
+    * per-node pre-div sum ≤ d_max·x — at alphaDen=1000 that clears
+    * int64 for d_max up to ~10^5 at 3 rounds; raise alphaDen with the
+    * degree scale (it is the attenuation, not a capacity knob).
+    *
+    * Scale shape identical to [[pageRankFixed]] minus the degree
+    * frame: per round one edges⋈x hash join + one partial-aggregated
+    * groupBy(dst) + a left join to the node frame — (id, long)
+    * exchanges only; no mid-loop action, lineage truncated every
+    * [[CheckpointInterval]] rounds. Returns (id, katz_fx) per node.
+    */
+  def katzFixed(edges: DataFrame, srcCol: String, dstCol: String,
+                iters: Int = 3, alphaDen: Long = 1000L,
+                scale: Long = 1000000L): DataFrame = {
+    val e = cut(edges
+      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .distinct())
+    val nodes = cut(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
+    var x = nodes.select(col("id"), lit(scale).as("r"))
+    for (k <- 1 to iters) {
+      val contrib = e
+        .join(x.select(col("id").as("src"), col("r")), "src")
+        .groupBy(col("dst")).agg(sum(col("r")).as("cs"))
+        .withColumnRenamed("dst", "id")
+      val next = nodes
+        .join(contrib, Seq("id"), "left_outer")
+        .select(col("id"),
+          (lit(scale) + expr(s"coalesce(cs, 0L) div $alphaDen")).as("r"))
+      x = if (k % CheckpointInterval == 0 && k < iters) cut(next) else next
+    }
+    x.select(col("id"), col("r").as("katz_fx"))
   }
 
   /** PERSONALIZED PageRank ([[pageRankFixed]] with the teleport mass
@@ -100,58 +146,12 @@ object Graph {
     * edges⋈ranks join + one partial-aggregated groupBy(dst) + a left
     * join to the node frame, (id, long) shuffle payloads; the frontier
     * filter (r > 0) keeps early rounds seed-sized. Only |S| and N
-    * (counts) reach the driver.
+    * (counts) are collected.
     */
-  /** KATZ centrality (Katz 1953) — attenuated walk-count centrality,
-    * the degree-UNnormalized sibling of [[pageRankFixed]]: a node is
-    * central if many short walks end at it, each walk damped by α per
-    * hop. Exact fixed-point replay contract (q123's):
-    *   x_0(v)    = scale                       (β = scale)
-    *   x_k+1(v)  = scale + (Σ_{(u,v)∈E} x_k(u)) div alphaDen
-    * — every step integral on longs, so a fixed round count unrolls
-    * bit-identically in a SQL oracle. α = 1/alphaDen must sit below
-    * 1/λ_max (≤ 1/d_max suffices) for the series to be bounded; the
-    * int64 envelope is x ≤ scale·Σ_{j≤iters}(d_max/alphaDen)^j and the
-    * per-node pre-div sum ≤ d_max·x — at alphaDen=1000 that clears
-    * int64 for d_max up to ~10^5 at 3 rounds; raise alphaDen with the
-    * degree scale (it is the attenuation, not a capacity knob).
-    *
-    * Scale shape identical to [[pageRankFixed]] minus the degree
-    * frame: per round one edges⋈x hash join + one partial-aggregated
-    * groupBy(dst) + a left join to the node frame — (id, long)
-    * exchanges only; no mid-loop action, lineage truncated every
-    * `checkpointInterval` rounds. Returns (id, katz_fx) per node.
-    */
-  def katzFixed(edges: DataFrame, srcCol: String, dstCol: String,
-                iters: Int = 3, alphaDen: Long = 1000L,
-                scale: Long = 1000000L,
-                checkpointInterval: Int = 5): DataFrame = {
-    val cut: DataFrame => DataFrame = df => df.localCheckpoint(true)
-    val e = cut(edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct())
-    val nodes = cut(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
-    var x = nodes.select(col("id"), lit(scale).as("r"))
-    for (k <- 1 to iters) {
-      val contrib = e
-        .join(x.select(col("id").as("src"), col("r")), "src")
-        .groupBy(col("dst")).agg(sum(col("r")).as("cs"))
-        .withColumnRenamed("dst", "id")
-      val next = nodes
-        .join(contrib, Seq("id"), "left_outer")
-        .select(col("id"),
-          (lit(scale) + expr(s"coalesce(cs, 0L) div $alphaDen")).as("r"))
-      x = if (k % checkpointInterval == 0 && k < iters) cut(next) else next
-    }
-    x.select(col("id"), col("r").as("katz_fx"))
-  }
-
   def personalizedPageRankFixed(edges: DataFrame, seeds: DataFrame,
                                 srcCol: String, dstCol: String,
-                                seedCol: String, iters: Int = 3,
-                                scale: Long = 1000000000L): DataFrame = {
-    val cut: DataFrame => DataFrame = df => df.localCheckpoint(true)
+                                seedCol: String, iters: Int = 3): DataFrame = {
+    val scale = RankScale
     val e = cut(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct())
@@ -273,7 +273,7 @@ object Graph {
     * pinned to 0 — the networkx convention).
     */
   def clusteringCoefficients(edges: DataFrame, srcCol: String,
-      dstCol: String, broadcastEdgeLimit: Long = 4000000L): DataFrame = {
+      dstCol: String): DataFrame = {
     val und = edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
@@ -282,7 +282,7 @@ object Graph {
     val deg = und.select(col("a").as("id"))
       .union(und.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("dg"))
-    deg.join(triangleCounts(edges, srcCol, dstCol, broadcastEdgeLimit),
+    deg.join(triangleCounts(edges, srcCol, dstCol),
         Seq("id"), "left_outer")
       .select(col("id"), col("dg"),
         coalesce(col("n_tri"), lit(0L)).as("n_tri"))
@@ -342,23 +342,15 @@ object Graph {
     * where W_u = Σ outgoing weights of u. Still EXACT int64 integral
     * arithmetic end-to-end (bit-identical across engines and
     * partitionings), so an oracle unrolls the identical rounds.
-    * Caller bound: max(r)·max(w) must fit int64 — r ≤ ~scale (1e9
-    * default), so weights up to ~10^9 are safe; pre-scale weights
+    * Caller bound: max(r)·max(w) must fit int64 — r ≤ ~scale (1e9),
+    * so weights up to ~10^9 are safe; pre-scale weights
     * down if larger (only RATIOS within one source matter).
     * Duplicate (src, dst) edges are weight-summed first. Same
     * per-round shapes and truncation contract as [[pageRankFixed]].
     */
   def pageRankWeightedFixed(edges: DataFrame, srcCol: String, dstCol: String,
-                            weightCol: String, iters: Int = 3,
-                            scale: Long = 1000000000L,
-                            checkpointDir: Option[String] = None,
-                            checkpointInterval: Int = 5): DataFrame = {
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
+                            weightCol: String, iters: Int = 3): DataFrame = {
+    val scale = RankScale
     val e = cut(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
@@ -381,7 +373,7 @@ object Graph {
         .join(contrib, Seq("id"), "left_outer")
         .select(col("id"),
           (lit(base) + expr(s"(85 * coalesce(cs, 0L)) div 100")).as("r"))
-      ranks = if (k % checkpointInterval == 0 && k < iters) cut(next) else next
+      ranks = if (k % CheckpointInterval == 0 && k < iters) cut(next) else next
     }
     ranks.select(col("id"), col("r").as("rank_fx"))
   }
@@ -399,7 +391,7 @@ object Graph {
     *
     * Overflow bound: Σ_in h ≤ in_deg·scale, so the normalize multiply
     * needs in_deg·scale² < 2^63 — at scale 1e6 that is max degree
-    * < 9.2e6 (re-check before raising scale; pre-divide h by a common
+    * < 9.2e6 (re-check before raising it; pre-divide h by a common
     * g if it ever tightens — the q184 discipline).
     *
     * Scale shape per round: two edges⋈scores hash joins + two
@@ -407,15 +399,9 @@ object Graph {
     * long pairs only; lineage truncated between rounds.
     */
   def hitsFixed(edges: DataFrame, srcCol: String, dstCol: String,
-                rounds: Int = 2, scale: Long = 1000000L,
-                checkpointDir: Option[String] = None): DataFrame = {
+                rounds: Int = 2): DataFrame = {
     require(rounds >= 1)
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
+    val scale = HitsScale
     val e = cut(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct())
@@ -462,15 +448,8 @@ object Graph {
     */
   def ssspFixed(edges: DataFrame, srcCol: String, dstCol: String,
                 weightCol: String, sources: DataFrame, idCol: String,
-                rounds: Int = 3,
-                checkpointDir: Option[String] = None): DataFrame = {
+                rounds: Int = 3): DataFrame = {
     require(rounds >= 1)
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
     val e = cut(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
@@ -510,14 +489,7 @@ object Graph {
     * within `maxHops` of a seed (seeds at dist 0).
     */
   def bfsLevels(edges: DataFrame, sources: DataFrame, srcCol: String,
-                dstCol: String, idCol: String, maxHops: Int = 8,
-                checkpointDir: Option[String] = None): DataFrame = {
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
+                dstCol: String, idCol: String, maxHops: Int = 8): DataFrame = {
     val e = cut(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct())
@@ -556,9 +528,8 @@ object Graph {
     * memory/DAG knob: at 100 TB you pick k ≈ 16-64 pivots (the
     * estimator's error is O(1/√k), independent of graph size) and the
     * whole sweep costs k× one BFS's shuffle bytes but the SAME number
-    * of rounds. Lineage truncated per round (localCheckpoint / the
-    * caller's reliable checkpoint dir) — the unbounded-iterative-DAG
-    * rule every fixpoint operator here follows.
+    * of rounds. Lineage truncated per round (localCheckpoint) — the
+    * unbounded-iterative-DAG rule every fixpoint operator here follows.
     *
     * Directed by construction (union reversed edges for undirected).
     * Hop-capped like [[bfsLevels]], so a bounded recursive-CTE oracle
@@ -566,14 +537,7 @@ object Graph {
     * pivot itself, one row per (pivot, node) within `maxHops`.
     */
   def multiSourceBfs(edges: DataFrame, pivots: DataFrame, srcCol: String,
-                     dstCol: String, idCol: String, maxHops: Int = 4,
-                     checkpointDir: Option[String] = None): DataFrame = {
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
+                     dstCol: String, idCol: String, maxHops: Int = 4): DataFrame = {
     val e = cut(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct())
@@ -625,15 +589,8 @@ object Graph {
     * because every vertex has in-edges).
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       rounds: Int = 2,
-                       checkpointDir: Option[String] = None): DataFrame = {
+                       rounds: Int = 2): DataFrame = {
     require(rounds >= 1)
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
     val e = cut(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct())
@@ -697,15 +654,8 @@ object Graph {
     * that justified keeping them — ≥ k by construction).
     */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
-                k: Int, rounds: Int = 4,
-                checkpointDir: Option[String] = None): DataFrame = {
+                k: Int, rounds: Int = 4): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
     val und = cut(edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))

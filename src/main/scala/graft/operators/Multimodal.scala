@@ -297,23 +297,22 @@ object Multimodal {
     * of an ingest pipeline: image payloads that really decode are
     * pixel-resized and PNG re-encoded ([[MediaCodec.resizeImage]],
     * `imgMaxDim` bounds the longer edge); undecodable image stand-ins
-    * fall back to the deterministic byte-truncation stub (which is
-    * what the q88 oracle reproduces from STRLEN); videos are
-    * frame-sampled (every `vidEvery`-th `vidChunk`-byte "frame" — no
-    * video codec in this container), audio passes through. Same
+    * fall back to the deterministic byte-truncation stub (first 256
+    * bytes — what the q88 oracle reproduces from STRLEN); videos are
+    * frame-sampled (every 2nd 64-byte "frame" — no video codec in
+    * this container), audio passes through. Same
     * partition-wise batch shape as [[extractFeatures]]: map-only over
     * the scan, blobs never shuffle.
     */
-  def transcode(media: Dataset[MediaRow], imgMaxBytes: Int = 256,
-                vidChunk: Int = 64, vidEvery: Int = 2,
+  def transcode(media: Dataset[MediaRow],
                 imgMaxDim: Int = 64): Dataset[TranscodedMedia] = {
     import media.sparkSession.implicits._
     media.mapPartitions { rows =>
       rows.map { r =>
         val out = r.media_type match {
           case "image" => MediaCodec.resizeImage(r.payload, imgMaxDim)
-            .getOrElse(MediaCodec.resizeStub(r.payload, imgMaxBytes))
-          case "video" => MediaCodec.frameSampleStub(r.payload, vidChunk, vidEvery)
+            .getOrElse(MediaCodec.resizeStub(r.payload, 256))
+          case "video" => MediaCodec.frameSampleStub(r.payload, 64, 2)
             .flatten
           case _ => r.payload
         }
@@ -489,11 +488,11 @@ object Multimodal {
     * the same shape with (freq, time) peaks instead of time-only):
     *
     *   1. peaks: energy-grid local maxima ([[audioWindows]] `ss`
-    *      strictly above BOTH neighbours, at/above `minEnergy` —
+    *      strictly above BOTH neighbours, at/above 40000 —
     *      boundary windows can't anchor, so the peak set is invariant
     *      to trailing-silence padding),
     *   2. bands: peak strength quantized by integer shift
-    *      (`least(ss >> bandShift, 255)` — exact in any engine,
+    *      (`least(ss >> 12, 255)` — exact in any engine,
     *      robust to small amplitude jitter),
     *   3. landmarks: each peak pairs with its next `fanout` peaks
     *      within `maxDt` windows; the (band₁, band₂, Δt) triple packs
@@ -510,17 +509,16 @@ object Multimodal {
     * nothing expensive re-evaluates per element (PERF lesson 12).
     */
   def audioLandmarks(media: Dataset[MediaRow], win: Int = 32,
-                     fanout: Int = 3, maxDt: Long = 16L,
-                     minEnergy: Long = 40000L, bandShift: Int = 12): DataFrame = {
+                     fanout: Int = 3, maxDt: Long = 16L): DataFrame = {
     val byMedia = Window.partitionBy(col("media_id")).orderBy(asc("win_idx"))
     val peaks = audioWindows(media, win).toDF()
       .withColumn("pv", lag(col("ss"), 1).over(byMedia))
       .withColumn("nx", lead(col("ss"), 1).over(byMedia))
-      .filter(col("ss") >= lit(minEnergy) &&
+      .filter(col("ss") >= lit(40000L) &&
         col("pv").isNotNull && col("nx").isNotNull &&
         col("ss") > col("pv") && col("ss") > col("nx"))
       .select(col("media_id"), col("win_idx").as("t"),
-        least(shiftright(col("ss"), bandShift), lit(255L)).as("band"))
+        least(shiftright(col("ss"), 12), lit(255L)).as("band"))
     val byPeak = Window.partitionBy(col("media_id")).orderBy(asc("t"))
     val withLeads = peaks.select(col("media_id"), col("t"), col("band"),
       array((1 to fanout).map(k =>

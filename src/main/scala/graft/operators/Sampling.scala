@@ -67,10 +67,9 @@ object Sampling {
     * non-row_number preference with RANGE semantics).
     */
   def capPerGroup(df: DataFrame, idCol: String, groupCol: String, n: Int,
-                  orderCols: Seq[Column], salts: Int = 16,
-                  seed: Long = 99L): DataFrame = {
+                  orderCols: Seq[Column], salts: Int = 16): DataFrame = {
     val salted = df.withColumn("__salt",
-      pmod(C.portableHash(col(idCol), seed), lit(salts.toLong)))
+      pmod(C.portableHash(col(idCol), 99L), lit(salts.toLong)))
     val w1 = Window.partitionBy(col(groupCol), col("__salt")).orderBy(orderCols: _*)
     val survivors = salted
       .withColumn("__r1", row_number().over(w1))

@@ -46,23 +46,18 @@ object Similarity {
     * are never shuffled — the plan is scan → broadcast-nested-loop →
     * window top-k on the query key.
     *
-    * `excludeSelf` contract: when true (default), a candidate whose id
-    * EQUALS the query's id is excluded — the right semantics when
-    * queries are drawn from the candidate table (q34/q35/q52), and a
-    * no-op when the id spaces are disjoint. Callers whose query ids
-    * coincidentally collide with UNRELATED candidate ids must pass
-    * false, or an innocent candidate silently vanishes from that
-    * query's ranking (and with disjoint id spaces + excludeSelf a
-    * query can never see its own duplicate as neighbor 1 — that row
-    * was never excluded; the flag only ever removes id-equal pairs).
+    * A candidate whose id EQUALS the query's id is excluded — the
+    * right semantics when queries are drawn from the candidate table
+    * (q34/q35/q52), and a no-op when the id spaces are disjoint. Query
+    * ids must not collide with UNRELATED candidate ids, or an innocent
+    * candidate silently vanishes from that query's ranking.
     */
   def bruteForceTopK(queries: DataFrame, candidates: DataFrame,
                      idQ: String, idC: String, vecQ: String, vecC: String,
-                     k: Int, excludeSelf: Boolean = true): DataFrame = {
+                     k: Int): DataFrame = {
     val q = queries.select(col(idQ).as("query_id"), normalized(col(vecQ)).as("qv"))
     val c = candidates.select(col(idC).as("cand_id"), normalized(col(vecC)).as("cv"))
-    val joined = c.join(broadcast(q),
-      if (excludeSelf) col("query_id") =!= col("cand_id") else lit(true))
+    val joined = c.join(broadcast(q), col("query_id") =!= col("cand_id"))
     val scored = joined
       .select(col("query_id"), col("cand_id"), dotD(col("qv"), col("cv")).as("cosine"))
     val w = Window.partitionBy(col("query_id"))
@@ -186,17 +181,17 @@ object Similarity {
     * is two `bit_count(xor)` ops on longs — branch-free codegen, no
     * vector ever reaches the join. Quality vs float top-k is pinned by
     * OperatorsSpec (sign bits of *normalized-free* raw floats: sign is
-    * scale-invariant, so no normalize pass is needed at all).
+    * scale-invariant, so no normalize pass is needed at all). Excludes
+    * id-equal pairs, as [[bruteForceTopK]] does.
     */
   def hammingTopK(queries: DataFrame, candidates: DataFrame,
                   idQ: String, idC: String, vecQ: String, vecC: String,
-                  k: Int, excludeSelf: Boolean = true): DataFrame = {
+                  k: Int): DataFrame = {
     val q = signBitCodes(queries, idQ, vecQ)
       .select(col("id").as("query_id"), col("lo").as("qlo"), col("hi").as("qhi"))
     val c = signBitCodes(candidates, idC, vecC)
       .select(col("id").as("cand_id"), col("lo").as("clo"), col("hi").as("chi"))
-    val joined = c.join(broadcast(q),
-      if (excludeSelf) col("query_id") =!= col("cand_id") else lit(true))
+    val joined = c.join(broadcast(q), col("query_id") =!= col("cand_id"))
     val scored = joined.select(col("query_id"), col("cand_id"),
       (bit_count(col("qlo").bitwiseXOR(col("clo"))) +
         bit_count(col("qhi").bitwiseXOR(col("chi")))).cast("long").as("hamming"))
@@ -423,6 +418,11 @@ object Similarity {
     df.select(col(idCol).as("id"), normalized(col(vecCol)).as("v"))
       .withColumn("cell", graft.functions.VectorFunctions.vec_mat_argmax(col("v"), cents))
 
+  /** Cell cap of [[semanticDedup]]'s within-cell self-join and of
+    * [[semanticIncrementalPairs]]' index side: a fuller cell is dropped
+    * from pairing. */
+  private val SemanticMaxCell = 10000
+
   /** Semantic deduplication (the SemDeDup recipe): cluster the
     * embedding space with the k-means coarse quantizer, compare pairs
     * ONLY within a cell (semantic near-dups share a cell by
@@ -432,9 +432,10 @@ object Similarity {
     *
     * Scale shape: training touches only the numCells×dim model
     * ([[trainCentroids]]); assignment is map-only; the within-cell
-    * self-join is an equi-join on the cell id, guarded by `maxCell`
-    * (an over-full cell means the quantizer is too coarse — raise
-    * numCells — rather than letting one reducer take O(m²) pairs);
+    * self-join is an equi-join on the cell id, guarded by
+    * [[SemanticMaxCell]] (an over-full cell means the quantizer is too
+    * coarse — raise numCells — rather than letting one reducer take
+    * O(m²) pairs);
     * group connection is [[Dedup.connectedComponents]]' per-round
     * (id, label) shuffles. Returns (id, cluster, keep).
     *
@@ -448,7 +449,7 @@ object Similarity {
     */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     threshold: Double, numCells: Int = 0, iters: Int = 4,
-                    dim: Int = 64, maxCell: Int = 10000): DataFrame = {
+                    dim: Int = 64): DataFrame = {
     val cells =
       if (numCells > 0) numCells
       else math.max(16L, df.count() / 2000L).toInt
@@ -456,7 +457,7 @@ object Similarity {
     val assigned = assignCells(df, idCol, vecCol, cents)
       .withColumn("cell_n", count(lit(1)).over(
         Window.partitionBy(col("cell"))))
-      .filter(col("cell_n") <= lit(maxCell))
+      .filter(col("cell_n") <= lit(SemanticMaxCell))
       .persist() // narrow-ish (id, unit vec, cell); read by both join sides
     val l = assigned.select(col("id").as("id_a"), col("v").as("v_a"), col("cell"))
     val r = assigned.select(col("id").as("id_b"), col("v").as("v_b"), col("cell"))
@@ -787,12 +788,12 @@ object Similarity {
                                idI: String, idP: String,
                                vecI: String, vecP: String,
                                threshold: Double, numCells: Int = 64,
-                               dim: Int = 64, maxCell: Int = 10000): DataFrame = {
+                               dim: Int = 64): DataFrame = {
     val cents = hyperplanes(numCells, dim)
     val ix = assignCells(index, idI, vecI, cents)
       .withColumn("cell_n", count(lit(1)).over(
         Window.partitionBy(col("cell"))))
-      .filter(col("cell_n") <= lit(maxCell))
+      .filter(col("cell_n") <= lit(SemanticMaxCell))
       .select(col("id").as("index_id"), col("v").as("iv"), col("cell"))
     val pr = assignCells(probes, idP, vecP, cents)
       .select(col("id").as("probe_id"), col("v").as("pv"), col("cell"))
@@ -852,10 +853,9 @@ object Similarity {
     */
   def knnGraphDescent(data: DataFrame, idCol: String, vecCol: String,
                       k: Int, numCells: Int = 0, dim: Int = 64,
-                      grids: Int = 2, rounds: Int = 2,
-                      initWidth: Int = 8): DataFrame =
+                      grids: Int = 2, rounds: Int = 2): DataFrame =
     knnGraphDescentCurve(data, idCol, vecCol, k, numCells, dim,
-      grids, rounds, initWidth).last
+      grids, rounds).last
 
   /** [[knnGraphDescent]] with every intermediate published: element r
     * of the returned Seq is the graph after r descent rounds (r = 0 is
@@ -1053,7 +1053,7 @@ object Similarity {
     * broadcast (small by construction, the q34/q52 convention);
     * candidates stream map-side — the candidate table is NEVER
     * shuffled, and per-query top-k is a window over the tiny query-id
-    * key space. Codebooks default to training on the candidate corpus.
+    * key space. Codebooks are trained on the candidate corpus.
     *
     * RERANK (`rerank` > k): the production IVFADC+R shape — ADC is the
     * cheap FILTER over the compressed scan, the per-query ADC
@@ -1068,12 +1068,10 @@ object Similarity {
   def pqTopK(queries: DataFrame, candidates: DataFrame,
              idQ: String, idC: String, vecQ: String, vecC: String,
              k: Int, m: Int = 8, ksub: Int = 16, dim: Int = 64,
-             iters: Int = 2, rerank: Int = 0,
-             codebooks: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
+             iters: Int = 2, rerank: Int = 0): DataFrame = {
     val subDim = dim / m
     require(m * subDim == dim, s"dim $dim must split into $m equal subspaces")
-    val books = codebooks.getOrElse(
-      pqTrainCodebooks(candidates, vecC, m, ksub, dim, iters))
+    val books = pqTrainCodebooks(candidates, vecC, m, ksub, dim, iters)
     val augBooks = books.map(_.map(c => c :+ (-0.5 * c.map(x => x * x).sum)))
     val cv = candidates.select(col(idC).as("cand_id"), normalized(col(vecC)).as("cv"))
     val coded = (0 until m).foldLeft(cv) {
@@ -1142,13 +1140,10 @@ object Similarity {
                 k: Int, numCells: Int = 16, nProbe: Int = 4,
                 m: Int = 8, ksub: Int = 16, dim: Int = 64,
                 iters: Int = 2, rerank: Int = 0,
-                residual: Boolean = false,
-                centroids: Option[Array[Array[Double]]] = None,
-                codebooks: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
+                residual: Boolean = false): DataFrame = {
     val subDim = dim / m
     require(m * subDim == dim, s"dim $dim must split into $m equal subspaces")
-    val cents = centroids.getOrElse(
-      trainCentroids(candidates, vecC, numCells, iters, dim))
+    val cents = trainCentroids(candidates, vecC, numCells, iters, dim)
     import graft.functions.VectorFunctions.{vec_mat_argmax, vec_mat_dots}
     val cv = candidates.select(col(idC).as("cand_id"), normalized(col(vecC)).as("cv"))
     val centsLit = array(cents.map(c => array(c.map(lit(_)): _*)): _*)
@@ -1160,7 +1155,7 @@ object Similarity {
           graft.functions.VectorFunctions.vec_sub(
             col("cv"), element_at(centsLit, col("cell") + 1)))
       else withCell.withColumn("ev", col("cv"))
-    val books = codebooks.getOrElse {
+    val books =
       if (residual) {
         // MATERIALIZE the residual frame before the 8 concurrent
         // subspace trainings. The encode is now the native codegen'd
@@ -1175,7 +1170,6 @@ object Similarity {
         pqTrainCodebooks(resid, "ev", m, ksub, dim, iters,
           preNormalized = true)
       } else pqTrainCodebooks(candidates, vecC, m, ksub, dim, iters)
-    }
     val augBooks = books.map(_.map(c => c :+ (-0.5 * c.map(x => x * x).sum)))
     val coded = (0 until m).foldLeft(encBase) {
         (df, j) => df.withColumn(s"code_$j",
@@ -1300,9 +1294,9 @@ object Similarity {
   }
 
   def pcaTopComponent(data: DataFrame, vecCol: String, dim: Int,
-                      iters: Int = 1000,
-                      scale: Double = 1e9): (Array[Double], Double) = {
+                      iters: Int = 1000): (Array[Double], Double) = {
     import graft.functions.VectorFunctions.{vec_fixed_sum, vec_outer_fixed_sum}
+    val scale = 1e9 // fixed-point scale of the moment sums
     val row = data.select(col(vecCol).as("v"))
       .agg(count(lit(1)).as("n"),
         vec_fixed_sum(col("v"), dim, scale).as("s1"),

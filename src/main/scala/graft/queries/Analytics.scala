@@ -1097,67 +1097,39 @@ object Analytics {
       |    AS gini_fx
       |FROM ranked GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q318_user_gini" -> (q318UserGini _),
-    "q312_markov_heldout" -> (q312MarkovHeldout _),
-    "q313_assoc_rules" -> (q313AssocRules _),
-    "q300_binary_seg" -> (q300BinarySeg _),
-    "q188_seasonal_anomaly" -> (q188SeasonalAnomaly _),
-    "q178_cusum_changepoint" -> (q178CusumChangepoint _),
-    "q162_volume_corr" -> (q162VolumeCorr _),
-    "q161_cooccurrence_pmi" -> (q161CooccurrencePmi _),
-    "q148_events_span" -> (q148EventsSpan _),
-    "q147_markov_transitions" -> (q147MarkovTransitions _),
-    "q101_grouping_sets" -> (q101GroupingSets _),
-    "q100_rolling_window" -> (q100RollingWindow _),
-    "q98_window_topk" -> (q98WindowTopK _),
-    "q99_null_safe_join" -> (q99NullSafeJoin _),
-    "q91_full_outer" -> (q91FullOuter _),
-    "q92_resample" -> (q92Resample _),
-    "q93_cohort_retention" -> (q93CohortRetention _),
-    "q89_event_funnel" -> (q89EventFunnel _),
-    "q84_zorder_curve" -> (q84ZorderCurve _),
-    "q72_window_nav" -> (q72WindowNav _),
-    "q73_cube" -> (q73Cube _),
-    "q16_window_rank" -> (q16WindowRank _),
-    "q17_running_agg" -> (q17RunningAgg _),
-    "q18_time_window" -> (q18TimeWindow _),
-    "q19_sessionize" -> (q19Sessionize _),
-    "q20_pivot" -> (q20Pivot _),
-    "q21_rollup" -> (q21Rollup _),
-    "q22_semi_anti_join" -> (q22SemiAnti _),
-    "q23_outer_join_agg" -> (q23OuterJoin _),
-    "q24_json_extract" -> (q24Json _))
+  /** Every query of this module: name → (build function, oracle SQL). */
+  val registry: Map[String, Query] = Query.registry(
+    "q318_user_gini" -> Query(q318UserGini, q318Sql),
+    "q312_markov_heldout" -> Query(q312MarkovHeldout, q312Sql),
+    "q313_assoc_rules" -> Query(q313AssocRules, q313Sql),
+    "q300_binary_seg" -> Query(q300BinarySeg, q300Sql),
+    "q188_seasonal_anomaly" -> Query(q188SeasonalAnomaly, q188Sql),
+    "q178_cusum_changepoint" -> Query(q178CusumChangepoint, q178Sql),
+    "q162_volume_corr" -> Query(q162VolumeCorr, q162Sql),
+    "q161_cooccurrence_pmi" -> Query(q161CooccurrencePmi, q161Sql),
+    "q148_events_span" -> Query(q148EventsSpan, q148Sql),
+    "q147_markov_transitions" -> Query(q147MarkovTransitions, q147Sql),
+    "q101_grouping_sets" -> Query(q101GroupingSets, q101Sql),
+    "q100_rolling_window" -> Query(q100RollingWindow, q100Sql),
+    "q98_window_topk" -> Query(q98WindowTopK, q98Sql),
+    "q99_null_safe_join" -> Query(q99NullSafeJoin, q99Sql),
+    "q91_full_outer" -> Query(q91FullOuter, q91Sql),
+    "q92_resample" -> Query(q92Resample, q92Sql),
+    "q93_cohort_retention" -> Query(q93CohortRetention, q93Sql),
+    "q89_event_funnel" -> Query(q89EventFunnel, q89Sql),
+    "q84_zorder_curve" -> Query(q84ZorderCurve, q84Sql),
+    "q72_window_nav" -> Query(q72WindowNav, q72Sql),
+    "q73_cube" -> Query(q73Cube, q73Sql),
+    "q16_window_rank" -> Query(q16WindowRank, q16Sql),
+    "q17_running_agg" -> Query(q17RunningAgg, q17Sql),
+    "q18_time_window" -> Query(q18TimeWindow, q18Sql),
+    "q19_sessionize" -> Query(q19Sessionize, q19Sql),
+    "q20_pivot" -> Query(q20Pivot, q20Sql),
+    "q21_rollup" -> Query(q21Rollup, q21Sql),
+    "q22_semi_anti_join" -> Query(q22SemiAnti, q22Sql),
+    "q23_outer_join_agg" -> Query(q23OuterJoin, q23Sql),
+    "q24_json_extract" -> Query(q24Json, q24Sql))
 
-  val oracle: Map[String, String] = Map(
-    "q318_user_gini" -> q318Sql,
-    "q312_markov_heldout" -> q312Sql,
-    "q313_assoc_rules" -> q313Sql,
-    "q300_binary_seg" -> q300Sql,
-    "q188_seasonal_anomaly" -> q188Sql,
-    "q178_cusum_changepoint" -> q178Sql,
-    "q162_volume_corr" -> q162Sql,
-    "q161_cooccurrence_pmi" -> q161Sql,
-    "q148_events_span" -> q148Sql,
-    "q147_markov_transitions" -> q147Sql,
-    "q101_grouping_sets" -> q101Sql,
-    "q100_rolling_window" -> q100Sql,
-    "q98_window_topk" -> q98Sql,
-    "q99_null_safe_join" -> q99Sql,
-    "q91_full_outer" -> q91Sql,
-    "q92_resample" -> q92Sql,
-    "q93_cohort_retention" -> q93Sql,
-    "q89_event_funnel" -> q89Sql,
-    "q84_zorder_curve" -> q84Sql,
-    "q72_window_nav" -> q72Sql,
-    "q73_cube" -> q73Sql,
-    "q16_window_rank" -> q16Sql,
-    "q17_running_agg" -> q17Sql,
-    "q18_time_window" -> q18Sql,
-    "q19_sessionize" -> q19Sql,
-    "q20_pivot" -> q20Sql,
-    "q21_rollup" -> q21Sql,
-    "q22_semi_anti_join" -> q22Sql,
-    "q23_outer_join_agg" -> q23Sql,
-    "q24_json_extract" -> q24Sql)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.builds(registry)
 }

@@ -3274,133 +3274,73 @@ object Curation {
       |    THEN (63 * 1000000000000) // CAST(SUM(t) AS BIGINT) END AS alpha_fx
       |FROM terms GROUP BY f_k""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q315_lm_interp_heldout" -> (q315LmInterpHeldout _),
-    "q317_hill_alpha" -> (q317HillAlpha _),
-    "q301_source_jsd" -> (q301SourceJsd _),
-    "q289_t_closeness" -> (q289TCloseness _),
-    "q291_gini_stump" -> (q291GiniStump _),
-    "q292_burstiness" -> (q292Burstiness _),
-    "q277_l_diversity" -> (q277LDiversity _),
-    "q270_k_anonymity" -> (q270KAnonymity _),
-    "q271_water_fill" -> (q271WaterFill _),
-    "q274_wordpiece" -> (q274Wordpiece _),
-    "q281_wordpiece_heldout" -> (q281WordpieceHeldout _),
-    "q282_wordpiece_fertility" -> (q282WordpieceFertility _),
-    "q260_split_balance" -> (q260SplitBalance _),
-    "q259_quantile_normalize" -> (q259QuantileNormalize _),
-    "q251_vocab_coverage" -> (q251VocabCoverage _),
-    "q250_mlm_mask" -> (q250MlmMask _),
-    "q249_eval_contamination" -> (q249EvalContamination _),
-    "q245_source_kl" -> (q245SourceKl _),
-    "q246_token_gini" -> (q246TokenGini _),
-    "q247_length_batches" -> (q247LengthBatches _),
-    "q227_winnow" -> (q227Winnow _),
-    "q228_winnow_pairs" -> (q228WinnowPairs _),
-    "q233_pair_alignment" -> (q233PairAlignment _),
-    "q219_dsir_weights" -> (q219DsirWeights _),
-    "q224_bpe_heldout" -> (q224BpeHeldout _),
-    "q235_bpe_fertility" -> (q235BpeFertility _),
-    "q238_code_switch" -> (q238CodeSwitch _),
-    "q215_extent_strip" -> (q215ExtentStrip _),
-    "q216_bpe_vocab" -> (q216BpeVocab _),
-    "q213_bpe_merges" -> (q213BpeMerges _),
-    "q262_unigram_rounds" -> (q262UnigramRounds _),
-    "q263_unigram_heldout" -> (q263UnigramHeldout _),
-    "q265_unigram_fertility" -> (q265UnigramFertility _),
-    "q267_tokenizer_agreement" -> (q267TokenizerAgreement _),
-    "q212_repeated_extents" -> (q212RepeatedExtents _),
-    "q209_report_card" -> (q209ReportCard _),
-    "q207_skipgram_pairs" -> (q207SkipgramPairs _),
-    "q204_naive_bayes" -> (q204NaiveBayes _),
-    "q192_zipf_fit" -> (q192ZipfFit _),
-    "q193_heaps_law" -> (q193HeapsLaw _),
-    "q196_ngram_novelty" -> (q196NgramNovelty _),
-    "q189_collocations" -> (q189Collocations _),
-    "q186_interleave_schedule" -> (q186InterleaveSchedule _),
-    "q176_oov_coverage" -> (q176OovCoverage _),
-    "q158_token_entropy" -> (q158TokenEntropy _),
-    "q241_domain_quality_filter" -> (q241DomainQualityFilter _),
-    "q154_token_budget" -> (q154TokenBudget _),
-    "q145_constraint_audit" -> (q145ConstraintAudit _),
-    "q108_truncate_tokens" -> (q108TruncateTokens _),
-    "q85_boilerplate" -> (q85Boilerplate _),
-    "q86_chunk_dedup" -> (q86ChunkDedup _),
-    "q83_bloom_decontaminate" -> (q83BloomDecontaminate _),
-    "q187_bloom_union_decontaminate" -> (q187BloomUnionDecontaminate _),
-    "q57_decontaminate" -> (q57Decontaminate _),
-    "q58_repetition" -> (q58Repetition _),
-    "q59_hash_split" -> (q59HashSplit _),
-    "q60_pack_sequences" -> (q60PackSequences _),
-    "q61_pii_redact" -> (q61PiiRedact _),
-    "q62_curation_funnel" -> (q62CurationFunnel _),
-    "q63_order_shuffle" -> (q63OrderShuffle _),
-    "q111_quality_quantile" -> (q111QualityQuantile _),
-    "q118_chunk_sliding" -> (q118ChunkSliding _),
-    "q120_fuzzy_decontaminate" -> (q120FuzzyDecontaminate _))
+  /** Every query of this module: name → (build function, oracle SQL). */
+  val registry: Map[String, Query] = Query.registry(
+    "q315_lm_interp_heldout" -> Query(q315LmInterpHeldout, q315Sql),
+    "q317_hill_alpha" -> Query(q317HillAlpha, q317Sql),
+    "q301_source_jsd" -> Query(q301SourceJsd, q301Sql),
+    "q289_t_closeness" -> Query(q289TCloseness, q289Sql),
+    "q291_gini_stump" -> Query(q291GiniStump, q291Sql),
+    "q292_burstiness" -> Query(q292Burstiness, q292Sql),
+    "q277_l_diversity" -> Query(q277LDiversity, q277Sql),
+    "q270_k_anonymity" -> Query(q270KAnonymity, q270Sql),
+    "q271_water_fill" -> Query(q271WaterFill, q271Sql),
+    "q274_wordpiece" -> Query(q274Wordpiece, q274Sql),
+    "q281_wordpiece_heldout" -> Query(q281WordpieceHeldout, q281Sql),
+    "q282_wordpiece_fertility" -> Query(q282WordpieceFertility, q282Sql),
+    "q260_split_balance" -> Query(q260SplitBalance, q260Sql),
+    "q259_quantile_normalize" -> Query(q259QuantileNormalize, q259Sql),
+    "q251_vocab_coverage" -> Query(q251VocabCoverage, q251Sql),
+    "q250_mlm_mask" -> Query(q250MlmMask, q250Sql),
+    "q249_eval_contamination" -> Query(q249EvalContamination, q249Sql),
+    "q245_source_kl" -> Query(q245SourceKl, q245Sql),
+    "q246_token_gini" -> Query(q246TokenGini, q246Sql),
+    "q247_length_batches" -> Query(q247LengthBatches, q247Sql),
+    "q227_winnow" -> Query(q227Winnow, q227Sql),
+    "q228_winnow_pairs" -> Query(q228WinnowPairs, q228Sql),
+    "q233_pair_alignment" -> Query(q233PairAlignment, q233Sql),
+    "q219_dsir_weights" -> Query(q219DsirWeights, q219Sql),
+    "q224_bpe_heldout" -> Query(q224BpeHeldout, q224Sql),
+    "q235_bpe_fertility" -> Query(q235BpeFertility, q235Sql),
+    "q238_code_switch" -> Query(q238CodeSwitch, q238Sql),
+    "q215_extent_strip" -> Query(q215ExtentStrip, q215Sql),
+    "q216_bpe_vocab" -> Query(q216BpeVocab, q216Sql),
+    "q213_bpe_merges" -> Query(q213BpeMerges, q213Sql),
+    "q262_unigram_rounds" -> Query(q262UnigramRounds, q262Sql),
+    "q263_unigram_heldout" -> Query(q263UnigramHeldout, q263Sql),
+    "q265_unigram_fertility" -> Query(q265UnigramFertility, q265Sql),
+    "q267_tokenizer_agreement" -> Query(q267TokenizerAgreement, q267Sql),
+    "q212_repeated_extents" -> Query(q212RepeatedExtents, q212Sql),
+    "q209_report_card" -> Query(q209ReportCard, q209Sql),
+    "q207_skipgram_pairs" -> Query(q207SkipgramPairs, q207Sql),
+    "q204_naive_bayes" -> Query(q204NaiveBayes, q204Sql),
+    "q192_zipf_fit" -> Query(q192ZipfFit, q192Sql),
+    "q193_heaps_law" -> Query(q193HeapsLaw, q193Sql),
+    "q196_ngram_novelty" -> Query(q196NgramNovelty, q196Sql),
+    "q189_collocations" -> Query(q189Collocations, q189Sql),
+    "q186_interleave_schedule" -> Query(q186InterleaveSchedule, q186Sql),
+    "q176_oov_coverage" -> Query(q176OovCoverage, q176Sql),
+    "q158_token_entropy" -> Query(q158TokenEntropy, q158Sql),
+    "q241_domain_quality_filter" -> Query(q241DomainQualityFilter, q241Sql),
+    "q154_token_budget" -> Query(q154TokenBudget, q154Sql),
+    "q145_constraint_audit" -> Query(q145ConstraintAudit, q145Sql),
+    "q108_truncate_tokens" -> Query(q108TruncateTokens, q108Sql),
+    "q85_boilerplate" -> Query(q85Boilerplate, q85Sql),
+    "q86_chunk_dedup" -> Query(q86ChunkDedup, q86Sql),
+    "q83_bloom_decontaminate" -> Query(q83BloomDecontaminate, q57Sql), // identical output by design
+    // identical output by design
+    "q187_bloom_union_decontaminate" -> Query(q187BloomUnionDecontaminate, q57Sql),
+    "q57_decontaminate" -> Query(q57Decontaminate, q57Sql),
+    "q58_repetition" -> Query(q58Repetition, q58Sql),
+    "q59_hash_split" -> Query(q59HashSplit, q59Sql),
+    "q60_pack_sequences" -> Query(q60PackSequences, q60Sql),
+    "q61_pii_redact" -> Query(q61PiiRedact, q61Sql),
+    "q62_curation_funnel" -> Query(q62CurationFunnel, q62Sql),
+    "q63_order_shuffle" -> Query(q63OrderShuffle, q63Sql),
+    "q111_quality_quantile" -> Query(q111QualityQuantile, q111Sql),
+    "q118_chunk_sliding" -> Query(q118ChunkSliding, q118Sql),
+    "q120_fuzzy_decontaminate" -> Query(q120FuzzyDecontaminate, q120Sql))
 
-  val oracle: Map[String, String] = Map(
-    "q277_l_diversity" -> q277Sql,
-    "q289_t_closeness" -> q289Sql,
-    "q301_source_jsd" -> q301Sql,
-    "q315_lm_interp_heldout" -> q315Sql,
-    "q317_hill_alpha" -> q317Sql,
-    "q291_gini_stump" -> q291Sql,
-    "q292_burstiness" -> q292Sql,
-    "q270_k_anonymity" -> q270Sql,
-    "q271_water_fill" -> q271Sql,
-    "q274_wordpiece" -> q274Sql,
-    "q281_wordpiece_heldout" -> q281Sql,
-    "q282_wordpiece_fertility" -> q282Sql,
-    "q260_split_balance" -> q260Sql,
-    "q259_quantile_normalize" -> q259Sql,
-    "q251_vocab_coverage" -> q251Sql,
-    "q250_mlm_mask" -> q250Sql,
-    "q249_eval_contamination" -> q249Sql,
-    "q245_source_kl" -> q245Sql,
-    "q246_token_gini" -> q246Sql,
-    "q247_length_batches" -> q247Sql,
-    "q227_winnow" -> q227Sql,
-    "q228_winnow_pairs" -> q228Sql,
-    "q233_pair_alignment" -> q233Sql,
-    "q219_dsir_weights" -> q219Sql,
-    "q224_bpe_heldout" -> q224Sql,
-    "q235_bpe_fertility" -> q235Sql,
-    "q238_code_switch" -> q238Sql,
-    "q215_extent_strip" -> q215Sql,
-    "q216_bpe_vocab" -> q216Sql,
-    "q213_bpe_merges" -> q213Sql,
-    "q262_unigram_rounds" -> q262Sql,
-    "q263_unigram_heldout" -> q263Sql,
-    "q265_unigram_fertility" -> q265Sql,
-    "q267_tokenizer_agreement" -> q267Sql,
-    "q212_repeated_extents" -> q212Sql,
-    "q209_report_card" -> q209Sql,
-    "q207_skipgram_pairs" -> q207Sql,
-    "q204_naive_bayes" -> q204Sql,
-    "q192_zipf_fit" -> q192Sql,
-    "q193_heaps_law" -> q193Sql,
-    "q196_ngram_novelty" -> q196Sql,
-    "q189_collocations" -> q189Sql,
-    "q186_interleave_schedule" -> q186Sql,
-    "q176_oov_coverage" -> q176Sql,
-    "q158_token_entropy" -> q158Sql,
-    "q241_domain_quality_filter" -> q241Sql,
-    "q154_token_budget" -> q154Sql,
-    "q145_constraint_audit" -> q145Sql,
-    "q108_truncate_tokens" -> q108Sql,
-    "q85_boilerplate" -> q85Sql,
-    "q86_chunk_dedup" -> q86Sql,
-    "q83_bloom_decontaminate" -> q57Sql, // identical output by design
-    "q187_bloom_union_decontaminate" -> q57Sql, // identical output by design
-    "q57_decontaminate" -> q57Sql,
-    "q58_repetition" -> q58Sql,
-    "q59_hash_split" -> q59Sql,
-    "q60_pack_sequences" -> q60Sql,
-    "q61_pii_redact" -> q61Sql,
-    "q62_curation_funnel" -> q62Sql,
-    "q63_order_shuffle" -> q63Sql,
-    "q111_quality_quantile" -> q111Sql,
-    "q118_chunk_sliding" -> q118Sql,
-    "q120_fuzzy_decontaminate" -> q120Sql)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.builds(registry)
 }

@@ -6726,270 +6726,147 @@ object Pipeline {
       |  CAST(MAX(ABS(255 * (vf - mn) - q * span)) AS BIGINT) AS max_abs_err
       |FROM err GROUP BY dim ORDER BY dim""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q110_sketch_union" -> (q110SketchUnion _),
-    "q134_sliding_distinct" -> (q134SlidingDistinct _),
-    "q25_text_stats" -> (q25TextStats _),
-    "q26_token_freq" -> (q26TokenFreq _),
-    "q27_quality_score" -> (q27Quality _),
-    "q28_lang_id" -> (q28LangId _),
-    "q29_fingerprint" -> (q29Fingerprint _),
-    "q30_dedup_exact" -> (q30DedupExact _),
-    "q31_minhash_lsh" -> (q31MinhashLsh _),
-    "q32_simhash" -> (q32Simhash _),
-    "q33_ngram_jaccard" -> (q33NgramJaccard _),
-    "q34_cosine_topk" -> (q34CosineTopK _),
-    "q35_ann_lsh" -> (q35AnnLsh _),
-    "q52_ann_ivf" -> (q52AnnIvf _),
-    "q248_ivf_probe_curve" -> (q248IvfProbeCurve _),
-    "q328_ivf_incremental" -> (q328IvfIncremental _),
-    "q36_cosine_neardup" -> (q36CosineNearDup _),
-    "q218_semantic_decontam" -> (q218SemanticDecontam _),
-    "q220_frame_sample" -> (q220FrameSample _),
-    "q287_shot_boundary" -> (q287ShotBoundary _),
-    "q290_hubness" -> (q290Hubness _),
-    "q296_incremental_cc" -> (q296IncrementalCc _),
-    "q310_stream_sample" -> (q310StreamSample _),
-    "q311_label_margin" -> (q311LabelMargin _),
-    "q314_dbscan_core" -> (q314DbscanCore _),
-    "q319_rbo" -> (q319Rbo _),
-    "q297_conformal_ood" -> (q297ConformalOod _),
-    "q321_conformal_ivf" -> (q321ConformalIvf _),
-    "q322_dbscan_cells" -> (q322DbscanCells _),
-    "q323_hubness_graph" -> (q323HubnessGraph _),
-    "q324_blocking_curve" -> (q324BlockingCurve _),
-    "q325_conformal_curve" -> (q325ConformalCurve _),
-    "q326_knn_rounds_curve" -> (q326KnnRoundsCurve _),
-    "q327_knn_width_curve" -> (q327KnnWidthCurve _),
-    "q221_modularity" -> (q221Modularity _),
-    "q272_louvain_move" -> (q272LouvainMove _),
-    "q273_walk_pmi" -> (q273WalkPmi _),
-    "q275_readability" -> (q275Readability _),
-    "q276_sq8_audit" -> (q276Sq8Audit _),
-    "q222_audio_energy" -> (q222AudioEnergy _),
-    "q223_hard_negatives" -> (q223HardNegatives _),
-    "q226_incremental_semdedup" -> (q226IncrementalSemdedup _),
-    "q234_knn_graph" -> (q234KnnGraph _),
-    "q236_audio_utterances" -> (q236AudioUtterances _),
-    "q37_multimodal" -> (q37Multimodal _),
-    "q88_multimodal_transcode" -> (q88MultimodalTranscode _),
-    "q95_incremental_dedup" -> (q95IncrementalDedup _),
-    "q121_snapshot_diff" -> (q121SnapshotDiff _),
-    "q123_pagerank" -> (q123PageRank _),
-    "q283_katz" -> (q283Katz _),
-    "q229_personalized_pagerank" -> (q229PersonalizedPagerank _),
-    "q230_kcenter" -> (q230KCenter _),
-    "q127_triangles" -> (q127Triangles _),
-    "q237_clustering_coeff" -> (q237ClusteringCoeff _),
-    "q239_assortativity" -> (q239Assortativity _),
-    "q170_bfs_levels" -> (q170BfsLevels _),
-    "q278_closeness" -> (q278Closeness _),
-    "q280_mmr_select" -> (q280MmrSelect _),
-    "q171_kcore" -> (q171KCore _),
-    "q177_label_prop" -> (q177LabelProp _),
-    "q172_rrf_hybrid" -> (q172RrfHybrid _),
-    "q175_stream_heavy_hitters" -> (q175StreamHeavyHitters _),
-    "q185_stream_distinct" -> (q185StreamDistinct _),
-    "q231_stream_drift" -> (q231StreamDrift _),
-    "q232_ra_link_prediction" -> (q232RaLinkPrediction _),
-    "q129_bm25" -> (q129Bm25 _),
-    "q132_boolean_search" -> (q132BooleanSearch _),
-    "q102_stream_sliding" -> (q102StreamSliding _),
-    "q126_stream_session" -> (q126StreamSession _),
-    "q103_decontaminate_apply" -> (q103DecontaminateApply _),
-    "q96_fuzzy_key_pairs" -> (q96FuzzyKeyPairs _),
-    "q38_stream_hourly" -> (q38StreamHourly _),
-    "q39_stream_stateful" -> (q39StreamStateful _),
-    "q55_neardup_clusters" -> (q55NeardupClusters _),
-    "q194_canonical_dedup" -> (q194CanonicalDedup _),
-    "q197_link_prediction" -> (q197LinkPrediction _),
-    "q201_hits" -> (q201Hits _),
-    "q205_media_dedup" -> (q205MediaDedup _),
-    "q210_image_phash" -> (q210ImagePhash _),
-    "q211_phash_neardup" -> (q211PhashNearDup _),
-    "q217_phash_incremental" -> (q217PhashIncremental _),
-    "q261_phash_canonical" -> (q261PhashCanonical _),
-    "q329_cross_modal_canonical" -> (q329CrossModalCanonical _),
-    "q208_sssp" -> (q208Sssp _),
-    "q203_stream_asof" -> (q203StreamAsof _),
-    "q253_stream_quota" -> (q253StreamQuota _),
-    "q202_embedding_drift" -> (q202EmbeddingDrift _),
-    "q195_embedding_outliers" -> (q195EmbeddingOutliers _),
-    "q56_stream_dedup" -> (q56StreamDedup _),
-    "q214_stream_neardup" -> (q214StreamNeardup _),
-    "q264_stream_phash_nd" -> (q264StreamPhashNd _),
-    "q266_audio_fingerprint" -> (q266AudioFingerprint _),
-    "q268_matryoshka_recall" -> (q268MatryoshkaRecall _),
-    "q269_randwalk_corpus" -> (q269RandwalkCorpus _),
-    "q64_stream_join" -> (q64StreamJoin _),
-    "q133_stream_left_outer" -> (q133StreamLeftOuter _),
-    "q151_stream_full_outer" -> (q151StreamFullOuter _),
-    "q87_stream_upsert" -> (q87StreamUpsert _),
-    "q65_tfidf" -> (q65Tfidf _),
-    "q66_vocab" -> (q66Vocab _),
-    "q67_centroids" -> (q67Centroids _),
-    "q68_vocab_approx" -> (q68VocabApprox _),
-    "q75_semantic_dedup" -> (q75SemanticDedup _),
-    "q78_stream_enrich" -> (q78StreamEnrich _),
-    "q81_bpe_tokens" -> (q81BpeTokens _),
-    "q82_neardup_clusters_alt" -> (q82NeardupClustersAlt _),
-    "q117_dedup_pipeline" -> (q117DedupPipeline _),
-    "q119_quantized_ann" -> (q119QuantizedAnn _),
-    "q240_signbit_ann" -> (q240SignBitAnn _),
-    "q152_jl_projection" -> (q152JlProjection _),
-    "q159_containment" -> (q159Containment _),
-    "q160_bm25_batch" -> (q160Bm25Batch _),
-    "q163_pq_ann" -> (q163PqAnn _),
-    "q179_ivfpq_ann" -> (q179IvfPqAnn _),
-    "q191_ivfpq_residual" -> (q191IvfPqResidual _),
-    "q180_cluster_split" -> (q180ClusterSplit _),
-    "q183_leakage_audit" -> (q183LeakageAudit _),
-    "q184_weighted_pagerank" -> (q184WeightedPagerank _),
-    "q164_allpairs_exact" -> (q164AllpairsExact _),
-    "q252_source_dup_matrix" -> (q252SourceDupMatrix _),
-    "q254_knn_label_audit" -> (q254KnnLabelAudit _),
-    "q256_spectral_rank" -> (q256SpectralRank _),
-    "q257_minhash_incremental" -> (q257MinhashIncremental _),
-    "q258_dedup_impact" -> (q258DedupImpact _),
-    "q255_lsh_recall_audit" -> (q255LshRecallAudit _),
-    "q165_pca_power" -> (q165PcaPower _),
-    "q167_stream_quantiles" -> (q167StreamQuantiles _))
-
-  val oracle: Map[String, String] = Map(
-    "q25_text_stats" -> q25Sql,
-    "q26_token_freq" -> q26Sql,
-    "q27_quality_score" -> q27Sql,
-    "q28_lang_id" -> q28Sql,
-    "q29_fingerprint" -> q29Sql,
-    "q30_dedup_exact" -> q30Sql,
-    "q31_minhash_lsh" -> q31Sql,
-    "q32_simhash" -> q32Sql,
-    "q36_cosine_neardup" -> q36Sql,
-    "q218_semantic_decontam" -> q218Sql,
-    "q220_frame_sample" -> q220Sql,
-    "q287_shot_boundary" -> q287Sql,
-    "q290_hubness" -> q290Sql,
-    "q296_incremental_cc" -> q55Sql,
-    "q310_stream_sample" -> q310Sql,
-    "q311_label_margin" -> q311Sql,
-    "q314_dbscan_core" -> q314Sql,
-    "q319_rbo" -> q319Sql,
-    "q297_conformal_ood" -> q297Sql,
-    "q321_conformal_ivf" -> q321Sql,
-    "q322_dbscan_cells" -> q322Sql,
-    "q323_hubness_graph" -> q323Sql,
-    "q324_blocking_curve" -> q324Sql,
-    "q325_conformal_curve" -> q325Sql,
-    "q326_knn_rounds_curve" -> q326Sql,
-    "q327_knn_width_curve" -> q327Sql,
-    "q221_modularity" -> q221Sql,
-    "q272_louvain_move" -> q272Sql,
-    "q273_walk_pmi" -> q273Sql,
-    "q275_readability" -> q275Sql,
-    "q276_sq8_audit" -> q276Sql,
-    "q222_audio_energy" -> q222Sql,
-    "q223_hard_negatives" -> q223Sql,
-    "q226_incremental_semdedup" -> q226Sql,
-    "q234_knn_graph" -> q234Sql,
-    "q236_audio_utterances" -> q236Sql,
+  /** Every query of this module: name → (build function, oracle SQL). */
+  val registry: Map[String, Query] = Query.registry(
+    "q110_sketch_union" -> Query(q110SketchUnion, q110Sql),
+    "q134_sliding_distinct" -> Query(q134SlidingDistinct, q134Sql),
+    "q25_text_stats" -> Query(q25TextStats, q25Sql),
+    "q26_token_freq" -> Query(q26TokenFreq, q26Sql),
+    "q27_quality_score" -> Query(q27Quality, q27Sql),
+    "q28_lang_id" -> Query(q28LangId, q28Sql),
+    "q29_fingerprint" -> Query(q29Fingerprint, q29Sql),
+    "q30_dedup_exact" -> Query(q30DedupExact, q30Sql),
+    "q31_minhash_lsh" -> Query(q31MinhashLsh, q31Sql),
+    "q32_simhash" -> Query(q32Simhash, q32Sql),
+    "q33_ngram_jaccard" -> Query(q33NgramJaccard, q33Sql),
+    "q34_cosine_topk" -> Query(q34CosineTopK, q34Sql),
     // floors ≈ 0.8 × measured recall (round-6 re-measurement: q35
     // 0.45 @ sf0.01 / 0.58 @ sf0.1, q52 0.70 / 0.77) so a silent
     // recall regression trips well before halving; re-measure BOTH
     // scales before re-flooring if ANN params change (PERF lesson 14).
     // The per-row `hit` check is exact regardless of the floor.
-    "q35_ann_lsh" -> annOracle("q35_ann_lsh", 0.35),
-    "q52_ann_ivf" -> annOracle("q52_ann_ivf", 0.55),
-    "q248_ivf_probe_curve" -> probeCurveSql(Map(1 -> 0.14, 2 -> 0.25, 8 -> 0.52)),
-    "q328_ivf_incremental" -> ivfIncrementalSql(
-      Map("a_stale" -> 0.36, "b_partial" -> 0.38, "c_full" -> 0.38)),
-    "q163_pq_ann" -> annOracle("q163_pq_ann", 0.6),
+    "q35_ann_lsh" -> Query(q35AnnLsh, annOracle("q35_ann_lsh", 0.35)),
+    "q52_ann_ivf" -> Query(q52AnnIvf, annOracle("q52_ann_ivf", 0.55)),
+    "q248_ivf_probe_curve" -> Query(q248IvfProbeCurve,
+      probeCurveSql(Map(1 -> 0.14, 2 -> 0.25, 8 -> 0.52))),
+    "q328_ivf_incremental" -> Query(q328IvfIncremental,
+      ivfIncrementalSql(Map("a_stale" -> 0.36, "b_partial" -> 0.38, "c_full" -> 0.38))),
+    "q36_cosine_neardup" -> Query(q36CosineNearDup, q36Sql),
+    "q218_semantic_decontam" -> Query(q218SemanticDecontam, q218Sql),
+    "q220_frame_sample" -> Query(q220FrameSample, q220Sql),
+    "q287_shot_boundary" -> Query(q287ShotBoundary, q287Sql),
+    "q290_hubness" -> Query(q290Hubness, q290Sql),
+    "q296_incremental_cc" -> Query(q296IncrementalCc, q55Sql),
+    "q310_stream_sample" -> Query(q310StreamSample, q310Sql),
+    "q311_label_margin" -> Query(q311LabelMargin, q311Sql),
+    "q314_dbscan_core" -> Query(q314DbscanCore, q314Sql),
+    "q319_rbo" -> Query(q319Rbo, q319Sql),
+    "q297_conformal_ood" -> Query(q297ConformalOod, q297Sql),
+    "q321_conformal_ivf" -> Query(q321ConformalIvf, q321Sql),
+    "q322_dbscan_cells" -> Query(q322DbscanCells, q322Sql),
+    "q323_hubness_graph" -> Query(q323HubnessGraph, q323Sql),
+    "q324_blocking_curve" -> Query(q324BlockingCurve, q324Sql),
+    "q325_conformal_curve" -> Query(q325ConformalCurve, q325Sql),
+    "q326_knn_rounds_curve" -> Query(q326KnnRoundsCurve, q326Sql),
+    "q327_knn_width_curve" -> Query(q327KnnWidthCurve, q327Sql),
+    "q221_modularity" -> Query(q221Modularity, q221Sql),
+    "q272_louvain_move" -> Query(q272LouvainMove, q272Sql),
+    "q273_walk_pmi" -> Query(q273WalkPmi, q273Sql),
+    "q275_readability" -> Query(q275Readability, q275Sql),
+    "q276_sq8_audit" -> Query(q276Sq8Audit, q276Sql),
+    "q222_audio_energy" -> Query(q222AudioEnergy, q222Sql),
+    "q223_hard_negatives" -> Query(q223HardNegatives, q223Sql),
+    "q226_incremental_semdedup" -> Query(q226IncrementalSemdedup, q226Sql),
+    "q234_knn_graph" -> Query(q234KnnGraph, q234Sql),
+    "q236_audio_utterances" -> Query(q236AudioUtterances, q236Sql),
+    "q37_multimodal" -> Query(q37Multimodal, q37Sql),
+    "q88_multimodal_transcode" -> Query(q88MultimodalTranscode, q88Sql),
+    "q95_incremental_dedup" -> Query(q95IncrementalDedup, q95Sql),
+    "q121_snapshot_diff" -> Query(q121SnapshotDiff, q121Sql),
+    "q123_pagerank" -> Query(q123PageRank, q123Sql),
+    "q283_katz" -> Query(q283Katz, q283Sql),
+    "q229_personalized_pagerank" -> Query(q229PersonalizedPagerank, q229Sql),
+    "q230_kcenter" -> Query(q230KCenter, q230Sql),
+    "q127_triangles" -> Query(q127Triangles, q127Sql),
+    "q237_clustering_coeff" -> Query(q237ClusteringCoeff, q237Sql),
+    "q239_assortativity" -> Query(q239Assortativity, q239Sql),
+    "q170_bfs_levels" -> Query(q170BfsLevels, q170Sql),
+    "q278_closeness" -> Query(q278Closeness, q278Sql),
+    "q280_mmr_select" -> Query(q280MmrSelect, q280Sql),
+    "q171_kcore" -> Query(q171KCore, q171Sql),
+    "q177_label_prop" -> Query(q177LabelProp, q177Sql),
+    "q172_rrf_hybrid" -> Query(q172RrfHybrid, q172Sql),
+    "q175_stream_heavy_hitters" -> Query(q175StreamHeavyHitters, q175Sql),
+    "q185_stream_distinct" -> Query(q185StreamDistinct, q185Sql),
+    "q231_stream_drift" -> Query(q231StreamDrift, q231Sql),
+    "q232_ra_link_prediction" -> Query(q232RaLinkPrediction, q232Sql),
+    "q129_bm25" -> Query(q129Bm25, q129Sql),
+    "q132_boolean_search" -> Query(q132BooleanSearch, q132Sql),
+    // identical output to the batch sliding window
+    "q102_stream_sliding" -> Query(q102StreamSliding, Scalars.q44Sql),
+    "q126_stream_session" -> Query(q126StreamSession, q126Sql),
+    "q103_decontaminate_apply" -> Query(q103DecontaminateApply, q103Sql),
+    "q96_fuzzy_key_pairs" -> Query(q96FuzzyKeyPairs, q96Sql),
+    "q38_stream_hourly" -> Query(q38StreamHourly, q38Sql),
+    "q39_stream_stateful" -> Query(q39StreamStateful, q39Sql),
+    "q55_neardup_clusters" -> Query(q55NeardupClusters, q55Sql),
+    "q194_canonical_dedup" -> Query(q194CanonicalDedup, q194Sql),
+    "q197_link_prediction" -> Query(q197LinkPrediction, q197Sql),
+    "q201_hits" -> Query(q201Hits, q201Sql),
+    "q205_media_dedup" -> Query(q205MediaDedup, q205Sql),
+    "q210_image_phash" -> Query(q210ImagePhash, q210Sql),
+    "q211_phash_neardup" -> Query(q211PhashNearDup, q211Sql),
+    "q217_phash_incremental" -> Query(q217PhashIncremental, q217Sql),
+    "q261_phash_canonical" -> Query(q261PhashCanonical, q261Sql),
+    "q329_cross_modal_canonical" -> Query(q329CrossModalCanonical, q329Sql),
+    "q208_sssp" -> Query(q208Sssp, q208Sql),
+    "q203_stream_asof" -> Query(q203StreamAsof, q203Sql),
+    "q253_stream_quota" -> Query(q253StreamQuota, q253Sql),
+    "q202_embedding_drift" -> Query(q202EmbeddingDrift, q202Sql),
+    "q195_embedding_outliers" -> Query(q195EmbeddingOutliers, q195Sql),
+    "q56_stream_dedup" -> Query(q56StreamDedup, q56Sql),
+    "q214_stream_neardup" -> Query(q214StreamNeardup, q214Sql),
+    "q264_stream_phash_nd" -> Query(q264StreamPhashNd, q264Sql),
+    "q266_audio_fingerprint" -> Query(q266AudioFingerprint, q266Sql),
+    "q268_matryoshka_recall" -> Query(q268MatryoshkaRecall, q268Sql),
+    "q269_randwalk_corpus" -> Query(q269RandwalkCorpus, q269Sql),
+    "q64_stream_join" -> Query(q64StreamJoin, q64Sql),
+    "q133_stream_left_outer" -> Query(q133StreamLeftOuter, q133Sql),
+    "q151_stream_full_outer" -> Query(q151StreamFullOuter, q151Sql),
+    "q87_stream_upsert" -> Query(q87StreamUpsert, q87Sql),
+    "q65_tfidf" -> Query(q65Tfidf, q65Sql),
+    "q66_vocab" -> Query(q66Vocab, q66Sql),
+    "q67_centroids" -> Query(q67Centroids, q67Sql),
+    "q68_vocab_approx" -> Query(q68VocabApprox, q68Sql),
+    "q75_semantic_dedup" -> Query(q75SemanticDedup, q75Sql),
+    "q78_stream_enrich" -> Query(q78StreamEnrich, q78Sql),
+    "q81_bpe_tokens" -> Query(q81BpeTokens, q81Sql),
+    "q82_neardup_clusters_alt" -> Query(q82NeardupClustersAlt, q55Sql),
+    "q117_dedup_pipeline" -> Query(q117DedupPipeline, q117Sql),
+    "q119_quantized_ann" -> Query(q119QuantizedAnn, q119Sql),
+    "q240_signbit_ann" -> Query(q240SignBitAnn, q240Sql),
+    "q152_jl_projection" -> Query(q152JlProjection, q152Sql),
+    "q159_containment" -> Query(q159Containment, q159Sql),
+    "q160_bm25_batch" -> Query(q160Bm25Batch, q160Sql),
+    "q163_pq_ann" -> Query(q163PqAnn, annOracle("q163_pq_ann", 0.6)),
     // measured recall@10: 0.69 @ sf0.01, 0.66 @ sf0.1 → floor 0.52
     // ≈ 0.8× the binding figure (q35/q52 convention); re-measure
     // before changing ANN params
-    "q179_ivfpq_ann" -> annOracle("q179_ivfpq_ann", 0.52),
-    "q191_ivfpq_residual" -> annOracle("q191_ivfpq_residual", 0.45),
-    "q180_cluster_split" -> q180Sql,
-    "q183_leakage_audit" -> q183Sql,
-    "q184_weighted_pagerank" -> q184Sql,
-    "q164_allpairs_exact" -> q164Sql,
-    "q252_source_dup_matrix" -> q252Sql,
-    "q254_knn_label_audit" -> q254Sql,
-    "q256_spectral_rank" -> q256Sql,
-    "q257_minhash_incremental" -> q257Sql,
-    "q258_dedup_impact" -> q258Sql,
-    "q255_lsh_recall_audit" -> q255Sql,
-    "q165_pca_power" -> q165Sql,
-    "q167_stream_quantiles" -> q167Sql,
-    "q68_vocab_approx" -> q68Sql,
-    "q75_semantic_dedup" -> q75Sql,
-    "q110_sketch_union" -> q110Sql,
-    "q134_sliding_distinct" -> q134Sql,
-    "q33_ngram_jaccard" -> q33Sql,
-    "q34_cosine_topk" -> q34Sql,
-    "q37_multimodal" -> q37Sql,
-    "q88_multimodal_transcode" -> q88Sql,
-    "q95_incremental_dedup" -> q95Sql,
-    "q121_snapshot_diff" -> q121Sql,
-    "q123_pagerank" -> q123Sql,
-    "q283_katz" -> q283Sql,
-    "q229_personalized_pagerank" -> q229Sql,
-    "q230_kcenter" -> q230Sql,
-    "q127_triangles" -> q127Sql,
-    "q237_clustering_coeff" -> q237Sql,
-    "q239_assortativity" -> q239Sql,
-    "q170_bfs_levels" -> q170Sql,
-    "q278_closeness" -> q278Sql,
-    "q280_mmr_select" -> q280Sql,
-    "q171_kcore" -> q171Sql,
-    "q177_label_prop" -> q177Sql,
-    "q172_rrf_hybrid" -> q172Sql,
-    "q175_stream_heavy_hitters" -> q175Sql,
-    "q185_stream_distinct" -> q185Sql,
-    "q231_stream_drift" -> q231Sql,
-    "q232_ra_link_prediction" -> q232Sql,
-    "q129_bm25" -> q129Sql,
-    "q132_boolean_search" -> q132Sql,
-    "q102_stream_sliding" -> Scalars.q44Sql, // identical output to the batch sliding window
-    "q126_stream_session" -> q126Sql,
-    "q103_decontaminate_apply" -> q103Sql,
-    "q96_fuzzy_key_pairs" -> q96Sql,
-    "q38_stream_hourly" -> q38Sql,
-    "q39_stream_stateful" -> q39Sql,
-    "q55_neardup_clusters" -> q55Sql,
-    "q194_canonical_dedup" -> q194Sql,
-    "q197_link_prediction" -> q197Sql,
-    "q201_hits" -> q201Sql,
-    "q205_media_dedup" -> q205Sql,
-    "q210_image_phash" -> q210Sql,
-    "q211_phash_neardup" -> q211Sql,
-    "q217_phash_incremental" -> q217Sql,
-    "q261_phash_canonical" -> q261Sql,
-    "q329_cross_modal_canonical" -> q329Sql,
-    "q208_sssp" -> q208Sql,
-    "q202_embedding_drift" -> q202Sql,
-    "q195_embedding_outliers" -> q195Sql,
-    "q56_stream_dedup" -> q56Sql,
-    "q214_stream_neardup" -> q214Sql,
-    "q264_stream_phash_nd" -> q264Sql,
-    "q266_audio_fingerprint" -> q266Sql,
-    "q268_matryoshka_recall" -> q268Sql,
-    "q269_randwalk_corpus" -> q269Sql,
-    "q78_stream_enrich" -> q78Sql,
-    "q81_bpe_tokens" -> q81Sql,
-    "q82_neardup_clusters_alt" -> q55Sql,
-    "q64_stream_join" -> q64Sql,
-    "q203_stream_asof" -> q203Sql,
-    "q253_stream_quota" -> q253Sql,
-    "q133_stream_left_outer" -> q133Sql,
-    "q151_stream_full_outer" -> q151Sql,
-    "q87_stream_upsert" -> q87Sql,
-    "q65_tfidf" -> q65Sql,
-    "q66_vocab" -> q66Sql,
-    "q67_centroids" -> q67Sql,
-    "q117_dedup_pipeline" -> q117Sql,
-    "q119_quantized_ann" -> q119Sql,
-    "q240_signbit_ann" -> q240Sql,
-    "q152_jl_projection" -> q152Sql,
-    "q159_containment" -> q159Sql,
-    "q160_bm25_batch" -> q160Sql)
+    "q179_ivfpq_ann" -> Query(q179IvfPqAnn, annOracle("q179_ivfpq_ann", 0.52)),
+    "q191_ivfpq_residual" -> Query(q191IvfPqResidual, annOracle("q191_ivfpq_residual", 0.45)),
+    "q180_cluster_split" -> Query(q180ClusterSplit, q180Sql),
+    "q183_leakage_audit" -> Query(q183LeakageAudit, q183Sql),
+    "q184_weighted_pagerank" -> Query(q184WeightedPagerank, q184Sql),
+    "q164_allpairs_exact" -> Query(q164AllpairsExact, q164Sql),
+    "q252_source_dup_matrix" -> Query(q252SourceDupMatrix, q252Sql),
+    "q254_knn_label_audit" -> Query(q254KnnLabelAudit, q254Sql),
+    "q256_spectral_rank" -> Query(q256SpectralRank, q256Sql),
+    "q257_minhash_incremental" -> Query(q257MinhashIncremental, q257Sql),
+    "q258_dedup_impact" -> Query(q258DedupImpact, q258Sql),
+    "q255_lsh_recall_audit" -> Query(q255LshRecallAudit, q255Sql),
+    "q165_pca_power" -> Query(q165PcaPower, q165Sql),
+    "q167_stream_quantiles" -> Query(q167StreamQuantiles, q167Sql))
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.builds(registry)
 }

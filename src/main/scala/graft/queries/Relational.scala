@@ -1280,89 +1280,50 @@ object Relational {
       |  HAVING SUM(CAST(l_quantity AS BIGINT)) > 50)
       |ORDER BY s_suppkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q302_tpch_q2" -> (q302TpchQ2 _),
-    "q303_tpch_q4" -> (q303TpchQ4 _),
-    "q304_tpch_q9" -> (q304TpchQ9 _),
-    "q305_tpch_q11" -> (q305TpchQ11 _),
-    "q306_tpch_q12" -> (q306TpchQ12 _),
-    "q307_tpch_q16" -> (q307TpchQ16 _),
-    "q308_tpch_q19" -> (q308TpchQ19 _),
-    "q309_tpch_q20" -> (q309TpchQ20 _),
-    "q114_inmemory" -> (q114InMemory _),
-    "q137_tpch_q17" -> (q137TpchQ17 _),
-    "q138_tpch_q13" -> (q138TpchQ13 _),
-    "q139_tpch_q18" -> (q139TpchQ18 _),
-    "q140_tpch_q22" -> (q140TpchQ22 _),
-    "q141_tpch_q21" -> (q141TpchQ21 _),
-    "q97_sql_entry" -> (q97SqlEntry _),
-    "q53_graft_facade" -> (q53GraftFacade _),
-    "q76_tpch_q5" -> (q76TpchQ5 _),
-    "q77_tpch_q10" -> (q77TpchQ10 _),
-    "q131_tpch_q8" -> (q131TpchQ8 _),
-    "q49_tpch_q6" -> (q49TpchQ6 _),
-    "q198_tpch_q14" -> (q198TpchQ14 _),
-    "q199_tpch_q7" -> (q199TpchQ7 _),
-    "q200_tpch_q15" -> (q200TpchQ15 _),
-    "q50_tpch_q3" -> (q50TpchQ3 _),
-    "q51_above_group_avg" -> (q51AboveGroupAvg _),
-    "q01_tpch_q1" -> (q01TpchQ1 _),
-    "q02_select_arith" -> (q02SelectArith _),
-    "q03_filter_chain" -> (q03FilterChain _),
-    "q04_orderby_multi" -> (q04OrderBy _),
-    "q05_global_agg" -> (q05GlobalAgg _),
-    "q06_group_agg" -> (q06GroupAgg _),
-    "q07_join_inner" -> (q07JoinInner _),
-    "q08_join_broadcast_agg" -> (q08JoinBroadcastAgg _),
-    "q09_take_limit" -> (q09Take _),
-    "q10_count" -> (q10Count _),
-    "q11_union" -> (q11Union _),
-    "q124_schema_drift_union" -> (q124SchemaDriftUnion _),
-    "q12_distinct" -> (q12Distinct _),
-    "q13_topk_desc" -> (q13TopK _),
-    "q14_group_two_phase" -> (q14GroupTwoPhase _),
-    "q15_star_join" -> (q15StarJoin _))
+  /** Every query of this module: name → (build function, oracle SQL). */
+  val registry: Map[String, Query] = Query.registry(
+    "q302_tpch_q2" -> Query(q302TpchQ2, q302Sql),
+    "q303_tpch_q4" -> Query(q303TpchQ4, q303Sql),
+    "q304_tpch_q9" -> Query(q304TpchQ9, q304Sql),
+    "q305_tpch_q11" -> Query(q305TpchQ11, q305Sql),
+    "q306_tpch_q12" -> Query(q306TpchQ12, q306Sql),
+    "q307_tpch_q16" -> Query(q307TpchQ16, q307Sql),
+    "q308_tpch_q19" -> Query(q308TpchQ19, q308Sql),
+    "q309_tpch_q20" -> Query(q309TpchQ20, q309Sql),
+    "q114_inmemory" -> Query(q114InMemory, q114Sql),
+    "q137_tpch_q17" -> Query(q137TpchQ17, q137Sql),
+    "q138_tpch_q13" -> Query(q138TpchQ13, q138Sql),
+    "q139_tpch_q18" -> Query(q139TpchQ18, q139Sql),
+    "q140_tpch_q22" -> Query(q140TpchQ22, q140Sql),
+    "q141_tpch_q21" -> Query(q141TpchQ21, q141Sql),
+    "q97_sql_entry" -> Query(q97SqlEntry, q97Sql),
+    "q53_graft_facade" -> Query(q53GraftFacade, q53Sql),
+    "q76_tpch_q5" -> Query(q76TpchQ5, q76Sql),
+    "q77_tpch_q10" -> Query(q77TpchQ10, q77Sql),
+    "q131_tpch_q8" -> Query(q131TpchQ8, q131Sql),
+    "q49_tpch_q6" -> Query(q49TpchQ6, q49Sql),
+    "q198_tpch_q14" -> Query(q198TpchQ14, q198Sql),
+    "q199_tpch_q7" -> Query(q199TpchQ7, q199Sql),
+    "q200_tpch_q15" -> Query(q200TpchQ15, q200Sql),
+    "q50_tpch_q3" -> Query(q50TpchQ3, q50Sql),
+    "q51_above_group_avg" -> Query(q51AboveGroupAvg, q51Sql),
+    "q01_tpch_q1" -> Query(q01TpchQ1, q01Sql),
+    "q02_select_arith" -> Query(q02SelectArith, q02Sql),
+    "q03_filter_chain" -> Query(q03FilterChain, q03Sql),
+    "q04_orderby_multi" -> Query(q04OrderBy, q04Sql),
+    "q05_global_agg" -> Query(q05GlobalAgg, q05Sql),
+    "q06_group_agg" -> Query(q06GroupAgg, q06Sql),
+    "q07_join_inner" -> Query(q07JoinInner, q07Sql),
+    "q08_join_broadcast_agg" -> Query(q08JoinBroadcastAgg, q08Sql),
+    "q09_take_limit" -> Query(q09Take, q09Sql),
+    "q10_count" -> Query(q10Count, q10Sql),
+    "q11_union" -> Query(q11Union, q11Sql),
+    "q124_schema_drift_union" -> Query(q124SchemaDriftUnion, q124Sql),
+    "q12_distinct" -> Query(q12Distinct, q12Sql),
+    "q13_topk_desc" -> Query(q13TopK, q13Sql),
+    "q14_group_two_phase" -> Query(q14GroupTwoPhase, q14Sql),
+    "q15_star_join" -> Query(q15StarJoin, q15Sql))
 
-  val oracle: Map[String, String] = Map(
-    "q302_tpch_q2" -> q302Sql,
-    "q303_tpch_q4" -> q303Sql,
-    "q304_tpch_q9" -> q304Sql,
-    "q305_tpch_q11" -> q305Sql,
-    "q306_tpch_q12" -> q306Sql,
-    "q307_tpch_q16" -> q307Sql,
-    "q308_tpch_q19" -> q308Sql,
-    "q309_tpch_q20" -> q309Sql,
-    "q114_inmemory" -> q114Sql,
-    "q137_tpch_q17" -> q137Sql,
-    "q138_tpch_q13" -> q138Sql,
-    "q139_tpch_q18" -> q139Sql,
-    "q140_tpch_q22" -> q140Sql,
-    "q141_tpch_q21" -> q141Sql,
-    "q97_sql_entry" -> q97Sql,
-    "q53_graft_facade" -> q53Sql,
-    "q76_tpch_q5" -> q76Sql,
-    "q77_tpch_q10" -> q77Sql,
-    "q131_tpch_q8" -> q131Sql,
-    "q49_tpch_q6" -> q49Sql,
-    "q198_tpch_q14" -> q198Sql,
-    "q199_tpch_q7" -> q199Sql,
-    "q200_tpch_q15" -> q200Sql,
-    "q50_tpch_q3" -> q50Sql,
-    "q51_above_group_avg" -> q51Sql,
-    "q01_tpch_q1" -> q01Sql,
-    "q02_select_arith" -> q02Sql,
-    "q03_filter_chain" -> q03Sql,
-    "q04_orderby_multi" -> q04Sql,
-    "q05_global_agg" -> q05Sql,
-    "q06_group_agg" -> q06Sql,
-    "q07_join_inner" -> q07Sql,
-    "q08_join_broadcast_agg" -> q08Sql,
-    "q09_take_limit" -> q09Sql,
-    "q10_count" -> q10Sql,
-    "q11_union" -> q11Sql,
-    "q124_schema_drift_union" -> q124Sql,
-    "q12_distinct" -> q12Sql,
-    "q13_topk_desc" -> q13Sql,
-    "q14_group_two_phase" -> q14Sql,
-    "q15_star_join" -> q15Sql)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.builds(registry)
 }

@@ -398,25 +398,18 @@ object Sampling {
       "\nORDER BY round, source"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q295_mw_mixture" -> (q295MwMixture _),
-    "q243_rendezvous_shard" -> (q243RendezvousShard _),
-    "q244_temperature_mix" -> (q244TemperatureMix _),
-    "q69_stratified_sample" -> (q69StratifiedSample _),
-    "q70_group_cap" -> (q70GroupCap _),
-    "q71_bigram_lm" -> (q71BigramLm _),
-    "q225_lm_filter" -> (q225LmFilter _),
-    "q94_mixture_sample" -> (q94MixtureSample _),
-    "q128_priority_sample" -> (q128PrioritySample _))
+  /** Every query of this module: name → (build function, oracle SQL). */
+  val registry: Map[String, Query] = Query.registry(
+    "q295_mw_mixture" -> Query(q295MwMixture, q295Sql),
+    "q243_rendezvous_shard" -> Query(q243RendezvousShard, q243Sql),
+    "q244_temperature_mix" -> Query(q244TemperatureMix, q244Sql),
+    "q69_stratified_sample" -> Query(q69StratifiedSample, q69Sql),
+    "q70_group_cap" -> Query(q70GroupCap, q70Sql),
+    "q71_bigram_lm" -> Query(q71BigramLm, q71Sql),
+    "q225_lm_filter" -> Query(q225LmFilter, q225Sql),
+    "q94_mixture_sample" -> Query(q94MixtureSample, q94Sql),
+    "q128_priority_sample" -> Query(q128PrioritySample, q128Sql))
 
-  val oracle: Map[String, String] = Map(
-    "q295_mw_mixture" -> q295Sql,
-    "q243_rendezvous_shard" -> q243Sql,
-    "q244_temperature_mix" -> q244Sql,
-    "q69_stratified_sample" -> q69Sql,
-    "q70_group_cap" -> q70Sql,
-    "q71_bigram_lm" -> q71Sql,
-    "q225_lm_filter" -> q225Sql,
-    "q94_mixture_sample" -> q94Sql,
-    "q128_priority_sample" -> q128Sql)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.builds(registry)
 }

@@ -725,48 +725,30 @@ object Scalars {
       |LEFT JOIN sc USING (p)
       |ORDER BY p""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q288_zone_map" -> (q288ZoneMap _),
-    "q279_skew_audit" -> (q279SkewAudit _),
-    "q157_unpivot" -> (q157Unpivot _),
-    "q156_compaction" -> (q156Compaction _),
-    "q155_incremental_join" -> (q155IncrementalJoin _),
-    "q149_dynamic_pruning" -> (q149DynamicPruning _),
-    "q150_bloom_join" -> (q150BloomJoin _),
-    "q107_partitioned_roundtrip" -> (q107PartitionedRoundtrip _),
-    "q109_bucketed_join" -> (q109BucketedJoin _),
-    "q112_csv_roundtrip" -> (q112CsvRoundtrip _),
-    "q113_orc_roundtrip" -> (q113OrcRoundtrip _),
-    "q115_jsonl_roundtrip" -> (q115JsonlRoundtrip _),
-    "q105_salted_join" -> (q105SaltedJoin _),
-    "q79_upsert_merge" -> (q79UpsertMerge _),
-    "q80_incremental_agg" -> (q80IncrementalAgg _),
-    "q44_sliding_window" -> (q44SlidingWindow _),
-    "q45_set_ops" -> (q45SetOps _),
-    "q46_string_funcs" -> (q46StringFuncs _),
-    "q47_date_funcs" -> (q47DateFuncs _),
-    "q48_session_window" -> (q48SessionWindow _))
+  /** Every query of this module: name → (build function, oracle SQL). */
+  val registry: Map[String, Query] = Query.registry(
+    "q288_zone_map" -> Query(q288ZoneMap, q288Sql),
+    "q279_skew_audit" -> Query(q279SkewAudit, q279Sql),
+    "q157_unpivot" -> Query(q157Unpivot, q157Sql),
+    "q156_compaction" -> Query(q156Compaction, q156Sql),
+    "q155_incremental_join" -> Query(q155IncrementalJoin, q155Sql),
+    "q149_dynamic_pruning" -> Query(q149DynamicPruning, q149Sql),
+    "q150_bloom_join" -> Query(q150BloomJoin, q150Sql),
+    "q107_partitioned_roundtrip" -> Query(q107PartitionedRoundtrip, q107Sql),
+    "q109_bucketed_join" -> Query(q109BucketedJoin, q109Sql),
+    "q112_csv_roundtrip" -> Query(q112CsvRoundtrip, q112Sql),
+    // identical output to the parquet layout gate
+    "q113_orc_roundtrip" -> Query(q113OrcRoundtrip, q107Sql),
+    "q115_jsonl_roundtrip" -> Query(q115JsonlRoundtrip, q115Sql),
+    "q105_salted_join" -> Query(q105SaltedJoin, q105Sql),
+    "q79_upsert_merge" -> Query(q79UpsertMerge, q79Sql),
+    "q80_incremental_agg" -> Query(q80IncrementalAgg, q80Sql),
+    "q44_sliding_window" -> Query(q44SlidingWindow, q44Sql),
+    "q45_set_ops" -> Query(q45SetOps, q45Sql),
+    "q46_string_funcs" -> Query(q46StringFuncs, q46Sql),
+    "q47_date_funcs" -> Query(q47DateFuncs, q47Sql),
+    "q48_session_window" -> Query(q48SessionWindow, q48Sql))
 
-  val oracle: Map[String, String] = Map(
-    "q288_zone_map" -> q288Sql,
-    "q279_skew_audit" -> q279Sql,
-    "q157_unpivot" -> q157Sql,
-    "q156_compaction" -> q156Sql,
-    "q155_incremental_join" -> q155Sql,
-    "q149_dynamic_pruning" -> q149Sql,
-    "q150_bloom_join" -> q150Sql,
-    "q107_partitioned_roundtrip" -> q107Sql,
-    "q109_bucketed_join" -> q109Sql,
-    "q112_csv_roundtrip" -> q112Sql,
-    "q113_orc_roundtrip" -> q107Sql, // identical output to the parquet layout gate
-    "q115_jsonl_roundtrip" -> q115Sql,
-
-    "q105_salted_join" -> q105Sql,
-    "q79_upsert_merge" -> q79Sql,
-    "q80_incremental_agg" -> q80Sql,
-    "q44_sliding_window" -> q44Sql,
-    "q45_set_ops" -> q45Sql,
-    "q46_string_funcs" -> q46Sql,
-    "q47_date_funcs" -> q47Sql,
-    "q48_session_window" -> q48Sql)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.builds(registry)
 }

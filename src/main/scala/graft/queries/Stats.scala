@@ -1694,65 +1694,38 @@ object Stats {
       |GROUP BY 1, 2, 3, 4, 5
       |ORDER BY vc.event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q320_winsorized" -> (q320Winsorized _),
-    "q316_ccf_daily" -> (q316CcfDaily _),
-    "q298_ols_trend" -> (q298OlsTrend _),
-    "q299_dp_release" -> (q299DpRelease _),
-    "q293_theil_sen" -> (q293TheilSen _),
-    "q294_benford" -> (q294Benford _),
-    "q284_mann_whitney" -> (q284MannWhitney _),
-    "q285_spearman" -> (q285Spearman _),
-    "q286_acf_daily" -> (q286AcfDaily _),
-    "q190_tdigest_bins" -> (q190TdigestBins _),
-    "q181_tdigest_union" -> (q181TdigestUnion _),
-    "q174_mad_outliers" -> (q174MadOutliers _),
-    "q173_equiheight_bins" -> (q173EquiHeightBins _),
-    "q166_tdigest_quantiles" -> (q166TdigestQuantiles _),
-    "q153_ks_test" -> (q153KsTest _),
-    "q142_group_linreg" -> (q142GroupLinreg _),
-    "q143_concentration" -> (q143Concentration _),
-    "q130_outliers" -> (q130Outliers _),
-    "q136_robust_stats" -> (q136RobustStats _),
-    "q125_kmv_overlap" -> (q125KmvOverlap _),
-    "q122_cms_freq" -> (q122CmsFreq _),
-    "q116_drift_chi2" -> (q116DriftChi2 _),
-    "q42_percentiles" -> (q42Percentiles _),
-    "q43_moment_stats" -> (q43Moments _),
-    "q54_approx_percentiles" -> (q54ApproxPercentiles _),
-    "q74_heavy_hitters" -> (q74HeavyHitters _),
-    "q90_column_profile" -> (q90ColumnProfile _),
-    "q104_grouped_heavy_hitters" -> (q104GroupedHeavyHitters _),
-    "q106_histogram" -> (q106Histogram _))
+  /** Every query of this module: name → (build function, oracle SQL). */
+  val registry: Map[String, Query] = Query.registry(
+    "q320_winsorized" -> Query(q320Winsorized, q320Sql),
+    "q316_ccf_daily" -> Query(q316CcfDaily, q316Sql),
+    "q298_ols_trend" -> Query(q298OlsTrend, q298Sql),
+    "q299_dp_release" -> Query(q299DpRelease, q299Sql),
+    "q293_theil_sen" -> Query(q293TheilSen, q293Sql),
+    "q294_benford" -> Query(q294Benford, q294Sql),
+    "q284_mann_whitney" -> Query(q284MannWhitney, q284Sql),
+    "q285_spearman" -> Query(q285Spearman, q285Sql),
+    "q286_acf_daily" -> Query(q286AcfDaily, q286Sql),
+    "q190_tdigest_bins" -> Query(q190TdigestBins, q190Sql),
+    "q181_tdigest_union" -> Query(q181TdigestUnion, q181Sql),
+    "q174_mad_outliers" -> Query(q174MadOutliers, q174Sql),
+    "q173_equiheight_bins" -> Query(q173EquiHeightBins, q173Sql),
+    "q166_tdigest_quantiles" -> Query(q166TdigestQuantiles, q166Sql),
+    "q153_ks_test" -> Query(q153KsTest, q153Sql),
+    "q142_group_linreg" -> Query(q142GroupLinreg, q142Sql),
+    "q143_concentration" -> Query(q143Concentration, q143Sql),
+    "q130_outliers" -> Query(q130Outliers, q130Sql),
+    "q136_robust_stats" -> Query(q136RobustStats, q136Sql),
+    "q125_kmv_overlap" -> Query(q125KmvOverlap, q125Sql),
+    "q122_cms_freq" -> Query(q122CmsFreq, q122Sql),
+    "q116_drift_chi2" -> Query(q116DriftChi2, q116Sql),
+    "q42_percentiles" -> Query(q42Percentiles, q42Sql),
+    "q43_moment_stats" -> Query(q43Moments, q43Sql),
+    "q54_approx_percentiles" -> Query(q54ApproxPercentiles, q54Sql),
+    "q74_heavy_hitters" -> Query(q74HeavyHitters, q74Sql),
+    "q90_column_profile" -> Query(q90ColumnProfile, q90Sql),
+    "q104_grouped_heavy_hitters" -> Query(q104GroupedHeavyHitters, q104Sql),
+    "q106_histogram" -> Query(q106Histogram, q106Sql))
 
-  val oracle: Map[String, String] = Map(
-    "q298_ols_trend" -> q298Sql,
-    "q316_ccf_daily" -> q316Sql,
-    "q320_winsorized" -> q320Sql,
-    "q299_dp_release" -> q299Sql,
-    "q293_theil_sen" -> q293Sql,
-    "q294_benford" -> q294Sql,
-    "q284_mann_whitney" -> q284Sql,
-    "q285_spearman" -> q285Sql,
-    "q286_acf_daily" -> q286Sql,
-    "q190_tdigest_bins" -> q190Sql,
-    "q181_tdigest_union" -> q181Sql,
-    "q174_mad_outliers" -> q174Sql,
-    "q173_equiheight_bins" -> q173Sql,
-    "q166_tdigest_quantiles" -> q166Sql,
-    "q153_ks_test" -> q153Sql,
-    "q142_group_linreg" -> q142Sql,
-    "q143_concentration" -> q143Sql,
-    "q130_outliers" -> q130Sql,
-    "q136_robust_stats" -> q136Sql,
-    "q125_kmv_overlap" -> q125Sql,
-    "q122_cms_freq" -> q122Sql,
-    "q116_drift_chi2" -> q116Sql,
-    "q42_percentiles" -> q42Sql,
-    "q43_moment_stats" -> q43Sql,
-    "q54_approx_percentiles" -> q54Sql,
-    "q74_heavy_hitters" -> q74Sql,
-    "q90_column_profile" -> q90Sql,
-    "q104_grouped_heavy_hitters" -> q104Sql,
-    "q106_histogram" -> q106Sql)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.builds(registry)
 }

@@ -381,27 +381,19 @@ object Temporal {
       |  CAST(SUM((v6 * w_ppm) // 1000000) AS BIGINT) AS decayed_v6
       |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q206_asof_tolerance" -> (q206AsofTolerance _),
-    "q182_decayed_agg" -> (q182DecayedAgg _),
-    "q168_asof_native" -> (q168AsofNative _),
-    "q169_asof_native_forward" -> (q169AsofNativeForward _),
-    "q40_asof_join" -> (q40AsofJoin _),
-    "q41_range_join" -> (q41RangeJoin _),
-    "q135_asof_forward" -> (q135AsofForward _),
-    "q144_time_weighted_avg" -> (q144TimeWeightedAvg _),
-    "q146_interval_overlap" -> (q146IntervalOverlap _),
-    "q242_scd2_history" -> (q242Scd2History _))
+  /** Every query of this module: name → (build function, oracle SQL). */
+  val registry: Map[String, Query] = Query.registry(
+    "q206_asof_tolerance" -> Query(q206AsofTolerance, q206Sql),
+    "q182_decayed_agg" -> Query(q182DecayedAgg, q182Sql),
+    "q168_asof_native" -> Query(q168AsofNative, q40Sql), // identical output contract by design
+    "q169_asof_native_forward" -> Query(q169AsofNativeForward, q135Sql), // ditto, forward direction
+    "q40_asof_join" -> Query(q40AsofJoin, q40Sql),
+    "q41_range_join" -> Query(q41RangeJoin, q41Sql),
+    "q135_asof_forward" -> Query(q135AsofForward, q135Sql),
+    "q144_time_weighted_avg" -> Query(q144TimeWeightedAvg, q144Sql),
+    "q146_interval_overlap" -> Query(q146IntervalOverlap, q146Sql),
+    "q242_scd2_history" -> Query(q242Scd2History, q242Sql))
 
-  val oracle: Map[String, String] = Map(
-    "q206_asof_tolerance" -> q206Sql,
-    "q182_decayed_agg" -> q182Sql,
-    "q168_asof_native" -> q40Sql, // identical output contract by design
-    "q169_asof_native_forward" -> q135Sql, // ditto, forward direction
-    "q40_asof_join" -> q40Sql,
-    "q41_range_join" -> q41Sql,
-    "q135_asof_forward" -> q135Sql,
-    "q144_time_weighted_avg" -> q144Sql,
-    "q146_interval_overlap" -> q146Sql,
-    "q242_scd2_history" -> q242Sql)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.builds(registry)
 }

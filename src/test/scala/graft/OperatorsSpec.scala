@@ -773,9 +773,9 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("alternating CC labels a 200-node path in few rounds; agrees with min-label") {
-    // path 0-1-2-...-199: diameter 199 — min-label propagation cannot
-    // converge inside its default 20 rounds, the alternating
-    // large-star/small-star algorithm must (O(log n) rounds)
+    // path 0-1-2-...-199: diameter 199 — the shape where plain
+    // min-label propagation needs diameter rounds; the alternating
+    // large-star/small-star algorithm converges in polylog rounds
     val path = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
     val alt = Dedup.connectedComponentsAlternating(path, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -790,29 +790,6 @@ class OperatorsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaAlt === viaProp)
     assert(viaAlt(12L) === 1L && viaAlt(51L) === 50L)
-  }
-
-  test("CC with reliable checkpointDir matches localCheckpoint and writes snapshots") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ck").toString
-    val g = Seq((1L, 2L), (2L, 3L), (10L, 11L), (3L, 10L), (50L, 51L))
-      .toDF("a", "b")
-    val local = Dedup.connectedComponents(g, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val reliable = Dedup.connectedComponents(g, "a", "b", checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(reliable === local)
-    val altReliable = Dedup.connectedComponentsAlternating(g, "a", "b",
-        checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(altReliable === local)
-    // round snapshots actually landed in reliable storage (rdd-N dirs)
-    def rddDirs(f: java.io.File): Int =
-      if (f.isDirectory)
-        (if (f.getName.startsWith("rdd-")) 1 else 0) +
-          Option(f.listFiles()).getOrElse(Array.empty).map(rddDirs).sum
-      else 0
-    assert(rddDirs(new java.io.File(dir)) > 0)
-    graft.util.TempDirs.deleteRecursively(new java.io.File(dir))
   }
 
   test("driver CC: cap + 1 pairs fail loudly, naming the count and the cap") {

@@ -31,9 +31,10 @@ sbt -batch compile
 echo "== [2/5] sbt test =="
 sbt -batch test
 
-echo "== [2b/5] HTTP client e2e + benchmark harness tests =="
+echo "== [2b/5] HTTP client e2e + benchmark harness and tools tests =="
 python3 tools/client_e2e.py
 python3 -m unittest discover -s benchmark -p 'test_*.py'
+python3 -m unittest discover -s tools -p 'test_*.py'
 
 echo "== [3/5] Verify + DuckDB check @ sf0.01 =="
 SPARK_GRAFT_CPUS=$CPUS tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/gate_sf001
@@ -72,23 +73,14 @@ EOF
 echo "== [3b/5] plan lint (scale-shape audit over every query plan) =="
 tools/run.sh graft.tools.PlanLint | grep planlint
 
-echo "== [3c/5] EXPLAINS.md freshness (every pinned query has a dumped plan) =="
-# the round-9 slip: the PIN REGISTRY gained entries but the artifact
-# was never regenerated — ExplainPinSpec alone cannot catch that.
-python3 - <<'EOF'
-import re, subprocess, sys
-pins = subprocess.run(
-    ["grep", "-oE", '"q[0-9]+[a-z0-9_]*" ->', "src/main/scala/graft/tools/Explain.scala"],
-    capture_output=True, text=True).stdout
-pinned = set(re.findall(r'"(q[0-9][a-z0-9_]*)"', pins))
-dumped = set(re.findall(r'^## (q[0-9][a-z0-9_]*)$', open("EXPLAINS.md").read(), re.M))
-missing = pinned - dumped
-if missing:
-    print(f"STALE EXPLAINS.md: {len(missing)} pinned plans not dumped: {sorted(missing)[:8]}")
-    print("run: tools/run.sh graft.tools.Explain")
-    sys.exit(1)
-print(f"EXPLAINS.md fresh: {len(pinned)} pinned, all dumped")
-EOF
+echo "== [3c/5] EXPLAINS.md: every pinned plan equals a fresh Explain dump =="
+# regenerate the pinned plans into a scratch file and compare them,
+# section by section, with the committed EXPLAINS.md after dropping
+# run-specific tokens (tools/explain_diff.py): a pin added without a
+# regenerated artifact, or a change that moves a pinned plan, fails here
+tools/run.sh graft.tools.Explain /tmp/gate_explain.md > /tmp/gate_explain.log 2>&1 \
+  || { tail -20 /tmp/gate_explain.log; exit 1; }
+python3 tools/explain_diff.py EXPLAINS.md /tmp/gate_explain.md
 
 if [[ "${1:-}" == "--sweep" ]]; then
   echo "== [4/5] cross-scale Verify + check @ sf0.1 =="
