@@ -5,7 +5,10 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.databind.util.RawValue
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
-import graft.api.GraftException
+import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.graft.ColumnBridge
+import graft.api.{GraftException, GraftFrame}
 import graft.sources.Sources
 import graft.util.SessionMemo
 
@@ -34,26 +37,95 @@ import java.util.concurrent.Executors
   * a Read or Op launches no Spark job once its parquet paths have been
   * opened in this session (see [[graft.sources.Sources.parquet]]).
   *
-  * An Action's reply is pooled, as the reference's Pool keeps every
-  * materialized column under its lineage hash: an Action asked again
-  * over the same token, on a server with the same row cap, over input
-  * files with the same fingerprint, is answered from the pool without
-  * a Spark job.
-  *  - Only the rendered `blocks` of a reply are pooled, never a frame
-  *    or a plan. Every request still replays its lineage, which
-  *    re-validates the token and lists the input files afresh, so a
-  *    rewritten file gives a new key.
-  *  - A reply is kept only if the files list the same after it was
-  *    computed, and only if every leaf of the frame is a file relation
-  *    (a verb whose replay checkpoints is computed every time).
+  * Two pools, both `SessionMemo` families that die with their session,
+  * keep what a replay would compute, as the reference's Pool keeps every
+  * entry under its lineage hash (src/pool.rs:57-62):
+  *  - `serverFrames` holds, under a hash of the token, the analyzed plan
+  *    that a Read or Op built, with the fingerprint of its input files
+  *    ([[Sources.fingerprintOf]]). Every Read or Op stores the frame it
+  *    builds under its new token, and every request looks its prior
+  *    token (an Action its own token, a Join its right-side token) up
+  *    instead of replaying it: in a session, each request analyzes only
+  *    its own entry. A repeated Op still applies its entry.
+  *  - A pooled plan is used only while a fresh listing of its Read paths
+  *    (globs expanded again) has the fingerprint it was planned with;
+  *    otherwise the token is replayed from the files and the new frame
+  *    replaces the old one. Every use runs on a new Dataset of the
+  *    request's own over the pooled plan, so no executed plan is pooled
+  *    or shared between request threads.
+  *  - A frame with no fingerprint (a verb that checkpoints, such as
+  *    `ConnectedComponents`) or with an interpreted lambda in its plan
+  *    (a List column's aggregation, rule 16) is not pooled: it is
+  *    replayed every time, as its descendants are.
+  *  - `serverReplies` holds the rendered `blocks` of an Action asked over
+  *    the same token, on a server with the same row cap, over input
+  *    files with the same fingerprint: it is answered without a Spark
+  *    job. A reply is kept only if the files list the same after it was
+  *    computed, and only if the frame has a fingerprint.
   *  - An Action that fails (a 400, an over-cap Collect) keeps nothing.
   *    Concurrent identical Actions compute once.
   *  - A Take or CollectPage without an OrderBy keeps the first valid
   *    answer it computed.
-  *  - The pool is the `SessionMemo` family `serverReplies`: it dies with
-  *    its session, and holds at most [[PoolBudgetBytes]], oldest first.
+  *  - `serverFrames` holds at most [[FrameBudget]] frames and
+  *    `serverReplies` at most [[PoolBudgetBytes]], all sessions
+  *    together, oldest first.
   */
 object GraftServer {
+
+  /** Most frames the frame pool holds, all sessions together; the
+    * oldest leave first. A frame is an analyzed plan, and a chain of Ops
+    * shares its prefix's plan and file index: one cycle of serve's
+    * 16-session pool plans fewer than 80 tokens (PERF.md has the heap per
+    * frame). */
+  val FrameBudget: Long = 256
+
+  /** Analyzed frames of Read and Op tokens, each weighing 1. */
+  private val frames = SessionMemo.bounded[Planned]("serverFrames", FrameBudget, 1L)(_ => 1L)
+
+  /** A token's frame as the pool holds it: its analyzed plan, the
+    * facade's grouping state and the fingerprint of its input files
+    * when it was planned (None: it has none). */
+  private final case class Planned(plan: LogicalPlan, groupedBy: Seq[String],
+                                   strictArith: Boolean, inputs: Option[String]) {
+    /** A frame of the caller's own over the plan. A Dataset tags the root
+      * of its plan with its id (a mutable set, read by the ambiguous
+      * self-join check), so each call roots a no-op Project of its own
+      * above the pooled plan, and no request writes to a pooled node. */
+    def frame(spark: SparkSession): GraftFrame =
+      GraftFrame(ColumnBridge.ofRows(spark, Project(plan.output, plan)), groupedBy, strictArith)
+
+    /** Only a fingerprinted plan without an interpreted lambda is pooled:
+      * a lambda's variable is mutable state that concurrent jobs over
+      * one plan instance must not share (rule 16). */
+    def poolable: Boolean = inputs.nonEmpty &&
+      !plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[LambdaFunction])))
+  }
+
+  private def planned(f: GraftFrame): (Planned, Boolean) = {
+    val p = Planned(f.df.queryExecution.analyzed, f.groupedBy, f.strictArith,
+      Sources.fingerprintOf(f.df))
+    (p, p.poolable)
+  }
+
+  /** The frame of a token: pooled while a fresh listing of its input files
+    * has the pooled fingerprint, else replayed from the files (its nested
+    * tokens looked up in turn) and pooled anew. */
+  private def frameOf(spark: SparkSession, state: JsonNode): Planned = {
+    Wire.opsOf(state) // a missing or empty token is a 400 before any lookup
+    frames.fresh(spark, tokenKey(state)) { p =>
+      Sources.fingerprintOf(spark, p.plan, relist = true) == p.inputs
+    } {
+      planned(Wire.replay(spark, state, frameOf(spark, _).frame(spark)))
+    }
+  }
+
+  private def tokenKey(state: JsonNode): String = sha256(Seq(Wire.render(state)))
+
+  private def sha256(parts: Seq[String]): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    parts.foreach(part => md.update((part + "\u0000").getBytes(StandardCharsets.UTF_8)))
+    HexFormat.of().formatHex(md.digest())
+  }
 
   /** Most bytes of replies the pool holds, all sessions together; the
     * oldest replies leave first. */
@@ -68,15 +140,11 @@ object GraftServer {
 
   /** The pool key of an Action: SHA-256 over the rendered token, the
     * rendered Action, the server's row cap and the input fingerprint of
-    * the replayed frame ([[Sources.fingerprintOf]]). */
+    * the frame, as [[frameOf]] validated it. */
   private def replyKey(state: JsonNode, action: JsonNode,
-                       maxCollectRows: Option[Long], inputs: String): String = {
-    val md = MessageDigest.getInstance("SHA-256")
-    Seq(Wire.render(state), Wire.render(action),
-      maxCollectRows.fold("uncapped")(_.toString), inputs)
-      .foreach(part => md.update((part + "\u0000").getBytes(StandardCharsets.UTF_8)))
-    HexFormat.of().formatHex(md.digest())
-  }
+                       maxCollectRows: Option[Long], inputs: String): String =
+    sha256(Seq(Wire.render(state), Wire.render(action),
+      maxCollectRows.fold("uncapped")(_.toString), inputs))
 
   /** Handle one parsed request body → (status, response JSON/text). */
   def handle(spark: SparkSession, body: JsonNode): (Int, String) =
@@ -104,25 +172,27 @@ object GraftServer {
         case "Read" | "Op" =>
           // plan-building: validate eagerly (the facade throws on bad
           // schema/alias/keys like the reference), execute nothing. The
-          // prior lineage is replayed once: rebuilding it re-validates
-          // every entry (a bad token is a 400 here, as for an Action),
-          // and the same frame is what an Op builds on. A Read ignores it.
+          // prior token is looked up (or replayed, which re-validates
+          // every entry: a bad token is a 400 here, as for an Action),
+          // and its frame is what an Op builds on. A Read ignores it.
           val entry = if (tag == "Read") fn else fn.get("Op")
           val noPrior = state == null || state.isNull
-          val prior = if (tag == "Read" && noPrior) null else Wire.replay(spark, state)
+          val prior = if (tag == "Read" && noPrior) null else frameOf(spark, state).frame(spark)
           val priorOps =
             if (noPrior) Wire.arr()
             else state.get("ops").deepCopy[com.fasterxml.jackson.databind.node.ArrayNode]()
-          val frame = Wire.applyOp(spark, prior, entry)
+          val frame = Wire.applyOp(spark, prior, entry, frameOf(spark, _).frame(spark))
           frame.df.schema // force analysis so plan errors surface now
           val newState = Wire.obj()
           newState.set[JsonNode]("ops", priorOps.add(entry.deepCopy[JsonNode]()))
+          frames.put(spark, tokenKey(newState))(planned(frame))
           val resp = Wire.obj()
           resp.set[JsonNode]("dataframe", newState)
           resp.set[JsonNode]("blocks", Wire.obj())
           (201, Wire.render(resp))
         case "Action" =>
-          val frame = Wire.replay(spark, state)
+          val pooled = frameOf(spark, state)
+          val frame = pooled.frame(spark)
           val action = fn.get("Action")
           def blocks: ObjectNode =
             if (action.isTextual && action.asText() == "Collect") {
@@ -172,7 +242,7 @@ object GraftServer {
               val limited = frame.take(action.get("Take").asInt())
               Wire.blocksOf(limited.df.collect(), limited.df.schema)
             } else throw new GraftException(s"unknown action: $action")
-          val json = Sources.fingerprintOf(frame.df) match {
+          val json = pooled.inputs match {
             case Some(inputs) =>
               replies(spark, replyKey(state, action, maxCollectRows, inputs)) {
                 val reply = Wire.render(blocks)

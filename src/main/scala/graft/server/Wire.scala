@@ -38,25 +38,31 @@ import scala.jdk.CollectionConverters._
   * ordered list of operations already applied. Clients treat it as an
   * opaque token and round-trip it (client.py:196-208), so the protocol
   * stays STATELESS: any server replica can serve any request, which is
-  * also the 100 TB shape. Each request replays its lineage ONCE into a
-  * lazy Spark plan; an Op validates the prior lineage and builds on the
-  * same replayed frame, and nothing executes until an Action.
+  * also the 100 TB shape. A token is replayed into a lazy Spark plan
+  * by folding [[applyOp]] over its entries, and nothing executes until
+  * an Action.
   *
   * The only Spark job a replay would run is a parquet Read's schema
   * inference. `Sources.parquet` keeps the inferred schema per (session,
   * path), checked against a fingerprint of the data files, so a
   * replayed Read opens without a job until the files change.
   *
-  * An Action's reply is pooled (`GraftServer`): the rendered `blocks`
-  * are kept under a hash of the token, the Action, the server's row cap
-  * and the input fingerprint of the replayed frame (path, length and
-  * mtime of every data file it reads), so the same Action over the same
-  * files is answered without a Spark job — the reference's Pool rule
-  * (never recompute an entry whose deterministic key was seen) applied
-  * one level up. Frames and plans are never cached by lineage, only
-  * replies; every request still replays its token, and the protocol
-  * stays stateless: a replica that never saw the token computes the
-  * same reply.
+  * `GraftServer` keeps two pools keyed by lineage, as the reference's
+  * Pool keys every entry by its deterministic lineage hash:
+  *  - frames: the analyzed plan of every token a Read or Op built,
+  *    under a hash of the token. A request looks its prior token (and a
+  *    Join its right-side token, through the `lineage` resolver of
+  *    [[applyOp]]) up instead of replaying it, so it analyzes only its
+  *    own entry. A pooled plan is used only while a fresh listing of
+  *    its input files has the fingerprint it was planned with;
+  *    otherwise the token is replayed from the files.
+  *  - replies: the rendered `blocks` of an Action, under a hash of the
+  *    token, the Action, the server's row cap and that fingerprint
+  *    (path, length and mtime of every data file the frame reads), so
+  *    the same Action over the same files runs no Spark job.
+  * Both are caches of what a replay would compute: a replica that never
+  * saw the token replays it and computes the same reply, so the
+  * protocol stays stateless.
   */
 object Wire {
   private val mapper = new ObjectMapper()
@@ -140,20 +146,41 @@ object Wire {
 
   // ---- lineage replay ----
 
-  /** Replay a `{"ops": [...]}` state into a (lazy) GraftFrame. */
-  def replay(spark: SparkSession, state: JsonNode): GraftFrame = {
+  /** The entries of a `{"ops": [...]}` state; a missing or empty state
+    * is a protocol error. */
+  def opsOf(state: JsonNode): Iterator[JsonNode] = {
     if (state == null || state.isNull)
       throw new GraftException("missing dataframe state")
     val ops = state.get("ops")
     if (ops == null || !ops.isArray || ops.isEmpty)
       throw new GraftException("dataframe state has no ops")
-    ops.elements().asScala.foldLeft(null: GraftFrame) { (acc, fn) =>
-      applyOp(spark, acc, fn)
-    }
+    ops.elements().asScala
   }
+
+  /** Replay a `{"ops": [...]}` state into a (lazy) GraftFrame, from its
+    * files. */
+  def replay(spark: SparkSession, state: JsonNode): GraftFrame =
+    replay(spark, state, fromFiles(spark))
+
+  /** As [[replay]], with the states nested in its entries (a Join's
+    * right side, the other frame of a SnapshotDiff, RrfFuse or
+    * SemanticDecontam) resolved by `lineage`. */
+  def replay(spark: SparkSession, state: JsonNode,
+             lineage: JsonNode => GraftFrame): GraftFrame =
+    opsOf(state).foldLeft(null: GraftFrame) { (acc, fn) =>
+      applyOp(spark, acc, fn, lineage)
+    }
 
   /** Apply one lineage entry. `frame` is null only for the leading Read. */
   def applyOp(spark: SparkSession, frame: GraftFrame, fn: JsonNode): GraftFrame =
+    applyOp(spark, frame, fn, fromFiles(spark))
+
+  private def fromFiles(spark: SparkSession): JsonNode => GraftFrame =
+    (state: JsonNode) => replay(spark, state)
+
+  /** As [[applyOp]], with nested states resolved by `lineage`. */
+  def applyOp(spark: SparkSession, frame: GraftFrame, fn: JsonNode,
+              lineage: JsonNode => GraftFrame): GraftFrame =
     tagOf(fn, "operation") match {
       case ("Read", v) =>
         val (format, path, schema) =
@@ -182,7 +209,7 @@ object Wire {
             frame.aggregate(v.properties().asScala
               .map(e => e.getKey -> aggregatorOf(e.getValue.asText())).toMap)
           case "Join" =>
-            frame.join(replay(spark, v.get(0)),
+            frame.join(lineage(v.get(0)),
               v.get(1).asText(), v.get(2).asText())
           // ---- beyond-reference verbs (not in the reference protocol;
           // r3 verdict item: the first operators a remote user reaches
@@ -223,7 +250,7 @@ object Wire {
             // added/removed/changed change feed of THIS frame (old)
             // vs the replayed frame (new): (key, change, old_fp,
             // new_fp). Fingerprints are md5, computed map-side.
-            val newSnap = replay(spark, v.get(0))
+            val newSnap = lineage(v.get(0))
             val (keyCol, payCol) = (v.get(1).asText(), v.get(2).asText())
             requireWireCols(frame, Seq(keyCol, payCol), "SnapshotDiff")
             requireWireCols(newSnap, Seq(keyCol, payCol), "SnapshotDiff")
@@ -243,7 +270,7 @@ object Wire {
             // rankCol, k0, topK]} → reciprocal-rank fusion of THIS
             // frame's (id, rank) list with the replayed one — the
             // hybrid-retrieval combiner (q172) over the wire
-            val other = replay(spark, v.get(0))
+            val other = lineage(v.get(0))
             val (idCol, rankCol) = (v.get(1).asText(), v.get(2).asText())
             requireWireCols(frame, Seq(idCol, rankCol), "RrfFuse")
             requireWireCols(other, Seq(idCol, rankCol), "RrfFuse")
@@ -257,7 +284,7 @@ object Wire {
             // eval frame reaches tau — the embedding decontamination
             // rung (q218) on the wire. Vectors stay server-side; only
             // the flagged evidence rows travel back.
-            val evalF = replay(spark, v.get(0))
+            val evalF = lineage(v.get(0))
             val (idCol, vecCol) = (v.get(1).asText(), v.get(2).asText())
             requireWireCols(frame, Seq(idCol, vecCol), "SemanticDecontam")
             requireWireCols(evalF, Seq(idCol, vecCol), "SemanticDecontam")

@@ -4,9 +4,11 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import java.util.HexFormat
 
+import org.apache.hadoop.fs.Path
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LeafNode
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 import graft.api.GraftFrame
 import graft.util.SessionMemo
@@ -53,9 +55,9 @@ object Sources {
     * which lists the files again but runs no inference job, and keeps
     * the frame only if the new listing has the same fingerprint. A
     * rewritten file or directory is therefore inferred again, and its
-    * entry replaced. Only the schema is kept — never a DataFrame, whose
-    * plan instance must not be shared across the server's request
-    * threads (rule 16).
+    * entry replaced. Only the schema is kept here, never a DataFrame:
+    * the server's frame pool (`GraftServer`) keeps analyzed plans, and
+    * runs each request on a Dataset of its own over them (rule 16).
     */
   def parquet(spark: SparkSession, path: String): GraftFrame = {
     var opened: DataFrame = null
@@ -82,20 +84,28 @@ object Sources {
     * relation): such a frame has no fingerprint.
     *
     * Each `spark.read` opens a new file index, listed when it is
-    * opened; `relist` lists every index again first, so a caller that
-    * fingerprinted a frame before running it can check afterwards that
-    * no input changed meanwhile. A file rewritten with the same length
-    * within the same millisecond is not seen. */
-  def fingerprintOf(df: DataFrame, relist: Boolean = false): Option[String] = {
-    val leaves = df.queryExecution.analyzed.collectWithSubqueries {
-      case l: LeafNode => l
+    * opened, and the plan keeps that listing. With `relist`, every leaf
+    * is listed afresh instead, into a new index over its path as it was
+    * read, so a glob is expanded again and a file that now matches it
+    * counts. The plan's own indexes are never refreshed, so a plan that
+    * other threads share keeps the listing it was built with. A caller
+    * compares the two to learn whether an input changed since the plan
+    * was built. A file rewritten with the same length within the same
+    * millisecond is not seen. */
+  def fingerprintOf(df: DataFrame, relist: Boolean = false): Option[String] =
+    fingerprintOf(df.sparkSession, df.queryExecution.analyzed, relist)
+
+  /** [[fingerprintOf]] of an analyzed plan. */
+  def fingerprintOf(spark: SparkSession, plan: LogicalPlan, relist: Boolean): Option[String] = {
+    val leaves = plan.collectWithSubqueries { case l: LeafNode => l }
+    val relations = leaves.collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs
     }
-    val indexes = leaves.collect {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
-    }
-    if (indexes.isEmpty || indexes.size != leaves.size) None
+    if (relations.isEmpty || relations.size != leaves.size) None
     else {
-      if (relist) indexes.foreach(_.refresh())
+      val indexes =
+        if (relist) relations.map(relisted(spark, _))
+        else relations.map(_.location)
       val md = MessageDigest.getInstance("SHA-256")
       indexes.flatMap(_.listFiles(Nil, Nil)).flatMap(_.files)
         .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
@@ -103,6 +113,22 @@ object Sources {
         .foreach(line => md.update(line.getBytes(StandardCharsets.UTF_8)))
       Some(HexFormat.of().formatHex(md.digest()))
     }
+  }
+
+  /** A new file index over a file relation's path, listed now. A one-path
+    * read keeps its path, glob unexpanded, in its options: it is expanded
+    * again, as Spark expands it when it opens a read (Hadoop's
+    * `globStatus`, which also resolves a plain path to itself). A read of
+    * several paths is listed over the paths it expanded to. */
+  private def relisted(spark: SparkSession, fs: HadoopFsRelation): FileIndex = {
+    val roots = fs.options.get("path") match {
+      case Some(p) =>
+        val path = new Path(p)
+        val conf = spark.sessionState.newHadoopConfWithOptions(fs.options)
+        Option(path.getFileSystem(conf).globStatus(path)).toSeq.flatten.map(_.getPath)
+      case None => fs.location.rootPaths
+    }
+    new InMemoryFileIndex(spark, roots, fs.options, Some(fs.schema))
   }
 
   /** Load one named testdata table from a scale-factor directory. */

@@ -231,7 +231,7 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val out = args.headOption.getOrElse("/root/repo/EXPLAINS.md")
+    val out = args.headOption.getOrElse("EXPLAINS.md") // in the working directory
     val pinnedNames = pinned.map(_._1).toSet
     val registry = graft.SparkEntry.queries.keySet
     require(pinnedNames.intersect(excluded).isEmpty,

@@ -26,10 +26,10 @@ import org.apache.spark.sql.SparkSession
   *    the map.
   *  - A build that throws is not kept: its cell stays empty, and the
   *    next call for the key builds again.
-  *  - A [[SessionMemo.Bounded]] family holds at most a byte budget of
-  *    values and drops its oldest entries first; a value above its
-  *    per-entry cap, or one its build declines to keep, is returned but
-  *    not held.
+  *  - A [[SessionMemo.Bounded]] family holds at most a budget of
+  *    weighed values (bytes of replies, a count of frames) and drops its
+  *    oldest entries first; a value above its per-entry cap, or one its
+  *    build declines to keep, is returned but not held.
   *  - Every family counts, per session, the builds it ran (failed ones
   *    included), the calls it answered without building and the
   *    milliseconds its builds took: [[SessionMemo.stats]].
@@ -63,7 +63,8 @@ object SessionMemo {
       * against the files' current fingerprint). An accepted value counts
       * as a hit, a replacement as a build. Two callers may both find the
       * value stale and both build, so only values that are safe to build
-      * twice belong here (a schema, never a DataFrame). */
+      * twice belong here: a schema or an analyzed plan, never a
+      * DataFrame that its build materializes. */
     def fresh(spark: SparkSession, key: String)(valid: V => Boolean)(build: => V): V = {
       val c = counts(spark, name)
       get(spark, key).filter(valid) match {
@@ -76,15 +77,15 @@ object SessionMemo {
     }
   }
 
-  /** A family that holds at most `budgetBytes` of values, all sessions
+  /** A family that holds at most `budget` of weight, all sessions
     * together, and drops its oldest entries first to stay inside it.
     * Each value is weighed by `weigh` once, when built. */
-  final class Bounded[V] private[SessionMemo] (name: String, budgetBytes: Long,
-                                               entryCapBytes: Long, weigh: V => Long)
+  final class Bounded[V] private[SessionMemo] (name: String, budget: Long,
+                                               entryCap: Long, weigh: V => Long)
       extends Memo[V](name) {
     /** Held entries, oldest first, with their weights; guarded by `this`. */
     private val order = new java.util.ArrayDeque[(Key, Cell, Long)]()
-    private var heldBytes = 0L
+    private var held = 0L
 
     /** The value for (session, key). On a miss `build` returns the value
       * and whether it may be kept. A value it declines, or one heavier
@@ -99,23 +100,61 @@ object SessionMemo {
         val (v, keep) =
           try build catch { case e: Throwable => entries.remove(k, cell); throw e }
         val w = weigh(v)
-        if (keep && w <= entryCapBytes) admit(k, cell, w) else entries.remove(k, cell)
+        if (keep && w <= entryCap) admit(k, cell, w, replace = false) else entries.remove(k, cell)
         v
       }.asInstanceOf[V]
     }
 
-    private def admit(k: Key, cell: Cell, w: Long): Unit = synchronized {
-      // a failed build removed the cell; a waiter that then built puts
-      // it back, unless a newer call has already made another
-      val prev = entries.putIfAbsent(k, cell)
-      if (prev == null || (prev eq cell)) {
+    /** The held value for (session, key) if `valid` accepts it (a hit),
+      * else [[put]]'s. For values that are valid only while their input
+      * is unchanged. Neither `valid` nor `build` runs under a lock, so
+      * either may read this family again (a nested lookup), and two
+      * callers may both build: only values that are safe to build twice
+      * belong here (a plan, never a DataFrame its build materializes). */
+    def fresh(spark: SparkSession, key: String)(valid: V => Boolean)(build: => (V, Boolean)): V =
+      get(spark, key).filter(valid) match {
+        case Some(v) => counts(spark, name).hits.increment(); v
+        case None => put(spark, key)(build)
+      }
+
+    /** A value from `build`, counted as a build, which replaces whatever
+      * (session, key) held. As in [[apply]], `build` says whether the
+      * value may be kept; a value it declines, or one above the entry
+      * cap, is returned and the key then holds nothing. */
+    def put(spark: SparkSession, key: String)(build: => (V, Boolean)): V = {
+      val (v, keep) = counts(spark, name).timed(build)
+      val k = Key(spark, name, key)
+      val w = weigh(v)
+      if (keep && w <= entryCap) admit(k, new Cell(Some(v)), w, replace = true)
+      else synchronized { Option(entries.remove(k)).foreach(release) }
+      v
+    }
+
+    /** Holds `cell` under `k`, then drops the oldest entries until the
+      * family is inside its budget. Without `replace`, a cell is held
+      * only if `k` holds nothing or that cell: a failed build removed it,
+      * and a waiter that then built puts it back unless a newer call has
+      * already made another. */
+    private def admit(k: Key, cell: Cell, w: Long, replace: Boolean): Unit = synchronized {
+      val prev = if (replace) entries.put(k, cell) else entries.putIfAbsent(k, cell)
+      if (replace || prev == null || (prev eq cell)) {
+        if (prev != null && !(prev eq cell)) release(prev)
         order.addLast((k, cell, w))
-        heldBytes += w
-        while (heldBytes > budgetBytes) {
+        held += w
+        while (held > budget) {
           val (ok, oc, ow) = order.removeFirst()
           entries.remove(ok, oc)
-          heldBytes -= ow
+          held -= ow
         }
+      }
+    }
+
+    /** Forgets the weight of a cell that has left `entries`; under `this`. */
+    private def release(cell: Cell): Unit = {
+      val it = order.iterator()
+      while (it.hasNext) {
+        val (_, c, w) = it.next()
+        if (c eq cell) { it.remove(); held -= w }
       }
     }
 
@@ -123,7 +162,7 @@ object SessionMemo {
       val it = order.iterator()
       while (it.hasNext) {
         val (k, _, w) = it.next()
-        if (k.spark eq spark) { it.remove(); heldBytes -= w }
+        if (k.spark eq spark) { it.remove(); held -= w }
       }
     }
   }
@@ -135,13 +174,13 @@ object SessionMemo {
     new Family[V](name)
   }
 
-  /** A new bounded family: at most `budgetBytes` held, oldest dropped
-    * first, and no single value above `entryCapBytes` held. */
-  def bounded[V](name: String, budgetBytes: Long, entryCapBytes: Long)
+  /** A new bounded family: at most `budget` of weight held, oldest
+    * dropped first, and no single value weighing above `entryCap` held. */
+  def bounded[V](name: String, budget: Long, entryCap: Long)
                 (weigh: V => Long): Bounded[V] = {
-    require(entryCapBytes <= budgetBytes, s"$name: entry cap above the budget")
+    require(entryCap <= budget, s"$name: entry cap above the budget")
     declare(name)
-    val b = new Bounded[V](name, budgetBytes, entryCapBytes, weigh)
+    val b = new Bounded[V](name, budget, entryCap, weigh)
     boundedFamilies.add(b)
     b
   }

@@ -557,6 +557,158 @@ class GraftServerSpec extends SparkSpec {
     assert(handleJson(spark, page, Some(2L)) === capped && handleJson(spark, page) === uncapped)
     assert(poolStats(spark).builds === before.builds + 5 && poolStats(spark).hits === before.hits + 2)
   }
+
+  // ---- frame pool: each request analyzes only its own entry ----
+
+  private def frameStats(session: SparkSession = spark) =
+    SessionMemo.stats(session).getOrElse("serverFrames", SessionMemo.Stats(0, 0, 0.0))
+
+  private def schemaCalls(session: SparkSession = spark) = {
+    val st = SessionMemo.stats(session).getOrElse("parquetSchemas", SessionMemo.Stats(0, 0, 0.0))
+    st.builds + st.hits
+  }
+
+  private def countOf(reply: String): Long =
+    Wire.parse(reply).get("count").get("Int").get(0).asLong()
+
+  test("frames: a fresh session of a Read, k Ops and an Action makes k+1 builds and k+1 hits, and replays no earlier entry") {
+    val p = tempDir("frames_session")
+    spark.range(0, 100).selectExpr("id", "id % 5 AS k", "CAST(id AS DOUBLE) * 1.5 AS v")
+      .write.parquet(p)
+    val ops = Seq(
+      """{"Filter": ["k", {"comparator": "GreaterThan", "value": {"Int": 0}}]}""",
+      """{"Select": [{"Source": "id"}, {"Source": "k"}]}""",
+      """{"Filter": ["id", {"comparator": "LessThan", "value": {"Int": 50}}]}""",
+      """{"OrderBy": ["id"]}""")
+    val (before, opened) = (frameStats(), schemaCalls())
+    val last = ops.foldLeft(readParquet(p, handled)) { (state, op) =>
+      callOk(state, s"""{"Op": $op}""", handled)._1
+    }
+    val (_, blocks) = callOk(last, """{"Action": "Count"}""", handled)
+    assert(countOf(blocks) === 40L)
+    val after = frameStats()
+    val k = ops.size
+    assert(after.builds - before.builds === k + 1, after)
+    assert(after.hits - before.hits === k + 1, after)
+    // only the Read opened the parquet source: no request replayed it
+    assert(schemaCalls() - opened === 1)
+  }
+
+  test("frames: a parquet directory, a CSV file and a glob Read changed between two Ops of one session are seen") {
+    val filter = """{"Op": {"Filter": ["id", {"comparator": "GreaterThanOrEq", "value": {"Int": 0}}]}}"""
+    val select = """{"Op": {"Select": [{"Source": "id"}]}}"""
+    def count(state: String) = countOf(callOk(state, """{"Action": "Count"}""")._2)
+
+    val p = tempDir("frames_rewrite")
+    spark.range(0, 10).selectExpr("id").write.parquet(p)
+    val s2 = callOk(readParquet(p), filter)._1
+    assert(count(s2) === 10L)
+    spark.range(0, 25).selectExpr("id").write.mode("overwrite").parquet(p)
+    assert(count(callOk(s2, select)._1) === 25L)
+
+    val csv = tempCsv("frames_rewrite", "1|a|true\n2|b|false\n")
+    val c2 = callOk(readCsv(csv), """{"Op": {"OrderBy": ["int"]}}""")._1
+    assert(count(c2) === 2L)
+    Files.write(csv, "1|a|true\n2|b|false\n3|c|true\n".getBytes(StandardCharsets.UTF_8))
+    val c3 = callOk(c2, """{"Op": {"Select": [{"Source": "int"}]}}""")._1
+    assert(Wire.parse(callOk(c3, """{"Action": "Collect"}""")._2).get("int").toString ===
+      """{"Int":[1,2,3]}""")
+
+    val dir = Files.createTempDirectory("graft_frames_glob")
+    spark.range(0, 10).selectExpr("id").coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    val part = Files.list(dir).iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get
+    val g2 = callOk(readParquet(s"$dir/part-*.parquet"), filter)._1
+    assert(count(g2) === 10L)
+    Files.copy(part, dir.resolve("part-copy.parquet"))
+    assert(count(callOk(g2, select)._1) === 20L)
+  }
+
+  test("frames: 8 threads Op-ing and Acting on one pooled prefix get byte-identical replies") {
+    val p = tempDir("frames_threads")
+    spark.range(0, 200).selectExpr("id", "id % 7 AS k", "CAST(id AS DOUBLE) * 0.5 AS v")
+      .write.parquet(p)
+    val prefix = callOk(callOk(readParquet(p), """{"Op": {"Filter": ["k",
+      |  {"comparator": "LessThan", "value": {"Int": 5}}]}}""".stripMargin)._1,
+      """{"Op": {"OrderBy": ["id"]}}""")._1
+    val op = s"""{"dataframe": $prefix, "function": {"Op": {"Select": [{"Source": "id"},
+      |  {"Alias": ["w", {"Operation": ["Multiply", {"Source": "v"}, {"Source": "k"}]}]}]}}}""".stripMargin
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val got = try {
+      val calls = (1 to 8).map(i => pool.submit(new java.util.concurrent.Callable[(String, String)] {
+        def call(): (String, String) = {
+          start.await()
+          val (st, body) = handleJson(spark, op)
+          assert(st === 201, body)
+          val state = Wire.render(Wire.parse(body).get("dataframe"))
+          // each thread its own row cap: 8 reply-pool keys, so 8 Actions
+          // execute at once over the one pooled prefix
+          val (ast, reply) = handleJson(spark,
+            action(state, """{"CollectPage": {"offset": 0, "limit": 1000}}"""), Some(1000L + i))
+          assert(ast === 201, reply)
+          (body, reply)
+        }
+      }))
+      start.countDown()
+      calls.map(_.get(2, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdown()
+    assert(got.forall(_ === got.head))
+    val ids = Wire.parse(got.head._2).get("blocks").get("id").get("Int")
+    assert(ids.size() === (0 until 200).count(_ % 7 < 5))
+  }
+
+  test("frames: a checkpointed frame and a List-column aggregation frame are not pooled; a DedupExact frame is") {
+    // ConnectedComponents cuts its loop with a checkpoint, so its frame has
+    // no fingerprint; a List column's Sum is an interpreted lambda.
+    // DedupExact is a plan over the files (a semi join), so it is pooled.
+    val edges = tempCsv("frames_edges", "1|2\n2|3\n7|8\n")
+    val edgeSchema = """{"columns": [{"name": "a", "type_": "Int"}, {"name": "b", "type_": "Int"}]}"""
+    val cc = callOk(callOk("null", s"""{"Read": ["csv", "${edges.toAbsolutePath}", $edgeSchema]}""")._1,
+      """{"Op": {"ConnectedComponents": ["a", "b"]}}""")._1
+    val base = "alpha bravo charlie delta echo"
+    val read = readCsv(tempCsv("frames_unpooled", s"1|$base|true\n2|$base|false\n3|other words|true\n"))
+    val grouped = callOk(callOk(read, """{"Op": {"GroupBy": ["bool"]}}""")._1,
+      """{"Op": {"Aggregation": {"int": "Sum", "string": "Count"}}}""")._1
+    val dedup = callOk(read, """{"Op": {"DedupExact": ["int", "string"]}}""")._1
+    def lookups(state: String, rows: Long) = {
+      val before = frameStats()
+      assert(countOf(callOk(state, """{"Action": "Count"}""")._2) === rows)
+      val after = frameStats()
+      (after.builds - before.builds, after.hits - before.hits)
+    }
+    Seq(cc -> 5L, grouped -> 2L).foreach { case (state, rows) =>
+      // looked up and not found: replayed from the files every time
+      assert(lookups(state, rows) === (1L, 0L))
+      assert(lookups(state, rows) === (1L, 0L))
+    }
+    assert(lookups(dedup, 2L) === (0L, 1L))
+  }
+
+  test("frames: the pool evicts its oldest frame at the bound") {
+    val session = spark.newSession()
+    val csv = tempCsv("frames_bound", "1|a|true\n2|b|false\n")
+    def ok(state: String, fn: String) = {
+      val (st, body) = handleJson(session, s"""{"dataframe": $state, "function": $fn}""")
+      assert(st === 201, body)
+      Wire.render(Wire.parse(body).get("dataframe"))
+    }
+    val read = ok("null", s"""{"Read": ["csv", "${csv.toAbsolutePath}", $schemaJson]}""")
+    def filtered(i: Long) = ok(read,
+      s"""{"Op": {"Filter": ["int", {"comparator": "LessThan", "value": {"Int": $i}}]}}""")
+    val oldest = filtered(0)
+    (1L until GraftServer.FrameBudget - 1).foreach(filtered)
+    // the pool is full: the Read, then FrameBudget - 1 filters
+    def looked(state: String) = {
+      val before = frameStats(session)
+      ok(state, """{"Action": "Count"}""")
+      val after = frameStats(session)
+      (after.builds - before.builds, after.hits - before.hits)
+    }
+    assert(looked(oldest) === (0L, 1L))
+    filtered(GraftServer.FrameBudget - 1) // one more: the Read, the oldest, leaves
+    assert(looked(oldest) === (0L, 1L))
+    assert(looked(read) === (1L, 0L))
+  }
 }
 
 /** Starts the server, serves one request, stops the server and the

@@ -95,7 +95,7 @@ class SessionMemoSpec extends SparkSpec {
   }
 
   test("bounded: the byte budget drops the oldest entries first, and an over-cap value is served but not held") {
-    val memo = SessionMemo.bounded[String]("spec.bounded", budgetBytes = 10, entryCapBytes = 4)(
+    val memo = SessionMemo.bounded[String]("spec.bounded", budget = 10, entryCap = 4)(
       _.length.toLong)
     val builds = new AtomicInteger
     def read(key: String, value: String, keep: Boolean = true) =
@@ -124,6 +124,34 @@ class SessionMemoSpec extends SparkSpec {
     assert(read("d", "ddd") === "ddd")
     assert(memo.get(spark, "b") === None)
     assert(Seq("c", "thrown", "d").map(memo.get(spark, _)) === Seq(Some("ccc"), Some("t"), Some("ddd")))
+  }
+
+  test("bounded fresh: a valid held value is a hit, a stale one is rebuilt and replaced, and put replaces") {
+    val memo = SessionMemo.bounded[(String, Int)]("spec.bounded.fresh", budget = 2, entryCap = 1)(_ => 1L)
+    val builds = new AtomicInteger
+    var version = 1
+    def read(key: String, keep: Boolean = true) =
+      memo.fresh(spark, key)(_._2 == version) { builds.incrementAndGet(); ((key, version), keep) }
+    assert(read("a") === ("a", 1) && read("a") === ("a", 1))
+    assert(builds.get === 1)
+    version = 2 // the input changed: the held value is stale
+    assert(read("a") === ("a", 2) && memo.get(spark, "a") === Some(("a", 2)))
+    assert(read("a") === ("a", 2) && builds.get === 2)
+    // a rebuilt value its build declines is returned, and the stale one leaves
+    version = 3
+    assert(read("a", keep = false) === ("a", 3))
+    assert(memo.get(spark, "a") === None && builds.get === 3)
+    // put always builds, and replaces without growing the family
+    assert(memo.put(spark, "b")((("b", 0), true)) === ("b", 0))
+    assert(memo.put(spark, "b")((("b", 3), true)) === ("b", 3))
+    assert(read("b") === ("b", 3) && builds.get === 3)
+    assert(read("c") === ("c", 3))
+    assert(memo.get(spark, "b").isDefined && memo.get(spark, "c").isDefined)
+    // the budget holds two: a third key drops the oldest, b
+    assert(read("d") === ("d", 3))
+    assert(memo.get(spark, "b") === None && memo.get(spark, "c").isDefined)
+    val st = SessionMemo.stats(spark)("spec.bounded.fresh")
+    assert(st.builds === 7 && st.hits === 3, st)
   }
 
   test("session stop: entries leave with their session, and a new session builds again") {

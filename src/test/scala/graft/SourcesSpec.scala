@@ -98,6 +98,26 @@ class SourcesSpec extends SparkSpec {
     assert(dropped.count() === 2L)
   }
 
+  test("fingerprint: a fresh listing equals the plan's own, changes on a rewrite, and leaves the plan's file index untouched") {
+    val dir = Files.createTempDirectory("graft_fp").resolve("t.parquet").toString
+    spark.range(0, 10).selectExpr("id").write.parquet(dir)
+    val df = Sources.parquet(spark, dir).df
+    val index = df.queryExecution.analyzed.collectFirst {
+      case org.apache.spark.sql.execution.datasources.LogicalRelation(
+        fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _, _, _, _) => fs.location
+    }.get
+    val listed = index.inputFiles.toSeq
+    val own = Sources.fingerprintOf(df)
+    assert(own.isDefined && Sources.fingerprintOf(df, relist = true) === own)
+    spark.range(0, 25).selectExpr("id").write.mode("overwrite").parquet(dir)
+    val fresh = Sources.fingerprintOf(df, relist = true)
+    assert(fresh.isDefined && fresh != own)
+    // the plan keeps the listing it was opened with
+    assert(Sources.fingerprintOf(df) === own)
+    assert(index.inputFiles.toSeq === listed)
+    assert(Sources.fingerprintOf(spark.read.parquet(dir)) === fresh)
+  }
+
   test("q156 compaction: bin-packs fragmented files to ceil(bytes/target) and preserves rows") {
     val base = graft.util.TempDirs.scratch("graft_compact_spec")
     val src = spark.read.parquet(s"$sf/lineitem.parquet")

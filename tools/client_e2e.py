@@ -2,15 +2,16 @@
 server (tools/run.sh graft.server.GraftServer) on a free port, drives
 it with the stdlib client DSL (tools/client.py), and asserts results.
 
-Run from /root/repo after `sbt compile`:
+Run from the repository root after `sbt compile`:
 
     python3 tools/client_e2e.py [sf_dir]
 
 Covers the reference client's canonical flows (client.py:248-331):
 example_small (filter/select/aggregate/collect), arithmetic select
 with alias + float constant, group_by nesting, join, order_by,
-count/take, the parquet read, the 400 error surface, and the reply
-pool (a repeated Collect, then one after its CSV is rewritten).
+count/take, the parquet read, the 400 error surface, the reply pool
+(a repeated Collect, then one after its CSV is rewritten) and the frame
+pool (a CSV rewritten between two Ops of one session).
 """
 
 import os
@@ -257,6 +258,15 @@ def run_checks():
     rewritten = sorted_small.collect()
     assert rewritten['int'] == {'Int': [1, 2, 3, 4, 5]}, rewritten
     assert rewritten['string']['String'][-1] == 'five', rewritten
+
+    # --- frame pool: a CSV rewritten between two Ops of one session is
+    # seen by the next Action (the pooled prefix is replanned) ---
+    kept = small.filter('int', Predicate(Comparator.GREATER_THAN, Value(1)))
+    assert kept.count() == {'count': {'Int': [4]}}
+    with open(csv_path, 'a') as f:
+        f.write('6|six|false\n')
+    later = kept.select([c('int')]).order_by(['int']).collect()
+    assert later['int'] == {'Int': [2, 3, 4, 5, 6]}, later
 
     os.unlink(csv_path)
 
