@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Events.ev
 
 /** Beyond-reference analytics over the `events` table (SURVEY.md §2.8,
   * §2.10 — the reference has no window machinery at all): ranking /
@@ -19,11 +20,6 @@ import org.apache.spark.sql.types._
   */
 object Analytics {
   private val DV = DecimalType(20, 6) // events.value is ≤6-decimal clean
-
-  /** Shared encoding-aware events reader — `ts` is TIMESTAMP_LTZ
-    * whatever the file's physical encoding (see [[graft.sources.Events]]). */
-  private def ev(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Events.ev(spark, dir)
 
   /** Deterministic per-user event order: ts then unique event_id. */
   private val wUser = Window.partitionBy(col("user_id"))

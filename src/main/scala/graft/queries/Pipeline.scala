@@ -3620,17 +3620,9 @@ object Pipeline {
   // the oracle UNROLLS the identical three rounds (q123's CTE shape
   // minus the degree frame) and compares bit-for-bit.
   // -------------------------------------------------------------------
-  def q283Katz(spark: SparkSession, dir: String): DataFrame = {
-    val o = spark.read.parquet(s"$dir/orders.parquet")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val l = spark.read.parquet(s"$dir/lineitem.parquet")
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val fwd = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-    Graph.katzFixed(edges, "src", "dst", iters = 3)
+  def q283Katz(spark: SparkSession, dir: String): DataFrame =
+    Graph.katzFixed(tradeEdges(spark, dir), "src", "dst", iters = 3)
       .orderBy(asc("id"))
-  }
   val q283Sql: String =
     """WITH fwd AS (
       |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
@@ -3910,18 +3902,9 @@ object Pipeline {
   // (pre-scale w div g for a common g if it ever tightens).
   // -------------------------------------------------------------------
   def q184WeightedPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val d2 = org.apache.spark.sql.types.DecimalType(12, 2)
-    val o = spark.read.parquet(s"$dir/orders.parquet")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val l = spark.read.parquet(s"$dir/lineitem.parquet")
-      .select(col("l_orderkey"), col("l_suppkey"),
-        (col("l_extendedprice").cast(d2) * 100).cast("long").as("cents"))
-    val fwd = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"), col("cents"))
-    val edges = fwd.union(fwd.select(col("dst").as("src"),
-      col("src").as("dst"), col("cents")))
-    Graph.pageRankWeightedFixed(edges, "src", "dst", "cents", iters = 3)
+    val fwd = tradeRelWOf(spark, dir)
+    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+    Graph.pageRankWeightedFixed(edges, "src", "dst", "w", iters = 3)
       .orderBy(asc("id"))
   }
   val q184Sql: String =
@@ -4066,6 +4049,9 @@ object Pipeline {
   // (historical probe: the rel build is ~5.6 s of q208's ~5 s fused fresh
   // at sf0.1), and groupBy(src, dst) emits exactly the distinct pair
   // set the unweighted consumers read, so ONE shuffle serves both.
+  // q283 (Katz takes the distinct edges), q184 (weighted PageRank sums
+  // duplicate pairs) and q197/q232 ((cust, supp, cents) through
+  // tradeRelOf) read it as well instead of rebuilding the join.
   private val tradeRelWMemo = SessionMemo.family[DataFrame]("tradeRelWOf")
   private def tradeRelWOf(spark: SparkSession, dir: String): DataFrame =
     tradeRelWMemo(spark, dir) {
@@ -4081,6 +4067,10 @@ object Pipeline {
           .cast("long")).as("w"))
         .localCheckpoint(true)
     }
+  /** [[tradeRelWOf]] keyed by the TPC-H ids: (cust, supp, cents). */
+  private def tradeRelOf(spark: SparkSession, dir: String): DataFrame =
+    tradeRelWOf(spark, dir).select(expr("src div 2").as("cust"),
+      expr("dst div 2").as("supp"), col("w").as("cents"))
   private def tradeFwdOf(spark: SparkSession, dir: String): DataFrame =
     tradeRelWOf(spark, dir).select(col("src"), col("dst"))
   private def tradeEdges(spark: SparkSession, dir: String): DataFrame = {
@@ -5466,13 +5456,7 @@ object Pipeline {
   // all-int64 fixed-point, bit-replayable.
   // -------------------------------------------------------------------
   def q197LinkPrediction(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val o = spark.read.parquet(s"$dir/orders.parquet")
-    val l = spark.read.parquet(s"$dir/lineitem.parquet")
-    val rel = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .agg(sum((col("l_extendedprice").cast(DecimalType(12, 2)) * 100)
-        .cast("long")).as("cents"))
+    val rel = tradeRelOf(spark, dir)
     val deg = rel.groupBy(col("cust")).agg(count(lit(1)).as("deg"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("supp")).orderBy(desc("cents"), asc("cust"))
@@ -5538,13 +5522,7 @@ object Pipeline {
   // are true. All-int64 bit-replay oracle, top-100.
   // -------------------------------------------------------------------
   def q232RaLinkPrediction(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val o = spark.read.parquet(s"$dir/orders.parquet")
-    val l = spark.read.parquet(s"$dir/lineitem.parquet")
-    val rel = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .agg(sum((col("l_extendedprice").cast(DecimalType(12, 2)) * 100)
-        .cast("long")).as("cents"))
+    val rel = tradeRelOf(spark, dir)
     val sdeg = rel.groupBy(col("supp")).agg(count(lit(1)).as("sdeg"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("supp")).orderBy(desc("cents"), asc("cust"))

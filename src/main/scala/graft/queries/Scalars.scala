@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
+import graft.sources.Events.ev
 
 /** Scalar-function and set-operation coverage: the reference has NO
   * scalar function library (SURVEY §2.9 — 4 arithmetic ops only) and
@@ -10,9 +11,6 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   * pins the exact cross-engine semantics with a DuckDB oracle.
   */
 object Scalars {
-
-  private def ev(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Events.ev(spark, dir)
 
   // -------------------------------------------------------------------
   // q44: sliding time windows (1h window, 15m slide → each event in 4

@@ -486,9 +486,8 @@ object Stats {
   // the data, map-only verdicts, one final partial-agged count.
   // -------------------------------------------------------------------
   def q130Outliers(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val d19 = DecimalType(19, 0)
-    val base = spark.read.parquet(s"$dir/events.parquet")
+    val base = graft.sources.Events.ev(spark, dir)
       .select(col("event_type"),
         (col("value").cast(DecimalType(18, 6)) * 1000000).cast("long").as("v"))
     val stats = base.groupBy(col("event_type")).agg(

@@ -4,15 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.operators.TemporalJoins
+import graft.sources.Events.ev
 
 /** Temporal join queries — operators Spark lacks as built-ins, built
   * by composition (graft.operators.TemporalJoins) and oracled against
   * DuckDB's native ASOF / inequality joins.
   */
 object Temporal {
-
-  private def ev(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Events.ev(spark, dir)
 
   // -------------------------------------------------------------------
   // q40: as-of join — for each purchase, the latest prior (or

@@ -54,31 +54,27 @@ object Events {
     normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
   }
 
-  /** The events schema as the file actually encodes it — probed from
-    * the batch footer, never hard-coded (the round-4 streaming bug was
-    * a hard-coded nanos schema silently misreading micros). */
-  def fileSchema(spark: SparkSession, dir: String): StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet").schema
-  }
-
-  /** Streaming read of the events table, `ts` normalized to LTZ.
-    * Handles BOTH physical layouts: the driver testdata ships
-    * `events.parquet` as a single FILE next to the other tables (the
-    * file source needs a directory, so we list `dir` glob-filtered to
-    * that name), while Spark-written stress/fixture data is an
-    * `events.parquet/` DIRECTORY of part files (glob-filtering by the
+  /** Streaming read of the table `<dir>/<table>.parquet`, its schema
+    * probed from the batch footer — never hard-coded (the round-4
+    * streaming bug was a hard-coded nanos schema silently misreading
+    * micros). Handles BOTH physical layouts: the generated testdata
+    * keeps each table as a single FILE next to the other tables (the file
+    * source needs a directory, so we list `dir` glob-filtered to that
+    * name), while Spark-written stress/fixture data is a
+    * `<table>.parquet/` DIRECTORY of part files (glob-filtering by the
     * directory name would match ZERO leaf files — stream the directory
     * itself instead). */
+  def readStream(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    val schema = spark.read.parquet(path).schema
+    if (new java.io.File(path).isDirectory) spark.readStream.schema(schema).parquet(path)
+    else spark.readStream.schema(schema).option("pathGlobFilter", s"$table.parquet").parquet(dir)
+  }
+
+  /** Streaming read of the events table, `ts` normalized to LTZ (the
+    * nanosAsLong conf as in [[ev]]). */
   def readStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = fileSchema(spark, dir)
-    val src =
-      if (new java.io.File(s"$dir/events.parquet").isDirectory)
-        spark.readStream.schema(schema).parquet(s"$dir/events.parquet")
-      else
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir)
-    normalizeTs(src)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    normalizeTs(readStream(spark, dir, "events"))
   }
 }

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.sources.Events
 
 /** Structured Streaming over the events table — beyond-reference
   * (the reference is batch-only, SURVEY.md §2.10).
@@ -14,22 +15,29 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the state store (RocksDB-capable at scale), so an unbounded stream
   * runs in bounded memory on a 1000-executor cluster.
   *
-  * Sink discipline (the round-5 verdict's last scale item): NO query in
-  * this file drains through a `memory` sink. Per-row (append-mode)
-  * output goes through [[appendSinkDrain]] — a distributed parquet sink
-  * with checkpoint — and Complete-mode aggregates go through
-  * [[completeSinkDrain]] — a versioned foreachBatch parquet write. In
-  * both cases the driver only ever sees file paths, never rows, so the
-  * drain shape is |cluster|-bounded at any |users|.
+  * Sink discipline: NO query in this file drains through a `memory`
+  * sink, and every query drains through one of two drains:
+  *  - [[appendSinkDrain]]: per-row (append-mode) output through a
+  *    distributed parquet sink with a checkpoint;
+  *  - [[versionedSinkDrain]]: a `foreachBatch` parquet write of
+  *    `merge(batch, previous version)` into a fresh `v<batchId>`
+  *    directory, dropping the superseded version — Complete-mode
+  *    aggregates (merge = the batch), keyed Update-mode state (merge =
+  *    key upsert, q39) and event-time CDC (merge = latest row per key,
+  *    q87).
+  * In both the driver only ever sees file paths, never rows, so the
+  * drain shape is |cluster|-bounded at any |users|. A drain's `feed`
+  * (default: drain everything the source holds) is the one thing a
+  * spec changes, so the multi-batch specs run the production drains.
+  *
+  * Schema rule: no schema is hard-coded — a stale schema silently
+  * misreads a regenerated file. Sources take theirs from the batch
+  * footer ([[graft.sources.Events.readStream]]), and both drains read
+  * their output back with the stream's own schema, so a drain that
+  * committed nothing returns an empty frame with the same schema a
+  * non-empty one has.
   */
 object EventStreams {
-
-  /** Streaming events source: schema probed from the batch footer
-    * (never hard-coded — a stale schema silently misreads a
-    * regenerated file), `ts` normalized to TIMESTAMP_LTZ by the shared
-    * [[graft.sources.Events]] reader. */
-  private def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Events.readStream(spark, dir)
 
   /** Cloned session for streaming drains. State-store partition count =
     * `spark.sql.shuffle.partitions` at query start, and 8 cuts
@@ -46,61 +54,61 @@ object EventStreams {
     s
   }
 
+  /** The default `feed` of both drains: run until the source is
+    * exhausted. */
+  private val drainAll: StreamingQuery => Unit = _.processAllAvailable()
+
   /** Drain an APPEND-mode stream through a distributed parquet sink +
-    * checkpoint and read the committed rows back — the q151 recipe,
-    * shared. A `memory` sink here is |rows|-proportional DRIVER state
-    * (the round-3 q39 bug, judged `weak` again in round 5 for
-    * q64/q133/q56): at 10^9 users that is an OOM, while the parquet
-    * sink is executor-parallel and exactly-once under the checkpoint.
-    * Zero committed part files (a smoke dataset that emits nothing) →
-    * an explicitly-schemaed empty frame, because `spark.read.parquet`
-    * on an empty sink directory throws 'Unable to infer schema'. */
-  private def appendSinkDrain(rows: DataFrame, prefix: String,
-      emptySchema: StructType): DataFrame = {
-    val spark = rows.sparkSession
+    * checkpoint and read the committed rows back. A `memory` sink here
+    * is |rows|-proportional DRIVER state (the round-3 q39 bug, judged
+    * `weak` again in round 5 for q64/q133/q56): at 10^9 users that is
+    * an OOM, while the parquet sink is executor-parallel and
+    * exactly-once under the checkpoint. The read-back lists the files
+    * the sink's metadata log committed and takes the stream's own
+    * schema, so a sink that committed nothing reads back as no rows
+    * with that schema (inferring it would throw 'Unable to infer
+    * schema'). */
+  def appendSinkDrain(rows: DataFrame, prefix: String)(
+      feed: StreamingQuery => Unit = drainAll): DataFrame = {
     val target = graft.util.TempDirs.scratch(prefix)
     val q = rows.writeStream.outputMode(OutputMode.Append())
       .format("parquet")
       .option("path", s"$target/out")
       .option("checkpointLocation", s"$target/ckpt")
       .start()
-    try q.processAllAvailable() finally q.stop()
-    val outDir = new java.io.File(s"$target/out")
-    val hasRows = Option(outDir.listFiles())
-      .exists(_.exists(_.getName.endsWith(".parquet")))
-    if (hasRows) spark.read.parquet(s"$target/out")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
+    try feed(q) finally q.stop()
+    rows.sparkSession.read.schema(rows.schema).parquet(s"$target/out")
   }
 
-  /** Drain a COMPLETE-mode aggregate through a versioned foreachBatch
-    * parquet sink: each trigger's batch IS the full current aggregate —
-    * bounded by the GROUPING keyspace (#windows × #types / #segments),
-    * not |events| — written whole to a fresh `v<batchId>` directory
-    * (replay after a crash rewrites the same version: idempotent), with
-    * the superseded version dropped so a long-running stream holds at
-    * most one extra snapshot. The result is the last version read back;
-    * aggregate rows ride executors and disk, never the driver. */
-  private def completeSinkDrain(agg: DataFrame, prefix: String,
-      emptySchema: StructType): DataFrame = {
-    val spark = agg.sparkSession
+  /** Drain a stream through a versioned foreachBatch parquet sink: each
+    * trigger writes `merge(batch, previous version)` whole to a fresh
+    * `v<batchId>` directory — the read-modify-write never clobbers the
+    * files it reads, and replay after a crash rewrites the same version
+    * (idempotent, the foreachBatch exactly-once recipe) — and drops the
+    * superseded version, so a long-running stream holds at most one
+    * extra snapshot. The result is the last version read back with
+    * the stream's own schema — an empty version directory when no
+    * batch committed; rows ride executors and disk, never the driver. */
+  def versionedSinkDrain(stream: DataFrame, prefix: String, mode: OutputMode)(
+      merge: (DataFrame, Option[DataFrame]) => DataFrame)(
+      feed: StreamingQuery => Unit = drainAll): DataFrame = {
     val target = graft.util.TempDirs.scratch(prefix)
     @volatile var cur: Option[String] = None
-    val q = agg.writeStream.outputMode(OutputMode.Complete())
+    val q = stream.writeStream.outputMode(mode)
       .option("checkpointLocation", s"$target/ckpt")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val path = s"$target/v$batchId"
-        batch.write.mode("overwrite").parquet(path)
+        merge(batch, cur.map(batch.sparkSession.read.parquet(_)))
+          .write.mode("overwrite").parquet(path)
         val prev = cur
         cur = Some(path)
         prev.foreach(p => graft.util.TempDirs.deleteRecursively(new java.io.File(p)))
         ()
       }
       .start()
-    try q.processAllAvailable() finally q.stop()
-    cur.map(spark.read.parquet(_)).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema))
+    try feed(q) finally q.stop()
+    val last = cur.getOrElse { val v = s"$target/v-1"; new java.io.File(v).mkdirs(); v }
+    stream.sparkSession.read.schema(stream.schema).parquet(last)
   }
 
   /** Tumbling 1-hour windowed aggregation with a 2-hour watermark —
@@ -118,18 +126,14 @@ object EventStreams {
   /** Run the streaming hourly rollup synchronously over the batch
     * parquet and return the final result — lets the correctness gate
     * exercise the real streaming engine. Complete mode, so the sink is
-    * the versioned [[completeSinkDrain]]: state per (window, type) in
+    * the [[versionedSinkDrain]]: state per (window, type) in
     * the state store, aggregate snapshots on disk, nothing driver-side.
     */
   def hourlyRollupBatchDriven(spark: SparkSession, dir: String): DataFrame =
-    completeSinkDrain(
-      hourlyRollup(readEventStream(streamSession(spark), dir)),
+    versionedSinkDrain(
+      hourlyRollup(Events.readStream(streamSession(spark), dir)),
       "graft_stream_hourly",
-      StructType(Seq(
-        StructField("hour", TimestampType),
-        StructField("event_type", StringType),
-        StructField("n_events", LongType),
-        StructField("sum_value", DoubleType))))
+      OutputMode.Complete())((batch, _) => batch)()
       .orderBy(asc("hour"), asc("event_type"))
 
   /** Sliding-window streaming rollup (1 h window, 15 min slide —
@@ -139,8 +143,8 @@ object EventStreams {
     * query (q44) exactly, which is the oracle.
     */
   def slidingRollupBatchDriven(spark: SparkSession, dir: String): DataFrame =
-    completeSinkDrain(
-      readEventStream(streamSession(spark), dir)
+    versionedSinkDrain(
+      Events.readStream(streamSession(spark), dir)
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
         .agg(
@@ -149,11 +153,7 @@ object EventStreams {
         .select(col("window.start").as("w_start"), col("event_type"),
           col("n_events"), col("sum_value")),
       "graft_stream_sliding",
-      StructType(Seq(
-        StructField("w_start", TimestampType),
-        StructField("event_type", StringType),
-        StructField("n_events", LongType),
-        StructField("sum_value", DoubleType))))
+      OutputMode.Complete())((batch, _) => batch)()
       .orderBy(asc("w_start"), asc("event_type"))
 
   /** Streaming QUANTILES — the mergeable t-digest aggregate
@@ -173,19 +173,13 @@ object EventStreams {
     */
   def streamingQuantilesBatchDriven(spark: SparkSession, dir: String): DataFrame =
     appendSinkDrain(
-      readEventStream(streamSession(spark), dir)
+      Events.readStream(streamSession(spark), dir)
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "7 days"), col("event_type"))
         .agg(graft.functions.SketchFunctions
           .tdigest_quantiles(col("value"), 100, Seq(0.5, 0.9, 0.99)).as("qs"))
         .select(col("window.start").as("w_start"), col("event_type"), col("qs")),
-      "graft_stream_quant",
-      StructType(Seq(
-        StructField("w_start", TimestampType),
-        StructField("event_type", StringType),
-        StructField("qs", ArrayType(StructType(Seq(
-          StructField("q", DoubleType, nullable = false),
-          StructField("est", DoubleType, nullable = false))), containsNull = false)))))
+      "graft_stream_quant")()
       .select(col("w_start"), col("event_type"), explode(col("qs")).as("e"))
       .select(col("w_start"), col("event_type"),
         col("e.q").as("q"), col("e.est").as("est"))
@@ -212,19 +206,13 @@ object EventStreams {
     */
   def streamingHeavyHittersBatchDriven(spark: SparkSession, dir: String): DataFrame =
     appendSinkDrain(
-      readEventStream(streamSession(spark), dir)
+      Events.readStream(streamSession(spark), dir)
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "7 days"))
         .agg(graft.functions.SketchFunctions
           .space_saving_topk(col("user_id").cast("string"), 10, 32768).as("top"))
         .select(col("window.start").as("w_start"), col("top")),
-      "graft_stream_hh",
-      StructType(Seq(
-        StructField("w_start", TimestampType),
-        StructField("top", ArrayType(StructType(Seq(
-          StructField("key", StringType, nullable = false),
-          StructField("cnt", LongType, nullable = false),
-          StructField("err", LongType, nullable = false))), containsNull = false)))))
+      "graft_stream_hh")()
       .select(col("w_start"), explode(col("top")).as("e"))
       .select(col("w_start"), col("e.key").as("user_key"), col("e.cnt").as("n"))
       .orderBy(asc("w_start"), desc("n"), asc("user_key"))
@@ -258,7 +246,7 @@ object EventStreams {
     val h = conv(substring(md5(col("user_id").cast("string").cast("binary")), 1, 15),
       16, 10).cast("long")
     appendSinkDrain(
-      readEventStream(streamSession(spark), dir)
+      Events.readStream(streamSession(spark), dir)
         .withWatermark("ts", "2 hours")
         .select(col("ts"), h.as("h"))
         .groupBy(window(col("ts"), "7 days"))
@@ -269,10 +257,7 @@ object EventStreams {
               * lit(1152921504606846976.0)   // 2^60 hash domain
               / element_at(col("sk"), k).cast("double")).cast("long"))
             .as("n_users")),
-      "graft_stream_distinct",
-      StructType(Seq(
-        StructField("w_start", TimestampType),
-        StructField("n_users", LongType))))
+      "graft_stream_distinct")()
       .orderBy(asc("w_start"))
   }
 
@@ -300,16 +285,13 @@ object EventStreams {
       graft.operators.Curation.portableHash(col("event_id"), 91L))
     val packed = (u % lit(1073741824L)) * lit(8589934592L) + col("event_id")
     val drained = appendSinkDrain(
-      readEventStream(streamSession(spark), dir)
+      Events.readStream(streamSession(spark), dir)
         .withWatermark("ts", "2 hours")
         .select(col("ts"), packed.as("pk"))
         .groupBy(window(col("ts"), "7 days"))
         .agg(graft.functions.SketchFunctions.kmv_agg(col("pk"), k).as("sk"))
         .select(col("window.start").as("w_start"), col("sk")),
-      "graft_stream_sample",
-      StructType(Seq(
-        StructField("w_start", TimestampType),
-        StructField("sk", ArrayType(LongType, containsNull = false)))))
+      "graft_stream_sample")()
     drained.select(col("w_start"), posexplode(col("sk")))
       .select(col("w_start"), (col("pos") + 1).cast("long").as("rank"),
         pmod(col("col"), lit(8589934592L)).as("event_id"))
@@ -336,18 +318,14 @@ object EventStreams {
     */
   def streamingDriftBatchDriven(spark: SparkSession, dir: String): DataFrame = {
     val counts = appendSinkDrain(
-      readEventStream(streamSession(spark), dir)
+      Events.readStream(streamSession(spark), dir)
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "7 days"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("w_start"), col("event_type"), col("n")),
-      "graft_stream_drift",
-      StructType(Seq(
-        StructField("w_start", TimestampType),
-        StructField("event_type", StringType),
-        StructField("n", LongType))))
+      "graft_stream_drift")()
     // frozen reference profile: full-corpus type mix (model-sized)
-    val ref = graft.sources.Events.ev(spark, dir)
+    val ref = Events.ev(spark, dir)
       .groupBy(col("event_type")).agg(count(lit(1)).as("ref_n"))
     val refT = ref.agg(sum(col("ref_n")).cast("long").as("ref_t"))
     val wtot = org.apache.spark.sql.expressions.Window.partitionBy(col("w_start"))
@@ -379,7 +357,7 @@ object EventStreams {
     */
   def sessionRollupBatchDriven(spark: SparkSession, dir: String): DataFrame =
     appendSinkDrain(
-      readEventStream(streamSession(spark), dir)
+      Events.readStream(streamSession(spark), dir)
         .withWatermark("ts", "2 hours")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("n_events"),
@@ -387,12 +365,7 @@ object EventStreams {
             .as("session_value"))
         .select(col("user_id"), col("session_window.start").as("session_start"),
           col("n_events"), col("session_value")),
-      "graft_stream_session",
-      StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("session_start", TimestampType),
-        StructField("n_events", LongType),
-        StructField("session_value", DoubleType))))
+      "graft_stream_session")()
       .orderBy(asc("user_id"), asc("session_start"))
 
   /** Streaming deduplication — the ingest-dedup stage of a training
@@ -417,37 +390,17 @@ object EventStreams {
     */
   def streamingDedup(spark: SparkSession, dir: String): DataFrame =
     appendSinkDrain(
-      readEventStream(streamSession(spark), dir)
+      Events.readStream(streamSession(spark), dir)
         .withWatermark("ts", "24 hours")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type")),
-      "graft_stream_dedup",
-      StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("event_type", StringType))))
+      "graft_stream_dedup")()
       // summarize the surviving records: distinct users per type
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_uniq"))
       .orderBy(asc("event_type"))
 
-  /** Per-user running session state via mapGroupsWithState: counts
-    * events per user — demonstrates arbitrary stateful streaming.
-    * Returns the final per-user state after draining the (bounded)
-    * stream.
-    *
-    * Sink semantics: Update-mode emissions are UPSERTS — each emitted
-    * row replaces the sink's row for that key. The sink is a keyed,
-    * VERSIONED parquet target merged per micro-batch (the q87
-    * streamingUpsert recipe): each batch anti-joins the base on the
-    * key, unions the batch's emissions, and writes a fresh version
-    * directory — a batch replayed after a crash rewrites the same
-    * version (idempotent), and NO micro-batch ever lands on the
-    * driver. State in the state store stays timeout-bounded; the sink
-    * is |users|-sized ON DISK, not in driver memory — at 100 TB the
-    * file swap hands off to a lakehouse MERGE, same shape.
-    * (Round 3 shipped a driver-side ConcurrentHashMap here — correct
-    * at 150 users, a driver OOM at 10^9; judged `weak`, now removed.)
-    */
+  /** Per-user state of [[statefulUserCounts]]. */
   case class UserAgg(user_id: Long, n_events: Long, total_value: Double)
 
   /** Per-user buffer for [[streamingAsofEnrich]]: clicks and
@@ -458,10 +411,26 @@ object EventStreams {
     * window), not O(history). */
   case class AsofBuf(clicks: Seq[(Long, Long)], purchases: Seq[(Long, Long)])
 
+  /** Per-user running session state via mapGroupsWithState: counts
+    * events per user — demonstrates arbitrary stateful streaming.
+    * Returns the final per-user state after draining the (bounded)
+    * stream.
+    *
+    * Sink semantics: Update-mode emissions are UPSERTS — each emitted
+    * row replaces the sink's row for that key. mapGroupsWithState emits
+    * at most one row per group per batch, so the [[versionedSinkDrain]]
+    * merge is a pure key upsert: base rows not re-emitted survive,
+    * emitted keys take the batch row — and NO micro-batch ever lands on
+    * the driver. State in the state store stays timeout-bounded; the
+    * sink is |users|-sized ON DISK, not in driver memory — at 100 TB
+    * the file swap hands off to a lakehouse MERGE, same shape.
+    * (Round 3 shipped a driver-side ConcurrentHashMap here — correct
+    * at 150 users, a driver OOM at 10^9; judged `weak`, now removed.)
+    */
   def statefulUserCounts(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamSession(spark)
     import ss.implicits._
-    val events = readEventStream(ss, dir)
+    val events = Events.readStream(ss, dir)
       .select(col("user_id"), col("value"))
       .as[(Long, Double)]
 
@@ -479,39 +448,10 @@ object EventStreams {
           state.update(UserAgg(user, n, v))
           (user, n)
       }
-
-    // keyed versioned file sink: mapGroupsWithState emits at most one
-    // row per group per batch, so the merge is a pure key upsert —
-    // base rows not re-emitted survive, emitted keys take the batch row
-    val target = graft.util.TempDirs.scratch("graft_stream_stateful")
-    @volatile var cur: Option[String] = None
-    val q = updated.toDF("user_id", "n_events")
-      .writeStream.outputMode(OutputMode.Update())
-      .option("checkpointLocation", s"$target/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val merged = cur match {
-          case Some(p) =>
-            s.read.parquet(p)
-              .join(batch, Seq("user_id"), "left_anti")
-              .unionByName(batch)
-          case None => batch
-        }
-        val path = s"$target/v$batchId"
-        merged.write.mode("overwrite").parquet(path)
-        val prev = cur
-        cur = Some(path)
-        // superseded snapshot fully folded into `path` — drop it so a
-        // long-running stream holds at most one extra version
-        prev.foreach(p => graft.util.TempDirs.deleteRecursively(new java.io.File(p)))
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // zero-batch stream: explicitly-schemaed empty frame
-    cur.map(ss.read.parquet(_)).getOrElse(
-        ss.createDataFrame(ss.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("user_id", LongType), StructField("n_events", LongType)))))
+    versionedSinkDrain(updated.toDF("user_id", "n_events"), "graft_stream_stateful",
+        OutputMode.Update()) { (batch, base) =>
+      base.fold(batch)(_.join(batch, Seq("user_id"), "left_anti").unionByName(batch))
+    }()
       .orderBy(asc("user_id"))
   }
 
@@ -522,25 +462,21 @@ object EventStreams {
     * needed on the dimension), so an unbounded stream enriches at
     * scan speed and dimension updates between batches are picked up.
     * Aggregated per (segment, event_type) in Complete mode through the
-    * versioned [[completeSinkDrain]].
+    * [[versionedSinkDrain]].
     */
   def enrichedSegmentRollup(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamSession(spark)
     val cust = ss.read.parquet(s"$dir/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
-    completeSinkDrain(
-      readEventStream(ss, dir)
+    versionedSinkDrain(
+      Events.readStream(ss, dir)
         .join(broadcast(cust), col("user_id") === col("c_custkey"))
         .groupBy(col("c_mktsegment"), col("event_type"))
         .agg(
           count(lit(1)).as("n_events"),
           sum(col("value").cast(DecimalType(20, 6))).cast("double").as("sum_value")),
       "graft_stream_enrich",
-      StructType(Seq(
-        StructField("c_mktsegment", StringType),
-        StructField("event_type", StringType),
-        StructField("n_events", LongType),
-        StructField("sum_value", DoubleType))))
+      OutputMode.Complete())((batch, _) => batch)()
       .orderBy(asc("c_mktsegment"), asc("event_type"))
   }
 
@@ -570,19 +506,10 @@ object EventStreams {
     * (EventTimeTimeout at the earliest held purchase), so emission
     * needs no data to arrive. APPEND mode, distributed parquet drain.
     */
-  def streamingAsofEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamSession(spark)
-    appendSinkDrain(
-      asofEnrichStream(readEventStream(ss, dir)),
-      "graft_stream_asof",
-      StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("p_id", LongType),
-        StructField("p_ts_us", LongType),
-        StructField("c_ts_us", LongType),
-        StructField("gap_us", LongType))))
+  def streamingAsofEnrich(spark: SparkSession, dir: String): DataFrame =
+    appendSinkDrain(asofEnrichStream(Events.readStream(streamSession(spark), dir)),
+      "graft_stream_asof")()
       .orderBy(asc("user_id"), asc("p_ts_us"), asc("p_id"))
-  }
 
   /** The as-of enrich TRANSFORM on any streaming events frame
     * (user_id, event_type, ts, event_id) — split out so specs can
@@ -631,34 +558,6 @@ object EventStreams {
           out.iterator
       }
     joined.toDF("user_id", "p_id", "p_ts_us", "c_ts_us", "gap_us")
-  }
-
-  /** Spec hook: drain [[asofEnrichStream]] over a caller-fed source
-    * (MemoryStream) through the distributed parquet sink — the
-    * multi-batch arrival-invariance harness. */
-  def asofSinkDrain(events: DataFrame)(
-      feed: org.apache.spark.sql.streaming.StreamingQuery => Unit): DataFrame = {
-    val spark = events.sparkSession
-    val target = graft.util.TempDirs.scratch("graft_stream_asof_test")
-    val q = asofEnrichStream(events).writeStream
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", s"$target/out")
-      .option("checkpointLocation", s"$target/ckpt")
-      .start()
-    try feed(q) finally q.stop()
-    val outDir = new java.io.File(s"$target/out")
-    val hasRows = Option(outDir.listFiles())
-      .exists(_.exists(_.getName.endsWith(".parquet")))
-    if (hasRows) spark.read.parquet(s"$target/out")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("p_id", LongType),
-        StructField("p_ts_us", LongType),
-        StructField("c_ts_us", LongType),
-        StructField("gap_us", LongType))))
   }
 
   /** Per-user quota state for [[quotaFlagStream]]: micro-units spent
@@ -763,50 +662,11 @@ object EventStreams {
     * order. Budget 2000 value units (2e9 micro): at both gate scales
     * every active user starts under it and most cross it mid-stream,
     * so both flag classes are populated. */
-  def streamingQuota(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamSession(spark)
+  def streamingQuota(spark: SparkSession, dir: String): DataFrame =
     appendSinkDrain(
-      quotaFlagStream(readEventStream(ss, dir), budgetFx = 2000000000L),
-      "graft_stream_quota",
-      StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("seq", LongType),
-        StructField("event_id", LongType),
-        StructField("ts_us", LongType),
-        StructField("cost_fx", LongType),
-        StructField("run_fx", LongType),
-        StructField("over_budget", BooleanType))))
+      quotaFlagStream(Events.readStream(streamSession(spark), dir), budgetFx = 2000000000L),
+      "graft_stream_quota")()
       .orderBy(asc("user_id"), asc("seq"))
-  }
-
-  /** Spec hook: drain [[quotaFlagStream]] over a caller-fed source
-    * (MemoryStream) — the multi-batch arrival-invariance harness. */
-  def quotaSinkDrain(events: DataFrame, budgetFx: Long)(
-      feed: org.apache.spark.sql.streaming.StreamingQuery => Unit): DataFrame = {
-    val spark = events.sparkSession
-    val target = graft.util.TempDirs.scratch("graft_stream_quota_test")
-    val q = quotaFlagStream(events, budgetFx).writeStream
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", s"$target/out")
-      .option("checkpointLocation", s"$target/ckpt")
-      .start()
-    try feed(q) finally q.stop()
-    val outDir = new java.io.File(s"$target/out")
-    val hasRows = Option(outDir.listFiles())
-      .exists(_.exists(_.getName.endsWith(".parquet")))
-    if (hasRows) spark.read.parquet(s"$target/out")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("seq", LongType),
-        StructField("event_id", LongType),
-        StructField("ts_us", LongType),
-        StructField("cost_fx", LongType),
-        StructField("run_fx", LongType),
-        StructField("over_budget", BooleanType))))
-  }
 
   /** Per-bucket buffer for [[neardupCandidatesStream]]: docs seen in
     * this LSH band bucket as (ts_us, doc_id, emitted). Docs older than
@@ -946,20 +806,13 @@ object EventStreams {
   def streamingNeardup(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamSession(spark)
     val docBaseUs = 1704067200000000L // 2024-01-01T00:00:00Z
-    val docsStream = ss.readStream
-      .schema(ss.read.parquet(s"$dir/documents.parquet").schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val docsStream = Events.readStream(ss, dir, "documents")
       .select(col("doc_id"), col("text"),
         timestamp_micros(lit(docBaseUs) + col("doc_id") * lit(60000000L)).as("ts"))
     val drained = appendSinkDrain(
       neardupCandidatesStream(docsStream, k = 3, numHashes = 32, bands = 8,
         horizonUs = 86400L * 1000000L),
-      "graft_stream_neardup",
-      StructType(Seq(
-        StructField("band", IntegerType),
-        StructField("id_a", LongType),
-        StructField("id_b", LongType))))
+      "graft_stream_neardup")()
     val sets = ss.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), graft.functions.TextHashFunctions
         .shingle_hash_set(col("text"), 3).as("sh"))
@@ -998,21 +851,14 @@ object EventStreams {
   def streamingPhashNeardup(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamSession(spark)
     val docBaseUs = 1704067200000000L // 2024-01-01T00:00:00Z
-    val mediaStream = ss.readStream
-      .schema(ss.read.parquet(s"$dir/documents.parquet").schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val mediaStream = Events.readStream(ss, dir, "documents")
     val hashed = graft.operators.Multimodal
       .phashTable(graft.operators.Multimodal.mediaFrom(mediaStream)).toDF()
       .select(col("media_id"), col("dhash"),
         timestamp_micros(lit(docBaseUs) + col("media_id") * lit(60000000L)).as("ts"))
     val drained = appendSinkDrain(
       phashCandidatesStream(hashed, horizonUs = 86400L * 1000000L),
-      "graft_stream_phash_nd",
-      StructType(Seq(
-        StructField("band", IntegerType),
-        StructField("id_a", LongType),
-        StructField("id_b", LongType))))
+      "graft_stream_phash_nd")()
     // batch tail: narrow (media_id, grid, dhash), two consumers
     val phB = graft.operators.Multimodal
       .phashTable(graft.operators.Multimodal.mediaTable(spark, dir)).toDF()
@@ -1053,56 +899,31 @@ object EventStreams {
     * |history|. At 100 TB, range-partition the base and rewrite only
     * touched partitions, or hand the file swap to a lakehouse MERGE.
     */
-  def streamingUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val events = readEventStream(streamSession(spark), dir)
+  def streamingUpsert(spark: SparkSession, dir: String): DataFrame =
+    upsertSinkDrain(Events.readStream(streamSession(spark), dir)
       .select(col("user_id"), col("event_type"), col("ts"),
-        col("event_id"), col("value"))
-    upsertSinkDrain(spark, events)(q => q.processAllAvailable())
-  }
+        col("event_id"), col("value")))()
 
-  /** The foreachBatch upsert sink itself, driven by any streaming
-    * DataFrame with (user_id, event_type, ts, event_id, value) —
-    * `feed` controls the stream's lifetime (add data / drain), so the
-    * spec can replay the same rows in shuffled multi-batch schedules
-    * and assert the batch-split-invariant final state. Runs on the
-    * stream's own session (specs pass their own MemoryStream frames),
-    * so no session-global conf is touched here. */
-  def upsertSinkDrain(spark: SparkSession, events: DataFrame)(
-      feed: org.apache.spark.sql.streaming.StreamingQuery => Unit): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val target = graft.util.TempDirs.scratch("graft_stream_upsert")
-    val keys = Seq("user_id", "event_type")
-    @volatile var cur: Option[String] = None
-    val q = events.writeStream
-      .option("checkpointLocation", s"$target/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        def latestPerKey(df: DataFrame): DataFrame = df
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy(keys.map(col): _*)
-              .orderBy(desc("ts"), desc("event_id"))))
-          .filter(col("__rn") === 1).drop("__rn")
-        val delta = latestPerKey(batch)
-        val merged = cur match {
-          case Some(p) => latestPerKey(s.read.parquet(p).unionByName(delta))
-          case None => delta
-        }
-        val path = s"$target/v$batchId"
-        merged.write.mode("overwrite").parquet(path)
-        val prev = cur
-        cur = Some(path)
-        // the superseded snapshot is fully folded into `path` — drop
-        // it so a long-running stream holds at most one extra version
-        prev.foreach(p => graft.util.TempDirs.deleteRecursively(new java.io.File(p)))
-        ()
-      }
-      .start()
-    try feed(q) finally q.stop()
-    // zero-batch stream: return an explicitly-schemaed empty frame (the
-    // schema-less emptyDataFrame would make the select below throw)
-    cur.map(spark.read.parquet(_)).getOrElse(
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], events.schema))
+  /** The upsert drain itself, driven by any streaming DataFrame with
+    * (user_id, event_type, ts, event_id, value): the
+    * [[versionedSinkDrain]] whose merge keeps the latest row per key of
+    * base ∪ batch. `feed` controls the stream's lifetime (add data /
+    * drain), so the spec can replay the same rows in shuffled
+    * multi-batch schedules and assert the batch-split-invariant final
+    * state. Runs on the stream's own session (specs pass their own
+    * MemoryStream frames), so no session-global conf is touched here. */
+  def upsertSinkDrain(events: DataFrame)(
+      feed: StreamingQuery => Unit = drainAll): DataFrame = {
+    val byKey = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("user_id"), col("event_type"))
+      .orderBy(desc("ts"), desc("event_id"))
+    def latestPerKey(df: DataFrame): DataFrame = df
+      .withColumn("__rn", row_number().over(byKey))
+      .filter(col("__rn") === 1).drop("__rn")
+    versionedSinkDrain(events, "graft_stream_upsert", OutputMode.Append()) { (batch, base) =>
+      val delta = latestPerKey(batch)
+      base.fold(delta)(b => latestPerKey(b.unionByName(delta)))
+    }(feed)
       .select(col("user_id"), col("event_type"),
         col("event_id").as("last_event_id"), col("value").as("last_value"))
       .orderBy(asc("user_id"), asc("event_type"))
@@ -1129,7 +950,7 @@ object EventStreams {
     // both sides derive from ONE streaming source: the file source
     // scans each micro-batch once and the self-join splits it by
     // event type (each side still keeps its own watermarked state)
-    val events = readEventStream(ss, dir)
+    val events = Events.readStream(ss, dir)
     val clicks = events
       .filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
@@ -1145,10 +966,7 @@ object EventStreams {
             col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
         .select(col("c_user").as("user_id"),
           (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("delay_us")),
-      "graft_stream_join",
-      StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("delay_us", LongType))))
+      "graft_stream_join")()
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"), sum(col("delay_us")).as("sum_delay_us"))
       .orderBy(asc("user_id"))
@@ -1170,7 +988,7 @@ object EventStreams {
     */
   def clickPurchaseLeftOuter(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamSession(spark)
-    val events = readEventStream(ss, dir)
+    val events = Events.readStream(ss, dir)
     val clicks = events
       .filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
@@ -1186,10 +1004,7 @@ object EventStreams {
             col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
           "left_outer")
         .select(col("c_user").as("user_id"), col("p_ts").isNotNull.as("matched")),
-      "graft_stream_louter",
-      StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("matched", BooleanType))))
+      "graft_stream_louter")()
       .groupBy(col("user_id"))
       .agg(count(when(col("matched"), 1)).as("n_matched"),
         count(when(!col("matched"), 1)).as("n_unmatched"))
@@ -1203,13 +1018,13 @@ object EventStreams {
     * emit null-padded once the watermark passes their event time (no
     * earlier click can still arrive). State on both sides is evicted
     * at the same horizons, and the sink is the distributed
-    * [[appendSinkDrain]] (whose empty-sink guard also covers the
-    * no-activity smoke case) — bounded state, nothing driver-side, at
+    * [[appendSinkDrain]] (an empty sink reads back as no rows, which
+    * covers the no-activity smoke case) — bounded state, nothing driver-side, at
     * any |users|.
     */
   def clickPurchaseFullOuter(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamSession(spark)
-    val events = readEventStream(ss, dir)
+    val events = Events.readStream(ss, dir)
     val clicks = events
       .filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
@@ -1227,11 +1042,7 @@ object EventStreams {
         .select(coalesce(col("c_user"), col("p_user")).as("user_id"),
           col("c_ts").isNotNull.as("has_click"),
           col("p_ts").isNotNull.as("has_purchase")),
-      "graft_stream_fouter",
-      StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("has_click", BooleanType),
-        StructField("has_purchase", BooleanType))))
+      "graft_stream_fouter")()
       .groupBy(col("user_id"))
       .agg(count(when(col("has_click") && col("has_purchase"), 1)).as("n_matched"),
         count(when(!col("has_purchase"), 1)).as("n_unmatched_clicks"),

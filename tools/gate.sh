@@ -25,6 +25,35 @@ case $rc in
   *) exit "$rc" ;;
 esac
 
+echo "== [0/5] one sink per kind: .writeStream only in EventStreams' two drains =="
+# every streaming query drains through appendSinkDrain or
+# versionedSinkDrain; a third sink is a copy that the specs never run
+python3 - <<'EOF'
+import pathlib, re, sys
+drains = {"appendSinkDrain", "versionedSinkDrain"}
+sites, stray = {}, []
+for path in sorted(pathlib.Path("src/main/scala").rglob("*.scala")):
+    owner = None
+    for n, line in enumerate(path.read_text().splitlines(), 1):
+        code = line.split("//")[0]
+        if code.lstrip().startswith("*"):
+            continue
+        m = re.search(r"\bdef\s+(\w+)", code)
+        if m:
+            owner = m.group(1)
+        if ".writeStream" in code:
+            if path.name == "EventStreams.scala" and owner in drains:
+                sites[owner] = sites.get(owner, 0) + 1
+            else:
+                stray.append(f"{path}:{n} (in {owner})")
+for s in stray:
+    print(f"STRAY SINK: {s}")
+if stray or sites != {d: 1 for d in drains}:
+    print(f"expected one .writeStream in each of {sorted(drains)}, got {sites}")
+    sys.exit(1)
+print("one sink per kind: 2 .writeStream sites, both in EventStreams' drains")
+EOF
+
 echo "== [1/5] sbt compile =="
 sbt -batch compile
 
