@@ -1,7 +1,7 @@
 package graft.server
 
 import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.fasterxml.jackson.databind.util.RawValue
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
@@ -35,22 +35,26 @@ import java.util.concurrent.Executors
   * Built on the JDK's HttpServer (zero added dependencies). One shared
   * SparkSession; requests build lazy plans and only Actions execute —
   * a Read or Op launches no Spark job once its parquet paths have been
-  * opened in this session (see [[graft.sources.Sources.parquet]]).
+  * opened in this session (see [[graft.sources.Sources.parquet]]), and
+  * a pooled Read opens nothing.
   *
   * Two pools, both `SessionMemo` families that die with their session,
   * keep what a replay would compute, as the reference's Pool keeps every
   * entry under its lineage hash (src/pool.rs:57-62):
   *  - `serverFrames` holds, under a hash of the token, the analyzed plan
   *    that a Read or Op built, with the fingerprint of its input files
-  *    ([[Sources.fingerprintOf]]). Every Read or Op stores the frame it
-  *    builds under its new token, and every request looks its prior
-  *    token (an Action its own token, a Join its right-side token) up
-  *    instead of replaying it: in a session, each request analyzes only
-  *    its own entry. A repeated Op still applies its entry.
-  *  - A pooled plan is used only while a fresh listing of its Read paths
-  *    (globs expanded again) has the fingerprint it was planned with;
-  *    otherwise the token is replayed from the files and the new frame
-  *    replaces the old one. Every use runs on a new Dataset of the
+  *    ([[Sources.fingerprintOf]]). Every Op stores the frame it builds
+  *    under its new token, and every request looks its prior token (an
+  *    Action its own token, a Join its right-side token) up instead of
+  *    replaying it: in a session, each request analyzes only its own
+  *    entry. A repeated Op still applies its entry.
+  *  - A Read is looked up too, under its own one-entry token, which
+  *    every lineage over the same path shares: a hit opens no source and
+  *    builds no Dataset; a miss opens the source and pools the frame.
+  *  - A pooled plan is used only while one direct listing of its Read
+  *    paths (globs expanded again) has the fingerprint it was planned
+  *    with; otherwise the token is replayed from the files and the new
+  *    frame replaces the old one. Every use runs on a new Dataset of the
   *    request's own over the pooled plan, so no executed plan is pooled
   *    or shared between request threads.
   *  - A frame with no fingerprint (a verb that checkpoints, such as
@@ -60,8 +64,9 @@ import java.util.concurrent.Executors
   *  - `serverReplies` holds the rendered `blocks` of an Action asked over
   *    the same token, on a server with the same row cap, over input
   *    files with the same fingerprint: it is answered without a Spark
-  *    job. A reply is kept only if the files list the same after it was
-  *    computed, and only if the frame has a fingerprint.
+  *    job, and without building a Dataset over the frame. A reply is
+  *    kept only if the files list the same after it was computed, and
+  *    only if the frame has a fingerprint.
   *  - An Action that fails (a 400, an over-cap Collect) keeps nothing.
   *    Concurrent identical Actions compute once.
   *  - A Take or CollectPage without an OrderBy keeps the first valid
@@ -177,22 +182,32 @@ object GraftServer {
           // and its frame is what an Op builds on. A Read ignores it.
           val entry = if (tag == "Read") fn else fn.get("Op")
           val noPrior = state == null || state.isNull
-          val prior = if (tag == "Read" && noPrior) null else frameOf(spark, state).frame(spark)
-          val priorOps =
-            if (noPrior) Wire.arr()
-            else state.get("ops").deepCopy[com.fasterxml.jackson.databind.node.ArrayNode]()
-          val frame = Wire.applyOp(spark, prior, entry, frameOf(spark, _).frame(spark))
-          frame.df.schema // force analysis so plan errors surface now
-          val newState = Wire.obj()
-          newState.set[JsonNode]("ops", priorOps.add(entry.deepCopy[JsonNode]()))
-          frames.put(spark, tokenKey(newState))(planned(frame))
+          val prior = if (tag == "Read" && noPrior) None else Some(frameOf(spark, state))
+          def token(ops: ArrayNode): ObjectNode = {
+            val t = Wire.obj()
+            t.set[JsonNode]("ops", ops.add(entry.deepCopy[JsonNode]()))
+            t
+          }
+          val newState = token(if (noPrior) Wire.arr() else state.get("ops").deepCopy[ArrayNode]())
+          if (tag == "Read") {
+            // a Read is its own one-entry token's frame, which every
+            // lineage over the same path shares: a hit opens nothing
+            val frame = frameOf(spark, token(Wire.arr()))
+            if (prior.nonEmpty) frames.put(spark, tokenKey(newState))((frame, frame.poolable))
+          } else {
+            val frame = Wire.applyOp(spark, prior.get.frame(spark), entry, frameOf(spark, _).frame(spark))
+            frame.df.schema // force analysis so plan errors surface now
+            frames.put(spark, tokenKey(newState))(planned(frame))
+          }
           val resp = Wire.obj()
           resp.set[JsonNode]("dataframe", newState)
           resp.set[JsonNode]("blocks", Wire.obj())
           (201, Wire.render(resp))
         case "Action" =>
+          // a reply-pool hit analyzes nothing: the frame is built only
+          // when the Action computes
           val pooled = frameOf(spark, state)
-          val frame = pooled.frame(spark)
+          lazy val frame = pooled.frame(spark)
           val action = fn.get("Action")
           def blocks: ObjectNode =
             if (action.isTextual && action.asText() == "Collect") {
@@ -246,7 +261,7 @@ object GraftServer {
             case Some(inputs) =>
               replies(spark, replyKey(state, action, maxCollectRows, inputs)) {
                 val reply = Wire.render(blocks)
-                (reply, Sources.fingerprintOf(frame.df, relist = true).contains(inputs))
+                (reply, Sources.fingerprintOf(spark, pooled.plan, relist = true).contains(inputs))
               }
             case None => Wire.render(blocks)
           }

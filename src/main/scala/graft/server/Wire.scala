@@ -44,8 +44,9 @@ import scala.jdk.CollectionConverters._
   *
   * The only Spark job a replay would run is a parquet Read's schema
   * inference. `Sources.parquet` keeps the inferred schema per (session,
-  * path), checked against a fingerprint of the data files, so a
-  * replayed Read opens without a job until the files change.
+  * path), checked against a fingerprint of the data files, so a Read
+  * that the server does not find pooled opens without a job until the
+  * files change.
   *
   * `GraftServer` keeps two pools keyed by lineage, as the reference's
   * Pool keys every entry by its deterministic lineage hash:
@@ -53,13 +54,15 @@ import scala.jdk.CollectionConverters._
   *    under a hash of the token. A request looks its prior token (and a
   *    Join its right-side token, through the `lineage` resolver of
   *    [[applyOp]]) up instead of replaying it, so it analyzes only its
-  *    own entry. A pooled plan is used only while a fresh listing of
-  *    its input files has the fingerprint it was planned with;
-  *    otherwise the token is replayed from the files.
+  *    own entry; a Read looks up its own one-entry token, so a pooled
+  *    Read opens no source. A pooled plan is used only while a fresh
+  *    listing of its input files has the fingerprint it was planned
+  *    with; otherwise the token is replayed from the files.
   *  - replies: the rendered `blocks` of an Action, under a hash of the
   *    token, the Action, the server's row cap and that fingerprint
   *    (path, length and mtime of every data file the frame reads), so
-  *    the same Action over the same files runs no Spark job.
+  *    the same Action over the same files runs no Spark job and builds
+  *    no frame.
   * Both are caches of what a replay would compute: a replica that never
   * saw the token replays it and computes the same reply, so the
   * protocol stays stateless.

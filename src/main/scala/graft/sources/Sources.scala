@@ -4,11 +4,14 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import java.util.HexFormat
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path, PathFilter}
+import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
+import org.apache.hadoop.util.ReflectionUtils
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.graft.LeafFiles
 import org.apache.spark.sql.types.StructType
 import graft.api.GraftFrame
 import graft.util.SessionMemo
@@ -46,7 +49,9 @@ object Sources {
         .csv(path))
 
   /** Parquet scan — primary path for the parquet testdata (and the
-    * server's parquet `Read`, reopened on every request that replays it).
+    * server's parquet `Read` when the server's frame pool misses: a Read
+    * whose token is pooled, over files that list the same, opens
+    * nothing).
     *
     * Spark infers a parquet schema with a footer-reading job on every
     * open. The inferred schema is kept per (session, path) together
@@ -78,57 +83,76 @@ object Sources {
   /** The input fingerprint of a frame: SHA-256 over (path, length,
     * mtime) of every data file of every file-relation leaf of its
     * analyzed plan (parquet and CSV alike, both sides of a join), as
-    * listed by Spark's own file index: hidden `_`/`.` files are skipped,
-    * partition subdirectories and glob matches are included. None when
-    * any leaf is not a file relation (a checkpoint, an in-memory
-    * relation): such a frame has no fingerprint.
+    * listed by Spark's own file index: hidden `_`/`.` files and empty
+    * files are skipped, partition subdirectories and glob matches are
+    * included. None when any leaf is not a file relation (a checkpoint,
+    * an in-memory relation): such a frame has no fingerprint.
     *
     * Each `spark.read` opens a new file index, listed when it is
     * opened, and the plan keeps that listing. With `relist`, every leaf
-    * is listed afresh instead, into a new index over its path as it was
-    * read, so a glob is expanded again and a file that now matches it
-    * counts. The plan's own indexes are never refreshed, so a plan that
-    * other threads share keeps the listing it was built with. A caller
-    * compares the two to learn whether an input changed since the plan
-    * was built. A file rewritten with the same length within the same
-    * millisecond is not seen. */
+    * is listed afresh instead ([[listed]]): one direct listing of its
+    * path as it was read, with no new index, so a glob is expanded again
+    * and a file that now matches it counts. The plan's own indexes are
+    * never refreshed, so a plan that other threads share keeps the
+    * listing it was built with. A caller compares the two to learn
+    * whether an input changed since the plan was built. A file
+    * rewritten with the same length within the same millisecond is not
+    * seen. */
   def fingerprintOf(df: DataFrame, relist: Boolean = false): Option[String] =
     fingerprintOf(df.sparkSession, df.queryExecution.analyzed, relist)
 
   /** [[fingerprintOf]] of an analyzed plan. */
-  def fingerprintOf(spark: SparkSession, plan: LogicalPlan, relist: Boolean): Option[String] = {
+  def fingerprintOf(spark: SparkSession, plan: LogicalPlan, relist: Boolean): Option[String] =
+    inputFiles(spark, plan, relist).map { files =>
+      val md = MessageDigest.getInstance("SHA-256")
+      files.map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
+        .sorted
+        .foreach(line => md.update(line.getBytes(StandardCharsets.UTF_8)))
+      HexFormat.of().formatHex(md.digest())
+    }
+
+  /** The data files that [[fingerprintOf]] digests: as the plan's own
+    * indexes list them, or with `relist` as [[listed]] lists them now.
+    * None when any leaf is not a file relation. */
+  private[graft] def inputFiles(spark: SparkSession, plan: LogicalPlan,
+                                relist: Boolean): Option[Seq[FileStatus]] = {
     val leaves = plan.collectWithSubqueries { case l: LeafNode => l }
     val relations = leaves.collect {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs
     }
     if (relations.isEmpty || relations.size != leaves.size) None
-    else {
-      val indexes =
-        if (relist) relations.map(relisted(spark, _))
-        else relations.map(_.location)
-      val md = MessageDigest.getInstance("SHA-256")
-      indexes.flatMap(_.listFiles(Nil, Nil)).flatMap(_.files)
-        .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
-        .sorted
-        .foreach(line => md.update(line.getBytes(StandardCharsets.UTF_8)))
-      Some(HexFormat.of().formatHex(md.digest()))
-    }
+    else if (relist) Some(relations.flatMap(listed(spark, _)))
+    else Some(relations.flatMap(_.location.listFiles(Nil, Nil)).flatMap(_.files).map(_.fileStatus))
   }
 
-  /** A new file index over a file relation's path, listed now. A one-path
-    * read keeps its path, glob unexpanded, in its options: it is expanded
-    * again, as Spark expands it when it opens a read (Hadoop's
-    * `globStatus`, which also resolves a plain path to itself). A read of
-    * several paths is listed over the paths it expanded to. */
-  private def relisted(spark: SparkSession, fs: HadoopFsRelation): FileIndex = {
+  /** The data files of a file relation's path as they are now, listed
+    * by Spark's own leaf lister with the path filter and the data-file
+    * rule the relation's index applies (no hidden name, no empty file).
+    * A one-path read keeps its path, glob unexpanded, in its options: it
+    * is expanded again, as Spark expands it when it opens a read
+    * (Hadoop's `globStatus`, which also resolves a plain path to
+    * itself). A read of several paths is listed over the paths it
+    * expanded to. Over unchanged files this lists what the index lists,
+    * so the digest is the plan's own. It never lists fewer files; it
+    * lists more only where the index drops files by a rule this listing
+    * does not apply (a subdirectory of an unpartitioned path, a
+    * `pathGlobFilter` or `modifiedBefore` option), and a pooled plan over
+    * such a path then misses and is replayed. */
+  private def listed(spark: SparkSession, fs: HadoopFsRelation): Seq[FileStatus] = {
+    val conf = spark.sessionState.newHadoopConfWithOptions(fs.options)
     val roots = fs.options.get("path") match {
       case Some(p) =>
         val path = new Path(p)
-        val conf = spark.sessionState.newHadoopConfWithOptions(fs.options)
         Option(path.getFileSystem(conf).globStatus(path)).toSeq.flatten.map(_.getPath)
       case None => fs.location.rootPaths
     }
-    new InMemoryFileIndex(spark, roots, fs.options, Some(fs.schema))
+    // the filter the index reads through a JobConf of the same conf
+    val filter: PathFilter = Option(conf.getClass(FileInputFormat.PATHFILTER_CLASS, null, classOf[PathFilter]))
+      .map(c => ReflectionUtils.newInstance(c, conf): PathFilter).orNull
+    LeafFiles.list(spark, roots, conf, filter, fs.options).filter { f =>
+      val name = f.getPath.getName
+      f.getLen > 0 && !((name.startsWith("_") && !name.contains("=")) || name.startsWith("."))
+    }
   }
 
   /** Load one named testdata table from a scale-factor directory. */

@@ -929,6 +929,29 @@ object EventStreams {
       .orderBy(asc("user_id"), asc("event_type"))
   }
 
+  /** The click→purchase stream-stream join of q64, q133 and q151, of
+    * the given join type: clicks and purchases, each side with a 1-hour
+    * watermark, joined on the user for every purchase within 30 minutes
+    * after the click. Both sides derive from ONE streaming source: the
+    * file source scans each micro-batch once and the self-join splits it
+    * by event type (each side still keeps its own watermarked state). */
+  private def clickPurchaseJoin(spark: SparkSession, dir: String, joinType: String): DataFrame = {
+    val events = Events.readStream(streamSession(spark), dir)
+    val clicks = events
+      .filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+      .withWatermark("c_ts", "1 hour")
+    val purchases = events
+      .filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
+      .withWatermark("p_ts", "1 hour")
+    clicks.join(purchases,
+      col("c_user") === col("p_user") &&
+        col("p_ts") >= col("c_ts") &&
+        col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
+      joinType)
+  }
+
   /** Stream-stream inner join with watermarks — click→purchase
     * attribution: every purchase within 30 minutes after a click by
     * the same user. The event-time range condition is what lets Spark
@@ -945,32 +968,15 @@ object EventStreams {
     * output == batch join exactly; timestamps are micro-aligned so
     * micros arithmetic matches DuckDB's nanos).
     */
-  def clickPurchaseAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamSession(spark)
-    // both sides derive from ONE streaming source: the file source
-    // scans each micro-batch once and the self-join splits it by
-    // event type (each side still keeps its own watermarked state)
-    val events = Events.readStream(ss, dir)
-    val clicks = events
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
+  def clickPurchaseAttribution(spark: SparkSession, dir: String): DataFrame =
     appendSinkDrain(
-      clicks.join(purchases,
-          col("c_user") === col("p_user") &&
-            col("p_ts") >= col("c_ts") &&
-            col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
+      clickPurchaseJoin(spark, dir, "inner")
         .select(col("c_user").as("user_id"),
           (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("delay_us")),
       "graft_stream_join")()
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"), sum(col("delay_us")).as("sum_delay_us"))
       .orderBy(asc("user_id"))
-  }
 
   /** LEFT OUTER stream-stream join — click→purchase attribution that
     * also surfaces clicks with NO purchase in their 30-minute window.
@@ -986,30 +992,15 @@ object EventStreams {
     * per-click output (matched + watermark-closed rows) drains through
     * the distributed [[appendSinkDrain]], never the driver.
     */
-  def clickPurchaseLeftOuter(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamSession(spark)
-    val events = Events.readStream(ss, dir)
-    val clicks = events
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
+  def clickPurchaseLeftOuter(spark: SparkSession, dir: String): DataFrame =
     appendSinkDrain(
-      clicks.join(purchases,
-          col("c_user") === col("p_user") &&
-            col("p_ts") >= col("c_ts") &&
-            col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
-          "left_outer")
+      clickPurchaseJoin(spark, dir, "left_outer")
         .select(col("c_user").as("user_id"), col("p_ts").isNotNull.as("matched")),
       "graft_stream_louter")()
       .groupBy(col("user_id"))
       .agg(count(when(col("matched"), 1)).as("n_matched"),
         count(when(!col("matched"), 1)).as("n_unmatched"))
       .orderBy(asc("user_id"))
-  }
 
   /** FULL OUTER stream-stream join — completes the watermarked join
     * matrix (inner = q64, left outer = q133): matched click-purchase
@@ -1022,23 +1013,9 @@ object EventStreams {
     * covers the no-activity smoke case) — bounded state, nothing driver-side, at
     * any |users|.
     */
-  def clickPurchaseFullOuter(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamSession(spark)
-    val events = Events.readStream(ss, dir)
-    val clicks = events
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
+  def clickPurchaseFullOuter(spark: SparkSession, dir: String): DataFrame =
     appendSinkDrain(
-      clicks.join(purchases,
-          col("c_user") === col("p_user") &&
-            col("p_ts") >= col("c_ts") &&
-            col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
-          "full_outer")
+      clickPurchaseJoin(spark, dir, "full_outer")
         .select(coalesce(col("c_user"), col("p_user")).as("user_id"),
           col("c_ts").isNotNull.as("has_click"),
           col("p_ts").isNotNull.as("has_purchase")),
@@ -1048,5 +1025,4 @@ object EventStreams {
         count(when(!col("has_purchase"), 1)).as("n_unmatched_clicks"),
         count(when(!col("has_click"), 1)).as("n_unmatched_purchases"))
       .orderBy(asc("user_id"))
-  }
 }

@@ -443,8 +443,8 @@ class GraftServerSpec extends SparkSpec {
     p
   }
 
-  private def readCsv(path: java.nio.file.Path): String =
-    callOk("null", s"""{"Read": ["csv", "${path.toAbsolutePath}", $schemaJson]}""")._1
+  private def readCsv(path: java.nio.file.Path, send: String => (Int, String) = post): String =
+    callOk("null", s"""{"Read": ["csv", "${path.toAbsolutePath}", $schemaJson]}""", send)._1
 
   test("pool: a repeated Action runs no Spark job and returns a byte-identical reply") {
     val facts = tempDir("pool_repeat")
@@ -621,6 +621,52 @@ class GraftServerSpec extends SparkSpec {
     assert(count(g2) === 10L)
     Files.copy(part, dir.resolve("part-copy.parquet"))
     assert(count(callOk(g2, select)._1) === 20L)
+  }
+
+  test("frames: a second Read of an unchanged parquet path or CSV is one hit: no frame built, no source opened, no Spark job") {
+    val p = tempDir("frames_reread")
+    spark.range(0, 10).selectExpr("id").write.parquet(p)
+    val csv = tempCsv("frames_reread", "1|a|true\n2|b|false\n")
+    Seq(() => readParquet(p, handled), () => readCsv(csv, handled)).foreach { read =>
+      val first = read()
+      val (before, opened) = (frameStats(), schemaCalls())
+      var again = ""
+      assert(jobsDuring { again = read() } === 0)
+      val after = frameStats()
+      assert((after.builds - before.builds, after.hits - before.hits) === (0L, 1L), after)
+      assert(schemaCalls() === opened)
+      assert(again === first)
+    }
+  }
+
+  test("frames: a Read of a parquet directory with an added column, a CSV with new rows, or a glob with a new match is replayed") {
+    def count(state: String) = countOf(callOk(state, """{"Action": "Count"}""")._2)
+    def reread(read: => String): String = {
+      val before = frameStats()
+      val state = read
+      val after = frameStats()
+      assert((after.builds - before.builds, after.hits - before.hits) === (1L, 0L), after)
+      state
+    }
+
+    val p = tempDir("frames_reread_rewrite")
+    spark.range(0, 10).selectExpr("id").write.parquet(p)
+    assert(count(readParquet(p)) === 10L)
+    spark.range(0, 12).selectExpr("id", "id * 2 AS extra").write.mode("overwrite").parquet(p)
+    val extra = callOk(reread(readParquet(p)), """{"Op": {"Select": [{"Source": "extra"}]}}""")._1
+    assert(count(extra) === 12L)
+
+    val csv = tempCsv("frames_reread_rewrite", "1|a|true\n2|b|false\n")
+    assert(count(readCsv(csv)) === 2L)
+    Files.write(csv, "1|a|true\n2|b|false\n3|c|true\n".getBytes(StandardCharsets.UTF_8))
+    assert(count(reread(readCsv(csv))) === 3L)
+
+    val dir = Files.createTempDirectory("graft_frames_reread_glob")
+    spark.range(0, 10).selectExpr("id").coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    val part = Files.list(dir).iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get
+    assert(count(readParquet(s"$dir/part-*.parquet")) === 10L)
+    Files.copy(part, dir.resolve("part-copy.parquet"))
+    assert(count(reread(readParquet(s"$dir/part-*.parquet"))) === 20L)
   }
 
   test("frames: 8 threads Op-ing and Acting on one pooled prefix get byte-identical replies") {

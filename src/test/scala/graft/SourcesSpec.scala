@@ -118,6 +118,60 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.fingerprintOf(spark.read.parquet(dir)) === fresh)
   }
 
+  test("fingerprint: one direct listing gives the plan's own digest for a file, a Spark-written, hive-partitioned or glob path, a CSV and a directory with a zero-length file; it changes on a rewrite, an added file and a removed file") {
+    val base = Files.createTempDirectory("graft_fp_list")
+    val written = base.resolve("written.parquet").toString
+    spark.range(0, 30).selectExpr("id").repartition(3).write.parquet(written)
+    val names = new java.io.File(written).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names)
+    val parts = names.filter(n => n.startsWith("part-") && n.endsWith(".parquet")).sorted
+    val hive = base.resolve("hive.parquet").toString
+    spark.range(0, 30).selectExpr("id", "CAST(id % 3 AS INT) AS b").write.partitionBy("b").parquet(hive)
+    val csvDir = Files.createDirectories(base.resolve("csv"))
+    Files.writeString(csvDir.resolve("a.csv"), "1|x\n2|y\n")
+    Files.createFile(csvDir.resolve("empty.csv"))
+    val csvSchema = StructType(Seq(StructField("id", LongType), StructField("s", StringType)))
+    val frames = Seq(
+      "file" -> Sources.parquet(spark, s"$written/${parts.head}").df,
+      "written" -> Sources.parquet(spark, written).df,
+      "hive" -> Sources.parquet(spark, hive).df,
+      "glob" -> Sources.parquet(spark, s"$written/part-*.parquet").df,
+      "csv" -> Sources.csv(spark, csvDir.resolve("a.csv").toString, csvSchema).df,
+      "zero-length" -> Sources.csv(spark, csvDir.toString, csvSchema).df)
+    def paths(df: org.apache.spark.sql.DataFrame, relist: Boolean) = Sources
+      .inputFiles(spark, df.queryExecution.analyzed, relist).get.map(_.getPath.toString).toSet
+    val own = frames.map { case (what, df) =>
+      val fp = Sources.fingerprintOf(df)
+      assert(fp.isDefined && Sources.fingerprintOf(df, relist = true) === fp, what)
+      assert(paths(df, relist = true) === paths(df, relist = false), what)
+      what -> fp
+    }.toMap
+    assert(!paths(frames.last._2, relist = true).exists(_.endsWith("empty.csv")))
+    def changed(whats: String*): Unit = frames.foreach { case (what, df) =>
+      assert((Sources.fingerprintOf(df, relist = true) != own(what)) === whats.contains(what), what)
+      assert(Sources.fingerprintOf(df) === own(what), what)
+    }
+    Files.writeString(csvDir.resolve("a.csv"), "1|x\n2|y\n3|z\n")
+    changed("csv", "zero-length")
+    Files.copy(java.nio.file.Paths.get(written, parts.head), java.nio.file.Paths.get(written, "part-copy.parquet"))
+    changed("csv", "zero-length", "written", "glob")
+    val bucket = new java.io.File(s"$hive/b=1").listFiles().filter(_.getName.endsWith(".parquet")).head
+    assert(bucket.delete())
+    changed("csv", "zero-length", "written", "glob", "hive")
+  }
+
+  test("fingerprint: the listing never lists fewer files than the plan's index; under an unpartitioned directory it also lists a subdirectory's files, which the index skips") {
+    val dir = Files.createTempDirectory("graft_fp_nested")
+    Files.writeString(dir.resolve("a.csv"), "1\n2\n")
+    Files.writeString(Files.createDirectories(dir.resolve("sub")).resolve("b.csv"), "3\n")
+    val df = Sources.csv(spark, dir.toString, StructType(Seq(StructField("id", LongType)))).df
+    def paths(relist: Boolean) = Sources
+      .inputFiles(spark, df.queryExecution.analyzed, relist).get.map(_.getPath.getName).toSet
+    assert(paths(relist = false) === Set("a.csv"))
+    assert(paths(relist = true) === Set("a.csv", "b.csv"))
+    assert(Sources.fingerprintOf(df, relist = true) != Sources.fingerprintOf(df))
+  }
+
   test("q156 compaction: bin-packs fragmented files to ceil(bytes/target) and preserves rows") {
     val base = graft.util.TempDirs.scratch("graft_compact_spec")
     val src = spark.read.parquet(s"$sf/lineitem.parquet")

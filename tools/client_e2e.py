@@ -11,7 +11,8 @@ example_small (filter/select/aggregate/collect), arithmetic select
 with alias + float constant, group_by nesting, join, order_by,
 count/take, the parquet read, the 400 error surface, the reply pool
 (a repeated Collect, then one after its CSV is rewritten) and the frame
-pool (a CSV rewritten between two Ops of one session).
+pool (a CSV rewritten between two Ops of one session, and a CSV rewritten
+and then Read again in a new lineage).
 """
 
 import os
@@ -267,6 +268,19 @@ def run_checks():
         f.write('6|six|false\n')
     later = kept.select([c('int')]).order_by(['int']).collect()
     assert later['int'] == {'Int': [2, 3, 4, 5, 6]}, later
+
+    # --- pooled Read: a CSV rewritten with more rows and read again in a
+    # new lineage is seen (the Read's pooled frame is replanned) ---
+    with tempfile.NamedTemporaryFile('w', suffix='.csv', delete=False) as f:
+        f.write('1|one|true\n2|two|false\n')
+        reread_path = f.name
+    first_read = Df.from_csv(reread_path, schema, uri=client.URI)
+    assert first_read.count() == {'count': {'Int': [2]}}
+    with open(reread_path, 'w') as f:
+        f.write('1|one|true\n2|two|false\n3|three|true\n')
+    second_read = Df.from_csv(reread_path, schema, uri=client.URI)
+    assert second_read.count() == {'count': {'Int': [3]}}
+    os.unlink(reread_path)
 
     os.unlink(csv_path)
 
